@@ -4406,17 +4406,20 @@ object Streams {
 
   /** Incremental document ingest (S1's streaming shape): new files landing
     * in a directory become extraction rows continuously — the reference's
-    * "drop new PDFs in the folder and re-run" loop without the re-run. */
+    * "drop new PDFs in the folder and re-run" loop without the re-run.
+    * Rows carry (path, pdf_name, pages), the shape
+    * [[graft.wells.Extraction.extractAll]] orders and parses. */
   def streamDocuments(spark: SparkSession, dir: String): DataFrame = {
     val raw = spark.readStream
       .format("text")
       .option("wholetext", "true")
       .option("pathGlobFilter", "*.pdf")
       .load(dir)
-      .withColumn("pdf_name", element_at(split(input_file_name(), "/"), -1))
+      .withColumn("path", input_file_name())
     // limit -1 keeps trailing empty pages — identical page arrays to the
     // batch TextPassthroughExtractor for the same bytes
-    raw.select(col("pdf_name"), split(col("value"), "\f", -1).as("pages"))
+    raw.select(col("path"), element_at(split(col("path"), "/"), -1).as("pdf_name"),
+      split(col("value"), "\f", -1).as("pages"))
   }
 
   /** Run any of the above to a console/memory sink for N batches — the

@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions._
 /** Web-enrichment stage (reference: web_scraping.py; SURVEY.md S11/§3.3).
   *
   * The reference scrapes one well at a time, relaunching a browser per well
-  * (sequential worst case ≈ 77 × 18 s). Here the keys DataFrame is
-  * repartitioned and enriched inside `mapPartitions` — executor-side
-  * parallelism with per-row failure isolation; a failed fetch degrades to
+  * (sequential worst case ≈ 77 × 18 s). Here the keys are spread
+  * over every task slot (`defaultParallelism` partitions, whatever the
+  * layout of the table they came from: a one-file header table reads as
+  * one partition) and enriched inside `mapPartitions`, one fetch in flight
+  * per slot, with per-row failure isolation; a failed fetch degrades to
   * the all-N/A blank row exactly like the reference's error path
   * (web_scraping.py:225-233). No live HTTP exists in the engine: clients
   * are pluggable, tests and the default use a deterministic stub.
@@ -49,18 +51,17 @@ object Enrichment {
     }
   }
 
-  /** keys → scraped rows. Partition-parallel; per-row try/catch degrades a
+  /** keys → scraped rows, on every task slot; per-row try/catch degrades a
     * throwing client to the blank row (failure isolation, timeout semantics
     * live inside the client). Scrape-norm (F20) applied to every attribute:
     * null/blank/"Members Only" → "N/A". A failed fetch also carries the
     * error message in __error — the S15 failure side-channel — surfaced by
     * [[rejects]] instead of screenshots-on-disk. */
-  def scrape(keys: DataFrame, client: EnrichmentClient,
-      parallelism: Int = 0): DataFrame = {
+  def scrape(keys: DataFrame, client: EnrichmentClient): DataFrame = {
     val spark = keys.sparkSession
     import spark.implicits._
-    val parts = if (parallelism > 0) keys.repartition(parallelism) else keys
-    val fetched = parts.select(col("well_name").cast("string"), col("api").cast("string"))
+    val fetched = keys.select(col("well_name").cast("string"), col("api").cast("string"))
+      .repartition(spark.sparkContext.defaultParallelism)
       .as[(String, String)]
       .mapPartitions { it =>
         it.map { case (name, api) =>
@@ -102,10 +103,10 @@ object Enrichment {
   /** Full enrichment flow: project keys (P1/S10), scrape, persist web_table
     * + well_info as parquet snapshots. */
   def run(spark: SparkSession, tableRoot: String,
-      client: EnrichmentClient = StubClient, parallelism: Int = 0): DataFrame = {
+      client: EnrichmentClient = StubClient): DataFrame = {
     val header = spark.read.parquet(s"$tableRoot/well_header")
     val keys = header.select("well_name", "api")
-    val web = webTable(scrape(keys, client, parallelism))
+    val web = webTable(scrape(keys, client))
     graft.operators.MergeWriter.overwriteAtomic(web, s"$tableRoot/web_table")
     val info = wellInfo(header, spark.read.parquet(s"$tableRoot/web_table"))
     graft.operators.MergeWriter.overwriteAtomic(info, s"$tableRoot/well_info")

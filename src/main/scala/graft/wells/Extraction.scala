@@ -3,6 +3,7 @@ package graft.wells
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.wells.Cleaning._
@@ -276,24 +277,33 @@ object Extraction {
   private val blankDocUdf = udf((pages: Seq[String]) => isBlankDoc(pages))
 
   /** Extract stage over a documents DataFrame with columns
-    * (pdf_name string, pages array<string>), e.g. from a binaryFile scan
-    * piped through a [[DocumentTextExtractor]]. Returns (headerDf, stimDf)
-    * in golden CSV column order; input is scanned once (cache it when both
-    * outputs are materialized). Blank documents are skipped entirely
-    * (P6, pdf_extraction.py:494-496). */
+    * (path string, pdf_name string, pages array<string>), as
+    * [[scanDocuments]] and `Streams.streamDocuments` produce. Returns
+    * (headerDf, stimDf) in golden CSV column order. Blank documents are
+    * skipped entirely (P6, pdf_extraction.py:494-496).
+    *
+    * Order contract (S1): each output is one partition in full-path order,
+    * like the reference's sorted(rglob) — a basename order would tie on
+    * duplicate filenames, and the load's last-writer-wins merge must see
+    * the later path last. The parse runs in the input's own parallel
+    * tasks and only the parsed rows cross the exchange into the ordered
+    * partition. A range sort (`orderBy`) would run the input's UDFs again
+    * in its sample job, and ordering the documents before the parse would
+    * put the decode and the parse into the one ordered task. The input is
+    * read once per output: cache it when both outputs are materialized. */
   def extractAll(docs: DataFrame): (DataFrame, DataFrame) = {
     val live = docs.filter(!blankDocUdf(col("pages")))
-    val header = live
-      .withColumn("h", parseHeaderUdf(col("pages"), col("pdf_name")))
-      .select(Model.headerCols.map(c => col(s"h.$c").as(c)): _*)
-    val stim = live
-      .withColumn("s", parseStimUdf(col("pages"), col("pdf_name")))
-      .select(Model.stimCols.map(c => col(s"s.$c").as(c)): _*)
-    (header, stim)
+    def inPathOrder(parse: UserDefinedFunction, cols: Seq[String]): DataFrame =
+      live.select(col("path"), parse(col("pages"), col("pdf_name")).as("r"))
+        .repartition(1)
+        .sortWithinPartitions("path")
+        .select(cols.map(c => col(s"r.$c").as(c)): _*)
+    (inPathOrder(parseHeaderUdf, Model.headerCols), inPathOrder(parseStimUdf, Model.stimCols))
   }
 
-  /** Directory-of-documents scan (S1): binary files, deterministic order
-    * pinned by path. Text extraction via the pluggable seam. */
+  /** Directory-of-documents scan (S1): binary files, one row per document
+    * with its full `path` (the order key of [[extractAll]]). Text
+    * extraction via the pluggable seam, in the scan's own tasks. */
   def scanDocuments(spark: SparkSession, dir: String,
       extractor: DocumentTextExtractor = TextPassthroughExtractor,
       glob: String = "*.pdf"): DataFrame = {
@@ -306,7 +316,5 @@ object Extraction {
       .select(col("path"),
         element_at(split(col("path"), "/"), -1).as("pdf_name"),
         pagesUdf(col("content")).as("pages"))
-      .orderBy("path") // full path, like the reference's sorted(rglob): a
-      .drop("path")    // basename sort would tie on duplicate filenames
   }
 }

@@ -28,7 +28,9 @@ import org.apache.spark.sql.SparkSession
   *                 processes swap the snapshot — an in-process
   *                 invalidation callback would miss the CLI `load` running
   *                 in its own JVM. Cache misses are single-flighted:
-  *                 concurrent requests share one computation.
+  *                 concurrent requests share one computation. A request
+  *                 that overlaps a publish is answered from the next
+  *                 stable snapshot, not with a 500.
   *   GET /       → static/index.html   (when a static dir is configured)
   *   GET /map    → static/map.html
   *   GET /<file> → static asset, traversal-guarded
@@ -57,30 +59,31 @@ object Serve {
     // listing always changes even where mtimes lie. Recursion matters for
     // partitioned layouts: a swap inside a partition subdirectory leaves
     // the top-level prefix entries untouched on an object store, so a
-    // one-level listStatus would miss it. A missing table fingerprints
-    // as "missing" and the query below reports the error.
-    def snapshotToken(): String = {
+    // one-level listStatus would miss it. None while a snapshot is not
+    // stable: a table absent (between the two renames of a swap) or a
+    // listing that failed on a file the swap moved away.
+    def snapshotToken(): Option[String] = {
       val conf = spark.sparkContext.hadoopConfiguration
       def sig(p: String): String = {
         val path = new org.apache.hadoop.fs.Path(p)
-        try {
-          val files = path.getFileSystem(conf).listFiles(path, true)
-          val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (files.hasNext) {
-            val s = files.next()
-            entries += s"${s.getPath.toUri.getPath}:${s.getLen}:${s.getModificationTime}"
-          }
-          entries.sorted.mkString(",")
-        } catch { case _: java.io.FileNotFoundException => "missing" }
+        val files = path.getFileSystem(conf).listFiles(path, true)
+        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (files.hasNext) {
+          val s = files.next()
+          entries += s"${s.getPath.toUri.getPath}:${s.getLen}:${s.getModificationTime}"
+        }
+        entries.sorted.mkString(",")
       }
-      sig(s"$tableRoot/well_info") + "|" + sig(s"$tableRoot/well_stimulation")
+      // Hadoop's local filesystem reports a file that vanished mid-listing
+      // as a RuntimeException, not a FileNotFoundException
+      try Some(sig(s"$tableRoot/well_info") + "|" + sig(s"$tableRoot/well_stimulation"))
+      catch { case scala.util.control.NonFatal(_) => None }
     }
 
     val cacheLock = new Object
-    def wellsPayload(): Array[Byte] = {
+    def payloadFor(token: String): Array[Byte] = {
       // token BEFORE the read: if a swap lands mid-read, the stored entry
       // carries the pre-swap token and the next request recomputes.
-      val token = snapshotToken()
       // single-flight: exactly one request per token runs the Spark query;
       // concurrent misses for the same token share its future instead of
       // each launching the full computation (and a thread pile-up)
@@ -135,6 +138,31 @@ object Serve {
         }
     }
 
+    // A publish (MergeWriter.overwriteAtomic) briefly leaves a table
+    // absent, and a read that overlaps it fails on a moved file. Neither is
+    // an error of the data: wait for the next stable snapshot and answer
+    // from it, a bounded number of times. Each attempt takes a fresh token,
+    // so the body is never older than a publish that returned before the
+    // request. A failure on a snapshot that did not move is the query's
+    // own, and so is an unstable snapshot that outlasts the retries: the
+    // query then runs anyway and reports it.
+    @scala.annotation.tailrec
+    def wellsPayload(retries: Int = SwapRetries): Array[Byte] = {
+      val token = snapshotToken()
+      val body =
+        if (token.isEmpty && retries > 0) None
+        else
+          try Some(payloadFor(token.getOrElse("unstable")))
+          catch { case scala.util.control.NonFatal(_)
+            if retries > 0 && snapshotToken() != token => None }
+      body match {
+        case Some(b) => b
+        case None =>
+          Thread.sleep(SwapRetryMs)
+          wellsPayload(retries - 1)
+      }
+    }
+
     server.createContext("/wells", (ex: HttpExchange) =>
       handle(ex) {
         // JDK contexts are longest-prefix matched; Flask routes are exact —
@@ -180,6 +208,9 @@ object Serve {
     server.start()
     server
   }
+
+  private val SwapRetries = 10
+  private val SwapRetryMs = 50L
 
   private val notFound =
     (404, "text/plain", "not found".getBytes(StandardCharsets.UTF_8))

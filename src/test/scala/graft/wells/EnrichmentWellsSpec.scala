@@ -18,29 +18,47 @@ class EnrichmentWellsSpec extends AnyFunSuite with SparkSpec {
     dir
   }
 
-  test("scrape normalizes Members Only and blanks to N/A") {
+  /** Keys as a one-file header table reads them: one partition. */
+  private def onePartitionKeys(n: Int) = {
     import spark.implicits._
-    val keys = Seq(("A WELL", "33-001-00001"), ("B WELL", "33-001-00002"))
-      .toDF("well_name", "api")
+    (1 to n).map(i => (s"WELL $i", f"33-001-$i%05d")).toDF("well_name", "api").coalesce(1)
+  }
+
+  test("scrape normalizes Members Only and blanks to N/A") {
+    // the keys arrive in one partition; the fetches must still overlap
+    val keys = onePartitionKeys(8)
+    // (start, end) nanos of every fetch, to find the peak number in flight
+    val spans = spark.sparkContext.collectionAccumulator[(Long, Long)]("fetch spans")
     val client = new Enrichment.EnrichmentClient {
-      def fetch(n: String, a: String): Enrichment.WebRecord =
+      def fetch(n: String, a: String): Enrichment.WebRecord = {
+        val start = System.nanoTime()
+        Thread.sleep(50)
+        spans.add((start, System.nanoTime()))
         Enrichment.WebRecord(n, a, "  Members Only ", "", null, "2.1k", "305.8k")
+      }
     }
     val rows = Enrichment.scrape(keys, client).orderBy("well_name").collect()
-    assert(rows(0).getAs[String]("well_status") == "N/A")
-    assert(rows(0).getAs[String]("well_type") == "N/A")
-    assert(rows(0).getAs[String]("closest_city") == "N/A")
-    assert(rows(0).getAs[String]("oil_badge") == "2.1k")
+    assert(rows.length == 8)
+    assert(rows.forall(_.getAs[String]("well_status") == "N/A"))
+    assert(rows.forall(_.getAs[String]("well_type") == "N/A"))
+    assert(rows.forall(_.getAs[String]("closest_city") == "N/A"))
+    assert(rows.forall(_.getAs[String]("oil_badge") == "2.1k"))
+    import scala.jdk.CollectionConverters._
+    // ends sort before starts at the same instant: touching spans do not overlap
+    val events = spans.value.asScala.toSeq.flatMap { case (a, b) => Seq((a, 1), (b, -1)) }
+      .sortBy { case (t, d) => (t, d) }
+    val peak = events.scanLeft(0)(_ + _._2).max
+    assert(peak > 1, s"fetches ran one at a time (peak in flight $peak)")
   }
 
   test("a throwing client degrades to the blank row, not task failure") {
-    import spark.implicits._
-    val keys = Seq(("X", "1")).toDF("well_name", "api")
     val boom = new Enrichment.EnrichmentClient {
       def fetch(n: String, a: String) = throw new RuntimeException("timeout")
     }
-    val row = Enrichment.scrape(keys, boom).collect()(0)
-    assert(Model.scrapeCols.forall(c => row.getAs[String](c) == "N/A"))
+    val rows = Enrichment.scrape(onePartitionKeys(6), boom).collect()
+    assert(rows.length == 6)
+    assert(rows.forall(row => Model.scrapeCols.forall(c => row.getAs[String](c) == "N/A")))
+    assert(rows.forall(_.getAs[String]("__error").contains("timeout")))
   }
 
   test("web_table materializes N/A as empty string, never null (F20-F22)") {

@@ -491,4 +491,56 @@ class PdfTextSpec extends AnyFunSuite with graft.SparkSpec {
       ("B_fixture.pdf", "TEXTCO")),
       s"mixed-directory scan drifted: $rows")
   }
+
+  test("S1 scan as the extract CLI drives it: each document decoded once, rows in full-path order") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("pdf-once")
+    val out = Files.createTempDirectory("pdf-once-out")
+    // path order: a/W1, a/W2, a/W3_blank, b/W1, c/W0 — not basename order,
+    // and W1.pdf twice: the later path's copy must come last
+    val docs = Seq(
+      "a/W2.pdf" -> "ALPHA", "a/W1.pdf" -> "FIRST COPY", "b/W1.pdf" -> "SECOND COPY",
+      "a/W3_blank.pdf" -> "", "c/W0.pdf" -> "CHARLIE")
+    for ((rel, operator) <- docs) {
+      val f = dir.resolve(rel)
+      Files.createDirectories(f.getParent)
+      val pages = if (operator.isEmpty) Seq("", "") else Seq(s"Operator: $operator", "filler")
+      Files.write(f, pdf(pages, flate = true))
+    }
+    val calls = spark.sparkContext.longAccumulator("extractor calls")
+    val scanned = Extraction.scanDocuments(spark, dir.toString,
+      new PdfTextSpec.CountingExtractor(calls)).cache()
+    try {
+      val (header, stim) = Extraction.extractAll(scanned)
+      header.coalesce(1).write.mode("overwrite").option("header", "true")
+        .csv(s"$out/well_header")
+      stim.coalesce(1).write.mode("overwrite").option("header", "true")
+        .csv(s"$out/well_stimulation")
+      assert(scanned.count() == docs.size)
+      assert(calls.value == docs.size, "a document was decoded more than once")
+
+      def csvRows(table: String): Seq[Seq[String]] = {
+        val parts = Files.list(out.resolve(table)).iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".csv")).toSeq
+        assert(parts.size == 1)
+        Files.readAllLines(parts.head).asScala.toSeq.tail.map(_.split(",", -1).toSeq)
+      }
+      assert(csvRows("well_header").map(_.take(2)) == Seq(
+        Seq("W1.pdf", "FIRST COPY"), Seq("W2.pdf", "ALPHA"),
+        Seq("W1.pdf", "SECOND COPY"), Seq("W0.pdf", "CHARLIE")))
+      assert(csvRows("well_stimulation").map(_.head) == Seq("W1.pdf", "W2.pdf", "W1.pdf", "W0.pdf"))
+    } finally scanned.unpersist()
+  }
+}
+
+object PdfTextSpec {
+  /** The text-layer codec, counting its calls in an accumulator. */
+  final class CountingExtractor(calls: org.apache.spark.util.LongAccumulator)
+      extends Extraction.DocumentTextExtractor {
+    def extract(content: Array[Byte]): Seq[String] = {
+      calls.add(1)
+      PdfText.AutoDetect.extract(content)
+    }
+  }
 }

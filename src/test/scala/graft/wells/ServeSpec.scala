@@ -180,4 +180,57 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
     }
   }
+
+  test("/wells answers 200, never older than the last publish, while publishes swap a table") {
+    import spark.implicits._
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    import graft.operators.MergeWriter
+    // generated tables (no reference corpus): every row of well_info
+    // carries the version of the publish that wrote it
+    val dir = Files.createTempDirectory("wells-serve-race").toString
+    def info(version: Int) = (1 to 20)
+      .map(i => (f"W$i%03d.pdf", s"WELL $i", 48.0 + i / 100.0, -103.0, version))
+      .toDF("pdf_name", "well_name", "latitude", "longitude", "version")
+    MergeWriter.overwriteAtomic(info(0), s"$dir/well_info")
+    MergeWriter.overwriteAtomic((1 to 20).map(i => (f"W$i%03d.pdf", s"d$i"))
+      .toDF("pdf_name", "details"), s"$dir/well_stimulation")
+    val Version = "\"version\":(\\d+)".r
+
+    val server = Serve.start(spark, dir, 0, None)
+    val port = server.getAddress.getPort
+    val published = new AtomicInteger(0)
+    val stop = new AtomicBoolean(false)
+    val answered = new AtomicInteger(0)
+    val failures = new ConcurrentLinkedQueue[String]()
+    val readers = (1 to 4).map(_ => new Thread(() =>
+      while (!stop.get) {
+        val need = published.get
+        try {
+          val r = get(port, "/wells")
+          val v = Version.findFirstMatchIn(r.body()).map(_.group(1).toInt).getOrElse(-1)
+          if (r.statusCode() != 200) failures.add(s"HTTP ${r.statusCode()}")
+          else if (v < need) failures.add(s"stale body: version $v < $need")
+        } catch { case e: Exception => failures.add(e.toString) }
+        answered.incrementAndGet()
+      }))
+    readers.foreach(_.start())
+    // after each publish, wait for one more answer: a snapshot that never
+    // stays put for one query's length cannot be read at all
+    try for (v <- 1 to 6) {
+      MergeWriter.overwriteAtomic(info(v), s"$dir/well_info")
+      published.set(v)
+      val before = answered.get
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (answered.get == before && System.nanoTime() < deadline) Thread.sleep(5)
+    } finally {
+      stop.set(true)
+      readers.foreach(_.join(60000))
+      server.stop(0)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(failures.isEmpty, s"${failures.size} of ${answered.get} requests failed: " +
+      failures.asScala.take(3).mkString("; "))
+    assert(answered.get >= 6)
+  }
 }
