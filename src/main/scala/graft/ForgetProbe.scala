@@ -10,15 +10,16 @@ import org.apache.spark.sql.functions._
   * base replica, so they include duplicate-group keepers — the min-repair
   * classes must actually repair, not skip). Classes measured:
   *
-  *  - negative-delta decrement: `forgetCountState` (vocab) — O(deleted)
-  *    recompute + append; the table is never rewritten;
+  *  - negative-delta decrement: `forgetState` over `StateFamily.Vocab` —
+  *    O(deleted) recompute + append; the table is never rewritten;
   *  - exact id-granular deletion: `forgetTfState` — a partition-pruned
   *    rewrite of only the buckets holding forgotten ids plus the
   *    tombstone swap (this probe's doc_id %% 50 sample touches the 32
   *    even of 64 buckets, so the measured number reflects a half-table
   *    rewrite; a small forget request touches proportionally less);
-  *  - decrement + min-repair: `forgetChunkState` — O(deleted) decrement
-  *    plus ONE O(corpus) re-chunk pruned to the affected digests (paid
+  *  - decrement + min-repair: `forgetState` over `StateFamily.Chunk` —
+  *    O(deleted) decrement plus ONE O(corpus) re-chunk pruned to the
+  *    affected digests (paid
   *    only because keepers were hit — the probe's id choice guarantees
   *    it) plus the patch rewrite;
   *  - cross-doc repair: `forgetSpanState` — decrement + crossing-repair
@@ -73,12 +74,12 @@ object ForgetProbe {
 
     // negative-delta class: vocabulary counts
     time("ingest_vocab") {
-      graft.streaming.Streams.maintainVocabState(
-        docs.select($"doc_id", $"text"), s"$work/vocab", s"$work/docsV")
+      graft.streaming.Streams.maintainState(docs.select($"doc_id", $"text"),
+        s"$work/docsV", graft.streaming.StateFamily.Vocab -> s"$work/vocab")
     }
     time("forget_counts_negative_delta") {
-      graft.streaming.Streams.forgetCountState(spark, forgetIds,
-        s"$work/docsV", vocabTable = Some(s"$work/vocab"))
+      graft.streaming.Streams.forgetState(spark, forgetIds, s"$work/docsV",
+        graft.streaming.StateFamily.Vocab -> s"$work/vocab")
     }
 
     // exact-deletion class: the retrieval tf table
@@ -93,12 +94,12 @@ object ForgetProbe {
 
     // min-repair class: chunk-digest stats (keepers hit by id choice)
     time("ingest_chunks") {
-      graft.streaming.Streams.maintainChunkState(
-        docs.select($"doc_id", $"text"), s"$work/chunks", s"$work/docsC")
+      graft.streaming.Streams.maintainState(docs.select($"doc_id", $"text"),
+        s"$work/docsC", graft.streaming.StateFamily.Chunk -> s"$work/chunks")
     }
     time("forget_chunks_min_repair") {
-      graft.streaming.Streams.forgetChunkState(spark, forgetIds,
-        s"$work/chunks", s"$work/docsC")
+      graft.streaming.Streams.forgetState(spark, forgetIds, s"$work/docsC",
+        graft.streaming.StateFamily.Chunk -> s"$work/chunks")
     }
 
     // cross-doc-repair class: span dedup

@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
   * in the advance, where state growth would actually show (verdict item
   * 2): [[graft.streaming.Streams.maintainSpanState]] (reads the standing
   * gram store via an anti-join and the standing counts rollup every
-  * advance) and [[graft.streaming.Streams.maintainLmState]] (delta-only
+  * advance) and [[graft.streaming.StateFamily.Lm]] (delta-only
   * write; its standing read is the guard). Round 15 adds the sketch
   * families (pp29 CMS + vocab, pp31 HLL, pp32 quantile): their standing
   * summaries are size-BOUNDED by construction, so the term under test is
@@ -82,11 +82,11 @@ object MaintainerProbe {
     // prune; the two modes measure the two claims separately.
     val cellwise = args.lift(3).contains("cellwise")
     // "routed": DECORRELATED (interleaved) arrival fed through the
-    // PRODUCTION cell-router (Streams.routeByCell + flushCellGroups) —
+    // PRODUCTION cell-router (Streams.routeByCell + flushCellGroupsBatched) —
     // the round-18 closure of the r17 gap: cellwise grouped batches by
     // hand in the harness; this mode lets the shipped operator do it.
     // The knn-graph column becomes route + flush-advance per arrival
-    // (each flushed group is a cell-clustered micro-batch), and should
+    // (each flushed wave is a cell-clustered micro-batch), and should
     // land in the cellwise column's band, NOT the interleaved one; the
     // end-of-run graph == full-build pin closes exactness after the
     // decommission drain.
@@ -255,14 +255,14 @@ object MaintainerProbe {
       val gt = time {
         if (routed) {
           // the deployable loop: stage the decorrelated arrival under the
-          // standing quantizer, then advance the graph once per READY
-          // cell group — the router's assignment pass is part of the
+          // standing quantizer, then advance the graph once per wave of
+          // READY cell groups — the router's assignment pass is part of the
           // advance cost a deployment pays, so it is timed inside
           graft.streaming.Streams.routeByCell(b, cents, stageT, nBatches,
             k.toLong)
-          graft.streaming.Streams.flushCellGroups(spark, stageT,
+          graft.streaming.Streams.flushCellGroupsBatched(spark, stageT,
             minRows = routeFlushRows, maxLag = nBatches.toLong,
-            curSeq = k.toLong) { (_, rows) =>
+            curSeq = k.toLong) { rows =>
             val t0 = System.nanoTime()
             graft.streaming.Streams.maintainKnnGraphState(rows, cents,
               gPostT, graphT)
@@ -333,8 +333,8 @@ object MaintainerProbe {
       // maintained state, and the drain is itself a measured lifecycle
       // step (the age trigger's backstop)
       val dt = time {
-        graft.streaming.Streams.flushCellGroups(spark, stageT,
-          minRows = 1L, maxLag = 0L, curSeq = nBatches.toLong) { (_, rows) =>
+        graft.streaming.Streams.flushCellGroupsBatched(spark, stageT,
+          minRows = 1L, maxLag = 0L, curSeq = nBatches.toLong) { rows =>
           val t0 = System.nanoTime()
           graft.streaming.Streams.maintainKnnGraphState(rows, cents,
             gPostT, graphT)
@@ -342,10 +342,10 @@ object MaintainerProbe {
         }
       }
       println(f"| drain | - | $standing | - | - | $dt%.2f | - | - |")
-      // the cellwise comparison: each flushed group is a cell-pure
-      // ~routeFlushRows-row micro-batch — these per-advance times are
+      // the cellwise comparison: each flushed wave is a cell-clustered
+      // micro-batch of >= routeFlushRows rows — these per-advance times are
       // the routed twin of the cellwise column
-      println(s"routed flush advances (cell-pure ~$routeFlushRows-row groups): " +
+      println(s"routed flush advances (waves of >= $routeFlushRows-row groups): " +
         routedAdvances.map(t => f"$t%.2f").mkString(" s, ") + " s")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
@@ -478,16 +478,16 @@ object MaintainerProbe {
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
         .filter(col("doc_id") < 100L),
       refT)
-    graft.streaming.Streams.maintainMixState(docBatch(0), s"$warm/mix",
-      s"$warm/mix_docs")
-    graft.streaming.Streams.maintainDedupState(docBatch(0), s"$warm/ded",
-      s"$warm/ded_docs")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/mix_docs",
+      graft.streaming.StateFamily.Mix -> s"$warm/mix")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/ded_docs",
+      graft.streaming.StateFamily.ExactDedup -> s"$warm/ded")
     graft.streaming.Streams.maintainSpanState(docBatch(0), s"$warm/span_g",
       s"$warm/span_c", s"$warm/span_r", s"$warm/span_docs")
-    graft.streaming.Streams.maintainLmState(docBatch(0), s"$warm/lm",
-      s"$warm/lm_docs")
-    graft.streaming.Streams.maintainChunkState(docBatch(0), s"$warm/chk",
-      s"$warm/chk_docs")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/lm_docs",
+      graft.streaming.StateFamily.Lm -> s"$warm/lm")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/chk_docs",
+      graft.streaming.StateFamily.Chunk -> s"$warm/chk")
     graft.streaming.Streams.maintainPerceptualState(docBatch(0),
       s"$warm/perc_s", s"$warm/perc_p", s"$warm/perc_docs")
     graft.streaming.Streams.maintainScoreState(docBatch(0), refT,
@@ -496,12 +496,13 @@ object MaintainerProbe {
       s"$warm/tf_docs")
     graft.streaming.Streams.maintainFeatureState(docBatch(0), s"$warm/ft",
       s"$warm/fm", s"$warm/fl", s"$warm/ft_docs")
-    graft.streaming.Streams.maintainCmsState(docBatch(0), s"$warm/cms",
-      s"$warm/cms_v", s"$warm/cms_docs")
-    graft.streaming.Streams.maintainHllState(docBatch(0), s"$warm/hll",
-      s"$warm/hll_docs")
-    graft.streaming.Streams.maintainQuantileState(qsBatch(0), s"$warm/qs",
-      s"$warm/qs_docs")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/cms_docs",
+      graft.streaming.StateFamily.CmsCells -> s"$warm/cms",
+      graft.streaming.StateFamily.Vocab -> s"$warm/cms_v")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/hll_docs",
+      graft.streaming.StateFamily.Hll -> s"$warm/hll")
+    graft.streaming.Streams.maintainState(qsBatch(0), s"$warm/qs_docs",
+      graft.streaming.StateFamily.Quantile -> s"$warm/qs")
     println()
     // the perceptual column runs CAPPED (maxBucket = 256, the dd13-style
     // hot-bucket treatment): the generated corpus's replicas collide on
@@ -517,20 +518,24 @@ object MaintainerProbe {
       val b = docBatch(k)
       val rows = b.count()
       val mt = time {
-        graft.streaming.Streams.maintainMixState(b, mixT, mixDocT)
+        graft.streaming.Streams.maintainState(b, mixDocT,
+          graft.streaming.StateFamily.Mix -> mixT)
       }
       val ddt = time {
-        graft.streaming.Streams.maintainDedupState(b, dedT, dedDocT)
+        graft.streaming.Streams.maintainState(b, dedDocT,
+          graft.streaming.StateFamily.ExactDedup -> dedT)
       }
       val st = time {
         graft.streaming.Streams.maintainSpanState(b, spanGT, spanCT, spanRT,
           spanDocT)
       }
       val lt = time {
-        graft.streaming.Streams.maintainLmState(b, lmT, lmDocT)
+        graft.streaming.Streams.maintainState(b, lmDocT,
+          graft.streaming.StateFamily.Lm -> lmT)
       }
       val kt = time {
-        graft.streaming.Streams.maintainChunkState(b, chkT, chkDocT)
+        graft.streaming.Streams.maintainState(b, chkDocT,
+          graft.streaming.StateFamily.Chunk -> chkT)
       }
       val pt = time {
         graft.streaming.Streams.maintainPerceptualState(b, percST, percPT,
@@ -546,31 +551,42 @@ object MaintainerProbe {
         graft.streaming.Streams.maintainFeatureState(b, ftT, fmT, flT, ftDocT)
       }
       val cmt = time {
-        graft.streaming.Streams.maintainCmsState(b, cmsT, cmsVT, cmsDocT)
+        graft.streaming.Streams.maintainState(b, cmsDocT,
+          graft.streaming.StateFamily.CmsCells -> cmsT,
+          graft.streaming.StateFamily.Vocab -> cmsVT)
       }
       val hlt = time {
-        graft.streaming.Streams.maintainHllState(b, hllT, hllDocT)
+        graft.streaming.Streams.maintainState(b, hllDocT,
+          graft.streaming.StateFamily.Hll -> hllT)
       }
       val qst = time {
-        graft.streaming.Streams.maintainQuantileState(qsBatch(k), qsT, qsDocT)
+        graft.streaming.Streams.maintainState(qsBatch(k), qsDocT,
+          graft.streaming.StateFamily.Quantile -> qsT)
       }
       val ct =
         if ((k + 1) % compactEvery == 0) time {
-          graft.streaming.Streams.compactMix(spark, mixT, mixDocT)
-          graft.streaming.Streams.compactDedup(spark, dedT, dedDocT)
+          graft.streaming.Streams.compactState(spark, mixDocT,
+            graft.streaming.StateFamily.Mix -> mixT)
+          graft.streaming.Streams.compactState(spark, dedDocT,
+            graft.streaming.StateFamily.ExactDedup -> dedT)
           graft.streaming.Streams.compactSpanCounts(spark, spanCT, spanDocT)
           graft.streaming.Streams.compactSpanReport(spark, spanRT, spanDocT)
           graft.streaming.Streams.compactAppends(spark, spanGT, cpus.toInt)
-          graft.streaming.Streams.compactLm(spark, lmT, lmDocT)
-          graft.streaming.Streams.compactChunks(spark, chkT, chkDocT)
+          graft.streaming.Streams.compactState(spark, lmDocT,
+            graft.streaming.StateFamily.Lm -> lmT)
+          graft.streaming.Streams.compactState(spark, chkDocT,
+            graft.streaming.StateFamily.Chunk -> chkT)
           graft.streaming.Streams.compactAppends(spark, percST, cpus.toInt)
           graft.streaming.Streams.compactScores(spark, scoT)
           graft.streaming.Streams.compactTf(spark, tfT, cpus.toInt)
           graft.streaming.Streams.compactFeatures(spark, ftT, fmT, flT)
-          graft.streaming.Streams.compactCms(spark, cmsT, cmsDocT)
-          graft.streaming.Streams.compactVocab(spark, cmsVT, cmsDocT)
-          graft.streaming.Streams.compactHll(spark, hllT)
-          graft.streaming.Streams.compactQuantile(spark, qsT)
+          graft.streaming.Streams.compactState(spark, cmsDocT,
+            graft.streaming.StateFamily.CmsCells -> cmsT,
+            graft.streaming.StateFamily.Vocab -> cmsVT)
+          graft.streaming.Streams.compactState(spark, hllDocT,
+            graft.streaming.StateFamily.Hll -> hllT)
+          graft.streaming.Streams.compactState(spark, qsDocT,
+            graft.streaming.StateFamily.Quantile -> qsT)
         } else -1.0
       docStanding += rows
       val cs = if (ct < 0) "" else f"$ct%.2f"

@@ -185,14 +185,16 @@ object StageProbe {
         concat(lit("pipe:"), $"doc_id".cast("string"))) % 5 === 0
       st.buildRefState(dall, s"$dir/ref")
       for (b <- Seq(dall.filter(!isNew), dall.filter(isNew))) {
-        st.maintainDedupState(b.select($"doc_id", $"text"),
-          s"$dir/xstats", s"$dir/xdocs")
+        st.maintainState(b.select($"doc_id", $"text"), s"$dir/xdocs",
+          graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
         st.maintainScoreState(b, s"$dir/ref", s"$dir/scores", s"$dir/sdocs")
         st.maintainTfState(b.select($"doc_id", $"text"),
           s"$dir/tf", s"$dir/dl", s"$dir/tdocs")
-        st.maintainCmsState(b.select($"doc_id", $"text"),
-          s"$dir/cells", s"$dir/vocab", s"$dir/cdocs")
-        st.maintainHllState(b, s"$dir/regs", s"$dir/hdocs")
+        st.maintainState(b.select($"doc_id", $"text"), s"$dir/cdocs",
+          graft.streaming.StateFamily.CmsCells -> s"$dir/cells",
+          graft.streaming.StateFamily.Vocab -> s"$dir/vocab")
+        st.maintainState(b, s"$dir/hdocs",
+          graft.streaming.StateFamily.Hll -> s"$dir/regs")
       }
       time("L1_dedup_snapshot") { noop(st.dedupSnapshot(spark, s"$dir/xstats")) }
       time("L2_score_snapshot") { noop(st.scoreSnapshot(spark, s"$dir/scores")) }
@@ -216,11 +218,14 @@ object StageProbe {
       // compacted-state re-run: the production cadence runs the family
       // compactors between advances; measure what the snapshot legs pay
       // for the UNcompacted 2-advance layout vs the compacted one
-      st.compactDedup(spark, s"$dir/xstats", s"$dir/xdocs")
+      st.compactState(spark, s"$dir/xdocs",
+        graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
       st.compactScores(spark, s"$dir/scores")
       st.compactTf(spark, s"$dir/tf", s"$dir/dl")
-      st.compactCms(spark, s"$dir/cells", s"$dir/cdocs")
-      st.compactHll(spark, s"$dir/regs")
+      st.compactState(spark, s"$dir/cdocs",
+        graft.streaming.StateFamily.CmsCells -> s"$dir/cells")
+      st.compactState(spark, s"$dir/hdocs",
+        graft.streaming.StateFamily.Hll -> s"$dir/regs")
       time("C1_dedup_snapshot") { noop(st.dedupSnapshot(spark, s"$dir/xstats")) }
       time("C2_score_snapshot") { noop(st.scoreSnapshot(spark, s"$dir/scores")) }
       time("C3_bm25_serve") {

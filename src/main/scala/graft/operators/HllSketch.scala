@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * combine map-side (`max` is associative/commutative/idempotent), and
   * sketches of arbitrary — even OVERLAPPING — corpora merge by
   * register-wise max, which makes the summary shardable and
-  * incrementally maintainable (Streams.maintainHllState). Versus the
+  * incrementally maintainable (StateFamily.Hll). Versus the
   * bottom-k [[KmvSketch]]: KMV is exact until saturation and its
   * buffer costs k longs; HLL is never exact but its 64-register state
   * is ~16× smaller at k=256 and its merge is idempotent (KMV's merge

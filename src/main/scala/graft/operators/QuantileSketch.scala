@@ -57,7 +57,7 @@ import org.apache.spark.sql.functions._
   * domain at 100 TB). Sketches of arbitrary — even overlapping —
   * corpora merge row-locally ([[merged]]), which is what makes the
   * summary incrementally maintainable
-  * ([[graft.streaming.Streams.maintainQuantileState]]). */
+  * ([[graft.streaming.StateFamily.Quantile]]). */
 object QuantileSketch {
 
   /** One sampled row: uniform hash of the row's unique key + the
@@ -140,7 +140,7 @@ object QuantileSketch {
     * [[quantilesDouble]] on a BIGINT one — fails loudly instead of
     * returning transformed bits as values. Exploded (h, v) pair rows
     * from this sketch feed the SAME maintained family
-    * ([[graft.streaming.Streams.maintainQuantileState]]) unchanged —
+    * ([[graft.streaming.StateFamily.Quantile]]) unchanged —
     * the standing layout never looks at the value, only its order. */
   def sketchDouble(df: DataFrame, group: String, hash: Column,
       value: Column, k: Int): DataFrame =

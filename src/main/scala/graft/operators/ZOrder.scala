@@ -81,12 +81,6 @@ object ZOrder {
     greatest(lit(0L), least(lit(cells - 1), q))
   }
 
-  /** [[quantized]]'s DuckDB twin. */
-  def quantizedSql(e: String, lo: Long, hi: Long, bits: Int): String = {
-    val cells = 1L << bits
-    s"greatest(0, least(${cells - 1}, ((($e) - $lo) * $cells) // ${hi - lo + 1}))"
-  }
-
   /** Write `df` z-ordered on `dims` (column → declared [lo, hi] domain)
     * into `path` as parquet: quantize, interleave, range-partition on
     * the z value into `files` output partitions, sort each partition by

@@ -177,7 +177,7 @@ object SampleOps {
     * must track a GROWING corpus, which is why they are maintained state
     * and not a constant). Membership over the full corpus under the
     * maintained rates must equal sa05 — the oracle is sa05's verbatim.
-    * [[graft.streaming.Streams.maintainMixState]] is the continuous
+    * [[graft.streaming.StateFamily.Mix]] is the continuous
     * loop. */
   private def pp16(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -1195,7 +1195,7 @@ object TextOps {
     vocabTop(vocabCounts(documents(s, d)))
 
   /** Per-token (df, cf) over a document set — ta07's kernel, shared with
-    * the incremental flow (pp07 / Streams.maintainVocabState): both counts
+    * the incremental flow (pp07 / StateFamily.Vocab): both counts
     * are ADDITIVE across doc-disjoint splits (df is a count of docs, cf a
     * sum of occurrences — no count-distinct anywhere), which is the whole
     * reason vocabulary state can advance per batch without corpus rescans.
@@ -1222,8 +1222,8 @@ object TextOps {
     * split derives the standing per-token counts, the 20% batch's counts
     * are summed in, and the top-100 must equal ta07 over the FULL corpus —
     * the oracle is ta07's, verbatim.
-    * [[graft.streaming.Streams.maintainVocabState]] is the continuous
-    * loop (with batch_key idempotence for at-least-once redelivery). */
+    * [[graft.streaming.StateFamily.Vocab]] is the continuous loop (with
+    * batch_key idempotence for at-least-once redelivery). */
   private def pp07(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = documents(s, d)
@@ -1294,7 +1294,7 @@ object TextOps {
 
   /** Per-bigram occurrence counts over a document set — ta09's kernel,
     * shared with the incremental flow (pp13 /
-    * [[graft.streaming.Streams.maintainLmState]]): the count is PURELY
+    * [[graft.streaming.StateFamily.Lm]]): the count is PURELY
     * ADDITIVE across doc-disjoint splits (an occurrence sum, nothing
     * distinct-counted), which is what lets bigram-LM state advance per
     * batch without corpus rescans. One map-side-combinable shuffle; the
@@ -1329,7 +1329,7 @@ object TextOps {
     * asymptotic win). The gate replays production: the 80% split derives
     * the standing counts, the 20% batch advances them, and the top-100
     * must equal ta09 over the FULL corpus — the oracle is ta09's,
-    * verbatim. [[graft.streaming.Streams.maintainLmState]] is the
+    * verbatim. [[graft.streaming.StateFamily.Lm]] is the
     * continuous loop (batch_key idempotence for at-least-once
     * redelivery). */
   private def pp13(s: SparkSession, d: String): DataFrame = {
@@ -2405,7 +2405,7 @@ object TextOps {
 
   /** The (j, b, n) sketch cells over a token-occurrence frame — ta20's
     * build kernel, shared verbatim with the continuous maintainer
-    * ([[graft.streaming.Streams.maintainCmsState]]'s per-batch delta):
+    * ([[graft.streaming.StateFamily.CmsCells]]' per-batch delta):
     * cells are plain sums, so cells of doc-disjoint batches ADD — the
     * additivity the incremental twin and the negative-delta forget
     * rest on. */
@@ -2444,7 +2444,7 @@ object TextOps {
     * probing its own candidate keys maintains the cells alone); the
     * advance is ONE batch tokenize feeding both. Result == ta20 over
     * the full corpus — the oracle is ta20's, verbatim. Continuous twin
-    * [[graft.streaming.Streams.maintainCmsState]]. */
+    * [[graft.streaming.StateFamily.CmsCells]]. */
   private def pp29(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = documents(s, d)
@@ -2704,8 +2704,8 @@ object TextOps {
     * verbatim. The honest trade, stated where it bites: max does not
     * invert, so unlike the additive counts family there is NO
     * O(deleted) forget — deletion propagation for HLL state is a
-    * rebuild over survivors (Streams.forgetHllState). Continuous twin
-    * Streams.maintainHllState. */
+    * rebuild over survivors (StateFamily.Rebuild). Continuous twin
+    * StateFamily.Hll. */
   private def pp31(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = documents(s, d)
@@ -2735,7 +2735,7 @@ object TextOps {
     * k (long, long) pairs per (group, map) REGARDLESS of domain or row
     * count — the only one of the three that survives an unbounded value
     * domain at 100 TB — and its sketches merge across shards and
-    * batches (pp32, Streams.maintainQuantileState). The sample hash is
+    * batches (pp32, StateFamily.Quantile). The sample hash is
     * the salted md5 fold of doc_id (a UNIQUE key — never the value,
     * which would collapse duplicate values and bias every estimate);
     * estimates are nearest-lower-rank over the value-sorted sample,
@@ -2748,7 +2748,7 @@ object TextOps {
   /** (doc_id, source, v)-shaped rows → the (source, h, v) sample-pair
     * input: h = salted md5 fold of the doc id, NULL values dropped.
     * Shared by ta24, pp32, and the maintained family
-    * ([[graft.streaming.Streams.maintainQuantileState]]) so the hash
+    * ([[graft.streaming.StateFamily.Quantile]]) so the hash
     * can never drift between the gate and the maintainer. */
   private[graft] def qsPairs(rows: DataFrame): DataFrame =
     rows.where(col("v").isNotNull)
@@ -2796,8 +2796,8 @@ object TextOps {
     * (h, v)). Oracle = ta24's verbatim. Honest trade, HLL's: a
     * SATURATED sample cannot recover discarded pairs under deletion,
     * so forget is rebuild-over-survivors
-    * (Streams.forgetQuantileState). Continuous twin
-    * Streams.maintainQuantileState. */
+    * (StateFamily.Rebuild). Continuous twin
+    * StateFamily.Quantile. */
   private def pp32(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = documents(s, d).select($"doc_id", $"source", $"n_chars".as("v"))
@@ -2921,17 +2921,19 @@ object TextOps {
     * cannot drift. */
   private def textFamiliesIngest(b: DataFrame, dir: String): Unit = {
     val st = graft.streaming.Streams
-    st.maintainDedupState(b.select(col("doc_id"), col("text")),
-      s"$dir/xstats", s"$dir/xdocs")
+    st.maintainState(b.select(col("doc_id"), col("text")), s"$dir/xdocs",
+      graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
     st.maintainScoreState(b, s"$dir/ref", s"$dir/scores", s"$dir/sdocs")
     // the tf+dl two-table overload: the retrieval leg serves through
     // the maintained-lengths path (bm25ServeSnapshot) — the production
     // shape, whose equality with ta18 TfStateSpec pins
     st.maintainTfState(b.select(col("doc_id"), col("text")),
       s"$dir/tf", s"$dir/dl", s"$dir/tdocs")
-    st.maintainCmsState(b.select(col("doc_id"), col("text")),
-      s"$dir/cells", s"$dir/vocab", s"$dir/cdocs")
-    st.maintainHllState(b, s"$dir/regs", s"$dir/hdocs")
+    st.maintainState(b.select(col("doc_id"), col("text")), s"$dir/cdocs",
+      graft.streaming.StateFamily.CmsCells -> s"$dir/cells",
+      graft.streaming.StateFamily.Vocab -> s"$dir/vocab")
+    st.maintainState(b, s"$dir/hdocs",
+      graft.streaming.StateFamily.Hll -> s"$dir/regs")
   }
 
   /** The families' CADENCED COMPACTION — the production lifecycle step
@@ -2944,11 +2946,14 @@ object TextOps {
     * the bm25 leg alone at sf0.1). */
   private def textFamiliesCompact(s: SparkSession, dir: String): Unit = {
     val st = graft.streaming.Streams
-    st.compactDedup(s, s"$dir/xstats", s"$dir/xdocs")
+    st.compactState(s, s"$dir/xdocs",
+      graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
     st.compactScores(s, s"$dir/scores")
     st.compactTf(s, s"$dir/tf", s"$dir/dl")
-    st.compactCms(s, s"$dir/cells", s"$dir/cdocs")
-    st.compactHll(s, s"$dir/regs")
+    st.compactState(s, s"$dir/cdocs",
+      graft.streaming.StateFamily.CmsCells -> s"$dir/cells")
+    st.compactState(s, s"$dir/hdocs",
+      graft.streaming.StateFamily.Hll -> s"$dir/regs")
   }
 
   /** One composite leg: a family's snapshot serialized to tagged rows.

@@ -2539,7 +2539,7 @@ object VectorOps {
     * whole graph; id-clustered ingest does not help — ids decorrelate
     * from cells), so [[graft.streaming.Streams.routeByCell]] stages
     * decorrelated arrivals into per-cell-group micro-batches under the
-    * standing quantizer and [[graft.streaming.Streams.flushCellGroups]]
+    * standing quantizer and [[graft.streaming.Streams.flushCellGroupsBatched]]
     * releases each group — size- or age-triggered — as its own advance.
     * The gate replays exactly that: id-interleaved arrival batches
     * (every batch spans every cell — the worst decorrelated shape)

@@ -895,104 +895,151 @@ object Streams {
       idsC, docTable, "text")
   }
 
-  /** DELETION PROPAGATION for the COUNTS-shaped family (vocabulary /
-    * bigram LM) — and the cheapest member of the forget family, because
-    * additive state is DECREMENTABLE: a forgotten doc's exact
-    * contribution is recomputed from its stored text and appended as
-    * NEGATIVE delta rows, so the count tables are repaired by an
-    * O(deleted)-sized append instead of the O(corpus) rewrite the
-    * vector/dedup families pay. After the job, [[vocabSnapshot]] /
-    * [[lmSnapshot]] equal a from-scratch build over the surviving
-    * corpus (net-zero keys are filtered at read and dropped at
-    * compaction), the ids are tombstoned in the doc store (text NULLED,
-    * id kept — redelivery and future re-ingest of a forgotten doc are
-    * no-ops, never-seen ids forward-block), and the decrement itself is
-    * redelivery-safe by the SAME mechanism as every advance: the rows
-    * ride a deterministic negative batch_key, −(min forgotten-and-
-    * still-present doc_id) − 1 — unique against every positive ingest
-    * key, unique across COMPLETED forget jobs (their still-present sets
-    * are disjoint, so their mins differ), and a crash-replay appends
-    * byte-identical rows under the same key, which the snapshots'
-    * (batch_key, key) dedup collapses.
-    *
-    * Crash contract (write order is the argument): the decrements are a
-    * pure function of (CURRENT doc store, ids); the doc-store swap —
-    * which nulls the text the decrements are recomputed from — goes
-    * LAST. Crash before the swap: re-run recomputes the same gone set,
-    * appends the same rows under the same key, dedup collapses. Crash
-    * after: gone is empty, the appends no-op, the swap is idempotent.
-    * [[compactVocab]]/[[compactLm]] treat a negative key as COMMITTED
-    * only once its doc's text is null in the store (the swap is the
-    * commit witness), so folding can never destroy the dedup evidence a
-    * pending replay still needs. Single-maintenance-loop contract: call
-    * BETWEEN advances, like every forget/compact job here.
-    *
-    * CRASHED-then-OVERLAPPING requests need one more step: a job that
-    * crashed before its swap leaves PENDING decrement rows whose witness
-    * doc is still live. A later, DIFFERENT request containing that
-    * witness would (a) possibly derive the SAME key (same min over a
-    * different gone set — the snapshots' (batch_key, key) dedup would
-    * then mix the two row sets nondeterministically) and (b) tombstone
-    * the witness with its OWN swap, which would commit the crashed job's
-    * decrements for docs this request never tombstoned — counts would
-    * drift below a from-scratch build. So before appending, the job
-    * ROLLS BACK every pending negative key whose witness is in this
-    * request's gone set: the crashed job's swap never ran (the swap is
-    * atomic), so its appended rows are its ONLY effect, and deleting
-    * them is a clean rollback; a committed key's witness has null text,
-    * is never in `gone`, and is never touched. Re-running the crashed
-    * request afterward recomputes its gone set against the new store
-    * (minus this job's tombstones) and re-forgets what remains. The
-    * rollback is an O(table) rewrite, paid only when a conflicting
-    * pending key actually exists (the probe is O(batches) keys). */
-  def forgetCountState(spark: SparkSession, ids: DataFrame, docTable: String,
-      vocabTable: Option[String] = None, lmTable: Option[String] = None,
-      cmsTable: Option[String] = None): Unit = {
+  /** Advance every (family, table) pair over `docTable` by one batch —
+    * the ADVANCE step of the [[StateFamily]] contract: one fresh set,
+    * one batch key, each family's delta appended, the guard LAST. */
+  private[graft] def maintainState(batch: DataFrame, docTable: String,
+      fams: (StateFamily, String)*): Unit = {
+    val payload = fams.map(_._1.payload.map(_._1)).distinct
+    require(payload.size == 1,
+      s"maintainState: families over $docTable disagree on the doc-store payload")
+    val fresh = freshAgainst(batch, docTable, payload.head)
+    if (fresh.isEmpty) return
+    lazy val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
+    fams.foreach { case (f, t) =>
+      val key = f.fold match {
+        case _: StateFamily.Sum => batchKey
+        case _ => Long.MinValue
+      }
+      f.delta(fresh, key).write.mode("append").parquet(t)
+    }
+    fresh.write.mode("append").parquet(docTable)
+  }
+
+  /** `table` read through its family's fold — the snapshot every
+    * family-specific read view finishes; an absent table folds as the
+    * delta of no docs. */
+  private[graft] def foldState(spark: SparkSession, f: StateFamily,
+      table: String): DataFrame = {
+    val t = tryRead(spark, table).getOrElse(f.delta(noDocs(spark, f), Long.MinValue))
+    f.fold match {
+      case StateFamily.Sum(keys, sums, mins) =>
+        val aggs = sums.map(c => sum(col(c)).as(c)) ++ mins.map(c => min(col(c)).as(c))
+        t.dropDuplicates("batch_key" +: keys)
+          .groupBy(keys.map(col): _*)
+          .agg(aggs.head, aggs.tail: _*)
+          .filter(sums.map(c => col(c) > 0).reduce(_ && _))
+      case StateFamily.Idempotent(fold) => fold(t)
+    }
+  }
+
+  /** An empty doc store of family `f`'s shape. */
+  private def noDocs(spark: SparkSession, f: StateFamily): DataFrame =
+    emptyDf(spark, ("doc_id" -> org.apache.spark.sql.types.LongType) +: f.payload: _*)
+
+  /** Compact every (family, table) pair over `docTable` — the COMPACT
+    * step of the [[StateFamily]] contract; the store's tombstones are the
+    * commit witness of forget keys. */
+  private[graft] def compactState(spark: SparkSession, docTable: String,
+      fams: (StateFamily, String)*): Unit = fams.foreach { case (f, table) =>
+    f.fold match {
+      case StateFamily.Sum(keys, sums, mins) =>
+        compactDeltas(spark, table, keys, sums, docTable, "doc_id", mins,
+          tombstoneIds = tryRead(spark, docTable)
+            .map(_.filter(col(f.nulled).isNull).select(col("doc_id"))),
+          dropZeroKeys = true)
+      case StateFamily.Idempotent(fold) =>
+        tryRead(spark, table).foreach { t =>
+          graft.operators.MergeWriter.overwriteAtomic(
+            fold(t.localCheckpoint(true)), table)
+        }
+    }
+  }
+
+  /** Forget `ids` from every (family, table) pair over `docTable` — the
+    * FORGET step of the [[StateFamily]] contract. Rebuilt tables swap
+    * first; the decrement families share one gone set (forgotten ids
+    * whose content is not yet nulled — a re-run or an overlapping request
+    * skips docs already forgotten), one forget key and one rollback; the
+    * tombstone swap goes last. Single-maintenance-loop contract: call
+    * BETWEEN advances. */
+  private[graft] def forgetState(spark: SparkSession, ids: DataFrame,
+      docTable: String, fams: (StateFamily, String)*): Unit = {
+    val nulled = fams.map(_._1.nulled).distinct
+    require(nulled.size == 1,
+      s"forgetState: families over $docTable disagree on the tombstoned column")
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    // contributions still recoverable: forgotten ids whose text has not
-    // been nulled yet (a re-run or an overlapping second request skips
-    // already-forgotten docs — the double-decrement guard)
-    val gone = store
-      .map(_.filter(col("text").isNotNull).join(idsC, Seq("doc_id"), "left_semi"))
-      .map(_.localCheckpoint(true))
-      .filter(!_.isEmpty)
+    val live = store.map(_.filter(col(nulled.head).isNotNull))
+    def survivors(f: StateFamily) =
+      live.map(_.join(idsC, Seq("doc_id"), "left_anti")).getOrElse(noDocs(spark, f))
+        .select(("doc_id" +: f.payload.map(_._1)).map(col): _*)
+    val (rebuilt, decremented) = fams.partition(_._1.forget == StateFamily.Rebuild)
+    rebuilt.foreach { case (f, t) =>
+      graft.operators.MergeWriter.overwriteAtomic(
+        f.delta(survivors(f).localCheckpoint(true), Long.MinValue), t)
+    }
+    val gone =
+      if (decremented.isEmpty) None
+      else live.map(_.join(idsC, Seq("doc_id"), "left_semi").localCheckpoint(true))
+        .filter(!_.isEmpty)
     gone.foreach { g =>
       val forgetKey = -g.agg(min(col("doc_id"))).head().getLong(0) - 1L
-      rollbackPendingForgets(spark,
-        Seq(vocabTable, lmTable, cmsTable).flatten, g)
-      vocabTable.foreach { vt =>
-        vocabDelta(g, forgetKey)
-          .select(col("batch_key"), col("tok"),
-            (-col("df")).as("df"), (-col("cf")).as("cf"))
-          .write.mode("append").parquet(vt)
-      }
-      lmTable.foreach { lt =>
-        lmDelta(g, forgetKey)
-          .select(col("batch_key"), col("bigram"), (-col("n")).as("n"))
-          .write.mode("append").parquet(lt)
-      }
-      cmsTable.foreach { ct =>
-        cmsDelta(g, forgetKey)
-          .select(col("batch_key"), col("j"), col("b"), (-col("n")).as("n"))
-          .write.mode("append").parquet(ct)
+      rollbackPendingForgets(spark, decremented.map(_._2), g)
+      val goneIds = g.select(col("doc_id")).localCheckpoint(true)
+      decremented.foreach { case (f, t) =>
+        val StateFamily.Sum(keys, sums, _) = f.fold
+        val dec = f.delta(g, forgetKey).localCheckpoint(true)
+        val keeper = f.forget match {
+          case StateFamily.KeeperRepair(kc, keepers) =>
+            // patch BEFORE the decrement append: the patch rewrites the
+            // table from its pre-append checkpoint, and a crash between
+            // patch and append re-runs with nothing left to patch
+            tryRead(spark, t).map(_.localCheckpoint(true)).foreach { st =>
+              // cells whose CURRENT keeper is forgotten, on the
+              // pre-decrement fold (the rollback cleared any partial run)
+              val affected = st.filter(col("batch_key") =!= forgetKey)
+                .join(broadcast(dec.select(keys.map(col): _*)), keys, "left_semi")
+                .dropDuplicates("batch_key" +: keys)
+                .groupBy(keys.map(col): _*).agg(min(col(kc)).as("__k"))
+                .join(goneIds.withColumnRenamed("doc_id", "__k"), Seq("__k"), "left_semi")
+                .select(keys.map(col): _*).localCheckpoint(true)
+              if (!affected.isEmpty) {
+                val newKeep = keepers(survivors(f))
+                  .join(broadcast(affected), keys, "left_semi")
+                graft.operators.MergeWriter.overwriteAtomic(st
+                  .join(broadcast(affected.withColumn("__aff", lit(true))), keys, "left")
+                  .join(broadcast(newKeep), keys, "left")
+                  .withColumn(kc, when(col("__aff").isNotNull,
+                    coalesce(col("__nk"), lit(Long.MaxValue))).otherwise(col(kc)))
+                  .select(st.columns.map(col).toIndexedSeq: _*), t)
+              }
+            }
+            Some(kc)
+          case _ => None
+        }
+        dec.select(dec.columns.map { c =>
+            if (sums.contains(c)) (-col(c)).as(c)
+            else if (keeper.contains(c)) lit(Long.MaxValue).as(c)
+            else col(c)
+          }.toIndexedSeq: _*)
+          .write.mode("append").parquet(t)
       }
     }
-    tombstoneSwap(store, idsC, docTable, "text")
+    tombstoneSwap(store, idsC, docTable, nulled.head)
   }
 
   /** Rollback of conflicting PENDING forget decrements (the
-    * crashed-then-overlapping contract in [[forgetCountState]]'s
-    * Scaladoc, shared with [[forgetMixState]]): delete, from each delta
-    * table, every negative batch key whose witness doc (−key−1) is in
-    * this request's still-present gone set — such a key belongs to a
-    * forget job that crashed before its swap (a COMMITTED key's witness
-    * is tombstoned and can never be in `gone`), its appended rows are
-    * its only effect, and leaving them would let this request's key
-    * collide with them or its swap falsely commit them. Long.MinValue
-    * is the compactor's reserved fold key, never a witness key. The
-    * O(table) rewrite is paid only when a conflicting pending key
-    * actually exists. */
+    * crashed-then-overlapping case of [[StateFamily.Forget]]): delete,
+    * from each delta table, every negative batch key whose witness doc
+    * (−key−1) is in this request's still-present gone set. Such a key
+    * belongs to a forget job that crashed before its swap (a COMMITTED
+    * key's witness is tombstoned and can never be in `gone`); its
+    * appended rows are its only effect, and leaving them would let this
+    * request's key collide with them or its swap falsely commit them.
+    * Long.MinValue is the compactor's reserved fold key, never a witness
+    * key. The O(table) rewrite is paid only when a conflicting pending
+    * key actually exists. */
   private def rollbackPendingForgets(spark: SparkSession,
       tables: Seq[String], gone: DataFrame): Unit = {
     val witnessKeys = gone
@@ -1014,39 +1061,6 @@ object Streams {
         }
       }
     }
-  }
-
-  /** DELETION PROPAGATION for the domain-mix family — the additive-state
-    * forget ([[forgetCountState]]'s mechanism verbatim, counts keyed by
-    * source instead of token): a forgotten doc's per-source contribution
-    * is exactly one count, recomputed from its stored (doc_id, source)
-    * row and appended as a NEGATIVE delta under the deterministic
-    * forget key −(min forgotten-and-still-present doc_id) − 1. After the
-    * job, [[mixCountsSnapshot]]/[[mixRatesSnapshot]] equal a
-    * from-scratch build over the survivors (net-zero sources filter at
-    * read and drop at compaction), the ids are tombstoned in the doc
-    * store (source NULLED, id kept — redelivery and re-ingest blocked,
-    * never-seen ids forward-block), and the crashed-then-overlapping
-    * contract is covered by [[rollbackPendingForgets]]. Write order and
-    * crash/replay semantics are [[forgetCountState]]'s verbatim: the
-    * decrements are a pure function of (current doc store, ids), the
-    * store swap goes LAST and is [[compactMix]]'s commit witness. */
-  def forgetMixState(spark: SparkSession, ids: DataFrame, docTable: String,
-      countsTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    val gone = store
-      .map(_.filter(col("source").isNotNull).join(idsC, Seq("doc_id"), "left_semi"))
-      .map(_.localCheckpoint(true))
-      .filter(!_.isEmpty)
-    gone.foreach { g =>
-      val forgetKey = -g.agg(min(col("doc_id"))).head().getLong(0) - 1L
-      rollbackPendingForgets(spark, Seq(countsTable), g)
-      mixDelta(g, forgetKey)
-        .select(col("batch_key"), col("source"), (-col("n")).as("n"))
-        .write.mode("append").parquet(countsTable)
-    }
-    tombstoneSwap(store, idsC, docTable, "source")
   }
 
   /** The current clustering under the maintained tables — (doc_id,
@@ -1081,15 +1095,6 @@ object Streams {
     graft.queries.TextOps.splitOf(
       clusterSnapshot(spark, labelsTable, remapTable)
         .select(col("doc_id"), col("cluster_id")))
-
-  /** [[maintainClusterState]] as a foreachBatch sink over a (doc_id,
-    * text) document stream. */
-  def clusterStateStream(docs: DataFrame, labelsTable: String,
-      bucketTable: String, remapTable: String, docTable: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainClusterState(b, labelsTable, bucketTable, remapTable, docTable))
 
   /** Standing-table read that treats "not created yet" as None — shared
     * by every maintenance loop so a future behavior change (e.g. also
@@ -1266,17 +1271,6 @@ object Streams {
       .select(lit(batchKey).as("batch_key"), col("cid"), col("dim"),
         col("n_vectors"), col("sum_q"))
 
-  /** [[maintainIvfState]] as a foreachBatch sink over a (vec_id,
-    * embedding) stream; pass `dropTable` to get the continuous SemDedup
-    * leg through the same wrapper. */
-  def ivfStateStream(vecs: DataFrame, cents: DataFrame,
-      postingsTable: String, sumsTable: String,
-      dropTable: Option[String] = None, tau: Double = 0.30,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(vecs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainIvfState(b, cents, postingsTable, sumsTable, dropTable, tau))
-
   /** The current per-(cell, dim) exact centroid sums under the maintained
     * delta table — vs07's output shape over every vector that has
     * arrived. Duplicate delta rows from redelivered batches collapse on
@@ -1403,14 +1397,6 @@ object Streams {
       .localCheckpoint(true)
     if (!out.isEmpty) out.write.mode("append").parquet(codesTable)
   }
-
-  /** [[maintainSqCodes]] as a foreachBatch sink over a (vec_id,
-    * embedding) stream. */
-  def sqCodesStream(vecs: DataFrame, vmin: Array[Long], vdiff: Array[Long],
-      codesTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(vecs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainSqCodes(b, vmin, vdiff, codesTable))
 
   /** The SQ bounds REBUILD→SWAP — [[rebuildIvfState]]'s sibling for the
     * scalar quantizer, closing the third lifecycle (IVF, BPE, now SQ):
@@ -1550,15 +1536,6 @@ object Streams {
         "neighbor_id" -> LongType, "rank" -> IntegerType, "cos" -> DoubleType))
   }
 
-  /** [[maintainKnnGraphState]] as a foreachBatch sink over a (vec_id,
-    * embedding) stream. */
-  def knnGraphStream(vecs: DataFrame, cents: DataFrame,
-      postingsTable: String, graphTable: String, k: Int = 3,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(vecs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainKnnGraphState(b, cents, postingsTable, graphTable, k))
-
   /** The PRODUCTION CELL-ROUTER for maintained-graph ingest. Round-17's
     * probe measured that CELL-ROUTED arrival is the only arrival shape
     * that prunes the kNN-graph advance's partition rewrite (~2.8× per
@@ -1580,9 +1557,9 @@ object Streams {
     * measured round-18: ~2.3–2.8 s per 20k-row arrival, write
     * included, against a 10 s/advance saving;
     * zero-norm arrivals carry no cell and ride group 0 so they still
-    * arrive exactly once. A later [[flushCellGroups]] turns each ready
-    * group into a cell-clustered micro-batch touching ~1/groups of the
-    * cells — the arrival shape the round-17 `cellwise` measurement
+    * arrive exactly once. A later [[flushCellGroupsBatched]] turns each
+    * ready group into a cell-clustered micro-batch touching ~1/groups of
+    * the cells — the arrival shape the round-17 `cellwise` measurement
     * simulated by hand.
     *
     * At-least-once end to end: duplicate routed rows (a redelivered
@@ -1607,74 +1584,35 @@ object Streams {
     * group is ready when it holds ≥ `minRows` staged rows (size trigger)
     * or its oldest row's arrival seq is ≤ curSeq − `maxLag` (age trigger
     * — no row waits unboundedly under a cold cell; `maxLag` counts
-    * arrival batches, the router's `seq`). For each ready group,
-    * `consume` receives (kb, rows) — a cell-clustered micro-batch,
-    * materialized BEFORE its staged partition deletes; the delete (an
-    * empty [[graft.operators.MergeWriter.overwritePartitionsAtomic]]
-    * publish — the same atomic partition mechanics as every partitioned
-    * rewrite here) runs only after `consume` returns, so a crash between
-    * the two redelivers the WHOLE group, which the maintainers' id
-    * guards collapse — the engine's standard at-least-once seam. The
-    * readiness probe is one bounded aggregate (≤ `groups` rows
-    * collected). Returns the flushed group ids; drain at decommission
-    * with minRows = 1.
+    * arrival batches, the router's `seq`). The readiness probe is one
+    * bounded aggregate (≤ `groups` rows collected). The WAVE is the flush
+    * unit (r19, guide §1.2 step 1 — batch the per-group driver jobs
+    * across the flush set): every ready group's rows are materialized in
+    * ONE pass and handed to `consume` as a single cell-clustered
+    * micro-batch, and the flushed partitions delete in ONE atomic publish
+    * (an empty [[graft.operators.MergeWriter.overwritePartitionsAtomic]])
+    * after it returns, so a crash between the two redelivers the WHOLE
+    * wave, which the maintainers' id guards collapse — the engine's
+    * standard at-least-once seam. The downstream advance is
+    * invariant-correct over any union of groups (after an advance, every
+    * touched cell's partition equals the full build over standing ∪ batch
+    * — cells are computed independently), so merging a wave changes WHICH
+    * advances run, never the maintained graph; it saves the per-group
+    * fixed costs (the stage-table repair, the id-guard probe, the
+    * graph-snapshot listing, the postings append). At steady state waves
+    * usually hold ONE ready group (triggers stagger), so the
+    * cell-clustering the router buys is intact. Returns the flushed group
+    * ids; drain at decommission with minRows = 1.
     *
     * SIZE `minRows` TO A FULL ADVANCE BATCH, not to the smallest group
     * the trigger math tolerates (measured, round-18 probe at 100k
-    * standing): every flushed group pays the advance's per-batch
-    * standing reads (the id-guard probe, the graph-snapshot listing),
+    * standing): every flush pays the advance's per-batch standing reads,
     * so 2-arrivals'-worth groups (~8k rows) re-paid them 2-3× per
     * arrival and erased most of the routing win (13-15 s vs ~16.5
     * unrouted), while batch-sized groups (~20k rows) read 6.4-7.4 s —
     * the hand-grouped cellwise band. The latency bill of a bigger
     * `minRows` is bounded by `maxLag`, which is the knob that caps how
     * long a cold cell's rows wait. */
-  def flushCellGroups(spark: SparkSession, stageTable: String,
-      minRows: Long, maxLag: Long, curSeq: Long)(
-      consume: (Long, DataFrame) => Unit): Seq[Long] = {
-    // heal a crashed flush's pending partition publish before reading
-    // the stage to derive this flush's own deletes (the documented
-    // read-your-own-table contract of the partitioned writer)
-    graft.operators.MergeWriter.repairPartitionedTable(spark, stageTable, "kb")
-    tryRead(spark, stageTable).map { st =>
-      val ready = st.groupBy(col("kb").cast("long").as("kb"))
-        .agg(count(lit(1)).as("n"), min(col("seq")).as("oldest"))
-        .filter(col("n") >= minRows || col("oldest") <= lit(curSeq - maxLag))
-        .select(col("kb")).collect().map(_.getLong(0)).toIndexedSeq.sorted
-      ready.foreach { kb =>
-        val rows = st.filter(col("kb") === kb)
-          .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-        consume(kb, rows)
-        // the group is consumed — publish its empty partition (atomic
-        // directory removal; crash before this point redelivers)
-        graft.operators.MergeWriter.overwritePartitionsAtomic(
-          rows.limit(0).select(col("vec_id"), col("embedding"),
-            lit(0L).as("seq"), lit(kb).as("kb")),
-          stageTable, "kb", Seq(kb))
-      }
-      ready
-    }.getOrElse(Seq.empty)
-  }
-
-  /** [[flushCellGroups]] with the WAVE as the flush unit (r19, guide
-    * §1.2 step 1 — batch the per-group driver jobs across the flush
-    * set): every ready group's rows are materialized in ONE pass and
-    * handed to `consume` as a single cell-clustered micro-batch, and
-    * the flushed partitions delete in ONE atomic publish after it
-    * returns. The downstream advance is invariant-correct over any
-    * union of groups (after an advance, every touched cell's partition
-    * equals the full build over standing ∪ batch — cells are computed
-    * independently), so merging a wave changes WHICH advances run,
-    * never the maintained graph; what it saves is the per-group fixed
-    * costs the round-18 measurement priced (the stage-table repair,
-    * the id-guard probe, the graph-snapshot listing, the postings
-    * append — previously re-paid once PER READY GROUP per wave). The
-    * crash seam coarsens from group to wave: a crash between `consume`
-    * and the publish redelivers the WHOLE wave, which the maintainers'
-    * id guards collapse — the same at-least-once contract. At steady
-    * state waves usually hold ONE ready group (triggers stagger), so
-    * the cell-clustering the router buys is intact; a multi-group wave
-    * touches exactly the union of its groups' cells either way. */
   def flushCellGroupsBatched(spark: SparkSession, stageTable: String,
       minRows: Long, maxLag: Long, curSeq: Long)(
       consume: DataFrame => Unit): Seq[Long] = {
@@ -1711,7 +1649,7 @@ object Streams {
     * advance); the postings id guard closes both. Drain the stage with
     * a minRows = 1 flush at decommission, or rely on the age trigger.
     * Size `minRows` to a FULL advance batch for your arrival rate (see
-    * [[flushCellGroups]] — the round-18 measurement: batch-sized
+    * [[flushCellGroupsBatched]] — the round-18 measurement: batch-sized
     * cell-pure flushes hit the hand-grouped cellwise band, small groups
     * re-pay the standing reads per flush); the default here is a floor,
     * not a recommendation. */
@@ -2132,15 +2070,6 @@ object Streams {
         ivfSumsDelta(reassigned, Long.MinValue), sumsTable)
     }
 
-  /** [[maintainPqCodes]] as a foreachBatch sink over a (vec_id,
-    * embedding) stream. */
-  def pqCodesStream(vecs: DataFrame, cents: DataFrame,
-      book: Seq[org.apache.spark.sql.Row], codesTable: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(vecs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainPqCodes(b, cents, book, codesTable))
-
   /** The IVF-PQ search (vs09's scorer) over the maintained codes table —
     * pp14's read path. `queriesNormed` is a normed (vec_id, q, nrm)
     * frame; the catalog's fixed query window applies. */
@@ -2199,29 +2128,6 @@ object Streams {
       .orderBy(col("vec_id"))
   }
 
-  /** Fold a `batch_key`-tagged delta table to one row per key group under
-    * the reserved key — the pointer-compaction maintenance job for
-    * additive state (bounds table growth at O(live keys) instead of
-    * O(batches × keys)).
-    *
-    * Only COMMITTED batches fold: a batch's delta rows are committed once
-    * its key id reached the guard table (the guard append is the LAST
-    * step of every advance), so a batch that crashed mid-advance — delta
-    * rows in the table, guard never advanced — keeps its rows under its
-    * own key. Folding them would break the replay twice over: the
-    * redelivered batch re-appends under its key while the folded copy
-    * hides under the reserved key (double count the snapshot dedup can't
-    * see), and the span flow's own-key exclusion would no longer exclude
-    * them (standing counts inflated by the batch's own bnd → crossings
-    * missed). The reserved key itself is committed by construction (it
-    * only ever holds previously-folded committed rows).
-    *
-    * Concurrency contract: call BETWEEN advances from the same
-    * single-threaded maintenance loop (the remap-fold precedent) — the
-    * fold is a read-then-overwrite, so delta rows appended between its
-    * snapshot and the directory swap would be dropped. The snapshot is
-    * pinned once (localCheckpoint) so the committed/pending split and the
-    * fold read one consistent listing. */
   /** Rewrite an APPEND-ONLY standing table (postings, doc store, band
     * index, shingle store, pairs) into `partitions` files — the
     * small-files maintenance job: every advance appends one file set per
@@ -2242,6 +2148,52 @@ object Streams {
         t.localCheckpoint(true).repartition(partitions), table)
     }
 
+  /** The (committed, pending) split of a pinned `batch_key`-tagged delta
+    * table — the one commit rule every delta compactor folds by. A
+    * batch's rows are committed once its key reached the guard table's
+    * `guardIdCol` (the guard append is the LAST step of every advance);
+    * a NEGATIVE (forget) key once its witness doc (id −key−1) is in
+    * `tombstoneIds`; the reserved key Long.MinValue by construction (it
+    * only ever holds previously-folded committed rows). A batch that
+    * crashed mid-advance — delta rows in the table, guard never advanced
+    * — stays PENDING under its own key: folding it would break the replay
+    * twice over (the redelivered batch re-appends under its key while the
+    * folded copy hides under the reserved key, a double count the
+    * snapshot dedup can't see; and the span flow's own-key exclusion
+    * would no longer exclude it), and folding an uncommitted forget would
+    * destroy the dedup evidence a replay of the forget job still needs.
+    * The table's distinct keys are O(batches), so they probe the guard
+    * (one pruned id scan), never the other way around.
+    *
+    * Concurrency contract of every compactor using it: call BETWEEN
+    * advances from the same single-threaded maintenance loop — the fold
+    * is a read-then-overwrite, so delta rows appended between the pinned
+    * snapshot and the directory swap would be dropped. */
+  private def commitSplit(spark: SparkSession, t: DataFrame,
+      guardTable: String, guardIdCol: String,
+      tombstoneIds: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+    val guard = tryRead(spark, guardTable)
+      .map(_.select(col(guardIdCol).as("__gid")))
+      .getOrElse(emptyDf(spark, "__gid" -> org.apache.spark.sql.types.LongType))
+    val tKeys = t.select(col("batch_key")).distinct().localCheckpoint(true)
+    val posCommitted = tKeys
+      .join(guard, tKeys("batch_key") === col("__gid"), "left_semi")
+    val committedKeys = tombstoneIds.foldLeft(posCommitted) { (acc, tids) =>
+      acc.unionByName(tKeys.join(
+        tids.select((-col(tids.columns.head) - 1L).as("batch_key")),
+        Seq("batch_key"), "left_semi"))
+    }.localCheckpoint(true)
+    val reserved = col("batch_key") === Long.MinValue
+    (t.filter(reserved).unionByName(
+        t.join(broadcast(committedKeys), Seq("batch_key"), "left_semi")),
+      t.filter(!reserved)
+        .join(broadcast(committedKeys), Seq("batch_key"), "left_anti"))
+  }
+
+  /** Fold a `batch_key`-tagged delta table to one row per key group under
+    * the reserved key — the pointer-compaction maintenance job for
+    * additive state (bounds table growth at O(live keys) instead of
+    * O(batches × keys)). Only [[commitSplit]]'s committed rows fold. */
   private def compactDeltas(spark: SparkSession, table: String,
       keys: Seq[String], sums: Seq[String],
       guardTable: String, guardIdCol: String,
@@ -2249,34 +2201,8 @@ object Streams {
       tombstoneIds: Option[DataFrame] = None,
       dropZeroKeys: Boolean = false): Unit =
     tryRead(spark, table).foreach { t0 =>
-      val t = t0.localCheckpoint(true)
-      val guard = tryRead(spark, guardTable)
-        .map(_.select(col(guardIdCol).as("__gid")))
-        .getOrElse(emptyDf(spark, "__gid" -> org.apache.spark.sql.types.LongType))
-      // distinct keys in the table are O(batches) — probe the guard with
-      // them (one pruned id scan), never the other way around
-      val tKeys = t.select(col("batch_key")).distinct().localCheckpoint(true)
-      val posCommitted = tKeys
-        .join(guard, tKeys("batch_key") === col("__gid"), "left_semi")
-      // a NEGATIVE key is a forgetCountState decrement, committed only
-      // once its witness doc (id −key−1) has null text in the doc store
-      // (`tombstoneIds`, passed by the text-flow compactors) — folding an
-      // UNCOMMITTED forget would destroy the (batch_key, key) dedup
-      // evidence a crash-replay of the forget job still needs, exactly
-      // the reason positive keys wait for the guard
-      val negCommitted = tombstoneIds match {
-        case Some(tids) => tKeys.join(
-          tids.select((-col(tids.columns.head) - 1L).as("batch_key")),
-          Seq("batch_key"), "left_semi")
-        case None => tKeys.limit(0)
-      }
-      val committedKeys = posCommitted.unionByName(negCommitted)
-        .localCheckpoint(true)
-      val reserved = col("batch_key") === Long.MinValue
-      val committed = t.filter(reserved).unionByName(
-        t.join(broadcast(committedKeys), Seq("batch_key"), "left_semi"))
-      val pending = t.filter(!reserved)
-        .join(broadcast(committedKeys), Seq("batch_key"), "left_anti")
+      val (committed, pending) = commitSplit(spark, t0.localCheckpoint(true),
+        guardTable, guardIdCol, tombstoneIds)
       // sums fold additively; mins (keeper-style columns) min-combine —
       // both are associative+commutative, which is all batch_key-tagged
       // delta folding requires
@@ -2320,19 +2246,8 @@ object Streams {
       key: String, ord: String, payload: Seq[String],
       guardTable: String, guardIdCol: String): Unit =
     tryRead(spark, table).foreach { t0 =>
-      val t = t0.localCheckpoint(true)
-      val guard = tryRead(spark, guardTable)
-        .map(_.select(col(guardIdCol).as("__gid")))
-        .getOrElse(emptyDf(spark, "__gid" -> org.apache.spark.sql.types.LongType))
-      val tKeys = t.select(col("batch_key")).distinct()
-      val committedKeys = tKeys
-        .join(guard, tKeys("batch_key") === col("__gid"), "left_semi")
-        .localCheckpoint(true)
-      val reserved = col("batch_key") === Long.MinValue
-      val committed = t.filter(reserved).unionByName(
-        t.join(broadcast(committedKeys), Seq("batch_key"), "left_semi"))
-      val pending = t.filter(!reserved)
-        .join(broadcast(committedKeys), Seq("batch_key"), "left_anti")
+      val (committed, pending) = commitSplit(spark, t0.localCheckpoint(true),
+        guardTable, guardIdCol)
       val folded = committed
         .groupBy(col(key))
         .agg(max_by(struct(payload.map(col): _*),
@@ -2411,15 +2326,6 @@ object Streams {
       .unionByName(adv.newRows.select(lit(batchKey).as("batch_key"),
         col("doc_id"), col("n_spans"), col("n_dup_spans")))
 
-  /** [[maintainSpanState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def spanStateStream(docs: DataFrame, gramsTable: String,
-      countsTable: String, reportTable: String, docTable: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainSpanState(b, gramsTable, countsTable, reportTable, docTable))
-
   /** The current span-dedup report under the maintained delta table —
     * dd09's exact shape over every doc that has arrived: per-doc sums of
     * the delta rows (a doc's arrival row carries its totals, later
@@ -2472,7 +2378,7 @@ object Streams {
     * holder's report (its n_dup_spans counted that span). The job is
     * O(deleted + affected), never a corpus re-scan:
     *
-    *  - counts decrement exactly like [[forgetCountState]]: the
+    *  - counts decrement exactly like [[StateFamily.NegativeDelta]]: the
     *    forgotten docs' span hashes are RE-DERIVED FROM THEIR STORED
     *    TEXT (never from the grams table — the grams rows are deleted
     *    by this very job, and a crash between that deletion and the
@@ -2498,7 +2404,7 @@ object Streams {
     * repairs, unlike count decrements, are not additively
     * self-correcting under that job's re-run), every delete is
     * idempotent, and the tombstone swap (the compaction commit witness)
-    * goes last — forgetCountState's contract plus the committed-only
+    * goes last — [[forgetState]]'s contract plus the committed-only
     * fold. */
   def forgetSpanState(spark: SparkSession, ids: DataFrame,
       gramsTable: String, countsTable: String, reportTable: String,
@@ -2566,364 +2472,58 @@ object Streams {
     tombstoneSwap(store, idsC, docTable, "text")
   }
 
-  /** pp07's continuous twin: CONTINUOUS vocabulary maintenance — the
-    * counts-shaped member of the standing-state family, and the simplest
-    * advance in it: per-token (df, cf) are PURELY ADDITIVE across
-    * doc-disjoint batches ([[graft.queries.TextOps.vocabCounts]] — df a
-    * doc count, cf an occurrence sum, no count-distinct anywhere), so a
-    * batch advances the state with ONE batch-sized counting pass appended
-    * as a delta. No standing read at all — not even a pruned probe; the
-    * only corpus-sized object anywhere is the delta table itself, which
-    * [[compactVocab]] folds to O(vocab) rows as a maintenance job.
-    *
-    * At-least-once safety is the [[maintainIvfState]] contract verbatim:
-    * the doc store is the guard (appended LAST), delta rows carry the
-    * batch's deterministic `batch_key` (min doc_id — unique across
-    * batches because the guard keeps fresh sets disjoint), a crash-replay
-    * recomputes byte-identical rows under the same key, and
-    * [[vocabSnapshot]] drops duplicates by (batch_key, tok) before
-    * summing. */
-  def maintainVocabState(batch: DataFrame, vocabTable: String,
-      docTable: String): Unit = {
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    vocabDelta(fresh, batchKey).write.mode("append").parquet(vocabTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The per-token delta rows of one batch — the exact rows
-    * [[maintainVocabState]] appends, shared with the crash-simulation
-    * spec (same drift-pinning reason as [[ivfSumsDelta]]). */
-  private[graft] def vocabDelta(fresh: DataFrame, batchKey: Long): DataFrame =
-    graft.queries.TextOps.vocabCounts(fresh)
-      .select(lit(batchKey).as("batch_key"), col("tok"), col("df"), col("cf"))
-
-  /** The per-cell CMS delta rows of one batch — [[maintainCmsState]]'s
-    * append, the sketch member of the additive counts family (ta20's
-    * cell kernel verbatim). */
-  private[graft] def cmsDelta(fresh: DataFrame, batchKey: Long): DataFrame =
-    graft.queries.TextOps.cmsCellsFromTokens(
-      fresh.select(explode(graft.functions.Text.tokens(col("text"))).as("tok")))
-      .select(lit(batchKey).as("batch_key"), col("j"), col("b"), col("n"))
-
-  /** pp29's continuous twin: CONTINUOUS count-min-sketch maintenance —
-    * the SKETCH member of the additive counts family. TWO standing
-    * delta tables advance from ONE batch tokenize: the (batch_key, j,
-    * b, n) cells (the sketch — at most d·w live cells after compaction,
-    * regardless of vocabulary) and the (batch_key, tok, df, cf)
-    * vocabulary (the exact-cf probe side, [[maintainVocabState]]'s rows
-    * verbatim — a deployment that probes with its OWN candidate keys
-    * can skip it and maintain the cells alone). At-least-once contract
-    * = the vocab family's: guard appended LAST, deterministic batch
-    * key, byte-identical replay rows the snapshot's (batch_key, …)
-    * dedups collapse. Forget = [[forgetCountState]] with `cmsTable`
-    * (negative cell deltas recomputed from the stored text — O(deleted)
-    * like every counts member); compaction = [[compactCms]] +
-    * [[compactVocab]]. */
-  def maintainCmsState(batch: DataFrame, cellsTable: String,
-      vocabTable: String, docTable: String): Unit = {
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    cmsDelta(fresh, batchKey).write.mode("append").parquet(cellsTable)
-    vocabDelta(fresh, batchKey).write.mode("append").parquet(vocabTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** [[maintainCmsState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def cmsStateStream(docs: DataFrame, cellsTable: String,
-      vocabTable: String, docTable: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainCmsState(b, cellsTable, vocabTable, docTable))
-
-  /** The current ta20 view under the maintained deltas — top-`topN`
-    * exact tokens probed against the summed cells, over every doc that
-    * has arrived AND NOT been forgotten. Net-zero cells and tokens
-    * (forget decrements) are filtered — a from-scratch build over the
-    * survivors has no row for them. */
+  /** pp29's read view ([[StateFamily.CmsCells]] maintained with
+    * [[StateFamily.Vocab]] over one doc store): ta20's top-`topN` exact
+    * tokens probed against the folded cells, over every doc arrived and
+    * not forgotten. */
   def cmsSnapshot(spark: SparkSession, cellsTable: String,
-      vocabTable: String, topN: Int = 20): DataFrame = {
-    import org.apache.spark.sql.types._
-    val cells = tryRead(spark, cellsTable).getOrElse(emptyDf(spark,
-        "batch_key" -> LongType, "j" -> IntegerType, "b" -> LongType,
-        "n" -> LongType))
-      .dropDuplicates("batch_key", "j", "b")
-      .groupBy(col("j"), col("b")).agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0)
-    val top = tryRead(spark, vocabTable).getOrElse(emptyDf(spark,
-        "batch_key" -> LongType, "tok" -> StringType,
-        "df" -> LongType, "cf" -> LongType))
-      .dropDuplicates("batch_key", "tok")
-      .groupBy(col("tok")).agg(sum(col("cf")).as("cf"))
-      .filter(col("cf") > 0)
-      .orderBy(col("cf").desc, col("tok")).limit(topN)
-      .select(col("tok"), col("cf"))
-    graft.queries.TextOps.cmsProbe(cells, top)
-  }
+      vocabTable: String, topN: Int = 20): DataFrame =
+    graft.queries.TextOps.cmsProbe(
+      foldState(spark, StateFamily.CmsCells, cellsTable),
+      foldState(spark, StateFamily.Vocab, vocabTable)
+        .orderBy(col("cf").desc, col("tok")).limit(topN)
+        .select(col("tok"), col("cf")))
 
-  /** Compact the CMS cell deltas to one row per (j, b) — at most d·w
-    * rows; `docTable` is the flow's guard, its null-text tombstones the
-    * commit witness for forget decrement keys (net-zero cells drop at
-    * the fold). */
-  def compactCms(spark: SparkSession, cellsTable: String,
-      docTable: String): Unit =
-    compactDeltas(spark, cellsTable, Seq("j", "b"), Seq("n"),
-      docTable, "doc_id",
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("text").isNull).select(col("doc_id"))),
-      dropZeroKeys = true)
-
-  /** pp31's continuous twin: CONTINUOUS HyperLogLog maintenance — the
-    * distinct-count member of the sketch family, and the one standing
-    * state in the file whose merge is IDEMPOTENT (register-wise max).
-    * That idempotence simplifies the whole contract: the appended rows
-    * need NO batch key and the snapshot needs NO replay dedup — a
-    * redelivered batch re-appends byte-identical register rows that the
-    * max fold absorbs; out-of-order and overlapping deliveries are
-    * equally absorbed. The standing table is ≤ 64 rows per source per
-    * append (compaction folds it to ≤ 64 per source total), the
-    * smallest standing state of any family here. The guard still
-    * appends LAST (at-least-once: a crash between appends re-runs the
-    * batch, and the max absorbs the duplicate), and the doc store still
-    * keeps (doc_id, source, text) — the text is what [[forgetHllState]]
-    * rebuilds from, because max does NOT invert: HLL has no O(deleted)
-    * decrement path, so deletion propagation for this family is an
-    * O(survivors) register rebuild + atomic swap (the honest trade the
-    * pp31 Scaladoc states; every additive family keeps its cheaper
-    * negative-delta path). */
-  def maintainHllState(batch: DataFrame, regTable: String,
-      docTable: String): Unit = {
-    val fresh = freshAgainst(batch, docTable, Seq("source", "text"))
-    if (fresh.isEmpty) return
-    hllDelta(fresh).write.mode("append").parquet(regTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The register rows of one batch — [[maintainHllState]]'s append,
-    * shared with the crash-simulation spec. */
-  private[graft] def hllDelta(fresh: DataFrame): DataFrame =
-    graft.operators.HllSketch.registers(
-      fresh.select(col("source"),
-        explode(graft.functions.Text.tokens(col("text"))).as("tok")),
-      "source", graft.queries.QueryUtils.hex8(col("tok")))
-
-  /** [[maintainHllState]] as a foreachBatch sink over a (doc_id, source,
-    * text) document stream. */
-  def hllStateStream(docs: DataFrame, regTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainHllState(b, regTable, docTable))
-
-  /** The current ta23 view under the maintained registers: fold the
-    * appended register rows by max and estimate. No dedup column —
-    * idempotence IS the dedup (see [[maintainHllState]]). */
-  def hllSnapshot(spark: SparkSession, regTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
+  /** pp31's read view: ta23's estimate over the max-folded registers of
+    * [[StateFamily.Hll]]. */
+  def hllSnapshot(spark: SparkSession, regTable: String): DataFrame =
     graft.operators.HllSketch.estimated(
-      tryRead(spark, regTable).getOrElse(emptyDf(spark,
-          "source" -> StringType, "j" -> LongType, "m" -> IntegerType))
-        .groupBy(col("source"), col("j"))
-        .agg(max(col("m")).as("m")),
-      "source")
-  }
+      foldState(spark, StateFamily.Hll, regTable), "source")
 
-  /** Compact the appended register rows to ≤ 64 per source — the max
-    * fold materialized, atomically swapped. */
-  def compactHll(spark: SparkSession, regTable: String): Unit =
-    tryRead(spark, regTable).foreach { t =>
-      graft.operators.MergeWriter.overwriteAtomic(
-        t.localCheckpoint(true)
-          .groupBy(col("source"), col("j")).agg(max(col("m")).as("m"))
-          .select(col("source"), col("j"), col("m")),
-        regTable)
-    }
-
-  /** DELETION PROPAGATION for HLL state: max does not invert, so the
-    * registers are REBUILT from the surviving doc texts (one pass over
-    * survivors — the O(corpus-rewrite) forget class the vector families
-    * share, stated rather than hidden) and atomically swapped; the
-    * doc-store text tombstone goes LAST as the commit witness (it
-    * destroys the text a retry would rebuild from ONLY after the
-    * rebuilt registers are live; a crash between the two re-runs to
-    * convergence because the rebuild reads survivors only). Ids append
-    * to the store for never-seen forgotten ids (forward block), which
-    * [[tombstoneSwap]] handles. */
-  def forgetHllState(spark: SparkSession, ids: DataFrame,
-      regTable: String, docTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val store = tryRead(spark, docTable)
-    val survivors = store.map(_.filter(col("text").isNotNull)
-        .join(idsC, Seq("doc_id"), "left_anti")
-        .select(col("source"), col("text")))
-      .getOrElse(emptyDf(spark,
-        "source" -> org.apache.spark.sql.types.StringType,
-        "text" -> org.apache.spark.sql.types.StringType))
-      .localCheckpoint(true)
-    graft.operators.MergeWriter.overwriteAtomic(
-      hllDelta(survivors), regTable)
-    tombstoneSwap(store, idsC, docTable, "text")
-  }
-
-  /** pp32's continuous twin: CONTINUOUS quantile-sketch maintenance —
-    * the percentile member of the sketch family
-    * ([[graft.operators.QuantileSketch]]). The standing state is the
-    * exploded bottom-k sample itself ((source, h, v) pair rows — ≤ k
-    * per source per append, ≤ k per source total after
-    * [[compactQuantile]]), advanced by one batch-sized hash+sketch
-    * pass. Like HLL, the merge is effectively IDEMPOTENT: the snapshot
-    * re-sketches the appended pair rows and the bottom-k fold dedups by
-    * (h, v), so a redelivered batch re-appends byte-identical pair rows
-    * the fold absorbs — no batch key, no replay dedup. The guard
-    * appends LAST (at-least-once), and the doc store keeps
-    * (doc_id, source, v) because the honest trade is HLL's: a SATURATED
-    * sample cannot recover the pairs it discarded, so deletion
-    * propagation is an O(survivors) rebuild + atomic swap
-    * ([[forgetQuantileState]]), never a decrement. `batch` is
-    * (doc_id, source, v) rows — v the measured BIGINT (the catalog
-    * family measures n_chars). DOUBLE measurements ride this maintainer
-    * UNCHANGED: pass v = [[graft.functions.DoubleSortable
-    * .toSortableLong]] of the double at ingest (the standing layout
-    * never looks at a value, only its order) and snapshot through
-    * [[quantileDoubleSnapshot]] instead of [[quantileSnapshot]] — which
-    * snapshot applies is the table's path contract (the sketch-level
-    * domain tag cannot ride exploded rows), pinned by
-    * QuantileStateSpec's double leg. */
-  def maintainQuantileState(batch: DataFrame, qsTable: String,
-      docTable: String): Unit = {
-    val fresh = freshAgainst(batch, docTable, Seq("source", "v"))
-    if (fresh.isEmpty) return
-    quantileDelta(fresh).write.mode("append").parquet(qsTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The batch's per-source bottom-k sample rows —
-    * [[maintainQuantileState]]'s append, shared with the
-    * crash-simulation spec and [[forgetQuantileState]]'s rebuild. */
-  private[graft] def quantileDelta(fresh: DataFrame): DataFrame =
-    graft.queries.TextOps.qsSampleRows(
-      graft.queries.TextOps.qsPairs(fresh))
-
-  /** [[maintainQuantileState]] as a foreachBatch sink over a
-    * (doc_id, source, v) stream. */
-  def quantileStateStream(docs: DataFrame, qsTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainQuantileState(b, qsTable, docTable))
-
-  /** The current ta24 view under the maintained pair rows: one bottom-k
-    * fold over ≤ appends·k rows per source (never the corpus), then the
-    * nearest-lower-rank estimates. */
+  /** pp32's read view: ta24's nearest-lower-rank estimates over the
+    * bottom-k fold of [[StateFamily.Quantile]] (≤ appends·k rows per
+    * source, never the corpus). */
   def quantileSnapshot(spark: SparkSession, qsTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val k = graft.queries.TextOps.TA24_K
     graft.operators.QuantileSketch.quantiles(
       graft.operators.QuantileSketch.sketch(
-        tryRead(spark, qsTable).getOrElse(emptyDf(spark,
-          "source" -> StringType, "h" -> LongType, "v" -> LongType)),
+        foldState(spark, StateFamily.Quantile, qsTable),
         "source", col("h"), col("v"), k),
       k, graft.queries.TextOps.TA24_PS)
   }
 
-  /** The ta25-class view of a DOUBLE-domain maintained sample (a table
-    * whose ingest stored [[graft.functions.DoubleSortable]] transformed
-    * longs): the same ≤ appends·k-row bottom-k fold as
-    * [[quantileSnapshot]] — order-preserving transform, so the fold IS
-    * the double fold — then the `-k` re-tag and the inverse transform
-    * on the way out ([[graft.operators.QuantileSketch.resketchDouble]]
-    * + quantilesDouble). Applying this to a BIGINT-domain table (or
-    * [[quantileSnapshot]] to a double one) returns reinterpreted bits —
-    * the domain is the table's path contract; see
-    * [[maintainQuantileState]]. */
+  /** The ta25-class view of a DOUBLE-domain maintained sample (ingest
+    * stored [[graft.functions.DoubleSortable]] transformed longs): the
+    * same bottom-k fold — order-preserving transform, so the fold IS the
+    * double fold — then the `-k` re-tag and the inverse transform on the
+    * way out. Applying this to a BIGINT-domain table (or
+    * [[quantileSnapshot]] to a double one) returns reinterpreted bits. */
   def quantileDoubleSnapshot(spark: SparkSession, qsTable: String)
       : DataFrame = {
-    import org.apache.spark.sql.types._
     val k = graft.queries.TextOps.TA24_K
     graft.operators.QuantileSketch.quantilesDouble(
       graft.operators.QuantileSketch.resketchDouble(
-        tryRead(spark, qsTable).getOrElse(emptyDf(spark,
-          "source" -> StringType, "h" -> LongType, "v" -> LongType)),
+        foldState(spark, StateFamily.Quantile, qsTable),
         "source", col("h"), col("v"), k),
       k, graft.queries.TextOps.TA24_PS)
   }
 
-  /** Compact the appended sample rows to ≤ k per source — the bottom-k
-    * fold materialized, atomically swapped; snapshot-invariant by the
-    * mergeability identity. */
-  def compactQuantile(spark: SparkSession, qsTable: String): Unit =
-    tryRead(spark, qsTable).foreach { t =>
-      graft.operators.MergeWriter.overwriteAtomic(
-        graft.queries.TextOps.qsSampleRows(t.localCheckpoint(true)),
-        qsTable)
-    }
-
-  /** DELETION PROPAGATION for quantile state: a saturated bottom-k
-    * sample does not invert (the (k+1)-th pair was discarded, so
-    * deleting a sampled row leaves a sample SMALLER than the survivors
-    * support), so the sample is REBUILT from the surviving stored
-    * (doc_id, source, v) rows and atomically swapped; the doc-store
-    * value tombstone goes LAST as the commit witness. Never-seen
-    * forgotten ids forward-block via [[tombstoneSwap]]. */
-  def forgetQuantileState(spark: SparkSession, ids: DataFrame,
-      qsTable: String, docTable: String): Unit = {
-    import org.apache.spark.sql.types._
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val store = tryRead(spark, docTable)
-    val survivors = store.map(_.filter(col("v").isNotNull)
-        .join(idsC, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("source"), col("v")))
-      .getOrElse(emptyDf(spark, "doc_id" -> LongType,
-        "source" -> StringType, "v" -> LongType))
-      .localCheckpoint(true)
-    graft.operators.MergeWriter.overwriteAtomic(
-      quantileDelta(survivors), qsTable)
-    tombstoneSwap(store, idsC, docTable, "v")
-  }
-
-  /** [[maintainVocabState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def vocabStateStream(docs: DataFrame, vocabTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainVocabState(b, vocabTable, docTable))
-
-  /** The current top-100 vocabulary under the maintained delta table —
-    * ta07's exact shape over every doc that has arrived AND NOT been
-    * forgotten. Duplicate delta rows from redelivered batches collapse
-    * on (batch_key, tok) before the sum; tokens whose net count
-    * [[forgetCountState]]'s decrements drove to zero are filtered (a
-    * from-scratch build over the survivors has no row for them). */
+  /** pp07's read view: ta07's top-`topN` vocabulary over the folded
+    * [[StateFamily.Vocab]] counts. */
   def vocabSnapshot(spark: SparkSession, vocabTable: String,
-      topN: Int = 100): DataFrame = {
-    import org.apache.spark.sql.types._
+      topN: Int = 100): DataFrame =
     graft.queries.TextOps.vocabTop(
-      tryRead(spark, vocabTable).getOrElse(emptyDf(spark,
-          "batch_key" -> LongType, "tok" -> StringType,
-          "df" -> LongType, "cf" -> LongType))
-        .dropDuplicates("batch_key", "tok")
-        .groupBy(col("tok"))
-        .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-        .filter(col("cf") > 0),
-      topN)
-  }
-
-  /** Compact the vocabulary deltas to one row per token; `docTable` is
-    * the flow's guard, and its null-text tombstones are the commit
-    * witness for [[forgetCountState]] decrement keys (net-zero tokens
-    * drop at the fold). */
-  def compactVocab(spark: SparkSession, vocabTable: String,
-      docTable: String): Unit =
-    compactDeltas(spark, vocabTable, Seq("tok"), Seq("df", "cf"),
-      docTable, "doc_id",
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("text").isNull).select(col("doc_id"))),
-      dropZeroKeys = true)
+      foldState(spark, StateFamily.Vocab, vocabTable), topN)
 
   /** The TOKENIZER-lifecycle rebuild, text-side twin of
     * [[rebuildIvfState]]: retrain the BPE segmentation from the
@@ -2979,229 +2579,22 @@ object Streams {
           .toDF("feature", "weight"), weightsTable)
     }
 
-  /** pp16's continuous twin: CONTINUOUS domain-mix maintenance — the
-    * sampling-side member of the additive-counts family (vocab, LM,
-    * sums). Standing tables: `countsTable` (batch_key, source, n — per-
-    * source count DELTAS, purely additive across doc-disjoint batches)
-    * and `docTable` (the id guard). The advance is ONE batch-sized count
-    * pass appended under the batch's key — no standing read at all, the
-    * vocab flow's shape — and the rates a sampler consumes are derived
-    * at snapshot time from the folded counts through the SAME
-    * [[graft.queries.SampleOps.mixRates]] kernel the batch gate uses.
-    * The batch carries (doc_id, source); in-batch duplicates collapse
-    * deterministically (max source per id), and the usual batch_key
-    * contract covers crash replay: the delta lands, the guard append
-    * crashes, the replay recomputes byte-identical rows under the same
-    * key, and the snapshot's (batch_key, source) dedup collapses them. */
-  def maintainMixState(batch: DataFrame, countsTable: String,
-      docTable: String): Unit = {
-    val arrived = batch.select(col("doc_id"), col("source"))
-      .groupBy(col("doc_id")).agg(max(col("source")).as("source"))
-    val fresh = tryRead(batch.sparkSession, docTable)
-      .map(e => arrived.join(
-        pruneToBatchRange(e.select("doc_id"), batch, "doc_id"),
-        Seq("doc_id"), "left_anti"))
-      .getOrElse(arrived)
-      .localCheckpoint(true)
-    if (fresh.isEmpty) return
-    val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    mixDelta(fresh, batchKey).write.mode("append").parquet(countsTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The per-source delta rows of one batch — the exact rows
-    * [[maintainMixState]] appends, shared with the crash-simulation spec
-    * (same drift-pinning reason as [[vocabDelta]]). */
-  private[graft] def mixDelta(fresh: DataFrame, batchKey: Long): DataFrame =
-    fresh.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      .select(lit(batchKey).as("batch_key"), col("source"), col("n"))
-
-  /** [[maintainMixState]] as a foreachBatch sink over a (doc_id, source)
-    * stream. */
-  def mixStateStream(docs: DataFrame, countsTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainMixState(b, countsTable, docTable))
-
-  /** The current folded per-source counts under the maintained delta
-    * table. Duplicate delta rows from redelivered batches collapse on
-    * (batch_key, source) before the sum; sources whose net count
-    * [[forgetMixState]]'s decrements drove to zero are filtered (a
-    * from-scratch build over the survivors has no row for them). */
-  def mixCountsSnapshot(spark: SparkSession, countsTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    tryRead(spark, countsTable).getOrElse(emptyDf(spark,
-        "batch_key" -> LongType, "source" -> StringType, "n" -> LongType))
-      .dropDuplicates("batch_key", "source")
-      .groupBy(col("source")).agg(sum(col("n")).as("n"))
-      .filter(col("n") > 0)
-  }
+  /** pp16's folded per-source counts ([[StateFamily.Mix]]). */
+  def mixCountsSnapshot(spark: SparkSession, countsTable: String): DataFrame =
+    foldState(spark, StateFamily.Mix, countsTable)
 
   /** The current sampling rates under the maintained counts — the exact
     * rate kernel the sa05/pp16 gates use, over the snapshot counts. */
   def mixRatesSnapshot(spark: SparkSession, countsTable: String): DataFrame =
     graft.queries.SampleOps.mixRates(mixCountsSnapshot(spark, countsTable))
 
-  /** Compact the mix deltas to one row per source; `docTable` is the
-    * flow's guard, and its null-source tombstones are the commit witness
-    * for [[forgetMixState]] decrement keys (net-zero sources drop at the
-    * fold). */
-  def compactMix(spark: SparkSession, countsTable: String,
-      docTable: String): Unit =
-    compactDeltas(spark, countsTable, Seq("source"), Seq("n"),
-      docTable, "doc_id",
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("source").isNull).select(col("doc_id"))),
-      dropZeroKeys = true)
-
-  /** pp17's continuous twin: CONTINUOUS exact-dedup maintenance — the
-    * (canon_hash, raw_hash)-granular stats table advanced additively per
-    * batch (counts sum, keepers min-combine; the canon-level report's
-    * distinct-count is derived at snapshot time, never maintained —
-    * pp17's Scaladoc explains why the state is one level finer than the
-    * report). Standing tables: `statsTable` (batch_key, canon_hash,
-    * raw_hash, n, keeper_id — pure deltas, the vocab flow's
-    * no-standing-read shape) and `docTable` (the id guard). The usual
-    * batch_key contract covers crash replay: the delta lands, the guard
-    * append crashes, the replay recomputes byte-identical rows under the
-    * same key, and the snapshot's (batch_key, canon, raw) dedup
-    * collapses them. `unicode` selects the production NFKC canonicalizer
-    * ([[graft.functions.Text.canonical]]) — a per-deployment constant:
-    * the two modes produce different canon_hash spaces, so a flow must
-    * pick one at table creation and keep it (mixing modes in one stats
-    * table would split groups, not corrupt state). */
-  def maintainDedupState(batch: DataFrame, statsTable: String,
-      docTable: String, unicode: Boolean = false): Unit = {
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    dedupDelta(fresh, batchKey, unicode).write.mode("append").parquet(statsTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The per-(canon, raw) delta rows of one batch — the exact rows
-    * [[maintainDedupState]] appends, shared with the crash-simulation
-    * spec (same drift-pinning reason as [[vocabDelta]]). */
-  private[graft] def dedupDelta(fresh: DataFrame, batchKey: Long,
-      unicode: Boolean = false): DataFrame =
-    graft.queries.TextOps.canonRawStats(fresh, unicode)
-      .select(lit(batchKey).as("batch_key"), col("canon_hash"),
-        col("raw_hash"), col("n"), col("keeper_id"))
-
-  /** [[maintainDedupState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def dedupStateStream(docs: DataFrame, statsTable: String,
-      docTable: String,
-      // no default: Scala forbids defaults on two overloads (the 8-arg
-      // pair-flow sink carries it)
-      checkpoint: Option[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainDedupState(b, statsTable, docTable))
-
-  def dedupStateStream(docs: DataFrame, statsTable: String,
-      docTable: String): org.apache.spark.sql.streaming.StreamingQuery =
-    dedupStateStream(docs, statsTable, docTable, None: Option[String])
-
-  /** The current canon-level dedup report under the maintained stats —
-    * dd15's exact shape over every doc that has arrived. Duplicate delta
-    * rows from redelivered batches collapse on (batch_key, canon, raw)
-    * before the (sum, min) fold. */
-  def dedupSnapshot(spark: SparkSession, statsTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
+  /** pp17's read view: dd15's canon-level report over the folded
+    * (canon, raw) cells of [[StateFamily.ExactDedup]] (either canonicalizer
+    * mode — the fold does not depend on it). The canon-level distinct
+    * count is derived here, never maintained. */
+  def dedupSnapshot(spark: SparkSession, statsTable: String): DataFrame =
     graft.queries.TextOps.canonGroups(
-      tryRead(spark, statsTable).getOrElse(emptyDf(spark,
-          "batch_key" -> LongType, "canon_hash" -> StringType,
-          "raw_hash" -> StringType, "n" -> LongType, "keeper_id" -> LongType))
-        .dropDuplicates("batch_key", "canon_hash", "raw_hash")
-        .groupBy(col("canon_hash"), col("raw_hash"))
-        .agg(sum(col("n")).as("n"), min(col("keeper_id")).as("keeper_id"))
-        // (canon, raw) cells [[forgetExactDedupState]]'s decrements drove
-        // to zero must not count as raw variants — a from-scratch build
-        // over the survivors has no row for them
-        .filter(col("n") > 0))
-  }
-
-  /** Compact the dedup deltas to one row per (canon, raw); `docTable` is
-    * the flow's guard, and its null-text tombstones are the commit
-    * witness for [[forgetExactDedupState]] decrement keys. (Keeper-
-    * carrying tables keep netted-zero rows at the fold — the snapshot's
-    * n > 0 filter hides them.) */
-  def compactDedup(spark: SparkSession, statsTable: String,
-      docTable: String): Unit =
-    compactDeltas(spark, statsTable, Seq("canon_hash", "raw_hash"), Seq("n"),
-      docTable, "doc_id", mins = Seq("keeper_id"),
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("text").isNull).select(col("doc_id"))))
-
-  /** DELETION PROPAGATION for the exact-dedup stats family —
-    * [[forgetChunkState]]'s pattern on (canon, raw) cells: per-cell n
-    * decrements recomputed from the forgotten docs' stored text
-    * (negative deltas, min-neutral keeper), and cells whose current
-    * keeper is forgotten get their keeper recomputed over the surviving
-    * members — every member of a (canon, raw) cell is a byte-identical
-    * document, so the new keeper is the min surviving id with that raw
-    * hash, named by ONE O(corpus) hash pass over the surviving store
-    * (run-rarely class) pruned to the affected cells, then patched in
-    * place. `unicode` must match the flow's per-deployment constant
-    * (the two canonicalizers hash different cell spaces). Crash/order
-    * contract identical to [[forgetChunkState]]: rollback, affected on
-    * the pre-decrement fold, patch from the pre-append checkpoint,
-    * decrement append, tombstone swap LAST as the compaction commit
-    * witness. */
-  def forgetExactDedupState(spark: SparkSession, ids: DataFrame,
-      statsTable: String, docTable: String,
-      unicode: Boolean = false): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    val gone = store
-      .map(_.filter(col("text").isNotNull).join(idsC, Seq("doc_id"), "left_semi"))
-      .map(_.localCheckpoint(true))
-      .filter(!_.isEmpty)
-    gone.foreach { g =>
-      val forgetKey = -g.agg(min(col("doc_id"))).head().getLong(0) - 1L
-      rollbackPendingForgets(spark, Seq(statsTable), g)
-      val goneIds = g.select(col("doc_id")).localCheckpoint(true)
-      val dec = dedupDelta(g, forgetKey, unicode).localCheckpoint(true)
-      val stats = tryRead(spark, statsTable).map(_.localCheckpoint(true))
-      val affected = stats.map { t =>
-        t.filter(col("batch_key") =!= forgetKey)
-          .join(broadcast(dec.select(col("canon_hash"), col("raw_hash"))),
-            Seq("canon_hash", "raw_hash"), "left_semi")
-          .dropDuplicates("batch_key", "canon_hash", "raw_hash")
-          .groupBy(col("canon_hash"), col("raw_hash"))
-          .agg(min(col("keeper_id")).as("k"))
-          .join(goneIds.withColumnRenamed("doc_id", "k"), Seq("k"), "left_semi")
-          .select(col("canon_hash"), col("raw_hash")).localCheckpoint(true)
-      }.getOrElse(emptyDf(spark,
-        "canon_hash" -> org.apache.spark.sql.types.StringType,
-        "raw_hash" -> org.apache.spark.sql.types.StringType))
-      if (!affected.isEmpty) {
-        val survivors = store.get.filter(col("text").isNotNull)
-          .join(idsC, Seq("doc_id"), "left_anti")
-        val newKeep = graft.queries.TextOps.canonRawStats(survivors, unicode)
-          .join(broadcast(affected), Seq("canon_hash", "raw_hash"), "left_semi")
-          .select(col("canon_hash"), col("raw_hash"),
-            col("keeper_id").as("__nk"))
-        stats.foreach { t =>
-          val patched = t
-            .join(broadcast(affected.withColumn("__aff", lit(true))),
-              Seq("canon_hash", "raw_hash"), "left")
-            .join(broadcast(newKeep), Seq("canon_hash", "raw_hash"), "left")
-            .withColumn("keeper_id",
-              when(col("__aff").isNotNull,
-                coalesce(col("__nk"), lit(Long.MaxValue)))
-                .otherwise(col("keeper_id")))
-            .select(t.columns.map(col).toIndexedSeq: _*)
-          graft.operators.MergeWriter.overwriteAtomic(patched, statsTable)
-        }
-      }
-      dec.select(col("batch_key"), col("canon_hash"), col("raw_hash"),
-          (-col("n")).as("n"), lit(Long.MaxValue).as("keeper_id"))
-        .write.mode("append").parquet(statsTable)
-    }
-    tombstoneSwap(store, idsC, docTable, "text")
-  }
+      foldState(spark, StateFamily.ExactDedup, statsTable))
 
   /** mm04's continuous twin: CONTINUOUS perceptual-dedup maintenance,
     * and the mm family's first standing-state member. Standing tables,
@@ -3309,167 +2702,21 @@ object Streams {
       "is_dup" -> BooleanType)
   }
 
-  /** mm05's continuous twin: CONTINUOUS chunk-dedup maintenance — a
-    * counts-shaped member of the standing-state family (the vocab/LM
-    * no-standing-read shape, NOT pp21's semi-join recompute: the gate
-    * must emit the report inline, so it probes the standing store; the
-    * continuous flow defers folding to snapshot time and its advance
-    * never reads standing state at all). A payload's chunk rows are a
-    * pure immutable function of its bytes, and the id guard puts each
-    * doc in exactly one committed batch — so per-digest occurrence
-    * counts and DISTINCT-DOC counts are both purely additive across
-    * batches (the distinct docs of digest g in the corpus partition
-    * exactly into its distinct docs per batch), keepers/lengths
-    * min-combine, and one batch-sized chunk+rollup pass appended as a
-    * delta is the whole advance. At-least-once safety: doc store as
-    * guard (appended LAST), deterministic batch_key (min doc_id),
-    * byte-identical replay rows, snapshot dedup on (batch_key, digest);
-    * [[compactChunks]] folds the delta table to O(distinct digests) on
-    * the maintenance cadence. */
-  def maintainChunkState(batch: DataFrame, statsTable: String,
-      docTable: String): Unit = {
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    chunkDelta(fresh, batchKey).write.mode("append").parquet(statsTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The per-digest delta rows of one batch — the exact rows
-    * [[maintainChunkState]] appends, shared with the crash-simulation
-    * spec (the vocabDelta drift-pinning convention). */
-  private[graft] def chunkDelta(fresh: DataFrame, batchKey: Long): DataFrame =
-    graft.operators.Multimodal.cdcChunks(
-        fresh.withColumn("blob", encode(col("text"), "UTF-8")),
-        "doc_id", "blob")
-      .groupBy(col("digest"))
-      .agg(count(lit(1)).as("n_occ"), countDistinct(col("doc_id")).as("n_docs"),
-        min(col("clen")).as("clen"), min(col("doc_id")).as("keeper_id"))
-      .select(lit(batchKey).as("batch_key"), col("digest"), col("n_occ"),
-        col("n_docs"), col("clen"), col("keeper_id"))
-
-  /** [[maintainChunkState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
+  /** [[StateFamily.Chunk]]'s advance as a foreachBatch sink over a
+    * (doc_id, text) document stream. */
   def chunkStateStream(docs: DataFrame, statsTable: String,
       docTable: String,
       checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
     startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainChunkState(b, statsTable, docTable))
+        maintainState(b, docTable, StateFamily.Chunk -> statsTable))
 
-  /** The current shared-chunk report under the maintained stats — mm05's
-    * exact shape over every doc arrived. Redelivered-batch duplicates
-    * collapse on (batch_key, digest) before the additive fold. */
+  /** mm05's read view: the shared-chunk report (digests held by ≥ 2 docs)
+    * over the folded [[StateFamily.Chunk]] stats. */
   def chunkReportSnapshot(spark: SparkSession, statsTable: String): DataFrame =
-    tryRead(spark, statsTable).getOrElse(emptyChunkStats(spark))
-      .dropDuplicates("batch_key", "digest")
-      .groupBy(col("digest"))
-      .agg(min(col("clen")).as("clen"), sum(col("n_occ")).as("n_occ"),
-        sum(col("n_docs")).as("n_docs"), min(col("keeper_id")).as("keeper_id"))
+    foldState(spark, StateFamily.Chunk, statsTable)
       .filter(col("n_docs") >= 2)
       .select(col("digest"), col("clen"), col("n_occ"), col("n_docs"),
         col("keeper_id"))
-
-  /** Compact the chunk deltas to one row per digest; `docTable` is the
-    * flow's guard, and its null-text tombstones are the commit witness
-    * for [[forgetChunkState]] decrement keys. (Keeper-carrying tables
-    * keep their netted-zero rows at the fold — the snapshot's
-    * n_docs ≥ 2 filter hides them.) */
-  def compactChunks(spark: SparkSession, statsTable: String,
-      docTable: String): Unit =
-    compactDeltas(spark, statsTable, Seq("digest"), Seq("n_occ", "n_docs"),
-      docTable, "doc_id", mins = Seq("clen", "keeper_id"),
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("text").isNull).select(col("doc_id"))))
-
-  /** DELETION PROPAGATION for the chunk-dedup family — additive counts
-    * plus the family's first MIN-REPAIR: per-digest (n_occ, n_docs)
-    * decrement exactly like [[forgetCountState]] (recomputed from the
-    * forgotten docs' stored text, appended as negative deltas whose
-    * keeper column is the min-neutral Long.MaxValue; clen carries its
-    * true value — chunks with one digest are byte-identical, so every
-    * row agrees), but keeper_id is a MIN and a min cannot be RAISED by
-    * appends: digests whose current keeper is a forgotten doc need
-    * their keeper recomputed over the surviving holders, which only a
-    * re-chunk of the surviving store can name — ONE O(corpus) pass
-    * (the run-rarely class the vector-family forgets already pay),
-    * pruned to the affected digests after chunking, followed by an
-    * in-place patch of the stats rows (sums untouched, committed/
-    * pending keys preserved). Digests with no surviving holder patch
-    * to Long.MaxValue and net to zero counts — invisible behind the
-    * snapshot's n_docs ≥ 2 filter. Crash contract: decrements derive
-    * from text (nulled only by the final swap), the affected set is
-    * computed on the PRE-decrement fold after [[rollbackPendingForgets]]
-    * (a completed patch makes the re-run's affected set empty), and
-    * every step is idempotent — forgetCountState's contract plus one
-    * rewrite. Single-maintenance-loop contract as everywhere: no
-    * concurrent advance. */
-  def forgetChunkState(spark: SparkSession, ids: DataFrame,
-      statsTable: String, docTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    val gone = store
-      .map(_.filter(col("text").isNotNull).join(idsC, Seq("doc_id"), "left_semi"))
-      .map(_.localCheckpoint(true))
-      .filter(!_.isEmpty)
-    gone.foreach { g =>
-      val forgetKey = -g.agg(min(col("doc_id"))).head().getLong(0) - 1L
-      rollbackPendingForgets(spark, Seq(statsTable), g)
-      val goneIds = g.select(col("doc_id")).localCheckpoint(true)
-      val dec = chunkDelta(g, forgetKey).localCheckpoint(true)
-      val stats = tryRead(spark, statsTable).map(_.localCheckpoint(true))
-      // digests whose CURRENT keeper is forgotten, on the pre-decrement
-      // fold (rollback above cleared any partial run of this key)
-      val affected = stats.map { t =>
-        t.filter(col("batch_key") =!= forgetKey)
-          .join(broadcast(dec.select(col("digest"))), Seq("digest"), "left_semi")
-          .dropDuplicates("batch_key", "digest")
-          .groupBy(col("digest")).agg(min(col("keeper_id")).as("k"))
-          .join(goneIds.withColumnRenamed("doc_id", "k"), Seq("k"), "left_semi")
-          .select(col("digest")).localCheckpoint(true)
-      }.getOrElse(emptyDf(spark,
-        "digest" -> org.apache.spark.sql.types.StringType))
-      // patch BEFORE the decrement append: the patch rewrites the table
-      // from the pre-append checkpoint, so appending first would lose
-      // the decrement rows; a crash between patch and append re-runs
-      // with an empty affected set (keepers already patched) and just
-      // re-appends
-      if (!affected.isEmpty) {
-        // the run-rarely pass: re-chunk the SURVIVING store, name each
-        // affected digest's new min holder, patch rows in place
-        val survivors = store.get.filter(col("text").isNotNull)
-          .join(idsC, Seq("doc_id"), "left_anti")
-        val newKeep = graft.operators.Multimodal.cdcChunks(
-            survivors.withColumn("blob", encode(col("text"), "UTF-8")),
-            "doc_id", "blob")
-          .join(broadcast(affected), Seq("digest"), "left_semi")
-          .groupBy(col("digest")).agg(min(col("doc_id")).as("__nk"))
-        stats.foreach { t =>
-          val patched = t
-            .join(broadcast(affected.withColumn("__aff", lit(true))),
-              Seq("digest"), "left")
-            .join(broadcast(newKeep), Seq("digest"), "left")
-            .withColumn("keeper_id",
-              when(col("__aff").isNotNull,
-                coalesce(col("__nk"), lit(Long.MaxValue)))
-                .otherwise(col("keeper_id")))
-            .select(t.columns.map(col).toIndexedSeq: _*)
-          graft.operators.MergeWriter.overwriteAtomic(patched, statsTable)
-        }
-      }
-      dec.select(col("batch_key"), col("digest"), (-col("n_occ")).as("n_occ"),
-          (-col("n_docs")).as("n_docs"), col("clen"),
-          lit(Long.MaxValue).as("keeper_id"))
-        .write.mode("append").parquet(statsTable)
-    }
-    tombstoneSwap(store, idsC, docTable, "text")
-  }
-
-  private def emptyChunkStats(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    emptyDf(spark, "batch_key" -> LongType, "digest" -> StringType,
-      "n_occ" -> LongType, "n_docs" -> LongType, "clen" -> IntegerType,
-      "keeper_id" -> LongType)
-  }
 
   /** pp22's continuous loop: CONTINUOUS token-budget mix maintenance.
     * The standing state is an append-only JOURNAL of every arrived doc
@@ -3490,20 +2737,12 @@ object Streams {
     * append; a replay recomputes a byte-identical (possibly smaller —
     * the cut may have advanced) row set under the same batch_key, and
     * the snapshot's doc_id dedup collapses it. In-batch duplicates
-    * collapse deterministically (max text). Per-batch work and write
-    * volume O(batch). */
+    * collapse to one of the arriving rows ([[freshAgainst]]). Per-batch
+    * work and write volume O(batch). */
   def maintainBudgetState(batch: DataFrame, eligTable: String,
       docTable: String, budget: Long): Unit = {
-    val spark = batch.sparkSession
-    val arrived = batch.select(col("doc_id"), col("source"), col("text"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("source")).as("source"), max(col("text")).as("text"))
-    val fresh0 = tryRead(spark, docTable)
-      .map(e => arrived.join(
-        pruneToBatchRange(e.select("doc_id"), batch, "doc_id"),
-        Seq("doc_id"), "left_anti"))
-      .getOrElse(arrived)
-    val fresh = graft.queries.SampleOps.budgetFrame(fresh0).localCheckpoint(true)
+    val fresh = graft.queries.SampleOps.budgetFrame(
+      freshAgainst(batch, docTable, Seq("source", "text"))).localCheckpoint(true)
     if (fresh.isEmpty) return
     // pinned: the emptiness probe would otherwise re-run the cut-join
     // delta plan a second time for the write
@@ -3514,7 +2753,7 @@ object Streams {
 
   /** The batch-keyed journal rows of one fresh frame — the exact rows
     * [[maintainBudgetState]] appends, shared with the crash-simulation
-    * spec (the mixDelta/vocabDelta drift-pinning convention). */
+    * spec (the drift-pinning convention of [[StateFamily]]'s deltas). */
   private[graft] def budgetDelta(fresh: DataFrame, eligTable: String,
       budget: Long): DataFrame = {
     val spark = fresh.sparkSession
@@ -3565,21 +2804,10 @@ object Streams {
   def compactBudget(spark: SparkSession, eligTable: String,
       docTable: String, budget: Long): Unit =
     tryRead(spark, eligTable).foreach { t0 =>
-      val t = t0.localCheckpoint(true)
-      val guard = tryRead(spark, docTable)
-        .map(_.select(col("doc_id").as("__gid")))
-        .getOrElse(emptyDf(spark, "__gid" -> org.apache.spark.sql.types.LongType))
-      val tKeys = t.select(col("batch_key")).distinct()
-      val committedKeys = tKeys
-        .join(guard, tKeys("batch_key") === col("__gid"), "left_semi")
-        .localCheckpoint(true)
-      val reserved = col("batch_key") === Long.MinValue
-      val committed = t.filter(reserved).unionByName(
-        t.join(broadcast(committedKeys), Seq("batch_key"), "left_semi"))
-        .dropDuplicates("doc_id")
+      val (all, pending) = commitSplit(spark, t0.localCheckpoint(true),
+        docTable, "doc_id")
+      val committed = all.dropDuplicates("doc_id")
         .select(col("doc_id"), col("source"), col("n_tokens"), col("key"))
-      val pending = t.filter(!reserved)
-        .join(broadcast(committedKeys), Seq("batch_key"), "left_anti")
       val cut = graft.queries.SampleOps.budgetCut(committed, budget)
       val live = committed.join(cut, Seq("source"), "left")
         .filter(col("cut_key").isNull ||
@@ -3618,75 +2846,13 @@ object Streams {
     appendNewBy(idsC, docTable, "doc_id")
   }
 
-  /** pp13's continuous twin: CONTINUOUS bigram-LM maintenance — the
-    * second counts-shaped member of the standing-state family, with
-    * [[maintainVocabState]]'s contract verbatim: per-bigram occurrence
-    * counts are PURELY ADDITIVE across doc-disjoint batches
-    * ([[graft.queries.TextOps.bigramCounts]] — a sum, no count-distinct),
-    * so a batch advances the state with ONE batch-sized counting pass
-    * appended as a delta, no standing read at all. The KN continuation
-    * count is deliberately NOT maintained (it is a window over the
-    * already-aggregated vocab²-bounded table — [[lmSnapshot]] recomputes
-    * it from the merged counts; see pp13's Scaladoc). At-least-once
-    * safety: doc store as guard (appended LAST), deterministic batch_key
-    * (min doc_id), byte-identical replay rows, snapshot dedup on
-    * (batch_key, bigram); [[compactLm]] folds the delta table to O(vocab²)
-    * rows on the maintenance cadence. */
-  def maintainLmState(batch: DataFrame, lmTable: String,
-      docTable: String): Unit = {
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    lmDelta(fresh, batchKey).write.mode("append").parquet(lmTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The per-bigram delta rows of one batch — the exact rows
-    * [[maintainLmState]] appends, shared with the crash-simulation spec
-    * (same drift-pinning reason as [[vocabDelta]]). */
-  private[graft] def lmDelta(fresh: DataFrame, batchKey: Long): DataFrame =
-    graft.queries.TextOps.bigramCounts(fresh)
-      .select(lit(batchKey).as("batch_key"), col("bigram"), col("n"))
-
-  /** [[maintainLmState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def lmStateStream(docs: DataFrame, lmTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainLmState(b, lmTable, docTable))
-
-  /** The current top-100 bigram LM (with KN continuation counts) under
-    * the maintained delta table — ta09's exact shape over every doc that
-    * has arrived AND NOT been forgotten. Duplicate delta rows from
-    * redelivered batches collapse on (batch_key, bigram) before the sum;
-    * net-zero bigrams from [[forgetCountState]]'s decrements are
-    * filtered BEFORE the KN continuation window — a zero-count bigram
-    * left in place would still inflate its right word's
-    * distinct-left-context count. */
+  /** pp13's read view: ta09's top-`topN` bigram LM over the folded
+    * [[StateFamily.Lm]] counts. The KN continuation count is recomputed
+    * here from the live bigrams only — a net-zero bigram left in place
+    * would still inflate its right word's distinct-left-context count. */
   def lmSnapshot(spark: SparkSession, lmTable: String,
-      topN: Int = 100): DataFrame = {
-    import org.apache.spark.sql.types._
-    graft.queries.TextOps.lmTop(
-      tryRead(spark, lmTable).getOrElse(emptyDf(spark,
-          "batch_key" -> LongType, "bigram" -> StringType, "n" -> LongType))
-        .dropDuplicates("batch_key", "bigram")
-        .groupBy(col("bigram")).agg(sum(col("n")).as("n"))
-        .filter(col("n") > 0),
-      topN)
-  }
-
-  /** Compact the LM deltas to one row per bigram; `docTable` is the
-    * flow's guard, and its null-text tombstones are the commit witness
-    * for [[forgetCountState]] decrement keys (net-zero bigrams drop at
-    * the fold). */
-  def compactLm(spark: SparkSession, lmTable: String,
-      docTable: String): Unit =
-    compactDeltas(spark, lmTable, Seq("bigram"), Seq("n"),
-      docTable, "doc_id",
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("text").isNull).select(col("doc_id"))),
-      dropZeroKeys = true)
+      topN: Int = 100): DataFrame =
+    graft.queries.TextOps.lmTop(foldState(spark, StateFamily.Lm, lmTable), topN)
 
   /** The once-offline REFERENCE-LM build for the perplexity score family
     * (pp25/ta17's frozen model): derive the reference bigram counts from
@@ -3713,7 +2879,7 @@ object Streams {
     * buckets), so [[scoreSnapshot]] re-ranks at read over (doc_id,
     * source, score) rows, never the text (pp25's rank-only argument).
     *
-    * At-least-once safety is the [[maintainVocabState]] contract: guard
+    * At-least-once safety is the [[StateFamily]] sum contract: guard
     * appended LAST, scored rows ride the batch's deterministic
     * `batch_key` (min doc_id), a crash-replay appends byte-identical
     * rows (the reference is frozen — same inputs, same scores), and the
@@ -3744,20 +2910,12 @@ object Streams {
 
   /** The scored rows of one batch — the exact rows [[maintainScoreState]]
     * appends, shared with the crash-simulation spec (same drift-pinning
-    * reason as [[vocabDelta]]). */
+    * reason as [[StateFamily]]'s deltas). */
   private[graft] def scoreDelta(fresh: DataFrame, ref: DataFrame,
       batchKey: Long): DataFrame =
     graft.queries.TextOps.refSurprise(fresh, ref)
       .select(lit(batchKey).as("batch_key"), col("doc_id"),
         col("source"), col("score"))
-
-  /** [[maintainScoreState]] as a foreachBatch sink over a (doc_id,
-    * source, text) document stream. */
-  def scoreStateStream(docs: DataFrame, refTable: String,
-      scoresTable: String, docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainScoreState(b, refTable, scoresTable, docTable))
 
   /** The current head/middle/tail bucketing under the maintained scores
     * — ta17's exact shape over every doc that has arrived AND NOT been
@@ -4333,15 +3491,6 @@ object Streams {
       .write.mode("append").partitionBy("pt").parquet(labelsTable)
     fresh.write.mode("append").parquet(docTable)
   }
-
-  /** [[maintainFeatureState]] as a foreachBatch sink over a (doc_id,
-    * text) document stream. */
-  def featureStateStream(docs: DataFrame, tstatTable: String,
-      mTable: String, labelsTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainFeatureState(b, tstatTable, mTable, labelsTable, docTable))
 
   /** The current (features, y) training frame under the maintained
     * tables — exactly what ta19's trainer (and

@@ -2,7 +2,7 @@ package graft.wells
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -114,9 +114,6 @@ object Cleaning {
     val m = p.matcher(text)
     if (m.find()) { val v = m.group(1).trim; if (v.isEmpty) null else v } else null
   }
-
-  def valueInlineCol(c: Column, labelRegex: String): Column =
-    nullif(trim(regexp_extract(c, "(?i)" + labelRegex + "\\s*[:\\-]?\\s*([^\\n\\r]+)", 1)), lit(""))
 
   // ----------------------------------------------------------------- F7
   /** Label alone at end of line; value = first non-empty following line
@@ -244,11 +241,6 @@ object Cleaning {
   /** NULL-erasing sink coercion (web_scraping.py:257-262): null → "". */
   def toStrCol(c: Column): Column = coalesce(c.cast("string"), lit(""))
 
-  // ----------------------------------------------------------------- F25
-  /** Safe filename prefix (web_scraping.py:191). */
-  def safePrefixCol(c: Column): Column =
-    substring(regexp_replace(c, "[^A-Za-z0-9_-]+", "_"), 1, 40)
-
   // ------------------------------------------------------------ UDF registry
   val dmsToDecimalUdf = udf((s: String) => dmsToDecimal(s))
   val toDecimal12_9Udf = udf((s: String) => Option(toDecimal12_9(s)))
@@ -263,14 +255,4 @@ object Cleaning {
   /** toDecimal12_9 as a typed column with the exact reference DECIMAL(12,9). */
   def toDecimal12_9Col(c: Column): Column =
     toDecimal12_9Udf(c).cast(DecimalType(12, 9))
-
-  /** Register SQL-callable names for the UDF subset (used by spark.sql paths). */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("dms_to_decimal", (s: String) => dmsToDecimal(s))
-    spark.udf.register("to_decimal_12_9", (s: String) => Option(toDecimal12_9(s)))
-    spark.udf.register("normalize_api", (s: String) => Option(normalizeApi(s)))
-    spark.udf.register("clean_num", (s: String) => Option(cleanNumStr(s)))
-    spark.udf.register("value_next_line", (l: String, t: String) => Option(valueNextLine(l, t)))
-    spark.udf.register("norm_text", (s: String) => normStr(s))
-  }
 }

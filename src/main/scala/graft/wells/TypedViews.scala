@@ -32,11 +32,4 @@ object TypedViews {
       .withColumn("date_simulated", try_to_timestamp(
         col("date_simulated_raw"), lit("M/d/yyyy")).cast("date"))
   }
-
-  /** Header with double-typed coordinates (the DECIMAL(12,9) stays the
-    * table type; doubles are the analytics-friendly view). */
-  def typedHeader(header: DataFrame): DataFrame =
-    header
-      .withColumn("latitude_d", col("latitude").cast("double"))
-      .withColumn("longitude_d", col("longitude").cast("double"))
 }

@@ -24,6 +24,10 @@ object SparkSpec {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
+      // the suites re-plan the same catalog kernels many times over (one
+      // catalog pass per shuffle-partition count or corpus); a codegen
+      // cache that holds them all compiles each generated class once
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

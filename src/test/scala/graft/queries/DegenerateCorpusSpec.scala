@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 
 /** Degenerate-corpus robustness: EVERY catalog gate must execute — to an
   * empty or tiny result, never an exception — on (a) a 12-row corpus and
@@ -20,8 +20,10 @@ import graft.SparkSpec
   *
   * events.parquet is rebuilt from its raw nanos form (read as long under
   * nanosAsLong, written as plain INT64) so `Tables.events`' µs
-  * conversion applies unchanged to the shrunk copy. */
-class DegenerateCorpusSpec extends AnyFunSuite with SparkSpec {
+  * conversion applies unchanged to the shrunk copy. The three corpora's
+  * catalog passes run overlapped ([[graft.OverlappedTests]]). */
+class DegenerateCorpusSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
 
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")

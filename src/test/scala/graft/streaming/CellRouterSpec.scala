@@ -11,14 +11,14 @@ import graft.SparkSpec
   * round-17 `cellwise` measurement). Contracts under test:
   *
   *  - REGROUP, exactly-once: every routed row leaves the stage in exactly
-  *    one flushed group (no-crash run), and each flushed group is
-  *    cell-pure — its members' cells all map to the group's kb (zero-norm
+  *    one flushed wave (no-crash run), and each wave is cell-pure — its
+  *    members' cells all map to one of the wave's ready groups (zero-norm
   *    rows ride group 0).
   *  - TRIGGERS: the size trigger flushes a full group early; the age
   *    trigger flushes a cold group once its oldest row has waited maxLag
   *    arrivals; a group that is neither stays staged.
   *  - CRASH between consume and the staged delete redelivers the WHOLE
-  *    group; the downstream maintainer's id guard collapses it — the
+  *    wave; the downstream maintainer's id guard collapses it — the
   *    maintained graph still equals the full build.
   *  - END TO END: decorrelated arrival through router + flush + drain
   *    feeds [[Streams.maintainKnnGraphState]] to a graph equal to the
@@ -47,9 +47,14 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     val groups = 4
     val stageT = Files.createTempDirectory("router").toString + "/stage"
 
-    val flushed = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long])]
-    def consume(kb: Long, rows: org.apache.spark.sql.DataFrame): Unit =
-      flushed += kb -> rows.select($"vec_id").collect().map(_.getLong(0)).toSet
+    val flushed = scala.collection.mutable.ArrayBuffer.empty[(Seq[Long], Seq[Long])]
+    def flush(minRows: Long, maxLag: Long, curSeq: Long): Seq[Long] = {
+      var ids = Seq.empty[Long]
+      val ready = Streams.flushCellGroupsBatched(spark, stageT, minRows, maxLag,
+        curSeq)(rows => ids = rows.select($"vec_id").collect().map(_.getLong(0)).toSeq)
+      if (ready.nonEmpty) flushed += ready -> ids
+      ready
+    }
 
     // 4 decorrelated (id-interleaved) arrivals; the size trigger is low
     // enough that hot groups flush on size while colder ones ride the
@@ -58,29 +63,27 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     for (k <- 0 until arrivals) {
       Streams.routeByCell(df(e.filter(_._1 % arrivals == k.toLong).toIndexedSeq),
         cents, stageT, groups, k.toLong)
-      Streams.flushCellGroups(spark, stageT, minRows = 60L, maxLag = 2L,
-        curSeq = k.toLong)(consume)
+      flush(minRows = 60L, maxLag = 2L, curSeq = k.toLong)
     }
     val preDrain = flushed.size
     assert(preDrain > 0, "neither trigger fired across four arrivals")
-    Streams.flushCellGroups(spark, stageT, minRows = 1L, maxLag = 0L,
-      curSeq = arrivals.toLong)(consume)
-    // exactly once: the flushed groups partition the arrivals
+    flush(minRows = 1L, maxLag = 0L, curSeq = arrivals.toLong)
+    // exactly once: the flushed waves partition the arrivals
     val seen = flushed.flatMap(_._2)
     assert(seen.size == seen.toSet.size, "a row left the stage twice")
     assert(seen.toSet == e.map(_._1).toSet, "a routed row never flushed")
-    // cell purity: every member's cell maps to its group's kb (zero-norm
-    // rows carry no cell and ride group 0 — this corpus has none, which
-    // the dedicated sentinel test below covers)
-    flushed.foreach { case (kb, ids) =>
+    // cell purity: every member's cell maps to one of its wave's ready
+    // groups (zero-norm rows carry no cell and ride group 0 — this corpus
+    // has none, which the dedicated sentinel test below covers)
+    flushed.foreach { case (ready, ids) =>
       ids.foreach { id =>
-        assert(cellOf(id) % groups == kb,
-          s"row $id (cell ${cellOf(id)}) flushed under group $kb")
+        assert(ready.contains(cellOf(id) % groups),
+          s"row $id (cell ${cellOf(id)}) flushed in a wave of groups $ready")
       }
     }
     // the drain left nothing staged
-    assert(Streams.flushCellGroups(spark, stageT, minRows = 1L, maxLag = 0L,
-      curSeq = arrivals.toLong)(consume).isEmpty, "drain left staged groups")
+    assert(flush(minRows = 1L, maxLag = 0L, curSeq = arrivals.toLong).isEmpty,
+      "drain left staged groups")
   }
 
   test("cold group stays staged until the age trigger; size trigger flushes a hot group immediately") {
@@ -93,21 +96,21 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     val stageT = Files.createTempDirectory("router-age").toString + "/stage"
     // one small arrival: under a huge size trigger nothing is ready...
     Streams.routeByCell(df(e.take(40).toIndexedSeq), cents, stageT, 4, 0L)
-    assert(Streams.flushCellGroups(spark, stageT, minRows = 1000000L,
-      maxLag = 3L, curSeq = 0L)((_, _) => fail("flushed before ready")).isEmpty)
+    assert(Streams.flushCellGroupsBatched(spark, stageT, minRows = 1000000L,
+      maxLag = 3L, curSeq = 0L)(_ => fail("flushed before ready")).isEmpty)
     // ...and still not at seq 2 (oldest = 0 > 2 - 3)...
-    assert(Streams.flushCellGroups(spark, stageT, minRows = 1000000L,
-      maxLag = 3L, curSeq = 2L)((_, _) => fail("age trigger fired early")).isEmpty)
+    assert(Streams.flushCellGroupsBatched(spark, stageT, minRows = 1000000L,
+      maxLag = 3L, curSeq = 2L)(_ => fail("age trigger fired early")).isEmpty)
     // ...but at seq 3 the age trigger releases every staged group
     var aged = 0
-    Streams.flushCellGroups(spark, stageT, minRows = 1000000L, maxLag = 3L,
-      curSeq = 3L)((_, _) => aged += 1)
+    Streams.flushCellGroupsBatched(spark, stageT, minRows = 1000000L, maxLag = 3L,
+      curSeq = 3L)(_ => aged += 1)
     assert(aged > 0, "age trigger never fired")
     // size trigger: a big arrival flushes in the same step
     Streams.routeByCell(df(e.toIndexedSeq), cents, stageT, 1, 4L)
     var sized = 0
-    Streams.flushCellGroups(spark, stageT, minRows = e.size.toLong,
-      maxLag = 100L, curSeq = 4L)((_, rows) => {
+    Streams.flushCellGroupsBatched(spark, stageT, minRows = e.size.toLong,
+      maxLag = 100L, curSeq = 4L)(rows => {
       sized += 1
       assert(rows.count() == e.size.toLong, "size-triggered group incomplete")
     })
@@ -182,8 +185,8 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     // stage EVERYTHING under quantizer A (its grouping), then the era
     // swaps before anything flushes; the advance runs under B
     Streams.routeByCell(df(e.toIndexedSeq), centsA, stageT, 3, 0L)
-    Streams.flushCellGroups(spark, stageT, minRows = 1L, maxLag = 0L,
-      curSeq = 1L)((_, rows) =>
+    Streams.flushCellGroupsBatched(spark, stageT, minRows = 1L, maxLag = 0L,
+      curSeq = 1L)(rows =>
       Streams.maintainKnnGraphState(rows, centsB, postT, graphT, k = 3))
     def key(g: org.apache.spark.sql.DataFrame) = g
       .select($"query_id", $"neighbor_id", $"rank")
@@ -215,18 +218,18 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
       val b = e.filter(_._1 % arrivals == k.toLong).toIndexedSeq ++
         (if (k == 1) Seq(zero) else Seq.empty)
       Streams.routeByCell(df(b), cents, stageT, 3, k.toLong)
-      try Streams.flushCellGroups(spark, stageT, minRows = 60L, maxLag = 1L,
-        curSeq = k.toLong) { (_, rows) =>
+      try Streams.flushCellGroupsBatched(spark, stageT, minRows = 60L,
+        maxLag = 1L, curSeq = k.toLong) { rows =>
         advance(rows)
         // crash ONCE between the consume and the staged delete: the
-        // group must redeliver wholesale at the next flush, and the
+        // wave must redeliver wholesale at the next flush, and the
         // maintainer's id guard must collapse the duplicate
         if (!crashed) { crashed = true; throw new IllegalStateException("boom") }
       } catch { case ex: IllegalStateException if ex.getMessage == "boom" => }
     }
     assert(crashed, "the crash leg never ran — triggers too lazy")
-    Streams.flushCellGroups(spark, stageT, minRows = 1L, maxLag = 0L,
-      curSeq = arrivals.toLong)((_, rows) => advance(rows))
+    Streams.flushCellGroupsBatched(spark, stageT, minRows = 1L, maxLag = 0L,
+      curSeq = arrivals.toLong)(advance)
 
     def key(g: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] = g
       .select($"query_id", $"neighbor_id", $"rank")

@@ -9,8 +9,9 @@ import graft.SparkSpec
 /** The CMS standing-state family (ta20/pp29's continuous twin): sketch
   * cells + vocabulary advanced append-only per batch under the vocab
   * family's at-least-once contract, forgotten by negative cell deltas
-  * recomputed from stored text. Snapshot must equal ta20 over exactly
-  * the arrived-and-not-forgotten docs at every step. */
+  * recomputed from stored text. Snapshot must equal ta20 over the
+  * arrivals, and compaction must bound the cells at d·w; the lifecycle
+  * legs are StateFamilyContractSpec's. */
 class CmsStateSpec extends AnyFunSuite with SparkSpec {
 
   test("cms maintainer: snapshot == ta20 over arrivals; replay dedups; redelivery no-op; forget == survivors; compaction; re-ingest blocked; idempotent") {
@@ -33,52 +34,19 @@ class CmsStateSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("cms-state").toString
     val (cT, vT, docT) = (s"$root/cells", s"$root/vocab", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainCmsState(df(b), cT, vT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.CmsCells -> cT,
+        StateFamily.Vocab -> vT)
     def got() = Streams.cmsSnapshot(spark, cT, vT)
       .collect().map(_.toSeq.toList).toList
     assert(got() == want(all), "maintained snapshot != ta20 over the arrivals")
     assert(got().nonEmpty, "no results — vacuous")
 
-    // crash replay: byte-identical delta rows land again under the same
-    // key — the snapshot's (batch_key, ...) dedups collapse them
-    val b2 = all.drop(150)
-    val k2 = b2.map(_._1).min
-    Streams.cmsDelta(df(b2), k2).write.mode("append").parquet(cT)
-    Streams.vocabDelta(df(b2), k2).write.mode("append").parquet(vT)
-    assert(got() == want(all), "replayed delta rows double-counted")
-
-    // redelivery of a whole already-seen batch is a no-op
-    Streams.maintainCmsState(df(all.take(150)), cT, vT, docT)
-    assert(got() == want(all), "redelivered batch re-counted")
-
-    // compaction folds to O(cells) / O(vocab) rows, snapshot-invariant
-    Streams.compactCms(spark, cT, docT)
-    Streams.compactVocab(spark, vT, docT)
-    assert(got() == want(all), "compaction drifted")
+    // redelivery, crash replay, compaction invariance and forget:
+    // StateFamilyContractSpec
+    // this family's own bound: compaction folds to O(cells) / O(vocab) rows
+    Streams.compactState(spark, docT, StateFamily.CmsCells -> cT,
+      StateFamily.Vocab -> vT)
     assert(spark.read.parquet(cT).count() <= 4 * 1024,
       "cells table exceeds d*w after compaction")
-
-    // forget: negative decrements recomputed from stored text
-    val forgot = all.map(_._1).filter(_ % 6 == 0).toSet
-    val fDf = forgot.toSeq.toDF("doc_id")
-    Streams.forgetCountState(spark, fDf, docT,
-      vocabTable = Some(vT), cmsTable = Some(cT))
-    val remaining = all.filterNot(t => forgot(t._1))
-    assert(got() == want(remaining), "forget != ta20 over the survivors")
-
-    // re-ingest of forgotten docs is a no-op
-    Streams.maintainCmsState(
-      df(all.filter(t => forgot(t._1)).take(10)), cT, vT, docT)
-    assert(got() == want(remaining), "a forgotten doc re-entered the sketch")
-
-    // idempotent forget re-run (tombstoned text => empty gone set)
-    Streams.forgetCountState(spark, fDf, docT,
-      vocabTable = Some(vT), cmsTable = Some(cT))
-    assert(got() == want(remaining), "forget re-run diverged")
-
-    // post-forget compaction honors the tombstone witness and converges
-    Streams.compactCms(spark, cT, docT)
-    Streams.compactVocab(spark, vT, docT)
-    assert(got() == want(remaining), "post-forget compaction drifted")
   }
 }

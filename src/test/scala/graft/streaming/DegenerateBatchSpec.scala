@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 import graft.queries.VectorOps
 
 /** The continuous maintainers' analog of DegenerateCorpusSpec: every
@@ -16,7 +16,8 @@ import graft.queries.VectorOps
   * stream must never wedge the maintenance loop. The vector flow gets
   * the same treatment with a zero vector (dropped by the norm filter)
   * and an empty batch. */
-class DegenerateBatchSpec extends AnyFunSuite with SparkSpec {
+class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
 
   test("text-flow maintainers survive NULL/empty/absent text and empty batches") {
     import spark.implicits._
@@ -33,7 +34,8 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec {
         s"$root/remap", s"$root/docs2")
       Streams.maintainSpanState(b, s"$root/grams", s"$root/counts",
         s"$root/report", s"$root/docs3")
-      Streams.maintainVocabState(b, s"$root/vocab", s"$root/docs4")
+      Streams.maintainState(b, s"$root/docs4",
+        StateFamily.Vocab -> s"$root/vocab")
       Streams.maintainContainmentIndex(b, s"$root/cstore", s"$root/cprobes",
         s"$root/cpairs", s"$root/docs5")
     }
@@ -103,9 +105,11 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec {
     Streams.forgetTfState(spark, ids, s"$root/tf", s"$root/d2")
     Streams.forgetFeatureState(spark, ids, s"$root/ts", s"$root/m", s"$root/lb", s"$root/d3")
     Streams.forgetSpanState(spark, ids, s"$root/gr", s"$root/cn", s"$root/rp", s"$root/d4")
-    Streams.forgetMixState(spark, ids, s"$root/d5", s"$root/mx")
-    Streams.forgetChunkState(spark, ids, s"$root/ch", s"$root/d6")
-    Streams.forgetExactDedupState(spark, ids, s"$root/xd", s"$root/d7")
+    Streams.forgetState(spark, ids, s"$root/d5", StateFamily.Mix -> s"$root/mx")
+    Streams.forgetState(spark, ids, s"$root/d6",
+      StateFamily.Chunk -> s"$root/ch")
+    Streams.forgetState(spark, ids, s"$root/d7",
+      StateFamily.ExactDedup -> s"$root/xd")
     Streams.forgetPerceptualState(spark, ids, s"$root/sg", s"$root/pp", s"$root/d8")
     Streams.forgetContainmentState(spark, ids, s"$root/cs", s"$root/cp", s"$root/cq", s"$root/d9")
     Streams.forgetBudgetState(spark, ids, s"$root/el", s"$root/d10")
@@ -158,13 +162,15 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec {
     // absent tables readable; forget over absent cms tables tombstones
     for (b <- Seq(degenerate, degenerate.limit(0),
         Seq((3L, null: String), (4L, "")).toDF("doc_id", "text")))
-      Streams.maintainCmsState(b, s"$root/cells", s"$root/vocab", s"$root/docsC")
+      Streams.maintainState(b, s"$root/docsC",
+        StateFamily.CmsCells -> s"$root/cells",
+        StateFamily.Vocab -> s"$root/vocab")
     assert(Streams.cmsSnapshot(spark, s"$root/cells", s"$root/vocab")
       .collect().map(_.getString(0)).toSet == Set("real", "words", "here"))
     assert(Streams.cmsSnapshot(spark, s"$root/absent-c", s"$root/absent-v")
       .count() == 0)
-    Streams.forgetCountState(spark, Seq(8L).toDF("doc_id"), s"$root/docsC2",
-      vocabTable = Some(s"$root/v2"), cmsTable = Some(s"$root/c2"))
+    Streams.forgetState(spark, Seq(8L).toDF("doc_id"), s"$root/docsC2",
+      StateFamily.Vocab -> s"$root/v2", StateFamily.CmsCells -> s"$root/c2")
     assert(spark.read.parquet(s"$root/docsC2").select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(8L))
 
@@ -217,7 +223,8 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec {
     val allBad = Seq((3L, "s1", null.asInstanceOf[java.lang.Long]))
       .toDF("doc_id", "source", "v")
     for (b <- Seq(degenerate, empty, allBad))
-      Streams.maintainQuantileState(b, s"$root/qs", s"$root/docs")
+      Streams.maintainState(b, s"$root/docs",
+        StateFamily.Quantile -> s"$root/qs")
     // the two real values advanced exactly once; NULL values contributed
     // no sample rows but their ids are still guarded against redelivery
     val got = Streams.quantileSnapshot(spark, s"$root/qs")

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 
 /** Round-12 deletion-propagation members: perceptual, containment-index,
   * chunk-dedup, exact-dedup-stats, and token-budget forgets. Each family's
@@ -14,7 +14,8 @@ import graft.SparkSpec
   * with re-ingest blocked and the job idempotent. The crafted trio
   * (1000005 forgotten keeper, 1000011/1000013 surviving byte-identical
   * copies) pins the keeper-repair path non-vacuously. */
-class ForgetFamiliesSpec extends AnyFunSuite with SparkSpec {
+class ForgetFamiliesSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
   import org.apache.spark.sql.functions._
 
   private val trioText = (1 to 40).map(i => s"zzforget$i").mkString(" ")
@@ -102,14 +103,15 @@ class ForgetFamiliesSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("forget-chunk").toString
     val (stT, docT) = (s"$root/stats", s"$root/docs")
     for (b <- Seq(all.take(200), all.drop(200)))
-      Streams.maintainChunkState(df(b), stT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.Chunk -> stT)
     val forgot = forgotOf(all)
     assert(forgot(1000005L) && !forgot(1000011L))
-    Streams.forgetChunkState(spark, forgot.toSeq.toDF("doc_id"), stT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Chunk -> stT)
 
     val remaining = all.filter(t => !forgot.contains(t._1))
     val (stR, docR) = (s"$root/statsR", s"$root/docsR")
-    Streams.maintainChunkState(df(remaining), stR, docR)
+    Streams.maintainState(df(remaining), docR, StateFamily.Chunk -> stR)
     def rep(t: String) = Streams.chunkReportSnapshot(spark, t)
       .collect().map(_.toSeq.toList).toSet
     assert(rep(stT) == rep(stR), "chunk report != from-scratch over survivors")
@@ -121,13 +123,13 @@ class ForgetFamiliesSpec extends AnyFunSuite with SparkSpec {
     assert(trioKeepers == Set(1000011L),
       s"forgotten keeper not repaired to the min survivor: $trioKeepers")
 
-    Streams.maintainChunkState(
-      df(all.filter(t => forgot(t._1)).take(5)
-        :+ (neverSeen -> trioText)), stT, docT)
+    Streams.maintainState(df(all.filter(t => forgot(t._1)).take(5)
+        :+ (neverSeen -> trioText)), docT, StateFamily.Chunk -> stT)
     assert(rep(stT) == rep(stR), "a forgotten doc re-entered")
-    Streams.compactChunks(spark, stT, docT)
+    Streams.compactState(spark, docT, StateFamily.Chunk -> stT)
     assert(rep(stT) == rep(stR), "compaction drifted")
-    Streams.forgetChunkState(spark, forgot.toSeq.toDF("doc_id"), stT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Chunk -> stT)
     assert(rep(stT) == rep(stR), "re-run diverged")
   }
 
@@ -137,13 +139,14 @@ class ForgetFamiliesSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("forget-xdedup").toString
     val (stT, docT) = (s"$root/stats", s"$root/docs")
     for (b <- Seq(all.take(200), all.drop(200)))
-      Streams.maintainDedupState(df(b), stT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.ExactDedup -> stT)
     val forgot = forgotOf(all)
-    Streams.forgetExactDedupState(spark, forgot.toSeq.toDF("doc_id"), stT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.ExactDedup -> stT)
 
     val remaining = all.filter(t => !forgot.contains(t._1))
     val (stR, docR) = (s"$root/statsR", s"$root/docsR")
-    Streams.maintainDedupState(df(remaining), stR, docR)
+    Streams.maintainState(df(remaining), docR, StateFamily.ExactDedup -> stR)
     def rep(t: String) = Streams.dedupSnapshot(spark, t)
       .collect().map(_.toSeq.toList).toSet
     assert(rep(stT) == rep(stR), "canon report != from-scratch over survivors")
@@ -154,13 +157,13 @@ class ForgetFamiliesSpec extends AnyFunSuite with SparkSpec {
     assert(trioKeepers == Set(1000011L),
       s"forgotten keeper not repaired to the min survivor: $trioKeepers")
 
-    Streams.maintainDedupState(
-      df(all.filter(t => forgot(t._1)).take(5)
-        :+ (neverSeen -> trioText)), stT, docT)
+    Streams.maintainState(df(all.filter(t => forgot(t._1)).take(5)
+        :+ (neverSeen -> trioText)), docT, StateFamily.ExactDedup -> stT)
     assert(rep(stT) == rep(stR), "a forgotten doc re-entered")
-    Streams.compactDedup(spark, stT, docT)
+    Streams.compactState(spark, docT, StateFamily.ExactDedup -> stT)
     assert(rep(stT) == rep(stR), "compaction drifted")
-    Streams.forgetExactDedupState(spark, forgot.toSeq.toDF("doc_id"), stT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.ExactDedup -> stT)
     assert(rep(stT) == rep(stR), "re-run diverged")
   }
 

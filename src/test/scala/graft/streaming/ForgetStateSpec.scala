@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 import graft.queries.VectorOps
 
 /** Deletion propagation: after forgetVectorState, every maintained
@@ -12,7 +12,8 @@ import graft.queries.VectorOps
   * the forgotten ids — with the ids tombstoned (redelivery AND future
   * ingest blocked), the job idempotent, and a crash between the repairs
   * and the postings swap repaired by re-running. */
-class ForgetStateSpec extends AnyFunSuite with SparkSpec {
+class ForgetStateSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
 
   test("forget == from-scratch without the ids; tombstones block re-ingest; idempotent; crash converges") {
     import org.apache.spark.sql.functions._
@@ -129,15 +130,15 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
     val (vocT, docV) = (s"$root/vocab", s"$root/docsv")
     val (lmT, docL) = (s"$root/lm", s"$root/docsl")
     for (b <- Seq(all.take(200), all.drop(200))) {
-      Streams.maintainVocabState(df(b), vocT, docV)
-      Streams.maintainLmState(df(b), lmT, docL)
+      Streams.maintainState(df(b), docV, StateFamily.Vocab -> vocT)
+      Streams.maintainState(df(b), docL, StateFamily.Lm -> lmT)
     }
 
     val neverSeen = 3000000L
     val forgot = all.map(_._1).filter(_ % 5 == 0).toSet + neverSeen
     val fDf = forgot.toSeq.toDF("doc_id")
-    Streams.forgetCountState(spark, fDf, docV, vocabTable = Some(vocT))
-    Streams.forgetCountState(spark, fDf, docL, lmTable = Some(lmT))
+    Streams.forgetState(spark, fDf, docV, StateFamily.Vocab -> vocT)
+    Streams.forgetState(spark, fDf, docL, StateFamily.Lm -> lmT)
 
     val remaining = all.filter(t => !forgot.contains(t._1))
     def vocabWant() = graft.queries.TextOps.vocabTop(
@@ -168,23 +169,23 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
     // crash-replay: the SAME decrement rows land again under the same
     // key — the snapshots' (batch_key, key) dedup collapses them
     val goneDf = df(goneDocs)
-    Streams.vocabDelta(goneDf, negKeys.head)
+    StateFamily.Vocab.delta(goneDf, negKeys.head)
       .select($"batch_key", $"tok", (-$"df").as("df"), (-$"cf").as("cf"))
       .write.mode("append").parquet(vocT)
     assert(vocabGot() == vocabWant(), "replayed decrement double-counted")
 
     // re-ingest of forgotten docs (and the never-seen id) is a no-op
-    Streams.maintainVocabState(
-      df(goneDocs.take(10) ++ Seq(neverSeen -> "resurrected text")), vocT, docV)
-    Streams.maintainLmState(
-      df(goneDocs.take(10) ++ Seq(neverSeen -> "resurrected text")), lmT, docL)
+    Streams.maintainState(df(goneDocs.take(10) ++ Seq(neverSeen -> "resurrected text")),
+      docV, StateFamily.Vocab -> vocT)
+    Streams.maintainState(df(goneDocs.take(10) ++ Seq(neverSeen -> "resurrected text")),
+      docL, StateFamily.Lm -> lmT)
     assert(vocabGot() == vocabWant() && lmGot() == lmWant(),
       "a forgotten doc re-entered the counts")
 
     // compaction folds the committed decrement (doc store tombstoned =
     // the commit witness): one reserved key, no net-zero rows, equal
-    Streams.compactVocab(spark, vocT, docV)
-    Streams.compactLm(spark, lmT, docL)
+    Streams.compactState(spark, docV, StateFamily.Vocab -> vocT)
+    Streams.compactState(spark, docL, StateFamily.Lm -> lmT)
     assert(vocabGot() == vocabWant() && lmGot() == lmWant(), "compaction drifted")
     val keysAfter = spark.read.parquet(vocT).select($"batch_key")
       .distinct().collect().map(_.getLong(0)).toSet
@@ -193,7 +194,7 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
       "net-zero token rows survived compaction")
 
     // idempotent re-run after everything
-    Streams.forgetCountState(spark, fDf, docV, vocabTable = Some(vocT))
+    Streams.forgetState(spark, fDf, docV, StateFamily.Vocab -> vocT)
     assert(vocabGot() == vocabWant())
 
     // PENDING protection: decrements appended but the doc swap lost —
@@ -202,20 +203,21 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
     val root2 = Files.createTempDirectory("forget-counts-crash").toString
     val (vocT2, docV2) = (s"$root2/vocab", s"$root2/docs")
     for (b <- Seq(all.take(200), all.drop(200)))
-      Streams.maintainVocabState(df(b), vocT2, docV2)
-    Streams.vocabDelta(goneDf.filter($"doc_id" =!= neverSeen), negKeys.head)
+      Streams.maintainState(df(b), docV2, StateFamily.Vocab -> vocT2)
+    StateFamily.Vocab.delta(goneDf.filter($"doc_id" =!= neverSeen),
+      negKeys.head)
       .select($"batch_key", $"tok", (-$"df").as("df"), (-$"cf").as("cf"))
       .write.mode("append").parquet(vocT2)
-    Streams.compactVocab(spark, vocT2, docV2)
+    Streams.compactState(spark, docV2, StateFamily.Vocab -> vocT2)
     val pendingKeys = spark.read.parquet(vocT2).select($"batch_key")
       .filter($"batch_key" < 0 && $"batch_key" =!= Long.MinValue)
       .distinct().count()
     assert(pendingKeys == 1, "uncommitted decrement was folded — dedup evidence destroyed")
-    Streams.forgetCountState(spark, fDf, docV2, vocabTable = Some(vocT2))
+    Streams.forgetState(spark, fDf, docV2, StateFamily.Vocab -> vocT2)
     assert(Streams.vocabSnapshot(spark, vocT2)
       .collect().map(_.toSeq.toList).toList == vocabWant(),
       "crash replay diverged")
-    Streams.compactVocab(spark, vocT2, docV2)
+    Streams.compactState(spark, docV2, StateFamily.Vocab -> vocT2)
     assert(Streams.vocabSnapshot(spark, vocT2)
       .collect().map(_.toSeq.toList).toList == vocabWant(),
       "post-replay compaction drifted")
@@ -236,12 +238,12 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("forget-mix").toString
     val (cntT, docT) = (s"$root/counts", s"$root/docs")
     for (b <- Seq(all.take(200), all.drop(200)))
-      Streams.maintainMixState(df(b), cntT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.Mix -> cntT)
 
     val neverSeen = 3000000L
     val forgot = all.map(_._1).filter(_ % 5 == 0).toSet + neverSeen
     val fDf = forgot.toSeq.toDF("doc_id")
-    Streams.forgetMixState(spark, fDf, docT, cntT)
+    Streams.forgetState(spark, fDf, docT, StateFamily.Mix -> cntT)
 
     val remaining = all.filter(t => !forgot.contains(t._1))
     def countsWant() = df(remaining).groupBy($"source")
@@ -261,19 +263,19 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
     // crash-replay of the decrement dedups under its key
     val goneDocs = all.filter(t => forgot.contains(t._1))
     val negKey = -goneDocs.map(_._1).min - 1L
-    Streams.mixDelta(df(goneDocs), negKey)
+    StateFamily.Mix.delta(df(goneDocs), negKey)
       .select($"batch_key", $"source", (-$"n").as("n"))
       .write.mode("append").parquet(cntT)
     assert(countsGot() == countsWant(), "replayed decrement double-counted")
 
     // re-ingest of forgotten docs (and the never-seen id) is a no-op
-    Streams.maintainMixState(
-      df(goneDocs.take(10) ++ Seq(neverSeen -> "resurrected")), cntT, docT)
+    Streams.maintainState(df(goneDocs.take(10) ++ Seq(neverSeen -> "resurrected")),
+      docT, StateFamily.Mix -> cntT)
     assert(countsGot() == countsWant(), "a forgotten doc re-entered the counts")
 
     // compaction folds the committed decrement (null-source tombstones =
     // the commit witness): reserved key only, no net-zero rows
-    Streams.compactMix(spark, cntT, docT)
+    Streams.compactState(spark, docT, StateFamily.Mix -> cntT)
     assert(countsGot() == countsWant() && ratesGot() == ratesWant(),
       "compaction drifted")
     val keysAfter = spark.read.parquet(cntT).select($"batch_key")
@@ -283,7 +285,7 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
       "net-zero source rows survived compaction")
 
     // idempotent re-run
-    Streams.forgetMixState(spark, fDf, docT, cntT)
+    Streams.forgetState(spark, fDf, docT, StateFamily.Mix -> cntT)
     assert(countsGot() == countsWant())
   }
 
@@ -438,20 +440,20 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
 
     val root = Files.createTempDirectory("forget-overlap").toString
     val (vocT, docT) = (s"$root/vocab", s"$root/docs")
-    Streams.maintainVocabState(df(all), vocT, docT)
+    Streams.maintainState(df(all), docT, StateFamily.Vocab -> vocT)
     def got() = Streams.vocabSnapshot(spark, vocT)
       .collect().map(_.toSeq.toList).toList
 
     // job 1 CRASHES before its swap: gone G1 = {10, 12}, key −10−1 = −11
     // — decrements for doc 12's tokens are now pending in the table
-    Streams.vocabDelta(df(all.filter(t => Set(10L, 12L)(t._1))), -11L)
+    StateFamily.Vocab.delta(df(all.filter(t => Set(10L, 12L)(t._1))), -11L)
       .select($"batch_key", $"tok", (-$"df").as("df"), (-$"cf").as("cf"))
       .write.mode("append").parquet(vocT)
 
     // job 2: a DIFFERENT overlapping request {10, 13} — same min ⇒ same
     // key without the rollback; its swap tombstones 10 (job 1's witness)
-    Streams.forgetCountState(spark, Seq(10L, 13L).toDF("doc_id"), docT,
-      vocabTable = Some(vocT))
+    Streams.forgetState(spark, Seq(10L, 13L).toDF("doc_id"), docT,
+      StateFamily.Vocab -> vocT)
 
     // job 1's pending rows must be GONE (rolled back), so the snapshot
     // is exactly from-scratch over {11, 12, 14} — doc 12 undecremented
@@ -459,13 +461,13 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec {
       "overlapping forget mixed or leaked the crashed job's decrements")
     // compaction with witness 10 tombstoned must not commit anything
     // beyond job 2's own decrements
-    Streams.compactVocab(spark, vocT, docT)
+    Streams.compactState(spark, docT, StateFamily.Vocab -> vocT)
     assert(got() == want(Set(11L, 12L, 14L)),
       "compaction committed the crashed job's foreign decrements")
 
     // the crashed request re-run to completion: gone is now just {12}
-    Streams.forgetCountState(spark, Seq(10L, 12L).toDF("doc_id"), docT,
-      vocabTable = Some(vocT))
+    Streams.forgetState(spark, Seq(10L, 12L).toDF("doc_id"), docT,
+      StateFamily.Vocab -> vocT)
     assert(got() == want(Set(11L, 14L)), "re-run of the crashed request diverged")
   }
 

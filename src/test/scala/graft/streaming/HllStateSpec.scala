@@ -10,8 +10,9 @@ import graft.SparkSpec
   * register table advanced by idempotent max — replays and overlaps
   * absorbed with NO dedup machinery — and forgotten by an O(survivors)
   * register rebuild (max does not invert; the honest non-additive
-  * trade). Snapshot must equal ta23 over exactly the
-  * arrived-and-not-forgotten docs at every step. */
+  * trade). Snapshot must equal ta23 over the arrivals, and compaction
+  * must bound the registers; the lifecycle legs are
+  * StateFamilyContractSpec's. */
 class HllStateSpec extends AnyFunSuite with SparkSpec {
 
   test("hll maintainer: snapshot == ta23 over arrivals; replay absorbed; redelivery no-op; forget rebuilds over survivors; compaction; re-ingest blocked; idempotent") {
@@ -35,50 +36,19 @@ class HllStateSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("hll-state").toString
     val (rT, docT) = (s"$root/regs", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainHllState(df(b), rT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.Hll -> rT)
     def got() = Streams.hllSnapshot(spark, rT).orderBy(col("source"))
       .collect().map(_.toSeq.toList).toList
     assert(got() == want(all), "maintained snapshot != ta23 over the arrivals")
     assert(got().nonEmpty, "no results — vacuous")
 
-    // crash replay: the register rows land again; the max fold absorbs
-    // them with no batch key and no dedup (idempotence IS the dedup)
-    Streams.hllDelta(df(all.drop(150))).write.mode("append").parquet(rT)
-    assert(got() == want(all), "replayed register rows moved the estimate")
-
-    // redelivery of a whole already-seen batch is a no-op
-    Streams.maintainHllState(df(all.take(150)), rT, docT)
-    assert(got() == want(all), "redelivered batch moved the estimate")
-
-    // compaction folds to <= 64 rows per source, snapshot-invariant
-    Streams.compactHll(spark, rT)
-    assert(got() == want(all), "compaction drifted")
+    // redelivery, crash replay, compaction invariance and forget:
+    // StateFamilyContractSpec
+    // this family's own bound: compaction folds to <= 64 rows per source
+    Streams.compactState(spark, docT, StateFamily.Hll -> rT)
     val perSource = spark.read.parquet(rT)
       .groupBy(col("source")).agg(count(lit(1)).as("n"))
       .collect().map(_.getLong(1))
     assert(perSource.forall(_ <= 64), "a source exceeds 64 register rows")
-
-    // forget: registers rebuilt from the surviving stored texts
-    val forgot = all.map(_._1).filter(_ % 6 == 0).toSet
-    val fDf = forgot.toSeq.toDF("doc_id")
-    Streams.forgetHllState(spark, fDf, rT, docT)
-    val remaining = all.filterNot(t => forgot(t._1))
-    assert(got() == want(remaining), "forget != ta23 over the survivors")
-
-    // re-ingest of forgotten docs is a no-op (tombstoned ids block)
-    Streams.maintainHllState(
-      df(all.filter(t => forgot(t._1)).take(10)), rT, docT)
-    assert(got() == want(remaining), "a forgotten doc re-entered the registers")
-
-    // idempotent forget re-run (tombstoned text => same survivor set)
-    Streams.forgetHllState(spark, fDf, rT, docT)
-    assert(got() == want(remaining), "forget re-run diverged")
-
-    // a never-seen forgotten id forward-blocks its future ingest
-    val ghost = all.map(_._1).max + 1000
-    Streams.forgetHllState(spark, Seq(ghost).toDF("doc_id"), rT, docT)
-    Streams.maintainHllState(
-      df(Seq((ghost, "src", "ghost text never counted"))), rT, docT)
-    assert(got() == want(remaining), "a pre-forgotten id was ingested")
   }
 }

@@ -112,6 +112,21 @@ class IncrementalBudgetStateSpec extends AnyFunSuite with SparkSpec {
       "crash replay double-counted or lost rows")
   }
 
+  test("in-batch repeats whose payload columns disagree journal ONE of the arriving rows") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("inc-budget-dup").toString
+    val (eligT, docT) = (s"$root/elig", s"$root/docs")
+    // source order and text order disagree: a per-column max would
+    // journal ("b", 1 token), a row neither delivery carried
+    Streams.maintainBudgetState(
+      Seq((7L, "a", "x"), (7L, "b", "one two three"))
+        .toDF("doc_id", "source", "text"), eligT, docT, B)
+    val got = spark.read.parquet(eligT).select($"source", $"n_tokens")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got.size == 1 && Set(("a", 1L), ("b", 3L)).contains(got.head),
+      s"journal row $got is not one of the arriving rows")
+  }
+
   test("budgetStateStream: live MemoryStream feed matches the batch twin") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

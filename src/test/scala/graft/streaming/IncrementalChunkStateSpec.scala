@@ -12,9 +12,8 @@ import graft.operators.Multimodal
 /** mm05's continuous loop: however the document stream is batched, the
   * maintained per-digest stats must fold to a from-scratch mm05 report
   * over everything arrived — with the advance never reading standing
-  * state (the additive-counts contract), redelivery a no-op, a
-  * partial-crash replay collapsed by the snapshot's (batch_key, digest)
-  * dedup, and compaction snapshot-invariant. Clones seeded into a LATER
+  * state (the additive-counts contract; the lifecycle legs are
+  * StateFamilyContractSpec's). Clones seeded into a LATER
   * batch than their originals prove the cross-batch fold (a shared chunk
   * whose two holders arrive in different batches has no single batch
   * that sees both). */
@@ -59,7 +58,8 @@ class IncrementalChunkStateSpec extends AnyFunSuite with SparkSpec {
     for (b <- batches) {
       // at-least-once upstream: a doc can repeat WITHIN a micro-batch
       val withDup = b.toSeq ++ b.headOption
-      Streams.maintainChunkState(withDup.toDF("doc_id", "text"), statsT, docT)
+      Streams.maintainState(withDup.toDF("doc_id", "text"), docT,
+        StateFamily.Chunk -> statsT)
       seen ++= b.map(_._1)
       assert(snapshot(statsT) == directReport(arrived(seen)),
         s"snapshot drifted from direct report at ${seen.size} docs")
@@ -72,40 +72,8 @@ class IncrementalChunkStateSpec extends AnyFunSuite with SparkSpec {
         s"no shared-chunk row keeps original $id")
     }
 
-    // whole-batch redelivery: the doc guard makes it a no-op
-    Streams.maintainChunkState(batches(1).toSeq.toDF("doc_id", "text"),
-      statsT, docT)
-    assert(snapshot(statsT) == fin)
-
-    // partial crash: the delta landed, the guard append didn't — the
-    // replay appends byte-identical rows under the same batch_key, and
-    // the snapshot's (batch_key, digest) dedup collapses them
-    val root2 = Files.createTempDirectory("inc-chunk-crash").toString
-    val (statsT2, docT2) = (s"$root2/stats", s"$root2/docs")
-    Streams.maintainChunkState(batches(0).toSeq.toDF("doc_id", "text"),
-      statsT2, docT2)
-    val bB = batches(1).toSeq.toDF("doc_id", "text")
-    val key = batches(1).map(_._1).min
-    Streams.chunkDelta(bB.localCheckpoint(true), key)
-      .write.mode("append").parquet(statsT2)
-    Streams.maintainChunkState(bB, statsT2, docT2)
-    val seen12 = (batches(0) ++ batches(1)).map(_._1).toSet
-    assert(snapshot(statsT2) == directReport(arrived(seen12)),
-      "crash replay corrupted the stats table")
-    assert(spark.read.parquet(statsT2).count() >
-      spark.read.parquet(statsT2).dropDuplicates("batch_key", "digest").count(),
-      "crash simulation appended nothing twice; the replay pin is vacuous")
-
-    // compaction folds committed deltas and changes no snapshot; a late
-    // batch after compaction still folds additively
-    Streams.compactChunks(spark, statsT, docT)
-    assert(snapshot(statsT) == fin, "compaction changed the snapshot")
-    val late = Seq((maxId + 1001L, base.head._2)).toDF("doc_id", "text")
-    Streams.maintainChunkState(late, statsT, docT)
-    val allIds = all.map(_._1).toSet + (maxId + 1001L)
-    val lateDocs = allDf.unionByName(late).filter($"doc_id".isInCollection(allIds))
-    assert(snapshot(statsT) == directReport(lateDocs),
-      "post-compaction advance drifted")
+    // redelivery, crash replay, compaction and forget:
+    // StateFamilyContractSpec
   }
 
   test("continuous twin: the foreachBatch stream lands the same state as direct maintenance") {

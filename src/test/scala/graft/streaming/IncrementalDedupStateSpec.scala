@@ -9,11 +9,9 @@ import graft.SparkSpec
 /** pp17's continuous loop: however the (doc_id, text) stream is split
   * into batches, the maintained (canon, raw)-granular stats — and the
   * canon-level report derived from them — must equal a from-scratch
-  * dd15 over everything arrived, with the delta table APPEND-ONLY,
-  * redelivery a no-op, the (sum, min) fold surviving a partial-crash
-  * replay via the batch_key dedup, and compaction (which min-combines
-  * keeper_id — the first mins-column user of the delta fold) leaving
-  * the snapshot unchanged. The corpus has no duplicates at this scale,
+  * dd15 over everything arrived, with the delta table APPEND-ONLY and
+  * keeper_id min-combined across batches (the lifecycle legs are
+  * StateFamilyContractSpec's). The corpus has no duplicates at this scale,
   * so the stream is seeded with exact clones AND canonical variants
   * (punctuation-wrapped copies: same canon_hash, different raw_hash)
   * placed in a DIFFERENT batch than their originals — without them the
@@ -58,7 +56,8 @@ class IncrementalDedupStateSpec extends AnyFunSuite with SparkSpec {
     for (b <- batches) {
       // an at-least-once upstream can repeat a doc WITHIN a micro-batch
       val withDup = b.toSeq ++ b.headOption
-      Streams.maintainDedupState(withDup.toDF("doc_id", "text"), stT, docT)
+      Streams.maintainState(withDup.toDF("doc_id", "text"), docT,
+        StateFamily.ExactDedup -> stT)
       seen ++= b.map(_._1)
       assert(report() == direct(seen))
       val now = dataFiles(stT).map { case (k, v) => (s"$stT/$k", v) }
@@ -82,38 +81,8 @@ class IncrementalDedupStateSpec extends AnyFunSuite with SparkSpec {
       assert(fin.exists(g => g._3 == id && g._2 >= 3),
         s"seeded group keeper not the original id $id") }
 
-    // redelivery of a whole ingested batch: nothing changes (doc guard)
-    Streams.maintainDedupState(batches(1).toSeq.toDF("doc_id", "text"), stT, docT)
-    assert(report() == fin)
-
-    // compaction folds the delta table without moving the snapshot
-    Streams.compactDedup(spark, stT, docT)
-    assert(report() == fin)
-    assert(spark.read.parquet(stT).select("batch_key").distinct().count() == 1)
-
-    // partial-crash replay on a fresh root: the stats delta landed but
-    // the doc-guard advance didn't — the replay must recompute
-    // byte-identical delta rows (same batch_key) that the snapshot dedup
-    // collapses, never double-counting a (canon, raw) cell.
-    val root2 = Files.createTempDirectory("inc-dedup-crash").toString
-    val (stT2, docT2) = (s"$root2/stats", s"$root2/docs")
-    Streams.maintainDedupState(batches(0).toSeq.toDF("doc_id", "text"), stT2, docT2)
-    val b2 = batches(1).toSeq.toDF("doc_id", "text")
-    val key2 = batches(1).map(_._1).min
-    Streams.dedupDelta(b2, key2).write.mode("append").parquet(stT2)
-    // a maintenance compaction while the crashed batch is pending must
-    // keep its uncommitted rows under their own key
-    Streams.compactDedup(spark, stT2, docT2)
-    assert(spark.read.parquet(stT2).filter($"batch_key" === key2).count() > 0,
-      "compaction folded a pending batch's delta rows")
-    Streams.maintainDedupState(b2, stT2, docT2)
-    val seen12 = (batches(0) ++ batches(1)).map(_._1).toSet
-    def report2() = Streams.dedupSnapshot(spark, stT2)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(report2() == direct(seen12))
-    Streams.compactDedup(spark, stT2, docT2)
-    assert(spark.read.parquet(stT2).select("batch_key").distinct().count() == 1)
-    assert(report2() == direct(seen12))
+    // redelivery, crash replay, compaction and forget:
+    // StateFamilyContractSpec
   }
 
   test("unicode mode: NFKC variants merge across batches under the same (sum, min) fold; ASCII mode keeps them distinct") {
@@ -143,8 +112,10 @@ class IncrementalDedupStateSpec extends AnyFunSuite with SparkSpec {
     def run(unicode: Boolean): Set[(String, Long, Long, Long)] = {
       val root = Files.createTempDirectory(s"inc-dedup-u$unicode").toString
       val (stT, docT) = (s"$root/stats", s"$root/docs")
-      Streams.maintainDedupState(b1, stT, docT, unicode)
-      Streams.maintainDedupState(b2, stT, docT, unicode)
+      Streams.maintainState(b1, docT,
+        (if (unicode) StateFamily.ExactDedupNfkc else StateFamily.ExactDedup) -> stT)
+      Streams.maintainState(b2, docT,
+        (if (unicode) StateFamily.ExactDedupNfkc else StateFamily.ExactDedup) -> stT)
       val rep = Streams.dedupSnapshot(spark, stT)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       val direct = graft.queries.TextOps.canonGroups(

@@ -10,11 +10,9 @@ import graft.queries.TextOps
 /** pp13's continuous loop: however the document stream is split into
   * batches, the maintained bigram-LM snapshot (counts + recomputed KN
   * continuation) must equal ta09 computed from scratch over everything
-  * arrived — with the delta table APPEND-ONLY, redelivery a no-op, the
-  * additive counts surviving a partial-crash replay via the batch_key
-  * dedup, and compaction leaving the snapshot unchanged. The vocab
-  * flow's contract (IncrementalVocabStateSpec) applied to the second
-  * counts-shaped standing state; the one structural difference — the
+  * arrived, with the delta table APPEND-ONLY (the lifecycle legs are
+  * StateFamilyContractSpec's). The one structural difference from the
+  * vocab flow — the
   * continuation count is NOT maintained but recomputed by the snapshot —
   * is exactly what the parity assertions exercise. */
 class IncrementalLmStateSpec extends AnyFunSuite with SparkSpec {
@@ -47,7 +45,8 @@ class IncrementalLmStateSpec extends AnyFunSuite with SparkSpec {
       // an at-least-once upstream can repeat a doc WITHIN a micro-batch;
       // freshAgainst's in-batch dedup must keep n from double-counting
       val withDup = b.toSeq ++ b.headOption
-      Streams.maintainLmState(withDup.toDF("doc_id", "text"), lmT, docT)
+      Streams.maintainState(withDup.toDF("doc_id", "text"), docT,
+        StateFamily.Lm -> lmT)
       seen ++= b.map(_._1)
       assert(snap() == direct(seen))
       // append-only: earlier batches' files byte-identical in place
@@ -60,42 +59,7 @@ class IncrementalLmStateSpec extends AnyFunSuite with SparkSpec {
     }
     assert(snap().nonEmpty)
 
-    // redelivery of a whole ingested batch: nothing changes (doc guard)
-    val s0 = snap()
-    Streams.maintainLmState(batches(1).toSeq.toDF("doc_id", "text"), lmT, docT)
-    assert(snap() == s0)
-
-    // compaction folds the delta table without moving the snapshot
-    Streams.compactLm(spark, lmT, docT)
-    assert(snap() == s0)
-    assert(spark.read.parquet(lmT).select("batch_key").distinct().count() == 1)
-
-    // partial-crash replay on a fresh root: the LM delta landed but the
-    // doc-store advance didn't — the replay must recompute byte-identical
-    // delta rows (same batch_key) that the snapshot dedup collapses,
-    // never double-counting n. The simulated partial write uses the SAME
-    // delta builder as the advance.
-    val root2 = Files.createTempDirectory("inc-lm-crash").toString
-    val (lmT2, docT2) = (s"$root2/lm", s"$root2/docs")
-    Streams.maintainLmState(batches(0).toSeq.toDF("doc_id", "text"), lmT2, docT2)
-    val b2 = batches(1).toSeq.toDF("doc_id", "text")
-    val key2 = batches(1).map(_._1).min
-    Streams.lmDelta(b2, key2).write.mode("append").parquet(lmT2)
-    // a maintenance compaction runs while the crashed batch is pending —
-    // its uncommitted rows (key not behind the doc guard) must stay
-    // under their own key, or the replay below double-counts forever
-    Streams.compactLm(spark, lmT2, docT2)
-    assert(spark.read.parquet(lmT2).filter($"batch_key" === key2).count() > 0,
-      "compaction folded a pending batch's delta rows")
-    // the replay (redelivered batch)
-    Streams.maintainLmState(b2, lmT2, docT2)
-    val seen12 = (batches(0) ++ batches(1)).map(_._1).toSet
-    def snap2() = Streams.lmSnapshot(spark, lmT2, Int.MaxValue)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(snap2() == direct(seen12))
-    // post-replay compaction now folds everything (all batches committed)
-    Streams.compactLm(spark, lmT2, docT2)
-    assert(spark.read.parquet(lmT2).select("batch_key").distinct().count() == 1)
-    assert(snap2() == direct(seen12))
+    // redelivery, crash replay, compaction and forget:
+    // StateFamilyContractSpec
   }
 }

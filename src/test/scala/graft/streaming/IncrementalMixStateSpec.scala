@@ -9,9 +9,8 @@ import graft.SparkSpec
 /** pp16's continuous loop: however the (doc_id, source) stream is split
   * into batches, the maintained counts — and the rates derived from
   * them — must equal a from-scratch count of everything arrived, with
-  * the delta table APPEND-ONLY, redelivery a no-op, the additive counts
-  * surviving a partial-crash replay via the batch_key dedup, and
-  * compaction leaving the snapshot unchanged. */
+  * the delta table APPEND-ONLY (the lifecycle legs are
+  * StateFamilyContractSpec's). */
 class IncrementalMixStateSpec extends AnyFunSuite with SparkSpec {
 
   private def dataFiles(dir: String) = graft.SparkSpec.dataFiles(dir)
@@ -45,7 +44,8 @@ class IncrementalMixStateSpec extends AnyFunSuite with SparkSpec {
       // an at-least-once upstream can repeat a doc WITHIN a micro-batch;
       // the in-batch dedup must keep n from double-counting
       val withDup = b.toSeq ++ b.headOption
-      Streams.maintainMixState(withDup.toDF("doc_id", "source"), cntT, docT)
+      Streams.maintainState(withDup.toDF("doc_id", "source"), docT,
+        StateFamily.Mix -> cntT)
       seen ++= b.map(_._1)
       assert(counts() == directCounts(seen))
       assert(rates() == directRates(seen))
@@ -58,38 +58,7 @@ class IncrementalMixStateSpec extends AnyFunSuite with SparkSpec {
     }
     assert(counts().nonEmpty)
 
-    // redelivery of a whole ingested batch: nothing changes (doc guard)
-    val c0 = counts()
-    Streams.maintainMixState(batches(1).toSeq.toDF("doc_id", "source"), cntT, docT)
-    assert(counts() == c0)
-
-    // compaction folds the delta table without moving the snapshot
-    Streams.compactMix(spark, cntT, docT)
-    assert(counts() == c0)
-    assert(spark.read.parquet(cntT).select("batch_key").distinct().count() == 1)
-
-    // partial-crash replay on a fresh root: the counts delta landed but
-    // the doc-guard advance didn't — the replay must recompute
-    // byte-identical delta rows (same batch_key) that the snapshot dedup
-    // collapses, never double-counting a source.
-    val root2 = Files.createTempDirectory("inc-mix-crash").toString
-    val (cntT2, docT2) = (s"$root2/counts", s"$root2/docs")
-    Streams.maintainMixState(batches(0).toSeq.toDF("doc_id", "source"), cntT2, docT2)
-    val b2 = batches(1).toSeq.toDF("doc_id", "source")
-    val key2 = batches(1).map(_._1).min
-    Streams.mixDelta(b2, key2).write.mode("append").parquet(cntT2)
-    // a maintenance compaction while the crashed batch is pending must
-    // keep its uncommitted rows under their own key
-    Streams.compactMix(spark, cntT2, docT2)
-    assert(spark.read.parquet(cntT2).filter($"batch_key" === key2).count() > 0,
-      "compaction folded a pending batch's delta rows")
-    Streams.maintainMixState(b2, cntT2, docT2)
-    val seen12 = (batches(0) ++ batches(1)).map(_._1).toSet
-    def counts2() = Streams.mixCountsSnapshot(spark, cntT2)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(counts2() == directCounts(seen12))
-    Streams.compactMix(spark, cntT2, docT2)
-    assert(spark.read.parquet(cntT2).select("batch_key").distinct().count() == 1)
-    assert(counts2() == directCounts(seen12))
+    // redelivery, crash replay, compaction and forget:
+    // StateFamilyContractSpec
   }
 }

@@ -9,12 +9,10 @@ import graft.queries.TextOps
 
 /** pp07's continuous loop: however the document stream is split into
   * batches, the maintained vocabulary snapshot must equal ta07 computed
-  * from scratch over everything arrived — with the delta table
-  * APPEND-ONLY, redelivery a no-op, the additive counts surviving a
-  * partial-crash replay via the batch_key dedup, and compaction leaving
-  * the snapshot unchanged. The simplest member of the standing-state
-  * family (no standing read in the advance at all), so this spec is the
-  * additive-delta contract in its purest form. */
+  * from scratch over everything arrived, with the delta table
+  * APPEND-ONLY and in-batch repeats counted once. Redelivery, crash
+  * replay, compaction and forget are the [[StateFamily]] contract,
+  * checked for every family by StateFamilyContractSpec. */
 class IncrementalVocabStateSpec extends AnyFunSuite with SparkSpec {
 
   private def dataFiles(dir: String) = graft.SparkSpec.dataFiles(dir)
@@ -44,7 +42,8 @@ class IncrementalVocabStateSpec extends AnyFunSuite with SparkSpec {
       // an at-least-once upstream can repeat a doc WITHIN a micro-batch;
       // freshAgainst's in-batch dedup must keep cf from double-counting
       val withDup = b.toSeq ++ b.headOption
-      Streams.maintainVocabState(withDup.toDF("doc_id", "text"), vocT, docT)
+      Streams.maintainState(withDup.toDF("doc_id", "text"), docT,
+        StateFamily.Vocab -> vocT)
       seen ++= b.map(_._1)
       assert(snap() == direct(seen))
       // append-only: earlier batches' files byte-identical in place
@@ -57,43 +56,8 @@ class IncrementalVocabStateSpec extends AnyFunSuite with SparkSpec {
     }
     assert(snap().nonEmpty)
 
-    // redelivery of a whole ingested batch: nothing changes (doc guard)
-    val s0 = snap()
-    Streams.maintainVocabState(batches(1).toSeq.toDF("doc_id", "text"), vocT, docT)
-    assert(snap() == s0)
-
-    // compaction folds the delta table without moving the snapshot
-    Streams.compactVocab(spark, vocT, docT)
-    assert(snap() == s0)
-    assert(spark.read.parquet(vocT).select("batch_key").distinct().count() == 1)
-
-    // partial-crash replay on a fresh root: the vocab delta landed but
-    // the doc-store advance didn't — the replay must recompute
-    // byte-identical delta rows (same batch_key) that the snapshot dedup
-    // collapses, never double-counting df/cf. The simulated partial
-    // write uses the SAME delta builder as the advance.
-    val root2 = Files.createTempDirectory("inc-vocab-crash").toString
-    val (vocT2, docT2) = (s"$root2/vocab", s"$root2/docs")
-    Streams.maintainVocabState(batches(0).toSeq.toDF("doc_id", "text"), vocT2, docT2)
-    val b2 = batches(1).toSeq.toDF("doc_id", "text")
-    val key2 = batches(1).map(_._1).min
-    Streams.vocabDelta(b2, key2).write.mode("append").parquet(vocT2)
-    // a maintenance compaction runs while the crashed batch is pending —
-    // its uncommitted rows (key not behind the doc guard) must stay
-    // under their own key, or the replay below double-counts forever
-    Streams.compactVocab(spark, vocT2, docT2)
-    assert(spark.read.parquet(vocT2).filter($"batch_key" === key2).count() > 0,
-      "compaction folded a pending batch's delta rows")
-    // the replay (redelivered batch)
-    Streams.maintainVocabState(b2, vocT2, docT2)
-    val seen12 = (batches(0) ++ batches(1)).map(_._1).toSet
-    def snap2() = Streams.vocabSnapshot(spark, vocT2, Int.MaxValue)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(snap2() == direct(seen12))
-    // post-replay compaction now folds everything (all batches committed)
-    Streams.compactVocab(spark, vocT2, docT2)
-    assert(spark.read.parquet(vocT2).select("batch_key").distinct().count() == 1)
-    assert(snap2() == direct(seen12))
+    // redelivery, crash replay, compaction and forget:
+    // StateFamilyContractSpec
   }
 
   test("rebuildBpeState: segmentation retrained from the maintained vocab == from-scratch ta14 trainer; idempotent re-run") {
@@ -112,7 +76,8 @@ class IncrementalVocabStateSpec extends AnyFunSuite with SparkSpec {
       .select($"doc_id", $"text")
     val all = docs.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainVocabState(b.toSeq.toDF("doc_id", "text"), vocT, docT)
+      Streams.maintainState(b.toSeq.toDF("doc_id", "text"), docT,
+        StateFamily.Vocab -> vocT)
 
     Streams.rebuildBpeState(spark, vocT, segT, merges = 5)
     def seg() = spark.read.parquet(segT)

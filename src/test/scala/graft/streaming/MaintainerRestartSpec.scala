@@ -144,8 +144,8 @@ class MaintainerRestartSpec extends AnyFunSuite with SparkSpec {
     killThenRestart(src, s"$root/chk",
       b => {
         Streams.routeByCell(b, cents, stageT, groups = 3, seq = 0L)
-        Streams.flushCellGroups(spark, stageT, minRows = 100L, maxLag = 1L,
-          curSeq = 0L)((_, rows) =>
+        Streams.flushCellGroupsBatched(spark, stageT, minRows = 100L,
+          maxLag = 1L, curSeq = 0L)(rows =>
           Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3))
         ()
       },
@@ -156,8 +156,8 @@ class MaintainerRestartSpec extends AnyFunSuite with SparkSpec {
 
     // decommission drain, then the exactness pin: the maintained graph
     // equals the full vs13 build over everything arrived
-    Streams.flushCellGroups(spark, stageT, minRows = 1L, maxLag = 0L,
-      curSeq = 99L)((_, rows) =>
+    Streams.flushCellGroupsBatched(spark, stageT, minRows = 1L, maxLag = 0L,
+      curSeq = 99L)(rows =>
       Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3))
     def key(g: org.apache.spark.sql.DataFrame) = g
       .select($"query_id", $"neighbor_id", $"rank")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 
 /** The COMPOSITE maintenance loop (pp33's continuous twin): ONE
   * MemoryStream of documents drives all five standing-state families —
@@ -20,7 +20,8 @@ import graft.SparkSpec
   * the per-family lifecycles are each spec-pinned in isolation
   * (Dedup/Score/Tf/Cms/HllStateSpec); this spec proves they COMPOSE with
   * no cross-family interference. */
-class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
+class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
 
   test("one stream drives five families; snapshots == gates through crash replay and redelivery") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -40,14 +41,14 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
     val ref = spark.read.parquet(t("ref")).localCheckpoint(true)
 
     def ingest(b: DataFrame): Unit = {
-      Streams.maintainDedupState(b.select($"doc_id", $"text"),
-        t("xstats"), t("xdocs"))
+      Streams.maintainState(b.select($"doc_id", $"text"), t("xdocs"),
+        StateFamily.ExactDedup -> t("xstats"))
       Streams.maintainScoreState(b, t("ref"), t("scores"), t("sdocs"))
       Streams.maintainTfState(b.select($"doc_id", $"text"),
         t("tf"), t("tdocs"))
-      Streams.maintainCmsState(b.select($"doc_id", $"text"),
-        t("cells"), t("vocab"), t("cdocs"))
-      Streams.maintainHllState(b, t("regs"), t("hdocs"))
+      Streams.maintainState(b.select($"doc_id", $"text"), t("cdocs"),
+        StateFamily.CmsCells -> t("cells"), StateFamily.Vocab -> t("vocab"))
+      Streams.maintainState(b, t("hdocs"), StateFamily.Hll -> t("regs"))
     }
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -90,7 +91,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
     val last = batches.last.toSeq.toDF("doc_id", "source", "lang", "text")
       .localCheckpoint(true)
     val bk = batches.last.map(_._1).min
-    Streams.dedupDelta(last.select($"doc_id", $"text"), bk)
+    StateFamily.ExactDedup.delta(last.select($"doc_id", $"text"), bk)
       .write.mode("append").parquet(t("xstats"))
     Streams.scoreDelta(last, ref, bk)
       .withColumn("pt", pmod($"doc_id", lit(Streams.TF_PARTITIONS.toLong)))
@@ -98,11 +99,11 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
     graft.queries.TextOps.tfRollup(last.select($"doc_id", $"text"))
       .withColumn("pt", pmod($"doc_id", lit(Streams.TF_PARTITIONS.toLong)))
       .write.mode("append").partitionBy("pt").parquet(t("tf"))
-    Streams.cmsDelta(last.select($"doc_id", $"text"), bk)
+    StateFamily.CmsCells.delta(last.select($"doc_id", $"text"), bk)
       .write.mode("append").parquet(t("cells"))
-    Streams.vocabDelta(last.select($"doc_id", $"text"), bk)
+    StateFamily.Vocab.delta(last.select($"doc_id", $"text"), bk)
       .write.mode("append").parquet(t("vocab"))
-    Streams.hllDelta(last).write.mode("append").parquet(t("regs"))
+    StateFamily.Hll.delta(last, 0L).write.mode("append").parquet(t("regs"))
     checkAll("after the five-family crash replay")
 
     // whole-batch redelivery through the COMPOSITE loop: every family's
@@ -127,12 +128,13 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
       "degenerate forget set — pin vacuous")
     val fDf = forgot.toSeq.toDF("doc_id").localCheckpoint(true)
     def forgetAll(): Unit = {
-      Streams.forgetExactDedupState(spark, fDf, t("xstats"), t("xdocs"))
+      Streams.forgetState(spark, fDf, t("xdocs"),
+        StateFamily.ExactDedup -> t("xstats"))
       Streams.forgetScoreState(spark, fDf, t("scores"), t("sdocs"))
       Streams.forgetTfState(spark, fDf, t("tf"), t("tdocs"))
-      Streams.forgetCountState(spark, fDf, t("cdocs"),
-        vocabTable = Some(t("vocab")), cmsTable = Some(t("cells")))
-      Streams.forgetHllState(spark, fDf, t("regs"), t("hdocs"))
+      Streams.forgetState(spark, fDf, t("cdocs"),
+        StateFamily.Vocab -> t("vocab"), StateFamily.CmsCells -> t("cells"))
+      Streams.forgetState(spark, fDf, t("hdocs"), StateFamily.Hll -> t("regs"))
     }
     // MID-FORGET CRASH: the first two families complete their forgets,
     // then the process dies — dedup/scores already pruned while
@@ -141,7 +143,8 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
     // re-running the whole composite request, because every family
     // forget is idempotent (the completed families' tombstoned text
     // yields an empty gone set on the re-run).
-    Streams.forgetExactDedupState(spark, fDf, t("xstats"), t("xdocs"))
+    Streams.forgetState(spark, fDf, t("xdocs"),
+      StateFamily.ExactDedup -> t("xstats"))
     Streams.forgetScoreState(spark, fDf, t("scores"), t("sdocs"))
     forgetAll() // the recovery re-run, across all five families
 
@@ -150,14 +153,14 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
     // definition, ta17's CCNet argument: deletion never re-trains it)
     val surv = rows.filterNot(r => forgot(r._1)).toSeq
       .toDF("doc_id", "source", "lang", "text").localCheckpoint(true)
-    Streams.maintainDedupState(surv.select($"doc_id", $"text"),
-      t("xstatsR"), t("xdocsR"))
+    Streams.maintainState(surv.select($"doc_id", $"text"), t("xdocsR"),
+      StateFamily.ExactDedup -> t("xstatsR"))
     Streams.maintainScoreState(surv, t("ref"), t("scoresR"), t("sdocsR"))
     Streams.maintainTfState(surv.select($"doc_id", $"text"),
       t("tfR"), t("tdocsR"))
-    Streams.maintainCmsState(surv.select($"doc_id", $"text"),
-      t("cellsR"), t("vocabR"), t("cdocsR"))
-    Streams.maintainHllState(surv, t("regsR"), t("hdocsR"))
+    Streams.maintainState(surv.select($"doc_id", $"text"), t("cdocsR"),
+      StateFamily.CmsCells -> t("cellsR"), StateFamily.Vocab -> t("vocabR"))
+    Streams.maintainState(surv, t("hdocsR"), StateFamily.Hll -> t("regsR"))
     def survSnapshots() = Seq(
       "dedup" -> rowsOf(Streams.dedupSnapshot(spark, t("xstatsR"))),
       "scores" -> rowsOf(Streams.scoreSnapshot(spark, t("scoresR"))),
@@ -238,13 +241,13 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
 
     Streams.buildRefState(docs, t("ref"))
     def ingest(bd: DataFrame, bv: DataFrame): Unit = {
-      Streams.maintainDedupState(bd.select($"doc_id", $"text"),
-        t("xstats"), t("xdocs"))
+      Streams.maintainState(bd.select($"doc_id", $"text"), t("xdocs"),
+        StateFamily.ExactDedup -> t("xstats"))
       Streams.maintainScoreState(bd, t("ref"), t("scores"), t("sdocs"))
       Streams.maintainTfState(bd.select($"doc_id", $"text"), t("tf"), t("tdocs"))
-      Streams.maintainCmsState(bd.select($"doc_id", $"text"),
-        t("cells"), t("vocab"), t("cdocs"))
-      Streams.maintainHllState(bd, t("regs"), t("hdocs"))
+      Streams.maintainState(bd.select($"doc_id", $"text"), t("cdocs"),
+        StateFamily.CmsCells -> t("cells"), StateFamily.Vocab -> t("vocab"))
+      Streams.maintainState(bd, t("hdocs"), StateFamily.Hll -> t("regs"))
       Streams.maintainIvfState(bv, cents, t("postings"), t("sums"))
     }
     val (d1, d2) = docRows.splitAt(docRows.length / 2)
@@ -272,12 +275,13 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
     val fd = forgotDocs.toSeq.toDF("doc_id").localCheckpoint(true)
     val fv = forgotVecs.toSeq.toDF("vec_id").localCheckpoint(true)
     def forgetAll6(): Unit = {
-      Streams.forgetExactDedupState(spark, fd, t("xstats"), t("xdocs"))
+      Streams.forgetState(spark, fd, t("xdocs"),
+        StateFamily.ExactDedup -> t("xstats"))
       Streams.forgetScoreState(spark, fd, t("scores"), t("sdocs"))
       Streams.forgetTfState(spark, fd, t("tf"), t("tdocs"))
-      Streams.forgetCountState(spark, fd, t("cdocs"),
-        vocabTable = Some(t("vocab")), cmsTable = Some(t("cells")))
-      Streams.forgetHllState(spark, fd, t("regs"), t("hdocs"))
+      Streams.forgetState(spark, fd, t("cdocs"),
+        StateFamily.Vocab -> t("vocab"), StateFamily.CmsCells -> t("cells"))
+      Streams.forgetState(spark, fd, t("hdocs"), StateFamily.Hll -> t("regs"))
       Streams.forgetVectorState(spark, fv, t("postings"),
         sumsTable = Some(t("sums")))
     }
@@ -290,7 +294,8 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
     // bookkeeping to lose.
     Streams.forgetVectorState(spark, fv, t("postings"),
       sumsTable = Some(t("sums")))
-    Streams.forgetExactDedupState(spark, fd, t("xstats"), t("xdocs"))
+    Streams.forgetState(spark, fd, t("xdocs"),
+      StateFamily.ExactDedup -> t("xstats"))
     Streams.forgetScoreState(spark, fd, t("scores"), t("sdocs"))
     forgetAll6() // the recovery re-run, across all six families
 
@@ -302,14 +307,14 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec {
       .toDF("doc_id", "source", "lang", "text").localCheckpoint(true)
     val survVecs = vo.normed(
       vecs.filter(!$"vec_id".isin(forgotVecs.toSeq: _*))).localCheckpoint(true)
-    Streams.maintainDedupState(survDocs.select($"doc_id", $"text"),
-      t("xstatsR"), t("xdocsR"))
+    Streams.maintainState(survDocs.select($"doc_id", $"text"), t("xdocsR"),
+      StateFamily.ExactDedup -> t("xstatsR"))
     Streams.maintainScoreState(survDocs, t("ref"), t("scoresR"), t("sdocsR"))
     Streams.maintainTfState(survDocs.select($"doc_id", $"text"),
       t("tfR"), t("tdocsR"))
-    Streams.maintainCmsState(survDocs.select($"doc_id", $"text"),
-      t("cellsR"), t("vocabR"), t("cdocsR"))
-    Streams.maintainHllState(survDocs, t("regsR"), t("hdocsR"))
+    Streams.maintainState(survDocs.select($"doc_id", $"text"), t("cdocsR"),
+      StateFamily.CmsCells -> t("cellsR"), StateFamily.Vocab -> t("vocabR"))
+    Streams.maintainState(survDocs, t("hdocsR"), StateFamily.Hll -> t("regsR"))
     val wantText = Map(
       "dedup" -> rowsOf(Streams.dedupSnapshot(spark, t("xstatsR"))),
       "scores" -> rowsOf(Streams.scoreSnapshot(spark, t("scoresR"))),

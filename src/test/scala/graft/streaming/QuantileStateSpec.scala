@@ -11,8 +11,9 @@ import graft.SparkSpec
   * union — replays and overlaps absorbed with NO dedup machinery — and
   * forgotten by an O(survivors) rebuild (a saturated sample does not
   * invert; the honest non-additive trade, HLL's). Snapshot must equal
-  * ta24 over exactly the arrived-and-not-forgotten docs at every
-  * step. */
+  * ta24 over the arrivals, compaction must bound the sample, and the
+  * double domain must ride the same table; the BIGINT lifecycle legs
+  * are StateFamilyContractSpec's. */
 class QuantileStateSpec extends AnyFunSuite with SparkSpec {
 
   test("quantile maintainer: snapshot == ta24 over arrivals; replay absorbed; redelivery no-op; compaction bounds state; forget rebuilds over survivors; re-ingest + ghost blocked; idempotent") {
@@ -37,52 +38,21 @@ class QuantileStateSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("qs-state").toString
     val (qT, docT) = (s"$root/qs", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainQuantileState(df(b), qT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.Quantile -> qT)
     def got() = Streams.quantileSnapshot(spark, qT).orderBy(col("source"))
       .collect().map(_.toSeq.toList).toList
     assert(got() == want(all), "maintained snapshot != ta24 over the arrivals")
     assert(got().nonEmpty, "no results — vacuous")
 
-    // crash replay: the sample rows land again; the bottom-k fold dedups
-    // the byte-identical pairs with no batch key (idempotence IS the dedup)
-    Streams.quantileDelta(df(all.drop(150))).write.mode("append").parquet(qT)
-    assert(got() == want(all), "replayed sample rows moved the estimates")
-
-    // redelivery of a whole already-seen batch is a no-op
-    Streams.maintainQuantileState(df(all.take(150)), qT, docT)
-    assert(got() == want(all), "redelivered batch moved the estimates")
-
-    // compaction folds to <= k rows per source, snapshot-invariant
-    Streams.compactQuantile(spark, qT)
-    assert(got() == want(all), "compaction drifted")
+    // redelivery, crash replay, compaction invariance and forget:
+    // StateFamilyContractSpec
+    // this family's own bound: compaction folds to <= k rows per source
+    Streams.compactState(spark, docT, StateFamily.Quantile -> qT)
     val perSource = spark.read.parquet(qT)
       .groupBy(col("source")).agg(count(lit(1)).as("n"))
       .collect().map(_.getLong(1))
     assert(perSource.forall(_ <= graft.queries.TextOps.TA24_K),
       "a source exceeds k sample rows after compaction")
-
-    // forget: the sample rebuilt from the surviving stored values
-    val forgot = all.map(_._1).filter(_ % 6 == 0).toSet
-    val fDf = forgot.toSeq.toDF("doc_id")
-    Streams.forgetQuantileState(spark, fDf, qT, docT)
-    val remaining = all.filterNot(t => forgot(t._1))
-    assert(got() == want(remaining), "forget != ta24 over the survivors")
-
-    // re-ingest of forgotten docs is a no-op (tombstoned ids block)
-    Streams.maintainQuantileState(
-      df(all.filter(t => forgot(t._1)).take(10)), qT, docT)
-    assert(got() == want(remaining), "a forgotten doc re-entered the sample")
-
-    // idempotent forget re-run (tombstoned value => same survivor set)
-    Streams.forgetQuantileState(spark, fDf, qT, docT)
-    assert(got() == want(remaining), "forget re-run diverged")
-
-    // a never-seen forgotten id forward-blocks its future ingest
-    val ghost = all.map(_._1).max + 1000
-    Streams.forgetQuantileState(spark, Seq(ghost).toDF("doc_id"), qT, docT)
-    Streams.maintainQuantileState(
-      df(Seq((ghost, "src", 12345L))), qT, docT)
-    assert(got() == want(remaining), "a pre-forgotten id was ingested")
   }
 
   test("double-domain maintained sample: transform-at-ingest rides the BIGINT maintainer verbatim; quantileDoubleSnapshot == from-scratch sketchDouble; redelivery/compaction/forget hold") {
@@ -119,7 +89,7 @@ class QuantileStateSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("qsd-state").toString
     val (qT, docT) = (s"$root/qsd", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainQuantileState(ingest(b), qT, docT)
+      Streams.maintainState(ingest(b), docT, StateFamily.Quantile -> qT)
     def got() = Streams.quantileDoubleSnapshot(spark, qT)
       .orderBy(col("source")).collect().map(_.toSeq.toList).toList
     assert(got() == want(all), "maintained double snapshot != sketchDouble")
@@ -129,15 +99,17 @@ class QuantileStateSpec extends AnyFunSuite with SparkSpec {
     }), "no fractional estimate — the double domain is vacuous here")
 
     // redelivery is absorbed by the pair-set fold, as in the BIGINT leg
-    Streams.maintainQuantileState(ingest(all.take(150)), qT, docT)
+    Streams.maintainState(ingest(all.take(150)), docT,
+      StateFamily.Quantile -> qT)
     assert(got() == want(all), "redelivered batch moved the estimates")
-    Streams.compactQuantile(spark, qT)
+    Streams.compactState(spark, docT, StateFamily.Quantile -> qT)
     assert(got() == want(all), "compaction drifted")
 
     // forget rebuilds over survivors — quantileDelta re-derives from the
     // stored TRANSFORMED longs, same domain, same salt
     val forgot = all.map(_._1).filter(_ % 7 == 0).toSet
-    Streams.forgetQuantileState(spark, forgot.toSeq.toDF("doc_id"), qT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Quantile -> qT)
     assert(got() == want(all.filterNot(t => forgot(t._1))),
       "forget != sketchDouble over the survivors")
 

@@ -4,14 +4,15 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 
 /** The retrieval-index standing-state family (ta18/pp26's continuous
   * twin): the (doc_id, tok, tf) table advanced append-only per batch,
   * BM25 searched with query-time statistics, forgotten by exact row
   * deletion. Search must equal ta18 over exactly the
   * arrived-and-not-forgotten docs at every step. */
-class TfStateSpec extends AnyFunSuite with SparkSpec {
+class TfStateSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
 
   test("tf maintainer: bm25 == ta18 over arrivals; replay dedups; redelivery no-op; forget == survivors; re-ingest blocked; idempotent") {
     import org.apache.spark.sql.functions._
