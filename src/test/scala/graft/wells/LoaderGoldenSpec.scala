@@ -11,7 +11,13 @@ import graft.SparkSpec
   * output over the 77-PDF corpus) through the Spark load stage. Pinned
   * numbers were computed by running the reference's own to_decimal logic
   * over the same files (FIXTURES.md §1): rows=77, lat_none=1, lon_none=1,
-  * lat_bad=0, lon_bad=0; only W11920.pdf lacks coordinates. */
+  * lat_bad=0, lon_bad=0; only W11920.pdf lacks coordinates.
+  *
+  * Inputs per leg: the golden-value legs read `/root/reference` and fail
+  * where it is absent. "latitude lands as DECIMAL(12,9)" and "--limit takes
+  * the first N file-order rows" assert only load mechanics, so they read
+  * [[WellsCsvs.pair]]: the reference CSVs where present, else the committed
+  * fixture (FIXTURES.md §1a). The last two legs write their own CSVs. */
 class LoaderGoldenSpec extends AnyFunSuite with SparkSpec {
 
   private val headerCsv = "/root/reference/well_header.csv"
@@ -42,7 +48,7 @@ class LoaderGoldenSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("latitude lands as DECIMAL(12,9)") {
-    val load = Loader.loadHeader(spark, headerCsv)
+    val load = Loader.loadHeader(spark, WellsCsvs.pair._1)
     val dt = load.cleaned.schema("latitude").dataType
     assert(dt == org.apache.spark.sql.types.DecimalType(12, 9))
     load.release()
@@ -82,11 +88,12 @@ class LoaderGoldenSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("--limit takes the first N file-order rows (P7)") {
-    val load = Loader.loadHeader(spark, headerCsv, limit = Some(10))
+    val (mechanicsHeader, mechanicsStim) = WellsCsvs.pair
+    val load = Loader.loadHeader(spark, mechanicsHeader, limit = Some(10))
     assert(load.stats.rows == 10)
     assert(load.cleaned.count() == 10)
     load.release()
-    val stim = Loader.loadStim(spark, stimCsv, limit = Some(5))
+    val stim = Loader.loadStim(spark, mechanicsStim, limit = Some(5))
     assert(stim.count() == 5)
   }
 

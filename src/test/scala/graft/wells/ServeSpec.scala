@@ -8,17 +8,33 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
-/** End-to-end HTTP shell over the golden corpus: the reference app.py's
-  * routes served by graft.wells.Serve against the engine's parquet tables. */
+/** End-to-end HTTP shell: the reference app.py's routes served by
+  * graft.wells.Serve against the engine's parquet tables.
+  *
+  * Inputs per leg:
+  *  - "/wells serves the 76-row JSON array…" is a golden-value leg: it
+  *    loads the reference's shipped CSVs from `/root/reference` and fails
+  *    where they are absent.
+  *  - "serving without a static dir…", the cache/swap leg and the
+  *    single-flight leg assert only serving behaviour, so they load
+  *    [[WellsCsvs.pair]]: the reference CSVs where present, else the
+  *    committed fixture (FIXTURES.md §1a).
+  *  - The publish race leg generates its own tables. */
 class ServeSpec extends AnyFunSuite with SparkSpec {
 
-  private lazy val root: String = {
-    val dir = Files.createTempDirectory("wells-serve").toString
-    Loader.run(spark, "/root/reference/well_header.csv",
-      "/root/reference/well_stimulation.csv", dir)
+  /** A fresh table root loaded and enriched from the given CSV pair. */
+  private def loadedRoot(prefix: String, csvs: (String, String)): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    Loader.run(spark, csvs._1, csvs._2, dir)
     Enrichment.run(spark, dir)
     dir
   }
+
+  private lazy val root: String = loadedRoot("wells-serve",
+    ("/root/reference/well_header.csv", "/root/reference/well_stimulation.csv"))
+
+  private lazy val mechanicsRoot: String =
+    loadedRoot("wells-serve-mechanics", WellsCsvs.pair)
 
   private def get(port: Int, path: String): HttpResponse[String] =
     HttpClient.newHttpClient().send(
@@ -55,7 +71,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("serving without a static dir still answers /wells, 404s the rest") {
-    val server = Serve.start(spark, root, 0, None)
+    val server = Serve.start(spark, mechanicsRoot, 0, None)
     try {
       val port = server.getAddress.getPort
       assert(get(port, "/wells").statusCode() == 200)
@@ -66,10 +82,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
   test("/wells is served from cache (no Spark job per request) and a " +
       "snapshot swap invalidates it") {
     // a fresh table root so the other tests' cache state can't interfere
-    val dir = Files.createTempDirectory("wells-serve-cache").toString
-    Loader.run(spark, "/root/reference/well_header.csv",
-      "/root/reference/well_stimulation.csv", dir)
-    Enrichment.run(spark, dir)
+    val dir = loadedRoot("wells-serve-cache", WellsCsvs.pair)
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -122,10 +135,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("concurrent cold /wells requests single-flight one computation") {
-    val dir = Files.createTempDirectory("wells-serve-flight").toString
-    Loader.run(spark, "/root/reference/well_header.csv",
-      "/root/reference/well_stimulation.csv", dir)
-    Enrichment.run(spark, dir)
+    val dir = loadedRoot("wells-serve-flight", WellsCsvs.pair)
 
     // count DISTINCT serving computations, not Spark jobs (one computation
     // launches several): each wellsJson run starts with a fresh parquet
@@ -162,10 +172,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
 
       // baseline: one cold request on a fresh server + fresh table copy
       jobs.set(0)
-      val dir2 = Files.createTempDirectory("wells-serve-flight2").toString
-      Loader.run(spark, "/root/reference/well_header.csv",
-        "/root/reference/well_stimulation.csv", dir2)
-      Enrichment.run(spark, dir2)
+      val dir2 = loadedRoot("wells-serve-flight2", WellsCsvs.pair)
       jobs.set(0)
       val server2 = Serve.start(spark, dir2, 0, None)
       try {
