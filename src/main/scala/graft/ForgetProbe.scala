@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   *  - negative-delta decrement: `forgetState` over `StateFamily.Vocab` —
   *    O(deleted) recompute + append; the table is never rewritten;
-  *  - exact id-granular deletion: `forgetTfState` — a partition-pruned
-  *    rewrite of only the buckets holding forgotten ids plus the
+  *  - exact id-granular deletion: `forgetState` over `StateFamily.Tf` —
+  *    a partition-pruned rewrite of only the buckets holding forgotten
+  *    ids plus the
   *    tombstone swap (this probe's doc_id %% 50 sample touches the 32
   *    even of 64 buckets, so the measured number reflects a half-table
   *    rewrite; a small forget request touches proportionally less);
@@ -84,12 +85,12 @@ object ForgetProbe {
 
     // exact-deletion class: the retrieval tf table
     time("ingest_tf") {
-      graft.streaming.Streams.maintainTfState(
-        docs.select($"doc_id", $"text"), s"$work/tf", s"$work/docsT")
+      graft.streaming.Streams.maintainState(docs.select($"doc_id", $"text"),
+        s"$work/docsT", graft.streaming.StateFamily.Tf -> s"$work/tf")
     }
     time("forget_tf_exact_deletion") {
-      graft.streaming.Streams.forgetTfState(spark, forgetIds,
-        s"$work/tf", s"$work/docsT")
+      graft.streaming.Streams.forgetState(spark, forgetIds, s"$work/docsT",
+        graft.streaming.StateFamily.Tf -> s"$work/tf")
     }
 
     // min-repair class: chunk-digest stats (keepers hit by id choice)

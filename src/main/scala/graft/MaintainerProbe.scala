@@ -492,10 +492,12 @@ object MaintainerProbe {
       s"$warm/perc_s", s"$warm/perc_p", s"$warm/perc_docs")
     graft.streaming.Streams.maintainScoreState(docBatch(0), refT,
       s"$warm/sco", s"$warm/sco_docs")
-    graft.streaming.Streams.maintainTfState(docBatch(0), s"$warm/tf",
-      s"$warm/tf_docs")
-    graft.streaming.Streams.maintainFeatureState(docBatch(0), s"$warm/ft",
-      s"$warm/fm", s"$warm/fl", s"$warm/ft_docs")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/tf_docs",
+      graft.streaming.StateFamily.Tf -> s"$warm/tf")
+    graft.streaming.Streams.maintainState(docBatch(0), s"$warm/ft_docs",
+      graft.streaming.StateFamily.Tstat -> s"$warm/ft",
+      graft.streaming.StateFamily.M -> s"$warm/fm",
+      graft.streaming.StateFamily.Labels -> s"$warm/fl")
     graft.streaming.Streams.maintainState(docBatch(0), s"$warm/cms_docs",
       graft.streaming.StateFamily.CmsCells -> s"$warm/cms",
       graft.streaming.StateFamily.Vocab -> s"$warm/cms_v")
@@ -545,10 +547,14 @@ object MaintainerProbe {
         graft.streaming.Streams.maintainScoreState(b, refT, scoT, scoDocT)
       }
       val tft = time {
-        graft.streaming.Streams.maintainTfState(b, tfT, tfDocT)
+        graft.streaming.Streams.maintainState(b, tfDocT,
+          graft.streaming.StateFamily.Tf -> tfT)
       }
       val ftt = time {
-        graft.streaming.Streams.maintainFeatureState(b, ftT, fmT, flT, ftDocT)
+        graft.streaming.Streams.maintainState(b, ftDocT,
+          graft.streaming.StateFamily.Tstat -> ftT,
+          graft.streaming.StateFamily.M -> fmT,
+          graft.streaming.StateFamily.Labels -> flT)
       }
       val cmt = time {
         graft.streaming.Streams.maintainState(b, cmsDocT,
@@ -578,8 +584,12 @@ object MaintainerProbe {
             graft.streaming.StateFamily.Chunk -> chkT)
           graft.streaming.Streams.compactAppends(spark, percST, cpus.toInt)
           graft.streaming.Streams.compactScores(spark, scoT)
-          graft.streaming.Streams.compactTf(spark, tfT, cpus.toInt)
-          graft.streaming.Streams.compactFeatures(spark, ftT, fmT, flT)
+          graft.streaming.Streams.compactState(spark, tfDocT,
+            graft.streaming.StateFamily.Tf -> tfT)
+          graft.streaming.Streams.compactState(spark, ftDocT,
+            graft.streaming.StateFamily.Tstat -> ftT,
+            graft.streaming.StateFamily.M -> fmT,
+            graft.streaming.StateFamily.Labels -> flT)
           graft.streaming.Streams.compactState(spark, cmsDocT,
             graft.streaming.StateFamily.CmsCells -> cmsT,
             graft.streaming.StateFamily.Vocab -> cmsVT)

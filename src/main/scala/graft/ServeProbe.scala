@@ -74,7 +74,9 @@ object ServeProbe {
 
     batches.zipWithIndex.foreach { case (b, i) =>
       val t0 = System.nanoTime()
-      graft.streaming.Streams.maintainTfState(b, tfT, dlT, tokT, docT)
+      graft.streaming.Streams.maintainState(b, docT,
+        graft.streaming.StateFamily.Tf -> tfT, graft.streaming.StateFamily.Dl -> dlT,
+        graft.streaming.StateFamily.TokTf -> tokT)
       val standing = spark.read.parquet(tfT).count()
       val pruned = spark.read.parquet(tfT)
         .join(broadcast(workload.select(

@@ -188,8 +188,9 @@ object StageProbe {
         st.maintainState(b.select($"doc_id", $"text"), s"$dir/xdocs",
           graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
         st.maintainScoreState(b, s"$dir/ref", s"$dir/scores", s"$dir/sdocs")
-        st.maintainTfState(b.select($"doc_id", $"text"),
-          s"$dir/tf", s"$dir/dl", s"$dir/tdocs")
+        st.maintainState(b.select($"doc_id", $"text"), s"$dir/tdocs",
+          graft.streaming.StateFamily.Tf -> s"$dir/tf",
+          graft.streaming.StateFamily.Dl -> s"$dir/dl")
         st.maintainState(b.select($"doc_id", $"text"), s"$dir/cdocs",
           graft.streaming.StateFamily.CmsCells -> s"$dir/cells",
           graft.streaming.StateFamily.Vocab -> s"$dir/vocab")
@@ -205,7 +206,8 @@ object StageProbe {
       time("L3_bm25_serve") {
         noop(st.bm25ServeSnapshot(spark, s"$dir/tf", s"$dir/dl", ta18q, 10))
       }
-      time("L3a_dl_snapshot") { noop(st.dlSnapshot(spark, s"$dir/dl")) }
+      time("L3a_dl_snapshot") { noop(st.foldState(spark,
+        graft.streaming.StateFamily.Dl, s"$dir/dl")) }
       time("L3b_tf_scan") { noop(spark.read.parquet(s"$dir/tf")) }
       time("L3c_bm25_serve_dlpinned") {
         noop(st.bm25ServeSnapshot(spark, s"$dir/tf", s"$dir/dl", ta18q, 10,
@@ -221,7 +223,9 @@ object StageProbe {
       st.compactState(spark, s"$dir/xdocs",
         graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
       st.compactScores(spark, s"$dir/scores")
-      st.compactTf(spark, s"$dir/tf", s"$dir/dl")
+      st.compactState(spark, s"$dir/tdocs",
+        graft.streaming.StateFamily.Tf -> s"$dir/tf",
+        graft.streaming.StateFamily.Dl -> s"$dir/dl")
       st.compactState(spark, s"$dir/cdocs",
         graft.streaming.StateFamily.CmsCells -> s"$dir/cells")
       st.compactState(spark, s"$dir/hdocs",

@@ -29,15 +29,6 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object ConnectedComponents {
 
-  private val debug = sys.env.contains("GRAFT_CC_DEBUG")
-  private def timed[T](label: String)(f: => T): T =
-    if (!debug) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** vertices(idCol); edges(srcCol, dstCol), treated as undirected.
     * Returns (idCol, component). Each round applies TWO propagation hops
     * and convergence needs one fully-quiet round, so maxIter=16 covers
@@ -65,8 +56,8 @@ object ConnectedComponents {
     // unfilled cache — dd06's whole LSH candidate generation ran twice
     // that way. Checkpoint-block reads also measure ~35% faster per round
     // than InMemoryRelation scans here.
-    val directed = timed("edges materialize")(materialize(
-      edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))))
+    val directed = materialize(
+      edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")))
     val undirected = directed.unionByName(
       directed.select(col("__d").as("__s"), col("__s").as("__d")))
 
@@ -96,11 +87,10 @@ object ConnectedComponents {
       // previous round's twice, so without truncating the lineage the
       // logical plan doubles per round — exponential analysis cost long
       // before any data is big.
-      val next = timed(s"round $iter materialize")(materialize(
-        hop(hop(labels.withColumn("__old", col("component"))))))
+      val next = materialize(
+        hop(hop(labels.withColumn("__old", col("component")))))
       // one scalar action on the checkpointed frame: did any label move?
-      converged = timed(s"round $iter converge-check")(
-        next.filter(col("component") =!= col("__old")).isEmpty)
+      converged = next.filter(col("component") =!= col("__old")).isEmpty
       // the retired round fed `next` (now materialized) and the check —
       // nothing references it anymore; free its blocks instead of leaving
       // them pinned until driver GC + ContextCleaner get around to it
@@ -176,12 +166,11 @@ object ConnectedComponents {
     // sf0.1 — the rounds there are STAGE-LATENCY-bound (~12 micro-stage
     // barriers across round 0's three composed waves), so the win is
     // structural (bytes-per-wave at scale), not local wall time.
-    val mB = timed("members materialize (bucket-keyed)")(materialize(
+    val mB = materialize(
       members.select(col(idCol).as("__i"), col(bucketCol).as("__b")).distinct()
         .withColumn("__n", count(lit(1)).over(Window.partitionBy(col("__b"))))
-        .filter(col("__n") >= 2).drop("__n")))
-    val mI = timed("members materialize (item-keyed)")(materialize(
-      mB.repartition(col("__i"))))
+        .filter(col("__n") >= 2).drop("__n"))
+    val mI = materialize(mB.repartition(col("__i")))
 
     // one wave: bucket := min over members, item := min over its buckets.
     // The item's own label rides through its buckets' minima (it is a
@@ -221,10 +210,9 @@ object ConnectedComponents {
       // first round does the flooding, and a single quiet wave is a full
       // convergence proof (one unchanged wave ⇒ fixpoint).
       val waves = if (iter == 0) 2 else 0
-      val next = timed(s"round $iter materialize")(materialize(
-        waveCarryOld((1 to waves).foldLeft(labels)((ls, _) => wave(ls)))))
-      converged = timed(s"round $iter converge-check")(
-        next.filter(col("component") =!= col("__old")).isEmpty)
+      val next = materialize(
+        waveCarryOld((1 to waves).foldLeft(labels)((ls, _) => wave(ls))))
+      converged = next.filter(col("component") =!= col("__old")).isEmpty
       retired.foreach(Bridge.unpersistMaterialized)
       retired = Some(next)
       labels = next.drop("__old")

@@ -34,6 +34,16 @@ object MergeWriter {
     existing.join(deduped, keys, "left_anti").unionByName(deduped)
   }
 
+  /** The parquet table at `path`, or None while it does not exist: the
+    * path is checked on its own filesystem first, so an expected absence
+    * logs nothing, and a table that a swap removes between the check and
+    * the read is absent too. */
+  def readIfPresent(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[DataFrame] =
+    if (!fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(path))) None
+    else try Some(spark.read.parquet(path))
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
+
   /** Atomic snapshot overwrite: write to a temp dir, then swap directories.
     * Parquet-on-filesystem stand-in for a transactional table format (the
     * offline environment has no Delta/Iceberg); the swap is the analog of

@@ -1611,7 +1611,7 @@ object TextOps {
 
   /** The (doc_id, tok, tf) rollup ta18 scores over — ONE corpus
     * tokenize; per-doc rows, so the table is purely per-doc-derivable
-    * (the property [[graft.streaming.Streams.maintainTfState]]'s
+    * (the property the [[graft.streaming.StateFamily]] `Tf` family's
     * append-only advance and exact-deletion forget rest on). */
   private[graft] def tfRollup(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
@@ -1679,7 +1679,7 @@ object TextOps {
     * re-rolled from the tf table — the serving-path variant: dl is a
     * pure per-doc function (additive in the tf-family sense), so a
     * deployment maintains it append-only next to the tf table
-    * ([[graft.streaming.Streams.maintainTfState]]'s dl overload) and a
+    * (the [[graft.streaming.StateFamily]] `Dl` family) and a
     * query then pays Σ_t df(t) posting rows plus ONE compact dl-table
     * scan (2 columns, one row per doc) — never the corpus-sized
     * tf rollup this call otherwise re-derives per workload. Exactly
@@ -2030,27 +2030,33 @@ object TextOps {
 
   /** The PER-DOC halves of the quality-feature pipeline — each row a
     * pure function of its own document (the property pp27's standing
-    * tables and [[graft.streaming.Streams.maintainFeatureState]]'s
-    * append-only advance and exact-deletion forget rest on): the token
-    * stats (doc_id, n_tokens, n_distinct, n_top) and the (doc_id,
-    * bigram, m) rollup. One tokenize feeds both. */
+    * tables, the [[graft.streaming.StateFamily]] `Tstat` and `M`
+    * families, rest on): the token stats (doc_id, n_tokens, n_distinct,
+    * n_top) and the (doc_id, bigram, m) rollup. One tokenize
+    * ([[qualityTokens]]) feeds both. */
   private[graft] def qualityDeltas(docs: DataFrame): (DataFrame, DataFrame) = {
-    val s = docs.sparkSession
-    import s.implicits._
-    val toks = docs
-      .select($"doc_id", Text.tokens($"text").as("ts"))
+    val toks = qualityTokens(docs)
       .localCheckpoint(true) // one corpus scan feeds both rollups
-    val tstat = toks.select($"doc_id", explode($"ts").as("tok"))
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("c"))
-      .groupBy($"doc_id")
-      .agg(sum($"c").as("n_tokens"), count(lit(1)).as("n_distinct"),
-        max($"c").as("n_top"))
-    val m = toks
-      .select($"doc_id", explode(Text.wordNGrams($"ts", 2)).as("bigram"))
-      .groupBy($"doc_id", $"bigram").agg(count(lit(1)).as("m"))
-      .localCheckpoint(true) // LM rollup + join back (ta12's shape)
-    (tstat, m)
+    (tokenStats(toks),
+      bigramRollup(toks).localCheckpoint(true)) // LM rollup + join back (ta12's shape)
   }
+
+  /** The (doc_id, ts) token arrays both per-doc halves derive from. */
+  private[graft] def qualityTokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), Text.tokens(col("text")).as("ts"))
+
+  /** (doc_id, n_tokens, n_distinct, n_top) over [[qualityTokens]]. */
+  private[graft] def tokenStats(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), explode(col("ts")).as("tok"))
+      .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("n_distinct"),
+        max(col("c")).as("n_top"))
+
+  /** (doc_id, bigram, m) over [[qualityTokens]]. */
+  private[graft] def bigramRollup(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), explode(Text.wordNGrams(col("ts"), 2)).as("bigram"))
+      .groupBy(col("doc_id"), col("bigram")).agg(count(lit(1)).as("m"))
 
   /** The CORPUS-LEVEL assembly over the per-doc halves: the LM fold
     * (the one quantity that shifts as the corpus grows — which is WHY
@@ -2924,11 +2930,12 @@ object TextOps {
     st.maintainState(b.select(col("doc_id"), col("text")), s"$dir/xdocs",
       graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
     st.maintainScoreState(b, s"$dir/ref", s"$dir/scores", s"$dir/sdocs")
-    // the tf+dl two-table overload: the retrieval leg serves through
-    // the maintained-lengths path (bm25ServeSnapshot) — the production
+    // tf with its dl table: the retrieval leg serves through the
+    // maintained-lengths path (bm25ServeSnapshot) — the production
     // shape, whose equality with ta18 TfStateSpec pins
-    st.maintainTfState(b.select(col("doc_id"), col("text")),
-      s"$dir/tf", s"$dir/dl", s"$dir/tdocs")
+    st.maintainState(b.select(col("doc_id"), col("text")), s"$dir/tdocs",
+      graft.streaming.StateFamily.Tf -> s"$dir/tf",
+      graft.streaming.StateFamily.Dl -> s"$dir/dl")
     st.maintainState(b.select(col("doc_id"), col("text")), s"$dir/cdocs",
       graft.streaming.StateFamily.CmsCells -> s"$dir/cells",
       graft.streaming.StateFamily.Vocab -> s"$dir/vocab")
@@ -2949,7 +2956,9 @@ object TextOps {
     st.compactState(s, s"$dir/xdocs",
       graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
     st.compactScores(s, s"$dir/scores")
-    st.compactTf(s, s"$dir/tf", s"$dir/dl")
+    st.compactState(s, s"$dir/tdocs",
+      graft.streaming.StateFamily.Tf -> s"$dir/tf",
+      graft.streaming.StateFamily.Dl -> s"$dir/dl")
     st.compactState(s, s"$dir/cdocs",
       graft.streaming.StateFamily.CmsCells -> s"$dir/cells")
     st.compactState(s, s"$dir/hdocs",

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 
 import graft.queries.TextOps
 
-/** A maintained-state family of the counts and sketch kind: one standing
-  * table per family, advanced from a shared doc store by
+/** A maintained-state family: one standing table per family, advanced
+  * from a shared doc store by
   * [[Streams.maintainState]], read through [[Streams.foldState]],
   * compacted by [[Streams.compactState]] and forgotten by
   * [[Streams.forgetState]]. Each of the four takes (family, table) pairs
@@ -19,10 +19,11 @@ import graft.queries.TextOps
   *  - ADVANCE. The batch is cut to its fresh docs: `doc_id` plus the
   *    [[payload]] columns, in-batch repeats collapsed to ONE of the
   *    arriving rows, ids the doc store already holds dropped. Each family
-  *    appends its [[delta]] of the fresh docs, then the fresh rows append
-  *    to the doc store LAST — the store is the redelivery guard, so a
-  *    crash anywhere earlier redelivers the whole batch, and a redelivered
-  *    batch whose guard landed is a no-op.
+  *    appends its [[delta]] of the fresh docs (of its shared [[input]]
+  *    of them, computed once per batch for every family that names it),
+  *    then the fresh rows append to the doc store LAST — the store is
+  *    the redelivery guard, so a crash anywhere earlier redelivers the
+  *    whole batch, and a redelivered batch whose guard landed is a no-op.
   *  - FOLD. A [[StateFamily.Sum]] family tags its delta rows with the
   *    batch key (the min fresh doc_id: unique, because the guard keeps
   *    fresh sets disjoint). A crash-replay re-appends byte-identical rows
@@ -30,9 +31,11 @@ import graft.queries.TextOps
   *    (batch_key, keys) before sums add and mins min-combine; a key whose
   *    sums are not all positive (forget decrements netted it out) is not
   *    live. An [[StateFamily.Idempotent]] fold (a register max, a bottom-k
-  *    sample) absorbs replayed rows by itself: no key, no dedup. These are
-  *    the mergeable-summary folds of the PODS 2021 survey in PAPERS.md.
-  *  - COMPACT. The fold, materialized and swapped atomically. A sum fold
+  *    sample, a per-doc table's union with its key dedup) absorbs
+  *    replayed rows by itself: no key. These are the mergeable-summary
+  *    folds of the PODS 2021 survey in PAPERS.md.
+  *  - COMPACT. The fold, materialized and swapped atomically (bucket by
+  *    bucket for a bucketed table). A sum fold
   *    takes only COMMITTED keys — a positive key once it reached the
   *    guard, a negative (forget) key once its witness doc is tombstoned —
   *    under the reserved key Long.MinValue; pending rows keep their key
@@ -44,14 +47,26 @@ import graft.queries.TextOps
   *    commit witness and destroys the content a decrement is recomputed
   *    from, so a crash before it re-runs to the same rows and a crash
   *    after it finds nothing left to forget. See [[StateFamily.Forget]]
-  *    for the three policies.
+  *    for the four policies.
+  *  - LAYOUT. A [[bucket]]ed table is partitioned by its bucket column
+  *    from its first write. Every operation first rolls a crashed
+  *    per-bucket publish forward and migrates a flat table that predates
+  *    the layout: once bucket dirs exist, partition discovery ignores
+  *    root files, so mixed layouts would lose rows with no error.
+  *    Compaction and forget then rewrite bucket by bucket, each bucket
+  *    published atomically.
   */
 private[graft] final case class StateFamily(
     payload: Seq[(String, DataType)],
     nulled: String,
     delta: (DataFrame, Long) => DataFrame,
     fold: StateFamily.Fold,
-    forget: StateFamily.Forget)
+    forget: StateFamily.Forget,
+    input: Option[StateFamily.Input] = None,
+    bucket: Option[StateFamily.Bucket] = None) {
+  require(forget != StateFamily.ExactDelete || bucket.isDefined,
+    "an exact-delete family needs a bucket layout")
+}
 
 private[graft] object StateFamily {
 
@@ -81,8 +96,37 @@ private[graft] object StateFamily {
       keepers: DataFrame => DataFrame) extends Forget
   /** The fold does not invert: the table is rebuilt from the survivors. */
   case object Rebuild extends Forget
+  /** Per-doc rows delete exactly: the forgotten docs' own delta (their
+    * content stays in the store until the tombstone) names the buckets
+    * that can hold their rows, and only those buckets are rewritten. */
+  case object ExactDelete extends Forget
+
+  /** A per-batch computation that several families' deltas read; each
+    * operation runs it once per distinct input (identity by reference)
+    * and checkpoints the result. */
+  final class Input(val of: DataFrame => DataFrame)
+
+  /** The bucket layout: the table is partitioned by `name` = `of`, a
+    * BIGINT of each delta row. */
+  final case class Bucket(name: String, of: Column)
+
+  /** pt = doc_id mod [[Streams.TF_PARTITIONS]]: a forget rewrites only
+    * its ids' buckets. */
+  private[graft] val DocBucket =
+    Bucket("pt", pmod(col("doc_id"), lit(Streams.TF_PARTITIONS.toLong)))
 
   private val text = Seq("text" -> StringType)
+
+  private val TfRows = new Input(TextOps.tfRollup)
+  private val QualityTokens = new Input(TextOps.qualityTokens)
+
+  /** A per-doc table: each delta row is a pure function of its own
+    * document, so the fold is the union of the appends with redelivered
+    * copies dropped on `keys`, and a forget deletes exactly. */
+  private def perDoc(in: Option[Input], b: Bucket, keys: String*)(
+      delta: DataFrame => DataFrame) =
+    StateFamily(text, "text", (d, _) => delta(d),
+      Idempotent(_.drop(b.name).dropDuplicates(keys)), ExactDelete, in, Some(b))
 
   private def keyed(k: Long, d: DataFrame, cols: String*): DataFrame =
     d.select(lit(k).as("batch_key") +: cols.map(col): _*)
@@ -154,4 +198,30 @@ private[graft] object StateFamily {
   val Quantile = StateFamily(Seq("source" -> StringType, "v" -> LongType), "v",
     (f, _) => TextOps.qsSampleRows(TextOps.qsPairs(f)),
     Idempotent(TextOps.qsSampleRows), Rebuild)
+
+  /** pp26: the (doc_id, tok, tf) postings source BM25 scores over;
+    * df, dl, N and L derive at query time. */
+  val Tf = perDoc(Some(TfRows), DocBucket, "doc_id", "tok")(identity)
+
+  /** The serving path's (doc_id, dl) lengths, dl = Σ tf, from the same
+    * batch rollup as [[Tf]]. */
+  val Dl = perDoc(Some(TfRows), DocBucket, "doc_id")(
+    _.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+
+  /** The tf rows bucketed by token (tb = [[Streams.tokBucket]]): a
+    * query's terms select a few `tb=` dirs and the planner skips the
+    * rest. */
+  val TokTf = perDoc(Some(TfRows), Bucket("tb", Streams.tokBucket(col("tok"))),
+    "doc_id", "tok")(identity)
+
+  /** pp27: per-doc token stats (doc_id, n_tokens, n_distinct, n_top). */
+  val Tstat = perDoc(Some(QualityTokens), DocBucket, "doc_id")(TextOps.tokenStats)
+
+  /** pp27: the per-doc (doc_id, bigram, m) rollup; the LM over it is
+    * derived at read, so a forget shifts every survivor's features. */
+  val M = perDoc(Some(QualityTokens), DocBucket, "doc_id", "bigram")(
+    TextOps.bigramRollup)
+
+  /** pp27: per-doc weak-supervision labels (doc_id, y). */
+  val Labels = perDoc(None, DocBucket, "doc_id")(TextOps.ruleLabels)
 }

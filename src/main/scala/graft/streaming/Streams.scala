@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -903,25 +903,34 @@ object Streams {
     val payload = fams.map(_._1.payload.map(_._1)).distinct
     require(payload.size == 1,
       s"maintainState: families over $docTable disagree on the doc-store payload")
+    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(batch.sparkSession, t, _)) }
     val fresh = freshAgainst(batch, docTable, payload.head)
     if (fresh.isEmpty) return
     lazy val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    fams.foreach { case (f, t) =>
-      val key = f.fold match {
+    val ds = deltas(fresh, fams.map(_._1)) { f =>
+      f.fold match {
         case _: StateFamily.Sum => batchKey
         case _ => Long.MinValue
       }
-      f.delta(fresh, key).write.mode("append").parquet(t)
     }
+    fams.zip(ds).foreach { case ((f, t), d) => append(d, t, f.bucket) }
     fresh.write.mode("append").parquet(docTable)
   }
 
+  /** Each family's delta of `docs` under `key(f)`; a shared
+    * [[StateFamily.Input]] runs once and is checkpointed. */
+  private def deltas(docs: DataFrame, fams: Seq[StateFamily])(
+      key: StateFamily => Long): Seq[DataFrame] = {
+    val in = fams.flatMap(_.input).distinct
+      .map(i => i -> i.of(docs).localCheckpoint(true)).toMap
+    fams.map(f => f.delta(f.input.fold(docs)(in), key(f)))
+  }
+
   /** `table` read through its family's fold — the snapshot every
-    * family-specific read view finishes; an absent table folds as the
-    * delta of no docs. */
+    * family-specific read view finishes. */
   private[graft] def foldState(spark: SparkSession, f: StateFamily,
       table: String): DataFrame = {
-    val t = tryRead(spark, table).getOrElse(f.delta(noDocs(spark, f), Long.MinValue))
+    val t = standing(spark, f, table)
     f.fold match {
       case StateFamily.Sum(keys, sums, mins) =>
         val aggs = sums.map(c => sum(col(c)).as(c)) ++ mins.map(c => min(col(c)).as(c))
@@ -933,6 +942,13 @@ object Streams {
     }
   }
 
+  /** The raw rows of family `f`'s table; an absent table reads as the
+    * delta of no docs. */
+  private def standing(spark: SparkSession, f: StateFamily,
+      table: String): DataFrame =
+    tryRead(spark, table).getOrElse(
+      deltas(noDocs(spark, f), Seq(f))(_ => Long.MinValue).head)
+
   /** An empty doc store of family `f`'s shape. */
   private def noDocs(spark: SparkSession, f: StateFamily): DataFrame =
     emptyDf(spark, ("doc_id" -> org.apache.spark.sql.types.LongType) +: f.payload: _*)
@@ -941,43 +957,63 @@ object Streams {
     * step of the [[StateFamily]] contract; the store's tombstones are the
     * commit witness of forget keys. */
   private[graft] def compactState(spark: SparkSession, docTable: String,
-      fams: (StateFamily, String)*): Unit = fams.foreach { case (f, table) =>
-    f.fold match {
-      case StateFamily.Sum(keys, sums, mins) =>
-        compactDeltas(spark, table, keys, sums, docTable, "doc_id", mins,
-          tombstoneIds = tryRead(spark, docTable)
-            .map(_.filter(col(f.nulled).isNull).select(col("doc_id"))),
-          dropZeroKeys = true)
-      case StateFamily.Idempotent(fold) =>
-        tryRead(spark, table).foreach { t =>
-          graft.operators.MergeWriter.overwriteAtomic(
-            fold(t.localCheckpoint(true)), table)
+      fams: (StateFamily, String)*): Unit = {
+    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
+    fams.foreach { case (f, table) =>
+      f.fold match {
+        case StateFamily.Sum(keys, sums, mins) =>
+          compactDeltas(spark, table, keys, sums, docTable, "doc_id", mins,
+            tombstoneIds = tryRead(spark, docTable)
+              .map(_.filter(col(f.nulled).isNull).select(col("doc_id"))),
+            dropZeroKeys = true)
+        case StateFamily.Idempotent(fold) => f.bucket match {
+          case Some(b) => rewriteBuckets(spark, table, b, None)(fold)
+          case None => tryRead(spark, table).foreach { t =>
+            graft.operators.MergeWriter.overwriteAtomic(
+              fold(t.localCheckpoint(true)), table)
+          }
         }
+      }
     }
   }
 
   /** Forget `ids` from every (family, table) pair over `docTable` — the
     * FORGET step of the [[StateFamily]] contract. Rebuilt tables swap
-    * first; the decrement families share one gone set (forgotten ids
-    * whose content is not yet nulled — a re-run or an overlapping request
-    * skips docs already forgotten), one forget key and one rollback; the
-    * tombstone swap goes last. Single-maintenance-loop contract: call
-    * BETWEEN advances. */
+    * first, then the exact deletes; the decrement families share one gone
+    * set (forgotten ids whose content is not yet nulled — a re-run or an
+    * overlapping request skips docs already forgotten), one forget key
+    * and one rollback; the tombstone swap goes last. Single-maintenance-
+    * loop contract: call BETWEEN advances. */
   private[graft] def forgetState(spark: SparkSession, ids: DataFrame,
       docTable: String, fams: (StateFamily, String)*): Unit = {
     val nulled = fams.map(_._1.nulled).distinct
     require(nulled.size == 1,
       s"forgetState: families over $docTable disagree on the tombstoned column")
+    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
     val live = store.map(_.filter(col(nulled.head).isNotNull))
     def survivors(f: StateFamily) =
       live.map(_.join(idsC, Seq("doc_id"), "left_anti")).getOrElse(noDocs(spark, f))
         .select(("doc_id" +: f.payload.map(_._1)).map(col): _*)
-    val (rebuilt, decremented) = fams.partition(_._1.forget == StateFamily.Rebuild)
+    val rebuilt = fams.filter(_._1.forget == StateFamily.Rebuild)
+    val exact = fams.filter(_._1.forget == StateFamily.ExactDelete)
+    val decremented = fams.filterNot(rebuilt.contains).filterNot(exact.contains)
     rebuilt.foreach { case (f, t) =>
-      graft.operators.MergeWriter.overwriteAtomic(
-        f.delta(survivors(f).localCheckpoint(true), Long.MinValue), t)
+      graft.operators.MergeWriter.overwriteAtomic(deltas(
+        survivors(f).localCheckpoint(true), Seq(f))(_ => Long.MinValue).head, t)
+    }
+    // the stored rows of the ids re-derive the deltas they were ingested
+    // with: their buckets are the only ones that can hold their rows
+    if (exact.nonEmpty) store.foreach { s =>
+      val held = s.join(idsC, Seq("doc_id"), "left_semi")
+        .select(("doc_id" +: exact.head._1.payload.map(_._1)).map(col): _*)
+      exact.zip(deltas(held, exact.map(_._1))(_ => Long.MinValue)).foreach {
+        case ((f, t), d) =>
+          val b = f.bucket.get
+          rewriteBuckets(spark, t, b, Some(bucketsOf(d, b.of)))(
+            _.join(idsC, Seq("doc_id"), "left_anti"))
+      }
     }
     val gone =
       if (decremented.isEmpty) None
@@ -987,9 +1023,10 @@ object Streams {
       val forgetKey = -g.agg(min(col("doc_id"))).head().getLong(0) - 1L
       rollbackPendingForgets(spark, decremented.map(_._2), g)
       val goneIds = g.select(col("doc_id")).localCheckpoint(true)
-      decremented.foreach { case (f, t) =>
+      val decs = deltas(g, decremented.map(_._1))(_ => forgetKey)
+      decremented.zip(decs).foreach { case ((f, t), d) =>
         val StateFamily.Sum(keys, sums, _) = f.fold
-        val dec = f.delta(g, forgetKey).localCheckpoint(true)
+        val dec = d.localCheckpoint(true)
         val keeper = f.forget match {
           case StateFamily.KeeperRepair(kc, keepers) =>
             // patch BEFORE the decrement append: the patch rewrites the
@@ -1097,11 +1134,10 @@ object Streams {
         .select(col("doc_id"), col("cluster_id")))
 
   /** Standing-table read that treats "not created yet" as None — shared
-    * by every maintenance loop so a future behavior change (e.g. also
-    * tolerating a FileNotFound race, or a catalog lookup) lands once. */
+    * by every maintenance loop
+    * ([[graft.operators.MergeWriter.readIfPresent]]). */
   private def tryRead(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
+    graft.operators.MergeWriter.readIfPresent(spark, path)
 
   private def emptyRemap(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
@@ -2891,20 +2927,12 @@ object Streams {
   def maintainScoreState(batch: DataFrame, refTable: String,
       scoresTable: String, docTable: String): Unit = {
     val spark = batch.sparkSession
-    // heal any crashed partition publish before appending (a pending
-    // committed stage would otherwise overwrite this append's files
-    // when a later op rolls it forward — the tf-family entry contract),
-    // then migrate a pre-layout flat table before the first
-    // partitioned append can strand its rows
-    graft.operators.MergeWriter.repairPartitionedTable(
-      spark, scoresTable, "pt")
-    migrateDocBucketed(spark, scoresTable)
+    enterBucketed(spark, scoresTable, StateFamily.DocBucket)
     val fresh = freshAgainst(batch, docTable, Seq("source", "text"))
     if (fresh.isEmpty) return
     val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    scoreDelta(fresh, spark.read.parquet(refTable), batchKey)
-      .withColumn("pt", pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)))
-      .write.mode("append").partitionBy("pt").parquet(scoresTable)
+    append(scoreDelta(fresh, spark.read.parquet(refTable), batchKey),
+      scoresTable, Some(StateFamily.DocBucket))
     fresh.select(col("doc_id")).write.mode("append").parquet(docTable)
   }
 
@@ -2937,8 +2965,8 @@ object Streams {
     * member: scores are per-doc and immutable (nothing aggregates them,
     * nothing derives from them), so forgetting is exact row deletion
     * plus the id guard. The table is [[TF_PARTITIONS]]-bucketed on
-    * doc_id (like the tf family), so the deletion rewrites ONLY the
-    * partitions holding forgotten ids — partition-pruned scan, atomic
+    * doc_id (like the per-doc families), so the deletion rewrites ONLY
+    * the partitions holding forgotten ids — partition-pruned scan, atomic
     * per-partition publish, rewrite volume min(|ids|, buckets)/buckets
     * of the table. Scores delete FIRST (snapshots are correct
     * immediately), then the ids append to the guard (blocks future
@@ -2946,12 +2974,15 @@ object Streams {
     * since their advance). A crash between the two re-runs to
     * convergence. Re-bucketing needs no repair at all: [[scoreSnapshot]]
     * re-ranks at read, so the survivors' head/middle/tail simply re-cut
-    * (pp25's rank-only argument). */
+    * (pp25's rank-only argument). The store keeps ids, not text, so the
+    * touched buckets come from the ids themselves. */
   def forgetScoreState(spark: SparkSession, ids: DataFrame,
       scoresTable: String, docTable: String): Unit = {
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    deleteDocPartitioned(spark, idsC, forgottenPts(idsC), scoresTable,
-      Seq("batch_key", "source", "score"))
+    enterBucketed(spark, scoresTable, StateFamily.DocBucket)
+    rewriteBuckets(spark, scoresTable, StateFamily.DocBucket,
+      Some(bucketsOf(idsC, StateFamily.DocBucket.of)))(
+      _.join(idsC, Seq("doc_id"), "left_anti"))
     appendNewBy(idsC, docTable, "doc_id")
   }
 
@@ -2961,172 +2992,75 @@ object Streams {
     * identical row and the snapshot dedup collapses it again) and
     * repack — per pt bucket, preserving the partitioned layout the
     * forget's pruning rests on. */
-  def compactScores(spark: SparkSession, scoresTable: String): Unit =
-    compactDocPartitioned(spark, scoresTable, Seq("batch_key", "doc_id"),
-      Seq("batch_key", "doc_id", "source", "score"))
+  def compactScores(spark: SparkSession, scoresTable: String): Unit = {
+    enterBucketed(spark, scoresTable, StateFamily.DocBucket)
+    rewriteBuckets(spark, scoresTable, StateFamily.DocBucket, None)(
+      _.dropDuplicates("batch_key", "doc_id"))
+  }
 
-  /** Migrate a doc-bucketed standing table that predates the
-    * [[TF_PARTITIONS]] layout: a FLAT table (no pt column) is rewritten
-    * partitioned ONCE, in [[graft.operators.MergeWriter]]'s atomic
-    * whole-table swap. Without this, the first partitioned append would
-    * create pt= dirs beside the flat files, and partition discovery
-    * would silently drop every pre-layout row from every read — the
-    * exact failure mode the [[TF_PARTITIONS]] Scaladoc documents.
-    * No-op on already-partitioned or absent tables; every partitioned
-    * maintainer/forget/compaction entry point calls it. */
-  private def migrateDocBucketed(spark: SparkSession, table: String): Unit =
+  /** Append `rows` to `table`, partitioned by the bucket when there is
+    * one. */
+  private def append(rows: DataFrame, table: String,
+      bucket: Option[StateFamily.Bucket]): Unit =
+    bucket.fold(rows.write)(b => rows.withColumn(b.name, b.of).write.partitionBy(b.name))
+      .mode("append").parquet(table)
+
+  /** The entry step of every operation on a bucketed table: roll a
+    * crashed per-bucket publish forward (a pending committed stage would
+    * overwrite later appends, or read as missing rows), then rewrite a
+    * flat table that predates the layout partitioned, once, in one
+    * atomic swap. */
+  private def enterBucketed(spark: SparkSession, table: String,
+      b: StateFamily.Bucket): Unit = {
+    graft.operators.MergeWriter.repairPartitionedTable(spark, table, b.name)
     tryRead(spark, table).foreach { t =>
-      if (!t.columns.contains("pt"))
+      if (!t.columns.contains(b.name))
         graft.operators.MergeWriter.overwriteAtomicPartitioned(
-          t.localCheckpoint(true).withColumn("pt",
-            pmod(col("doc_id"), lit(TF_PARTITIONS.toLong))),
-          table, "pt")
-    }
-
-  /** The per-bucket compaction EVERY doc-bucketed standing table shares
-    * (scores, the feature tables): heal a crashed publish, migrate a
-    * pre-layout flat table, collapse redelivery duplicates on
-    * `dedupKeys`, and republish each live bucket atomically —
-    * the layout the partition-pruned forgets rest on is preserved.
-    * `valueCols` is the table's full column set minus pt, in write
-    * order. */
-  private def compactDocPartitioned(spark: SparkSession, table: String,
-      dedupKeys: Seq[String], valueCols: Seq[String]): Unit = {
-    graft.operators.MergeWriter.repairPartitionedTable(spark, table, "pt")
-    migrateDocBucketed(spark, table)
-    tryRead(spark, table).foreach { t0 =>
-      val t = t0.localCheckpoint(true)
-      val pts = t.select(col("pt").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toIndexedSeq // ≤ TF_PARTITIONS
-      graft.operators.MergeWriter.overwritePartitionsAtomic(
-        t.select(valueCols.map(col) :+ col("pt").cast("long").as("pt"): _*)
-          .dropDuplicates(dedupKeys)
-          .repartition(col("pt")),
-        table, "pt", pts)
+          t.localCheckpoint(true).withColumn(b.name, b.of), table, b.name)
     }
   }
 
-  /** The doc-bucketed standing tables' partition count (tf/dl, the
-    * score table, the three feature tables) — a table-creation constant
-    * (like the dedup flow's canonicalizer mode: every writer and reader
-    * of one table must agree). The table is PARTITIONED BY
-    * pt = doc_id mod this, so [[forgetTfState]] rewrites only the
-    * partitions holding forgotten ids: the forget's rewrite volume is
-    * min(|ids|, TF_PARTITIONS)/TF_PARTITIONS of the table instead of
-    * all of it — the kNN-graph family's touched-partition treatment
-    * applied to the retrieval family. Size it so that bound bites at
-    * the deployment's typical forget-request size (a 100-id GDPR batch
-    * against 64 partitions still touches most of them; raise the
-    * constant with corpus size — partitions should stay several files
-    * each, not thousands).
-    *
-    * The LAYOUT is part of the contract from the table's first write —
-    * once pt= dirs exist, Spark's partition discovery silently ignores
-    * data files at the table root, so mixing layouts loses the flat
-    * rows from every read with no error anywhere. Every partitioned
-    * maintainer/forget/compaction entry point therefore runs
-    * [[migrateDocBucketed]] (atomic flat→partitioned rewrite, no-op
-    * once migrated) BEFORE its first partitioned write. */
+  /** Rewrite `table` bucket by bucket as `rows` of it, each bucket
+    * published atomically
+    * ([[graft.operators.MergeWriter.overwritePartitionsAtomic]]: a
+    * mid-publish crash rolls forward at the next entry repair, no row is
+    * lost). `touched` = None is the compaction: every live bucket, the
+    * table pinned first. Some(buckets) is the exact delete: only those
+    * buckets are read and rewritten, one left with no rows is deleted,
+    * and every other bucket never moves. */
+  private def rewriteBuckets(spark: SparkSession, table: String,
+      b: StateFamily.Bucket, touched: Option[IndexedSeq[Long]])(
+      rows: DataFrame => DataFrame): Unit =
+    tryRead(spark, table).foreach { t0 =>
+      val t = touched.fold(t0.localCheckpoint(true))(
+        bs => t0.filter(col(b.name).isin(bs: _*)))
+      graft.operators.MergeWriter.overwritePartitionsAtomic(
+        rows(t).drop(b.name).withColumn(b.name, b.of).repartition(col(b.name)),
+        table, b.name, touched.getOrElse(bucketsOf(t, col(b.name))))
+    }
+
+  /** The distinct BIGINT values of `c` over `df` (at most the bucket
+    * count). */
+  private def bucketsOf(df: DataFrame, c: Column): IndexedSeq[Long] =
+    df.select(c.cast("long")).distinct().collect().map(_.getLong(0)).toIndexedSeq
+
+  /** The doc-bucketed standing tables' partition count
+    * ([[StateFamily.DocBucket]]: tf, dl, the feature tables, the score
+    * table) — a table-creation constant (like the dedup flow's
+    * canonicalizer mode: every writer and reader of one table must
+    * agree). A forget rewrites only the partitions holding forgotten
+    * ids: min(|ids|, TF_PARTITIONS)/TF_PARTITIONS of the table instead
+    * of all of it. Size it so that bound bites at the deployment's
+    * typical forget-request size (a 100-id GDPR batch against 64
+    * partitions still touches most of them; raise the constant with
+    * corpus size — partitions should stay several files each, not
+    * thousands). */
   private[graft] val TF_PARTITIONS = 64
 
-  /** pp26's continuous twin: CONTINUOUS retrieval-index maintenance —
-    * the standing (doc_id, tok, tf) postings-source table ta18/pp26
-    * search over, advanced by one batch-sized tokenize+rollup append
-    * (per-bucket under the [[TF_PARTITIONS]] layout).
-    * Per-doc rows never change (each is a pure function of its own
-    * document), so there is no fold, no delta key, and no standing read:
-    * redelivery duplicates are byte-identical rows [[tfSnapshot]]
-    * collapses on (doc_id, tok). The doc store is the guard (appended
-    * LAST, vocab-family contract) and keeps the text for audit; nothing
-    * is ever recomputed from it. Query-time statistics (df, dl, N, L)
-    * derive from the standing table inside [[bm25Snapshot]], so every
-    * arrival is searchable immediately with corpus-consistent scores. */
-  def maintainTfState(batch: DataFrame, tfTable: String,
-      docTable: String): Unit = {
-    // heal any crashed partition publish before appending: a pending
-    // committed stage would otherwise overwrite this append's files
-    // when a later op rolls it forward
-    graft.operators.MergeWriter.repairPartitionedTable(
-      batch.sparkSession, tfTable, "pt")
-    migrateDocBucketed(batch.sparkSession, tfTable)
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    graft.queries.TextOps.tfRollup(fresh)
-      .withColumn("pt", pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)))
-      .write.mode("append").partitionBy("pt").parquet(tfTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** [[maintainTfState]] with the SERVING-PATH doc-length table
-    * maintained alongside: dl = Σ tf per doc is a pure per-doc function
-    * (the tf-family additivity), so it appends from the SAME batch
-    * tokenize — each document is still scanned once ever — under the
-    * same [[TF_PARTITIONS]] bucketing. A query then derives df from the
-    * query-term-pruned postings and N/L from this compact 2-column
-    * table ([[bm25ServeSnapshot]]), never re-rolling the corpus-sized
-    * tf table per workload. Crash between the two appends: the guard
-    * has not moved, the replay re-appends byte-identical rows to both,
-    * and the snapshots' per-doc dedups collapse them. */
-  def maintainTfState(batch: DataFrame, tfTable: String, dlTable: String,
-      docTable: String): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.MergeWriter.repairPartitionedTable(spark, tfTable, "pt")
-    graft.operators.MergeWriter.repairPartitionedTable(spark, dlTable, "pt")
-    Seq(tfTable, dlTable).foreach(migrateDocBucketed(spark, _))
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    val rolled = graft.queries.TextOps.tfRollup(fresh).localCheckpoint(true)
-    rolled
-      .withColumn("pt", pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)))
-      .write.mode("append").partitionBy("pt").parquet(tfTable)
-    rolled.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .withColumn("pt", pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)))
-      .write.mode("append").partitionBy("pt").parquet(dlTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** [[maintainTfState]] with BOTH serving artifacts: the dl table AND
-    * a TOKEN-BUCKETED projection of the tf rows (`tb` = hash(tok) mod
-    * [[TOK_TF_BUCKETS]]) — the retrieval-engine layout, where a query's
-    * term set selects a handful of `tb=` directories and the serve
-    * scan SKIPS every other bucket at the PLANNER (a pushed partition
-    * filter, not a streamed-and-dropped row filter). All three
-    * projections derive from the SAME batch tokenize (each document
-    * still scanned once ever); appends are O(batch) in both layouts
-    * (a batch's rows scatter across tok buckets, but their VOLUME is
-    * the batch's). The doc-bucketed tf table stays the SOURCE OF TRUTH
-    * (deletion-friendly: forgets prune to the ids' pt buckets); the
-    * tok-bucketed copy is a derived projection whose buckets cannot
-    * prune by doc, but whose forget is still BUCKET-LOCAL: the
-    * forgotten docs' tokens (read pt-pruned from the tf table) name the
-    * `tb=` buckets that can hold a forgotten row — see the tok overload
-    * of [[forgetTfState]]. */
-  def maintainTfState(batch: DataFrame, tfTable: String, dlTable: String,
-      tokTfTable: String, docTable: String): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.MergeWriter.repairPartitionedTable(spark, tfTable, "pt")
-    graft.operators.MergeWriter.repairPartitionedTable(spark, dlTable, "pt")
-    graft.operators.MergeWriter.repairPartitionedTable(spark, tokTfTable, "tb")
-    Seq(tfTable, dlTable).foreach(migrateDocBucketed(spark, _))
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    val rolled = graft.queries.TextOps.tfRollup(fresh).localCheckpoint(true)
-    rolled
-      .withColumn("pt", pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)))
-      .write.mode("append").partitionBy("pt").parquet(tfTable)
-    rolled.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .withColumn("pt", pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)))
-      .write.mode("append").partitionBy("pt").parquet(dlTable)
-    rolled
-      .withColumn("tb", tokBucket(col("tok")))
-      .write.mode("append").partitionBy("tb").parquet(tokTfTable)
-    fresh.write.mode("append").parquet(docTable)
-  }
-
-  /** The tok-bucketed layout's bucket count and bucketing function —
-    * table-creation constants like [[TF_PARTITIONS]] (every writer and
-    * reader of one table must agree). The hash is the engine-universal
-    * md5 fold (`QueryUtils.hex8`), so the bucket of a token is the same
+  /** The tok-bucketed layout's bucket count and bucketing function
+    * ([[StateFamily.TokTf]]) — table-creation constants like
+    * [[TF_PARTITIONS]]. The hash is the engine-universal md5 fold
+    * (`QueryUtils.hex8`), so the bucket of a token is the same
     * expression on the ingest and the query side — the query-side
     * bucket derivation runs the SAME Column, never a re-implementation
     * that could drift. */
@@ -3134,66 +3068,19 @@ object Streams {
   private[graft] def tokBucket(tok: org.apache.spark.sql.Column) =
     pmod(graft.queries.QueryUtils.hex8(tok), lit(TOK_TF_BUCKETS.toLong))
 
-  /** [[maintainTfState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def tfStateStream(docs: DataFrame, tfTable: String,
-      docTable: String,
-      // no default: Scala forbids defaults on two overloads (the 4-arg
-      // dl-maintaining sink below carries it)
-      checkpoint: Option[String]): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainTfState(b, tfTable, docTable))
-
-  def tfStateStream(docs: DataFrame, tfTable: String,
-      docTable: String): org.apache.spark.sql.streaming.StreamingQuery =
-    tfStateStream(docs, tfTable, docTable, None: Option[String])
-
-  /** The dl-maintaining [[maintainTfState]] overload as a foreachBatch
-    * sink — the stream a [[bm25ServeSnapshot]] deployment MUST ingest
-    * through: the 3-arg sink above never advances the dl table, and a
-    * tf row without its dl row is an ingest-contract violation the
-    * serve path fails loudly on (never silently drops). */
-  def tfStateStream(docs: DataFrame, tfTable: String, dlTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainTfState(b, tfTable, dlTable, docTable))
-
-  /** The current (doc_id, tok, tf) table under the maintained appends —
-    * redelivery duplicates (byte-identical by construction) collapse on
-    * (doc_id, tok); the partition column stays internal. */
-  def tfSnapshot(spark: SparkSession, tfTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    tryRead(spark, tfTable).getOrElse(emptyDf(spark,
-        "doc_id" -> LongType, "tok" -> StringType, "tf" -> LongType))
-      .select(col("doc_id"), col("tok"), col("tf"))
-      .dropDuplicates("doc_id", "tok")
-  }
-
   /** BM25 retrieval over the maintained table — ta18's exact results
     * over every doc that has arrived AND NOT been forgotten (the scoring
     * suffix is [[graft.queries.TextOps.bm25TopK]], shared verbatim). */
   def bm25Snapshot(spark: SparkSession, tfTable: String): DataFrame =
     graft.queries.TextOps.bm25TopK(
-      tfSnapshot(spark, tfTable).localCheckpoint(true))
+      foldState(spark, StateFamily.Tf, tfTable).localCheckpoint(true))
 
   /** [[bm25Snapshot]] for an arbitrary (query_id, qtext) workload and
     * k — the library serving path over maintained state. */
   def bm25Snapshot(spark: SparkSession, tfTable: String,
       queries: DataFrame, k: Int): DataFrame =
     graft.queries.TextOps.bm25TopK(
-      tfSnapshot(spark, tfTable).localCheckpoint(true), queries, k)
-
-  /** The current (doc_id, dl) lengths under the maintained appends —
-    * redelivery duplicates collapse per doc; the partition column stays
-    * internal. */
-  def dlSnapshot(spark: SparkSession, dlTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    tryRead(spark, dlTable).getOrElse(emptyDf(spark,
-        "doc_id" -> LongType, "dl" -> LongType))
-      .select(col("doc_id"), col("dl"))
-      .dropDuplicates("doc_id")
-  }
+      foldState(spark, StateFamily.Tf, tfTable).localCheckpoint(true), queries, k)
 
   /** BM25 retrieval over maintained state through the SERVING path: the
     * raw tf table streams through ONE scan into the broadcast
@@ -3205,7 +3092,9 @@ object Streams {
     * ROLLUP SHUFFLES [[bm25Snapshot]] re-runs per call. Scores are
     * EXACTLY [[bm25Snapshot]]'s (shared scoring suffix; the dl table
     * equals the tf rollup by the maintainer's construction —
-    * spec-pinned).
+    * spec-pinned). Ingest through a maintainState call that advances
+    * [[StateFamily.Tf]] and [[StateFamily.Dl]] together: a tf row
+    * without its dl row fails this path loudly.
     *
     * `materialize` decides how the dl snapshot (one row per doc — the
     * only corpus-ROW-proportional frame this path scans twice: the N/L
@@ -3220,14 +3109,11 @@ object Streams {
     * (ServeProbe measures both strategies — COVERAGE.md). */
   def bm25ServeSnapshot(spark: SparkSession, tfTable: String,
       dlTable: String, queries: DataFrame, k: Int,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
-    import org.apache.spark.sql.types._
-    val tfRaw = tryRead(spark, tfTable).getOrElse(emptyDf(spark,
-        "doc_id" -> LongType, "tok" -> StringType, "tf" -> LongType))
-      .select(col("doc_id"), col("tok"), col("tf"))
-    graft.queries.TextOps.bm25TopKWith(tfRaw,
-      materialize(dlSnapshot(spark, dlTable)), queries, k)
-  }
+      materialize: DataFrame => DataFrame = identity): DataFrame =
+    graft.queries.TextOps.bm25TopKWith(
+      standing(spark, StateFamily.Tf, tfTable)
+        .select(col("doc_id"), col("tok"), col("tf")),
+      materialize(foldState(spark, StateFamily.Dl, dlTable)), queries, k)
 
   /** [[bm25ServeSnapshot]] over the TOKEN-BUCKETED projection — the
     * layout-pruned serve: the workload's term set (driver-bounded by
@@ -3245,313 +3131,31 @@ object Streams {
   def bm25ServeTokSnapshot(spark: SparkSession, tokTfTable: String,
       dlTable: String, queries: DataFrame, k: Int,
       materialize: DataFrame => DataFrame = identity): DataFrame = {
-    import org.apache.spark.sql.types._
-    val buckets = queries
-      .select(explode(array_distinct(
-        graft.functions.Text.tokens(col("qtext")))).as("tok"))
-      .select(tokBucket(col("tok")).as("tb")).distinct()
-      .collect().map(_.getLong(0)).toIndexedSeq
+    val buckets = bucketsOf(queries.select(explode(array_distinct(
+        graft.functions.Text.tokens(col("qtext")))).as("tok")),
+      tokBucket(col("tok")))
     val pruned = tryRead(spark, tokTfTable)
       .map(_.filter(col("tb").isin(buckets: _*)))
-      .getOrElse(emptyDf(spark,
-        "doc_id" -> LongType, "tok" -> StringType, "tf" -> LongType))
+      .getOrElse(standing(spark, StateFamily.TokTf, tokTfTable))
     graft.queries.TextOps.bm25TopKWith(
       pruned.select(col("doc_id"), col("tok"), col("tf")),
-      materialize(dlSnapshot(spark, dlTable)), queries, k)
-  }
-
-  /** DELETION PROPAGATION for the retrieval family — exact like the
-    * score family's: tf rows are per-doc and never aggregated at rest
-    * (df/dl/N/L are query-time derivations), so forgetting is row
-    * deletion plus the doc-store tombstone (text NULLED — the rows AND
-    * the recoverable content both go; id kept, so redelivery and
-    * re-ingest stay blocked, never-seen ids forward-block). The table
-    * is [[TF_PARTITIONS]]-bucketed on doc_id, so the deletion touches
-    * ONLY the partitions holding forgotten ids: a partition-pruned
-    * scan, then a per-partition ATOMIC stage-then-publish of the
-    * survivors ([[graft.operators.MergeWriter.overwritePartitionsAtomic]]
-    * — a partition the forget emptied stages no rows and is deleted by
-    * the same publish). Deletion first (snapshots correct immediately),
-    * tombstone swap last; both idempotent, a crash between re-runs to
-    * convergence. Every derived statistic self-repairs at query time:
-    * the survivors' df/dl/N/L are simply what [[bm25Snapshot]] computes
-    * next.
-    *
-    * Crash contract: the old dynamic-overwrite delete-then-rename
-    * commit window (a hard crash there could LOSE a touched partition's
-    * surviving rows) is closed — survivors persist in the stage until
-    * their rename lands, and a mid-publish crash rolls forward at this
-    * job's (or any tf maintenance op's) entry repair. Between a crash
-    * and that repair a reader can see a touched partition absent — the
-    * same transient `overwriteAtomic` has mid-swap — never lost rows
-    * after it. */
-  /** The partition-pruned exact deletion EVERY doc-bucketed standing
-    * table shares (tf, dl, scores, the feature tables): heal any
-    * crashed publish FIRST (a pending committed stage reads as
-    * a missing partition otherwise, and its rows would be dropped as
-    * forgotten), then rewrite only the forgotten ids' pt buckets — a
-    * partition with no survivors stages no rows and is DELETED by the
-    * atomic publish; untouched partitions never move. */
-  private def deleteDocPartitioned(spark: SparkSession, idsC: DataFrame,
-      pts: IndexedSeq[Long], table: String, valueCols: Seq[String]): Unit = {
-    graft.operators.MergeWriter.repairPartitionedTable(spark, table, "pt")
-    migrateDocBucketed(spark, table)
-    tryRead(spark, table).foreach { t0 =>
-      val surviving = t0.filter(col("pt").isin(pts: _*))
-        .join(idsC, Seq("doc_id"), "left_anti")
-        .select((col("doc_id") +: valueCols.map(col))
-          :+ col("pt").cast("long").as("pt"): _*)
-      graft.operators.MergeWriter.overwritePartitionsAtomic(
-        surviving, table, "pt", pts)
-    }
-  }
-
-  private def forgottenPts(idsC: DataFrame): IndexedSeq[Long] = idsC
-    .select(pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)).as("pt"))
-    .distinct().collect().map(_.getLong(0)).toIndexedSeq // ≤ TF_PARTITIONS
-
-  def forgetTfState(spark: SparkSession, ids: DataFrame, tfTable: String,
-      docTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    deleteDocPartitioned(spark, idsC, forgottenPts(idsC), tfTable, Seq("tok", "tf"))
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    tombstoneSwap(store, idsC, docTable, "text")
-  }
-
-  /** [[forgetTfState]] with the serving-path dl table: dl rows are
-    * per-doc and id-granular exactly like tf rows, so the same
-    * partition-pruned exact deletion applies — dl first, then the tf
-    * deletion and the tombstone swap (still LAST). A crash between
-    * re-runs to convergence like every step here. */
-  def forgetTfState(spark: SparkSession, ids: DataFrame, tfTable: String,
-      dlTable: String, docTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val pts = forgottenPts(idsC)
-    deleteDocPartitioned(spark, idsC, pts, dlTable, Seq("dl"))
-    deleteDocPartitioned(spark, idsC, pts, tfTable, Seq("tok", "tf"))
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    tombstoneSwap(store, idsC, docTable, "text")
-  }
-
-  /** [[forgetTfState]] with the tok-bucketed serving projection: the
-    * doc-bucketed tables prune to the ids' pt buckets as before; the
-    * tok-bucketed copy cannot prune by DOC — but it can prune by the
-    * forgotten docs' TOKENS: their tf rows (read pt-pruned from the
-    * doc-bucketed source of truth, BEFORE it shrinks — the same
-    * derive-from-the-table-that-still-has-it crash discipline as
-    * [[forgetDedupState]]'s ghost buckets) name exactly the `tb=`
-    * buckets that can hold a forgotten row, because both projections
-    * append from the SAME batch tokenize, so the tf table's (doc, tok)
-    * pairs always cover the projection's. Only those buckets are read
-    * or rewritten — work bounded by the buckets the forgotten tokens
-    * select, not the table (a doc whose tokens span all
-    * [[TOK_TF_BUCKETS]] buckets degrades to the old full rewrite —
-    * the honest worst case). Order: tok projection first (its tb set
-    * derives from tf rows the tf deletion destroys), then the
-    * doc-bucketed deletions, tombstone swap LAST; a crash anywhere
-    * re-runs to convergence (each step is idempotent and its inputs
-    * survive until the step after it). */
-  def forgetTfState(spark: SparkSession, ids: DataFrame, tfTable: String,
-      dlTable: String, tokTfTable: String, docTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val pts = forgottenPts(idsC)
-    graft.operators.MergeWriter.repairPartitionedTable(spark, tfTable, "pt")
-    graft.operators.MergeWriter.repairPartitionedTable(spark, tokTfTable, "tb")
-    migrateDocBucketed(spark, tfTable) // a flat legacy table has no pt to prune
-    val touchedTbs = tryRead(spark, tfTable) match {
-      case Some(tf) =>
-        tf.filter(col("pt").isin(pts: _*))
-          .join(idsC, Seq("doc_id"), "left_semi")
-          .select(tokBucket(col("tok")).cast("long").as("tb")).distinct()
-          .collect().map(_.getLong(0)).toIndexedSeq // ≤ TOK_TF_BUCKETS
-      case None =>
-        // fail LOUDLY, never silently no-op the tok cleanup: the touched
-        // tb set derives from the doc-bucketed tf rows, so an unreadable
-        // tf table beside a live tok projection would leave the forgotten
-        // docs' rows in the SERVING projection forever — unreachable when
-        // the both-tables-from-one-tokenize pairing invariant holds, but
-        // if it is ever broken this must be an error, not a skipped step
-        // (the engine's fail-loud convention)
-        require(tryRead(spark, tokTfTable).isEmpty,
-          s"forgetTfState: tok projection $tokTfTable exists but the " +
-            s"doc-bucketed tf table $tfTable is unreadable — the touched " +
-            "tb buckets derive from the tf rows, so the tok cleanup " +
-            "cannot run; restore the tf table before forgetting")
-        IndexedSeq.empty
-    }
-    if (touchedTbs.nonEmpty) tryRead(spark, tokTfTable).foreach { t0 =>
-      val t = t0.filter(col("tb").isin(touchedTbs: _*)).localCheckpoint(true)
-      graft.operators.MergeWriter.overwritePartitionsAtomic(
-        t.join(idsC, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("tok"), col("tf"),
-            col("tb").cast("long").as("tb")),
-        tokTfTable, "tb", touchedTbs)
-    }
-    deleteDocPartitioned(spark, idsC, pts, dlTable, Seq("dl"))
-    deleteDocPartitioned(spark, idsC, pts, tfTable, Seq("tok", "tf"))
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    tombstoneSwap(store, idsC, docTable, "text")
-  }
-
-  /** [[compactTf]] over all three tf-family tables: the doc-bucketed
-    * pair plus the tok-bucketed serving projection (dedup on
-    * (doc_id, tok) under its own layout). */
-  def compactTf(spark: SparkSession, tfTable: String, dlTable: String,
-      tokTfTable: String): Unit = {
-    compactTf(spark, tfTable, dlTable)
-    graft.operators.MergeWriter.repairPartitionedTable(spark, tokTfTable, "tb")
-    tryRead(spark, tokTfTable).foreach { t0 =>
-      val t = t0.localCheckpoint(true)
-      val tbs = t.select(col("tb").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toIndexedSeq
-      graft.operators.MergeWriter.overwritePartitionsAtomic(
-        t.select(col("doc_id"), col("tok"), col("tf"),
-            col("tb").cast("long").as("tb"))
-          .dropDuplicates("doc_id", "tok")
-          .repartition(col("tb")),
-        tokTfTable, "tb", tbs)
-    }
-  }
-
-  /** [[compactTf]]'s dl-table sibling: collapse redelivery duplicates
-    * per doc and repack, atomic per partition. */
-  def compactTf(spark: SparkSession, tfTable: String,
-      dlTable: String): Unit = {
-    compactTf(spark, tfTable)
-    graft.operators.MergeWriter.repairPartitionedTable(spark, dlTable, "pt")
-    tryRead(spark, dlTable).foreach { d0 =>
-      val d = d0.localCheckpoint(true)
-      val pts = d.select(col("pt").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toIndexedSeq
-      graft.operators.MergeWriter.overwritePartitionsAtomic(
-        d.select(col("doc_id"), col("dl"), col("pt").cast("long").as("pt"))
-          .dropDuplicates("doc_id")
-          .repartition(col("pt")),
-        dlTable, "pt", pts)
-    }
-  }
-
-  /** Compact the tf appends: collapse redelivery duplicates
-    * (byte-identical rows — dropping them never destroys replay
-    * evidence) and repack each bucket to one file set, preserving the
-    * [[TF_PARTITIONS]] layout. Content-preserving and atomic per
-    * partition ([[graft.operators.MergeWriter.overwritePartitionsAtomic]]
-    * — a mid-publish crash leaves a readable mix of compacted and
-    * uncompacted partitions plus a staged remainder the entry repair
-    * rolls forward; no row is ever lost). The `partitions` arg is
-    * accepted for signature parity with the other compactors but the
-    * bucket layout governs. */
-  def compactTf(spark: SparkSession, tfTable: String,
-      partitions: Int = 8): Unit = {
-    graft.operators.MergeWriter.repairPartitionedTable(spark, tfTable, "pt")
-    tryRead(spark, tfTable).foreach { t0 =>
-      val t = t0.localCheckpoint(true)
-      val pts = t.select(col("pt").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toIndexedSeq // ≤ TF_PARTITIONS values
-      graft.operators.MergeWriter.overwritePartitionsAtomic(
-        t.select(col("doc_id"), col("tok"), col("tf"),
-            col("pt").cast("long").as("pt"))
-          .dropDuplicates("doc_id", "tok")
-          .repartition(col("pt")),
-        tfTable, "pt", pts)
-    }
-  }
-
-  /** pp27's continuous twin: CONTINUOUS training-data maintenance for
-    * the quality-classifier family. Standing tables: `tstatTable`
-    * (per-doc token stats), `mTable` (per-doc (doc, bigram, m) rollup),
-    * `labelsTable` (per-doc weak-supervision verdicts) — every row a
-    * pure function of its own document (the tf-family additivity:
-    * no fold, no delta key, byte-identical redelivery rows the
-    * snapshot collapses by doc id), advanced by ONE batch tokenize, so
-    * each document's text is scanned once ever. The corpus-level LM
-    * behind rare_pm derives AT READ in [[trainingSnapshot]] — stored
-    * features would stale on every arrival. Doc store is the guard
-    * (appended LAST, text kept for audit). All three tables are
-    * [[TF_PARTITIONS]]-bucketed on doc_id from their first write, so
-    * [[forgetFeatureState]] rewrites only touched partitions. */
-  def maintainFeatureState(batch: DataFrame, tstatTable: String,
-      mTable: String, labelsTable: String, docTable: String): Unit = {
-    val spark = batch.sparkSession
-    // heal any crashed partition publish on all three tables before
-    // appending (the tf-family entry contract), then migrate any
-    // pre-layout flat table
-    Seq(tstatTable, mTable, labelsTable).foreach { t =>
-      graft.operators.MergeWriter.repairPartitionedTable(spark, t, "pt")
-      migrateDocBucketed(spark, t)
-    }
-    val fresh = freshAgainst(batch, docTable)
-    if (fresh.isEmpty) return
-    def bucketed(df: DataFrame) = df.withColumn("pt",
-      pmod(col("doc_id"), lit(TF_PARTITIONS.toLong)))
-    val (tstat, m) = graft.queries.TextOps.qualityDeltas(fresh)
-    bucketed(tstat).write.mode("append").partitionBy("pt").parquet(tstatTable)
-    bucketed(m).write.mode("append").partitionBy("pt").parquet(mTable)
-    bucketed(graft.queries.TextOps.ruleLabels(fresh))
-      .write.mode("append").partitionBy("pt").parquet(labelsTable)
-    fresh.write.mode("append").parquet(docTable)
+      materialize(foldState(spark, StateFamily.Dl, dlTable)), queries, k)
   }
 
   /** The current (features, y) training frame under the maintained
+    * [[StateFamily.Tstat]], [[StateFamily.M]] and [[StateFamily.Labels]]
     * tables — exactly what ta19's trainer (and
     * [[rebuildClassifierState]]'s refit) consumes: features assembled
     * at read through [[graft.queries.TextOps.qualityFeaturesFrom]]
-    * (shared verbatim with the batch path), labels joined doc-keyed.
-    * Redelivery duplicates collapse per doc / (doc, bigram). */
+    * (shared verbatim with the batch path; the corpus-level LM behind
+    * rare_pm derives here, so a forget repairs every survivor's
+    * features with no cross-doc job), labels joined doc-keyed. */
   def trainingSnapshot(spark: SparkSession, tstatTable: String,
-      mTable: String, labelsTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val tstat = tryRead(spark, tstatTable).getOrElse(emptyDf(spark,
-        "doc_id" -> LongType, "n_tokens" -> LongType,
-        "n_distinct" -> LongType, "n_top" -> LongType))
-      .drop("pt").dropDuplicates("doc_id")
-    val m = tryRead(spark, mTable).getOrElse(emptyDf(spark,
-        "doc_id" -> LongType, "bigram" -> StringType, "m" -> LongType))
-      .drop("pt").dropDuplicates("doc_id", "bigram")
-    val labels = tryRead(spark, labelsTable).getOrElse(emptyDf(spark,
-        "doc_id" -> LongType, "y" -> LongType))
-      .drop("pt").dropDuplicates("doc_id")
-    graft.queries.TextOps.qualityFeaturesFrom(tstat, m)
-      .join(labels, Seq("doc_id"))
-  }
-
-  /** DELETION PROPAGATION for the training-data family — exact
-    * deletion like the tf family's (per-doc rows, never aggregated at
-    * rest), with the notable property that the CORPUS-LEVEL effect is
-    * still exact: deleting a doc's (doc, bigram) rows changes the LM
-    * every OTHER doc's rare_pm is computed against, and because
-    * features derive at read, every survivor's features self-repair at
-    * the next [[trainingSnapshot]] — no cross-doc repair job at all.
-    * All three tables are [[TF_PARTITIONS]]-bucketed on doc_id, so
-    * each deletion rewrites ONLY the forgotten ids' partitions
-    * (partition-pruned scan, atomic per-partition publish — the tf
-    * family's discipline). Text nulled last, same crash contract as
-    * [[forgetTfState]]. */
-  def forgetFeatureState(spark: SparkSession, ids: DataFrame,
-      tstatTable: String, mTable: String, labelsTable: String,
-      docTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val pts = forgottenPts(idsC)
-    deleteDocPartitioned(spark, idsC, pts, tstatTable,
-      Seq("n_tokens", "n_distinct", "n_top"))
-    deleteDocPartitioned(spark, idsC, pts, mTable, Seq("bigram", "m"))
-    deleteDocPartitioned(spark, idsC, pts, labelsTable, Seq("y"))
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    tombstoneSwap(store, idsC, docTable, "text")
-  }
-
-  /** Compact the three feature tables: collapse redelivery duplicates
-    * (byte-identical per-doc rows) per pt bucket, preserving the
-    * partitioned layout [[forgetFeatureState]]'s pruning rests on. */
-  def compactFeatures(spark: SparkSession, tstatTable: String,
-      mTable: String, labelsTable: String): Unit = {
-    compactDocPartitioned(spark, tstatTable, Seq("doc_id"),
-      Seq("doc_id", "n_tokens", "n_distinct", "n_top"))
-    compactDocPartitioned(spark, mTable, Seq("doc_id", "bigram"),
-      Seq("doc_id", "bigram", "m"))
-    compactDocPartitioned(spark, labelsTable, Seq("doc_id"),
-      Seq("doc_id", "y"))
-  }
+      mTable: String, labelsTable: String): DataFrame =
+    graft.queries.TextOps.qualityFeaturesFrom(
+        foldState(spark, StateFamily.Tstat, tstatTable),
+        foldState(spark, StateFamily.M, mTable))
+      .join(foldState(spark, StateFamily.Labels, labelsTable), Seq("doc_id"))
 
   /** Incremental document ingest (S1's streaming shape): new files landing
     * in a directory become extraction rows continuously — the reference's

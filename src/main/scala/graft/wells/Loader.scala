@@ -167,9 +167,7 @@ object Loader {
     * incoming row, matching ON DUPLICATE KEY UPDATE overwrite semantics. */
   private def mergeInto(spark: SparkSession, incoming: DataFrame,
       tablePath: String): Unit = {
-    val existing =
-      try Some(spark.read.parquet(tablePath)) catch { case _: Exception => None }
-    val merged = existing match {
+    val merged = MergeWriter.readIfPresent(spark, tablePath) match {
       case Some(ex) =>
         MergeWriter.upsert(ex.withColumn("src_order", lit(-1L)),
           incoming, Seq("pdf_name"), Seq(col("src_order")))

@@ -127,8 +127,10 @@ class PartitionedSwapSpec extends AnyFunSuite with SparkSpec {
     val (tfT, docT) = (s"$root/tf", s"$root/docs")
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma"), (65L, "gamma delta"))
       .toDF("doc_id", "text")
-    graft.streaming.Streams.maintainTfState(docs, tfT, docT)
-    val before = graft.streaming.Streams.tfSnapshot(spark, tfT)
+    graft.streaming.Streams.maintainState(docs, docT,
+      graft.streaming.StateFamily.Tf -> tfT)
+    val before = graft.streaming.Streams.foldState(spark,
+      graft.streaming.StateFamily.Tf, tfT)
       .collect().map(_.toSeq.toList).toSet
     assert(before.nonEmpty)
 
@@ -149,8 +151,10 @@ class PartitionedSwapSpec extends AnyFunSuite with SparkSpec {
     // forget doc 2 (pt=2): entry repair must first restore pt=1, or docs
     // 1 and 65 would be invisible... and with doc 2's partition the only
     // touched one, the BUG this pins is the snapshot losing pt=1 forever
-    graft.streaming.Streams.forgetTfState(spark, Seq(2L).toDF("doc_id"), tfT, docT)
-    val after = graft.streaming.Streams.tfSnapshot(spark, tfT)
+    graft.streaming.Streams.forgetState(spark, Seq(2L).toDF("doc_id"), docT,
+      graft.streaming.StateFamily.Tf -> tfT)
+    val after = graft.streaming.Streams.foldState(spark,
+      graft.streaming.StateFamily.Tf, tfT)
       .collect().map(_.toSeq.toList).toSet
     assert(after == before.filterNot(_.head == 2L),
       "crashed publish not healed before the forget's survivor read")

@@ -77,15 +77,16 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
       .toDF("doc_id", "source", "text")
     for (b <- Seq(degenerate, empty, allBad)) {
       Streams.maintainScoreState(b, s"$root/ref", s"$root/scores", s"$root/docsS")
-      Streams.maintainTfState(b.select($"doc_id", $"text"),
-        s"$root/tf", s"$root/docsT")
-      Streams.maintainFeatureState(b.select($"doc_id", $"text"),
-        s"$root/tstat", s"$root/m", s"$root/labels", s"$root/docsF")
+      Streams.maintainState(b.select($"doc_id", $"text"), s"$root/docsT",
+        StateFamily.Tf -> s"$root/tf")
+      Streams.maintainState(b.select($"doc_id", $"text"), s"$root/docsF",
+        StateFamily.Tstat -> s"$root/tstat", StateFamily.M -> s"$root/m",
+        StateFamily.Labels -> s"$root/labels")
     }
     // the real row advanced, degenerate rows broke nothing: the tf
     // snapshot holds exactly the real doc's tokens, the score snapshot
     // holds its (sole) scored row, the training frame its feature row
-    assert(Streams.tfSnapshot(spark, s"$root/tf")
+    assert(Streams.foldState(spark, StateFamily.Tf, s"$root/tf")
       .select($"tok").collect().map(_.getString(0)).toSet
       == Set("real", "words", "here"))
     assert(Streams.scoreSnapshot(spark, s"$root/scores")
@@ -102,8 +103,10 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
     // write only its tombstones, and leave a readable (forward-blocking)
     // doc store — a deletion request must never require prior arrivals
     Streams.forgetScoreState(spark, ids, s"$root/sc", s"$root/d1")
-    Streams.forgetTfState(spark, ids, s"$root/tf", s"$root/d2")
-    Streams.forgetFeatureState(spark, ids, s"$root/ts", s"$root/m", s"$root/lb", s"$root/d3")
+    Streams.forgetState(spark, ids, s"$root/d2", StateFamily.Tf -> s"$root/tf")
+    Streams.forgetState(spark, ids, s"$root/d3",
+      StateFamily.Tstat -> s"$root/ts", StateFamily.M -> s"$root/m",
+      StateFamily.Labels -> s"$root/lb")
     Streams.forgetSpanState(spark, ids, s"$root/gr", s"$root/cn", s"$root/rp", s"$root/d4")
     Streams.forgetState(spark, ids, s"$root/d5", StateFamily.Mix -> s"$root/mx")
     Streams.forgetState(spark, ids, s"$root/d6",
@@ -129,9 +132,10 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
       .toDF("doc_id", "text")
     for (b <- Seq(degenerate, degenerate.limit(0),
         Seq((3L, null: String), (4L, "")).toDF("doc_id", "text")))
-      Streams.maintainTfState(b, s"$root/tf", s"$root/dl", s"$root/docsT")
+      Streams.maintainState(b, s"$root/docsT",
+        StateFamily.Tf -> s"$root/tf", StateFamily.Dl -> s"$root/dl")
     // the real row advanced both tables; serve == derived over them
-    assert(Streams.dlSnapshot(spark, s"$root/dl")
+    assert(Streams.foldState(spark, StateFamily.Dl, s"$root/dl")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((2L, 3L)))
     val w = Seq((0L, "real missingtok")).toDF("query_id", "qtext")
     assert(Streams.bm25ServeSnapshot(spark, s"$root/tf", s"$root/dl", w, 3)
@@ -146,15 +150,16 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
     // the three-table maintainer under the same degenerate batches
     for (b <- Seq(degenerate, degenerate.limit(0),
         Seq((3L, null: String), (4L, "")).toDF("doc_id", "text")))
-      Streams.maintainTfState(b, s"$root/tf3", s"$root/dl3", s"$root/tok3",
-        s"$root/docsT3")
+      Streams.maintainState(b, s"$root/docsT3",
+        StateFamily.Tf -> s"$root/tf3", StateFamily.Dl -> s"$root/dl3",
+        StateFamily.TokTf -> s"$root/tok3")
     assert(Streams.bm25ServeTokSnapshot(spark, s"$root/tok3", s"$root/dl3",
         w, 3).collect().map(_.toSeq.toList).toList
       == Streams.bm25Snapshot(spark, s"$root/tf3", w, 3)
         .collect().map(_.toSeq.toList).toList)
     // dl-overload forget over absent dl table: tombstones land, no throw
-    Streams.forgetTfState(spark, Seq(7L).toDF("doc_id"),
-      s"$root/tf2", s"$root/dl2", s"$root/docsT2")
+    Streams.forgetState(spark, Seq(7L).toDF("doc_id"), s"$root/docsT2",
+      StateFamily.Tf -> s"$root/tf2", StateFamily.Dl -> s"$root/dl2")
     assert(spark.read.parquet(s"$root/docsT2").select("doc_id")
       .collect().map(_.getLong(0)).toSet == Set(7L))
 

@@ -32,7 +32,8 @@ class FeatureStateSpec extends AnyFunSuite with SparkSpec {
     val (tT, mT, lT, docT) = (s"$root/tstat", s"$root/m", s"$root/labels",
       s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainFeatureState(df(b), tT, mT, lT, docT)
+      Streams.maintainState(df(b), docT,
+        StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
     def got() = Streams.trainingSnapshot(spark, tT, mT, lT)
       .collect().map(_.toSeq.toList).toSet
     assert(got() == want(all), "training frame != batch features over the arrivals")
@@ -58,7 +59,8 @@ class FeatureStateSpec extends AnyFunSuite with SparkSpec {
     assert(got() == want(all), "replayed delta rows double-counted")
 
     // redelivery of an already-seen batch is a no-op
-    Streams.maintainFeatureState(df(all.take(150)), tT, mT, lT, docT)
+    Streams.maintainState(df(all.take(150)), docT,
+      StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
     assert(got() == want(all), "redelivered batch re-rolled")
 
     // forget: every other row per source; the LM shifts, and at least
@@ -67,7 +69,8 @@ class FeatureStateSpec extends AnyFunSuite with SparkSpec {
     val neverSeen = 3000000L
     val forgot = all.map(_._1).filter(id => (id / 20) % 2 == 0).toSet + neverSeen
     val before = got()
-    Streams.forgetFeatureState(spark, forgot.toSeq.toDF("doc_id"), tT, mT, lT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
     val remaining = all.filter(t => !forgot.contains(t._1))
     assert(got() == want(remaining), "forget != batch features over the survivors")
     val survivorRowsBefore = before.filter(r =>
@@ -76,13 +79,16 @@ class FeatureStateSpec extends AnyFunSuite with SparkSpec {
       "no survivor feature shifted — the LM cross-doc effect is untested")
 
     // re-ingest of forgotten docs (and the never-seen id) is a no-op
-    Streams.maintainFeatureState(
+
+    Streams.maintainState(
       df(all.filter(t => forgot.contains(t._1)).take(10)
-        :+ (neverSeen -> "resurrected text")), tT, mT, lT, docT)
+        :+ (neverSeen -> "resurrected text")), docT,
+      StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
     assert(got() == want(remaining), "a forgotten doc re-entered the state")
 
     // idempotent re-run
-    Streams.forgetFeatureState(spark, forgot.toSeq.toDF("doc_id"), tT, mT, lT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
     assert(got() == want(remaining), "forget re-run diverged")
   }
 
@@ -97,7 +103,8 @@ class FeatureStateSpec extends AnyFunSuite with SparkSpec {
     val (tT, mT, lT, docT) = (s"$root/tstat", s"$root/m", s"$root/labels",
       s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainFeatureState(df(b), tT, mT, lT, docT)
+      Streams.maintainState(df(b), docT,
+        StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
 
     def inventory(table: String): Map[String, Set[(String, Long, Long)]] = {
       val base = new java.io.File(table)
@@ -113,8 +120,8 @@ class FeatureStateSpec extends AnyFunSuite with SparkSpec {
       "only one partition materialized — pin is vacuous")
 
     val victim = 10L
-    Streams.forgetFeatureState(spark, Seq(victim).toDF("doc_id"),
-      tT, mT, lT, docT)
+    Streams.forgetState(spark, Seq(victim).toDF("doc_id"), docT,
+      StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
     val touched = s"pt=${victim % Streams.TF_PARTITIONS}"
     tables.foreach { t =>
       val after = inventory(t)
@@ -127,7 +134,8 @@ class FeatureStateSpec extends AnyFunSuite with SparkSpec {
     }
 
     // compaction preserves the partitioned layout and the snapshot
-    Streams.compactFeatures(spark, tT, mT, lT)
+    Streams.compactState(spark, docT,
+      StateFamily.Tstat -> tT, StateFamily.M -> mT, StateFamily.Labels -> lT)
     tables.foreach(t => assert(inventory(t).nonEmpty,
       s"compaction flattened the pt layout of $t"))
     val want = {

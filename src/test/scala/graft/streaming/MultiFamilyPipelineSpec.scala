@@ -44,8 +44,8 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
       Streams.maintainState(b.select($"doc_id", $"text"), t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
       Streams.maintainScoreState(b, t("ref"), t("scores"), t("sdocs"))
-      Streams.maintainTfState(b.select($"doc_id", $"text"),
-        t("tf"), t("tdocs"))
+      Streams.maintainState(b.select($"doc_id", $"text"), t("tdocs"),
+        StateFamily.Tf -> t("tf"))
       Streams.maintainState(b.select($"doc_id", $"text"), t("cdocs"),
         StateFamily.CmsCells -> t("cells"), StateFamily.Vocab -> t("vocab"))
       Streams.maintainState(b, t("hdocs"), StateFamily.Hll -> t("regs"))
@@ -131,7 +131,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
       Streams.forgetState(spark, fDf, t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
       Streams.forgetScoreState(spark, fDf, t("scores"), t("sdocs"))
-      Streams.forgetTfState(spark, fDf, t("tf"), t("tdocs"))
+      Streams.forgetState(spark, fDf, t("tdocs"), StateFamily.Tf -> t("tf"))
       Streams.forgetState(spark, fDf, t("cdocs"),
         StateFamily.Vocab -> t("vocab"), StateFamily.CmsCells -> t("cells"))
       Streams.forgetState(spark, fDf, t("hdocs"), StateFamily.Hll -> t("regs"))
@@ -156,8 +156,8 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     Streams.maintainState(surv.select($"doc_id", $"text"), t("xdocsR"),
       StateFamily.ExactDedup -> t("xstatsR"))
     Streams.maintainScoreState(surv, t("ref"), t("scoresR"), t("sdocsR"))
-    Streams.maintainTfState(surv.select($"doc_id", $"text"),
-      t("tfR"), t("tdocsR"))
+    Streams.maintainState(surv.select($"doc_id", $"text"), t("tdocsR"),
+      StateFamily.Tf -> t("tfR"))
     Streams.maintainState(surv.select($"doc_id", $"text"), t("cdocsR"),
       StateFamily.CmsCells -> t("cellsR"), StateFamily.Vocab -> t("vocabR"))
     Streams.maintainState(surv, t("hdocsR"), StateFamily.Hll -> t("regsR"))
@@ -244,7 +244,8 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
       Streams.maintainState(bd.select($"doc_id", $"text"), t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
       Streams.maintainScoreState(bd, t("ref"), t("scores"), t("sdocs"))
-      Streams.maintainTfState(bd.select($"doc_id", $"text"), t("tf"), t("tdocs"))
+      Streams.maintainState(bd.select($"doc_id", $"text"), t("tdocs"),
+        StateFamily.Tf -> t("tf"))
       Streams.maintainState(bd.select($"doc_id", $"text"), t("cdocs"),
         StateFamily.CmsCells -> t("cells"), StateFamily.Vocab -> t("vocab"))
       Streams.maintainState(bd, t("hdocs"), StateFamily.Hll -> t("regs"))
@@ -278,7 +279,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
       Streams.forgetState(spark, fd, t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
       Streams.forgetScoreState(spark, fd, t("scores"), t("sdocs"))
-      Streams.forgetTfState(spark, fd, t("tf"), t("tdocs"))
+      Streams.forgetState(spark, fd, t("tdocs"), StateFamily.Tf -> t("tf"))
       Streams.forgetState(spark, fd, t("cdocs"),
         StateFamily.Vocab -> t("vocab"), StateFamily.CmsCells -> t("cells"))
       Streams.forgetState(spark, fd, t("hdocs"), StateFamily.Hll -> t("regs"))
@@ -310,8 +311,8 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     Streams.maintainState(survDocs.select($"doc_id", $"text"), t("xdocsR"),
       StateFamily.ExactDedup -> t("xstatsR"))
     Streams.maintainScoreState(survDocs, t("ref"), t("scoresR"), t("sdocsR"))
-    Streams.maintainTfState(survDocs.select($"doc_id", $"text"),
-      t("tfR"), t("tdocsR"))
+    Streams.maintainState(survDocs.select($"doc_id", $"text"), t("tdocsR"),
+      StateFamily.Tf -> t("tfR"))
     Streams.maintainState(survDocs.select($"doc_id", $"text"), t("cdocsR"),
       StateFamily.CmsCells -> t("cellsR"), StateFamily.Vocab -> t("vocabR"))
     Streams.maintainState(survDocs, t("hdocsR"), StateFamily.Hll -> t("regsR"))

@@ -31,7 +31,11 @@ class StateFamilyContractSpec extends AnyFunSuite with SparkSpec
       StateFamily.ExactDedup -> "xstats", StateFamily.Chunk -> "chunks"),
     "source store: mix" -> Seq(StateFamily.Mix -> "counts"),
     "source+text store: hll" -> Seq(StateFamily.Hll -> "regs"),
-    "source+v store: quantile" -> Seq(StateFamily.Quantile -> "qs"))
+    "source+v store: quantile" -> Seq(StateFamily.Quantile -> "qs"),
+    "text store: tf, dl, tok" -> Seq(StateFamily.Tf -> "tf",
+      StateFamily.Dl -> "dl", StateFamily.TokTf -> "tok"),
+    "text store: tstat, m, labels" -> Seq(StateFamily.Tstat -> "tstat",
+      StateFamily.M -> "m", StateFamily.Labels -> "labels"))
 
   /** 40 generated docs (5 sources, a few with no measurement) plus
     * clones of the 4 lowest ids arriving in the later batch (cross-batch
@@ -87,12 +91,12 @@ class StateFamilyContractSpec extends AnyFunSuite with SparkSpec
         assert(g == w, s"$n: $what") }
 
     // (2) crash: b1's deltas landed (the rows the advance writes, under
-    // the same key), its guard append did not; (3) a compaction runs
-    // while it is pending; then b1 redelivers
+    // the same key), its guard append did not — an advance whose guard
+    // goes to a throwaway store; (3) a compaction runs while it is
+    // pending; then b1 redelivers
     val t = newRoot("a")
     ingest(t, b0)
-    fams.foreach { case (f, n) =>
-      f.delta(rows(b1), b1.min).write.mode("append").parquet(t(n)) }
+    Streams.maintainState(rows(b1), t("crashed-guard"), tables(t): _*)
     compact(t)
     ingest(t, b1)
     // (1) redelivery of an ingested batch writes nothing
@@ -105,8 +109,23 @@ class StateFamilyContractSpec extends AnyFunSuite with SparkSpec
     fams.zip(s0).foreach { case ((_, n), s) => assert(s.nonEmpty, s"$n: empty") }
     check(folded(t), s0, "crash replay across a compaction != from-scratch build")
 
-    // (4) forget == a from-scratch build over the survivors
+    // (4) forget == a from-scratch build over the survivors; a bucketed
+    // table's buckets that hold no forgotten row keep their files
+    def bucketFiles(n: String, b: String) = new java.io.File(t(n)).listFiles()
+      .filter(_.getName.startsWith(s"$b=")).map(d => d.getName ->
+        d.listFiles().map(f => (f.getName, f.lastModified())).toSet).toMap
+    val bucketed = fams.flatMap { case (f, n) => f.bucket.map(b => (n, b.name)) }
+    val filesBefore = bucketed.map { case (n, b) => n -> bucketFiles(n, b) }.toMap
+    val holding = bucketed.map { case (n, b) => n -> spark.read.parquet(t(n))
+      .filter($"doc_id".isin(forgot: _*)).select(col(b).cast("string"))
+      .distinct().collect().map(r => s"$b=${r.getString(0)}").toSet }.toMap
     forget(t)
+    bucketed.foreach { case (n, b) =>
+      val untouched = filesBefore(n).keySet -- holding(n)
+      assert(untouched.nonEmpty, s"$n: every bucket holds a forgotten row — pin vacuous")
+      untouched.foreach { d => assert(bucketFiles(n, b).get(d) == filesBefore(n).get(d),
+        s"$n: bucket $d holds no forgotten row but was rewritten") }
+    }
     val w = newRoot("c")
     ingest(w, ids.filterNot(forgot.toSet))
     val s1 = folded(w)
@@ -116,16 +135,20 @@ class StateFamilyContractSpec extends AnyFunSuite with SparkSpec
     // (5) a second forget, re-ingest of the forgotten ids (the ghost
     // included) and a post-forget compaction change nothing; every sum
     // key is committed by now, so the compaction folds each table to the
-    // reserved key alone
+    // reserved key alone, and an idempotent table to its own fold
     forget(t)
     ingest(t, forgot)
     compact(t)
     check(folded(t), s1, "forget re-run, re-ingest or compaction moved the state")
-    fams.foreach {
-      case (StateFamily(_, _, _, _: StateFamily.Sum, _), n) =>
-        assert(spark.read.parquet(t(n)).select("batch_key").distinct().count() == 1,
-          s"$n: compaction left committed keys unfolded")
-      case _ =>
+    fams.foreach { case (f, n) =>
+      f.fold match {
+        case _: StateFamily.Sum =>
+          assert(spark.read.parquet(t(n)).select("batch_key").distinct().count() == 1,
+            s"$n: compaction left committed keys unfolded")
+        case _: StateFamily.Idempotent =>
+          assert(spark.read.parquet(t(n)).count() ==
+            Streams.foldState(spark, f, t(n)).count(), s"$n: compaction left rows unfolded")
+      }
     }
   }
 }

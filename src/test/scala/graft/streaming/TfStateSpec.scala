@@ -28,7 +28,7 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     val root = Files.createTempDirectory("tf-state").toString
     val (tfT, docT) = (s"$root/tf", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainTfState(df(b), tfT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.Tf -> tfT)
     def got() = Streams.bm25Snapshot(spark, tfT)
       .collect().map(_.toSeq.toList).toList
     assert(got() == want(all), "maintained bm25 != ta18 over the arrivals")
@@ -46,11 +46,11 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     assert(got() == want(all), "replayed tf rows double-counted")
 
     // redelivery of an already-seen batch is a no-op
-    Streams.maintainTfState(df(all.take(150)), tfT, docT)
+    Streams.maintainState(df(all.take(150)), docT, StateFamily.Tf -> tfT)
     assert(got() == want(all), "redelivered batch re-rolled")
 
     // compaction collapses the duplicates, snapshot-invariant
-    Streams.compactTf(spark, tfT)
+    Streams.compactState(spark, docT, StateFamily.Tf -> tfT)
     assert(got() == want(all), "compaction drifted")
     assert(spark.read.parquet(tfT).groupBy($"doc_id", $"tok")
       .count().filter($"count" > 1).isEmpty, "duplicate rows survived compaction")
@@ -59,7 +59,7 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     val neverSeen = 3000000L
     val forgot = all.map(_._1).filter(_ % 5 == 0).toSet + neverSeen
     val fDf = forgot.toSeq.toDF("doc_id")
-    Streams.forgetTfState(spark, fDf, tfT, docT)
+    Streams.forgetState(spark, fDf, docT, StateFamily.Tf -> tfT)
     val remaining = all.filter(t => !forgot.contains(t._1))
     assert(got() == want(remaining), "forget != ta18 over the survivors")
     // text nulled, ids kept
@@ -68,13 +68,15 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
       "tombstone set != forgotten set")
 
     // re-ingest of forgotten docs (and the never-seen id) is a no-op
-    Streams.maintainTfState(
+
+    Streams.maintainState(
       df(all.filter(t => forgot.contains(t._1)).take(10)
-        :+ (neverSeen -> "resurrected text")), tfT, docT)
+        :+ (neverSeen -> "resurrected text")), docT,
+      StateFamily.Tf -> tfT)
     assert(got() == want(remaining), "a forgotten doc re-entered the index")
 
     // idempotent re-run
-    Streams.forgetTfState(spark, fDf, tfT, docT)
+    Streams.forgetState(spark, fDf, docT, StateFamily.Tf -> tfT)
     assert(got() == want(remaining), "forget re-run diverged")
   }
 
@@ -91,7 +93,7 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     val root = Files.createTempDirectory("tf-serve").toString
     val (tfT, dlT, docT) = (s"$root/tf", s"$root/dl", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainTfState(df(b), tfT, dlT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.Tf -> tfT, StateFamily.Dl -> dlT)
     def derived() = Streams.bm25Snapshot(spark, tfT, workload, 4)
       .collect().map(_.toSeq.toList).toList
     def served() = Streams.bm25ServeSnapshot(spark, tfT, dlT, workload, 4)
@@ -117,7 +119,8 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
 
     // forget through the dl overload: both tables pruned, equality holds
     val forgot = all.map(_._1).filter(_ % 7 == 0).toSet
-    Streams.forgetTfState(spark, forgot.toSeq.toDF("doc_id"), tfT, dlT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Tf -> tfT, StateFamily.Dl -> dlT)
     assert(spark.read.parquet(dlT).filter($"doc_id".isin(forgot.toSeq: _*))
       .isEmpty, "forgotten dl rows survived")
     assert(served() == derived(), "serving path != derived path after forget")
@@ -128,13 +131,14 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     assert(served() == wantRemaining, "serve != from-scratch over survivors")
 
     // compaction of both tables is snapshot-invariant
-    Streams.compactTf(spark, tfT, dlT)
+    Streams.compactState(spark, docT, StateFamily.Tf -> tfT, StateFamily.Dl -> dlT)
     assert(served() == wantRemaining, "compaction drifted the serving path")
     assert(spark.read.parquet(dlT).groupBy($"doc_id").count()
       .filter($"count" > 1).isEmpty, "duplicate dl rows survived compaction")
 
     // idempotent forget re-run
-    Streams.forgetTfState(spark, forgot.toSeq.toDF("doc_id"), tfT, dlT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Tf -> tfT, StateFamily.Dl -> dlT)
     assert(served() == wantRemaining, "forget re-run diverged")
 
     // a tf row with NO dl row (ingest through a non-dl path while
@@ -168,7 +172,8 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     val root = Files.createTempDirectory("tf-tok").toString
     val (tfT, dlT, tokT, docT) = (s"$root/tf", s"$root/dl", s"$root/tok", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainTfState(df(b), tfT, dlT, tokT, docT)
+      Streams.maintainState(df(b), docT,
+        StateFamily.Tf -> tfT, StateFamily.Dl -> dlT, StateFamily.TokTf -> tokT)
     def derived() = Streams.bm25Snapshot(spark, tfT, workload, 4)
       .collect().map(_.toSeq.toList).toList
     def servedTok() = Streams.bm25ServeTokSnapshot(spark, tokT, dlT, workload, 4)
@@ -197,7 +202,8 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
 
     // forget through the tok overload: all three projections pruned
     val forgot = all.map(_._1).filter(_ % 9 == 0).toSet
-    Streams.forgetTfState(spark, forgot.toSeq.toDF("doc_id"), tfT, dlT, tokT, docT)
+    Streams.forgetState(spark, forgot.toSeq.toDF("doc_id"), docT,
+      StateFamily.Tf -> tfT, StateFamily.Dl -> dlT, StateFamily.TokTf -> tokT)
     assert(spark.read.parquet(tokT).filter($"doc_id".isin(forgot.toSeq: _*))
       .isEmpty, "forgotten rows survived in the tok projection")
     val wantRemaining = graft.queries.TextOps.bm25TopK(
@@ -207,7 +213,8 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     assert(servedTok() == wantRemaining, "tok serve != from-scratch over survivors")
 
     // three-table compaction is snapshot-invariant and dedups the copy
-    Streams.compactTf(spark, tfT, dlT, tokT)
+    Streams.compactState(spark, docT,
+      StateFamily.Tf -> tfT, StateFamily.Dl -> dlT, StateFamily.TokTf -> tokT)
     assert(servedTok() == wantRemaining, "compaction drifted the tok serve")
     assert(spark.read.parquet(tokT).groupBy($"doc_id", $"tok").count()
       .filter($"count" > 1).isEmpty, "duplicate rows survived tok compaction")
@@ -223,7 +230,8 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     val root = Files.createTempDirectory("tf-tok-local").toString
     val (tfT, dlT, tokT, docT) = (s"$root/tf", s"$root/dl", s"$root/tok", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainTfState(df(b), tfT, dlT, tokT, docT)
+      Streams.maintainState(df(b), docT,
+        StateFamily.Tf -> tfT, StateFamily.Dl -> dlT, StateFamily.TokTf -> tokT)
 
     def inventory(): Map[String, Set[(String, Long, Long)]] = {
       val base = new java.io.File(tokT)
@@ -247,8 +255,8 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     assert(expectedTbs.nonEmpty && expectedTbs.size < before.size,
       s"victim $victim touches ${expectedTbs.size} of ${before.size} buckets — prune pin vacuous")
 
-    Streams.forgetTfState(spark, Seq(victim).toDF("doc_id"),
-      tfT, dlT, tokT, docT)
+    Streams.forgetState(spark, Seq(victim).toDF("doc_id"), docT,
+      StateFamily.Tf -> tfT, StateFamily.Dl -> dlT, StateFamily.TokTf -> tokT)
     val after = inventory()
     before.keys.filterNot(expectedTbs).foreach { d =>
       assert(after(d) == before(d),
@@ -267,32 +275,32 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     assert(got == want, "bucket-local forget drifted from a fresh projection")
   }
 
-  test("three-table forget FAILS LOUDLY when the tf table is unreadable but the tok projection exists (r17 verdict: no silent skip)") {
-    import org.apache.spark.sql.functions._
+  test("tok-projection forget reads only the doc store: with the tf table gone, the projection still equals a fresh one over the survivors") {
     import spark.implicits._
     val all = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select($"doc_id", $"text")
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).take(50)
-    val root = Files.createTempDirectory("tf-tok-loud").toString
+    val root = Files.createTempDirectory("tf-tok-alone").toString
     val (tfT, dlT, tokT, docT) = (s"$root/tf", s"$root/dl", s"$root/tok", s"$root/docs")
-    Streams.maintainTfState(all.toSeq.toDF("doc_id", "text"), tfT, dlT, tokT, docT)
-    // break the pairing invariant on purpose: delete the doc-bucketed tf
-    // table (the source the touched-tb derivation reads) while the tok
-    // projection still holds the forgotten doc's rows
+    Streams.maintainState(all.toSeq.toDF("doc_id", "text"), docT,
+      StateFamily.Tf -> tfT, StateFamily.Dl -> dlT, StateFamily.TokTf -> tokT)
+    // delete the doc-bucketed tf table: the touched tb buckets come from
+    // the forgotten docs' own text in the store, not from the tf rows
     def rmRf(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmRf)); f.delete(); ()
     }
     rmRf(new java.io.File(tfT))
-    val err = intercept[IllegalArgumentException] {
-      Streams.forgetTfState(spark, Seq(all.head._1).toDF("doc_id"),
-        tfT, dlT, tokT, docT)
-    }
-    assert(err.getMessage.contains("unreadable"),
-      s"missing-tf forget did not fail loudly: $err")
-    // and the tok projection was not touched by the refused run
-    assert(!spark.read.parquet(tokT)
-      .filter($"doc_id" === all.head._1).isEmpty,
-      "refused forget still mutated the tok projection")
+    val victims = all.map(_._1).filter(_ % 3 == 0).toSet
+    Streams.forgetState(spark, victims.toSeq.toDF("doc_id"), docT,
+      StateFamily.Tf -> tfT, StateFamily.Dl -> dlT, StateFamily.TokTf -> tokT)
+    val got = spark.read.parquet(tokT)
+      .select($"doc_id", $"tok", $"tf").distinct()
+      .collect().map(_.toSeq.toList).toSet
+    val want = graft.queries.TextOps.tfRollup(
+        all.filterNot(t => victims(t._1)).toSeq.toDF("doc_id", "text"))
+      .collect().map(_.toSeq.toList).toSet
+    assert(want.nonEmpty && victims.nonEmpty, "vacuous pin")
+    assert(got == want, "tok projection != fresh projection over the survivors")
   }
 
   test("forgetTfState touches ONLY the forgotten ids' partitions — untouched partition files byte-identical in place") {
@@ -305,7 +313,7 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     val root = Files.createTempDirectory("tf-parts").toString
     val (tfT, docT) = (s"$root/tf", s"$root/docs")
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainTfState(df(b), tfT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.Tf -> tfT)
 
     // per-partition file inventory: (relative path, length, mtime)
     def inventory(): Map[String, Set[(String, Long, Long)]] = {
@@ -320,7 +328,7 @@ class TfStateSpec extends AnyFunSuite with SparkSpec
     assert(before.size > 1, "only one partition materialized — pin is vacuous")
 
     val victim = 10L
-    Streams.forgetTfState(spark, Seq(victim).toDF("doc_id"), tfT, docT)
+    Streams.forgetState(spark, Seq(victim).toDF("doc_id"), docT, StateFamily.Tf -> tfT)
     val after = inventory()
     val touched = s"pt=${victim % Streams.TF_PARTITIONS}"
     before.keys.filterNot(_ == touched).foreach { d =>

@@ -14,8 +14,9 @@ import graft.SparkSpec
   * lat_bad=0, lon_bad=0; only W11920.pdf lacks coordinates.
   *
   * Inputs per leg: the golden-value legs read `/root/reference` and fail
-  * where it is absent. "latitude lands as DECIMAL(12,9)" and "--limit takes
-  * the first N file-order rows" assert only load mechanics, so they read
+  * where it is absent. "latitude lands as DECIMAL(12,9)", the load-mechanics
+  * leg and "--limit takes the first N file-order rows" assert only load
+  * mechanics, so they read
   * [[WellsCsvs.pair]]: the reference CSVs where present, else the committed
   * fixture (FIXTURES.md §1a). The last two legs write their own CSVs. */
 class LoaderGoldenSpec extends AnyFunSuite with SparkSpec {
@@ -85,6 +86,26 @@ class LoaderGoldenSpec extends AnyFunSuite with SparkSpec {
     val orphans = spark.read.parquet(s"$root/well_stimulation")
       .join(spark.read.parquet(s"$root/well_header"), Seq("pdf_name"), "left_anti")
     assert(orphans.count() == 0)
+  }
+
+  test("load mechanics: a second run keeps both counts, no stim row lacks a header, the typed view nulls dirty dates") {
+    val (mechanicsHeader, mechanicsStim) = WellsCsvs.pair
+    val root = Files.createTempDirectory("wells-load-mechanics").toString
+    def counts() = (spark.read.parquet(s"$root/well_header").count(),
+      spark.read.parquet(s"$root/well_stimulation").count())
+    Loader.run(spark, mechanicsHeader, mechanicsStim, root)
+    val first = counts()
+    assert(first._1 > 0 && first._2 > 0)
+    // merge idempotence: the upsert replaces, so a re-run keeps the counts
+    Loader.run(spark, mechanicsHeader, mechanicsStim, root)
+    assert(counts() == first)
+    val orphans = spark.read.parquet(s"$root/well_stimulation")
+      .join(spark.read.parquet(s"$root/well_header"), Seq("pdf_name"), "left_anti")
+    assert(orphans.count() == 0)
+    val typed = TypedViews.typedStimulation(Loader.loadStim(spark, mechanicsStim))
+    val dirty = typed.filter(col("date_simulated_raw").isin("11/E/2013", "07/1212015"))
+    assert(dirty.count() == 2)
+    assert(dirty.filter(col("date_simulated").isNotNull).count() == 0)
   }
 
   test("--limit takes the first N file-order rows (P7)") {

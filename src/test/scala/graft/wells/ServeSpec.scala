@@ -15,8 +15,9 @@ import graft.SparkSpec
   *  - "/wells serves the 76-row JSON array…" is a golden-value leg: it
   *    loads the reference's shipped CSVs from `/root/reference` and fails
   *    where they are absent.
-  *  - "serving without a static dir…", the cache/swap leg and the
-  *    single-flight leg assert only serving behaviour, so they load
+  *  - the static/exact-route leg, "serving without a static dir…", the
+  *    cache/swap leg and the single-flight leg assert only serving
+  *    behaviour, so they load
   *    [[WellsCsvs.pair]]: the reference CSVs where present, else the
   *    committed fixture (FIXTURES.md §1a).
   *  - The publish race leg generates its own tables. */
@@ -66,6 +67,30 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
       // must not serve the target
       Files.createSymbolicLink(staticDir.resolve("leak.html"),
         java.nio.file.Path.of("/etc/hostname"))
+      assert(get(port, "/leak.html").statusCode() == 404)
+    } finally server.stop(0)
+  }
+
+  test("static and exact routes: / and /map resolve; prefix, traversal and symlink escapes 404") {
+    val staticDir = Files.createTempDirectory("static")
+    Files.writeString(staticDir.resolve("index.html"), "<html>index</html>")
+    Files.writeString(staticDir.resolve("map.html"), "<html>map</html>")
+    val outside = Files.createTempFile("outside", ".html")
+    Files.writeString(outside, "outside the static root")
+    Files.createSymbolicLink(staticDir.resolve("leak.html"), outside)
+    val server = Serve.start(spark, mechanicsRoot, 0, Some(staticDir.toString))
+    try {
+      val port = server.getAddress.getPort
+      val index = get(port, "/")
+      assert(index.statusCode() == 200 && index.body().contains("index"))
+      val map = get(port, "/map")
+      assert(map.statusCode() == 200 && map.body().contains("map"))
+      assert(get(port, "/wells").statusCode() == 200)
+      assert(get(port, "/wellsfoo").statusCode() == 404)
+      assert(get(port, "/wells/1").statusCode() == 404)
+      // the static dir and the outside file share the temp root
+      assert(get(port, s"/..%2F${outside.getFileName}").statusCode() == 404)
+      assert(get(port, "/..%2F..%2Fetc%2Fpasswd").statusCode() == 404)
       assert(get(port, "/leak.html").statusCode() == 404)
     } finally server.stop(0)
   }
