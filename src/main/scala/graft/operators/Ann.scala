@@ -259,7 +259,7 @@ object Ann {
     * the miss probability for a neighbor colliding in all `tables`
     * tables is ~(1 − cap/|bucket|)^tables — raise `tables` or the cap
     * to buy it back. Default None = recall-maximal, the vs04 gate's
-    * oracle-pinned configuration (ScaleProbe measures the capped kernel
+    * oracle-pinned configuration (the former ScaleProbe measured the capped kernel
     * beside it). */
   def lshTopK(queries: DataFrame, candidates: DataFrame, idCol: String,
       vecCol: String, k: Int, bits: Int = 8, tables: Int = 4,

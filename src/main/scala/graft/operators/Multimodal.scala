@@ -225,7 +225,7 @@ object Multimodal {
     // batch) index: a (band, v) bucket beyond the cap carries no dedup
     // signal at 16-bit band width and is dropped from CANDIDACY, which
     // bounds the advance at batch × cap instead of batch × standing on a
-    // band-collident corpus (measured in MaintainerProbe: the uncapped
+    // band-collident corpus (measured in the former MaintainerProbe: the uncapped
     // advance grows with the standing store where every other maintainer
     // is flat). The knob trades recall: the ≤ tau completeness guarantee
     // needs every true near-dup cluster under the cap, and because the

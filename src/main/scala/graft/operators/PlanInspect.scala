@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -81,4 +82,12 @@ object PlanInspect {
     * partition filters, rendered. Empty when nothing pruned. */
   def partitionFilters(df: DataFrame): Seq[String] =
     fileScans(df).flatMap(_.partitionFilters.map(_.toString))
+
+  /** Names of every interpreted (CodegenFallback) expression left in the
+    * plan, sorted and distinct: each one is evaluated row by row outside
+    * whole-stage codegen. */
+  def interpreted(p: SparkPlan): Seq[String] =
+    nodes(p).flatMap(_.expressions.flatMap(_.collect {
+      case f: CodegenFallback => f.prettyName
+    })).distinct.sorted
 }

@@ -2558,7 +2558,7 @@ object TextOps {
     * the alternative spills a ~2×-corpus copy to executor local disk,
     * which fails on capacity long before the shuffle would; pass
     * [[localMaterialize]] to trade that spill for the repeated tokenize
-    * when the corpus comfortably fits (HeavyProbe measures the trade at
+    * when the corpus comfortably fits (the former HeavyProbe measured the trade at
     * two corpus sizes — COVERAGE.md table). In the rescan path the
     * support total costs NO extra corpus pass: every CMS hash row
     * conserves the occurrence count (pp30's spec-pinned invariant), so

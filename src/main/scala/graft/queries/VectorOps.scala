@@ -283,7 +283,7 @@ object VectorOps {
     * plan note cites, CODIFIED. The cell-blocked pair kernels
     * ([[knnGraph]], [[semanticDrops]]) cost Σ|cell|² ≈ N²/nlist under
     * balanced cells, so a FIXED quantizer is quadratic in corpus size
-    * (ScaleProbe measures vs13/vs14 at 10.2×/16.1× wall for a 10× corpus
+    * (the former ScaleProbe measured vs13/vs14 at 10.2×/16.1× wall for a 10× corpus
     * at nlist = 8); holding the target CELL SIZE constant —
     * nlist = ⌈N / targetCellSize⌉ — keeps Σ|cell|² ≈ N·targetCellSize
     * ∝ N (the same probe's companion kernels: 2.5×/2.4×/2.1× at 10× with
@@ -795,7 +795,7 @@ object VectorOps {
     * pairs stage co-locates with the postings layout and a cell's work is
     * one partition-local self-join. Σ|cell|² = N²/nlist under balanced
     * cells, so a FIXED quantizer is quadratic in corpus size — the
-    * ScaleProbe row for dd10 measures exactly that regime on purpose —
+    * former ScaleProbe's dd10 row measured exactly that regime on purpose —
     * and the search-side √N heuristic is NOT enough here (N²/√N =
     * N^1.5): a production deployment holds the target CELL SIZE constant
     * (nlist ∝ N), which keeps Σ|cell|² ∝ N; the probe's companion row
@@ -854,7 +854,7 @@ object VectorOps {
   /** dd16 — SemDedup under the PRODUCTION quantizer sizing: dd10's
     * drop-list kernel with nlist = ⌈N/targetCellSize⌉ derived from the
     * corpus count ([[semanticDropsAuto]]) — the configuration the dd10
-    * Scaladoc's cost-model argument and the ScaleProbe nlist ∝ N kernel
+    * Scaladoc's cost-model argument and the former ScaleProbe's nlist ∝ N kernel
     * row describe, now oracle-gated like vs23/vs24/pp36. A different
     * nlist is a different (equally valid) drop list — the SemDedup
     * approximation contract is per-quantizer — so dd10 keeps pinning

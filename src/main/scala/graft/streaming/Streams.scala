@@ -340,8 +340,8 @@ object Streams {
     * monotonic id stream — the common production shape — leaves each
     * advance's guard read O(overlapping files) instead of O(standing);
     * the worst case, fully interleaved ids, degenerates to exactly the
-    * full scan this replaces, which is what the MaintainerProbe's
-    * replica-interleaved batches time). Costs one batch-sized min/max
+    * full scan this replaces, which is what the former MaintainerProbe's
+    * replica-interleaved batches timed). Costs one batch-sized min/max
     * agg — in family with the batchKey agg every advance already runs.
     * An empty batch returns an empty guard without touching it. */
   private def pruneToBatchRange(guard: DataFrame, batch: DataFrame,
@@ -2070,7 +2070,7 @@ object Streams {
     * redelivered degenerate rows re-enter the flow. The codes rebuild
     * re-derives from the POSTINGS table's vectors (codes tables are
     * codes-only by design); precondition: one ingest stream feeds both
-    * tables, the MaintainerProbe deployment.
+    * tables, the former MaintainerProbe's deployment.
     * Crash contract: three swaps, no cross-table transaction — but the
     * whole pass is a pure, id-stable function of (postings content, new
     * parameters), so a crash between swaps is repaired by RE-RUNNING the
@@ -3106,7 +3106,7 @@ object Streams {
     * of a 2-column parquet projection never do. Pass
     * [[graft.queries.TextOps.localMaterialize]] to trade that copy for
     * the repeated scan+dedup when the corpus comfortably fits
-    * (ServeProbe measures both strategies — COVERAGE.md). */
+    * (the former ServeProbe measured both — COVERAGE.md). */
   def bm25ServeSnapshot(spark: SparkSession, tfTable: String,
       dlTable: String, queries: DataFrame, k: Int,
       materialize: DataFrame => DataFrame = identity): DataFrame =

@@ -209,6 +209,7 @@ object Serve {
     server
   }
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.wells.Serve")
   private val SwapRetries = 10
   private val SwapRetryMs = 50L
 
@@ -235,8 +236,7 @@ object Serve {
         catch { case scala.util.control.NonFatal(e) =>
           // the exception goes to the server log only: messages carry
           // filesystem paths and Spark internals no HTTP client should see
-          System.err.println(s"[serve] ${ex.getRequestURI.getPath} failed: $e")
-          e.printStackTrace()
+          log.error(s"${ex.getRequestURI.getPath} failed", e)
           (500, "text/plain",
             "internal error".getBytes(StandardCharsets.UTF_8))
         }

@@ -75,4 +75,24 @@ class MisraGriesSpec extends AnyFunSuite with SparkSpec {
     assert(got.toSeq == ta21.toSeq,
       "MG-pruned result != CMS-pruned result (both must equal the exact rollup)")
   }
+
+  test("all five heavy-hitter plans agree: exact rollup, CMS and MG prunes, each rescanned or checkpointed") {
+    import spark.implicits._
+    import graft.queries.TextOps
+    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    def occ() = TextOps.bigramOcc(docs)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    val total = occ().count()
+    val exact = rows(occ().groupBy($"tok").agg(count(lit(1)).as("n"))
+      .filter($"n" * 1024L > total).orderBy($"n".desc, $"tok"))
+    assert(exact.nonEmpty, "no heavy hitters — vacuous")
+    for ((label, got) <- Seq(
+        "cms_rescan" -> TextOps.cmsHeavyHitters(occ()),
+        "cms_checkpoint" -> TextOps.cmsHeavyHitters(occ(), TextOps.localMaterialize),
+        "mg_rescan" -> TextOps.mgHeavyHitters(occ()),
+        "mg_checkpoint" -> TextOps.mgHeavyHitters(occ(), TextOps.localMaterialize)))
+      assert(rows(got) == exact, s"$label disagrees with the exact rollup")
+  }
 }
+

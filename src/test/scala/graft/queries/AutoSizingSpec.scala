@@ -7,7 +7,7 @@ import graft.SparkSpec
 
 /** The production nlist ∝ N sizing rule, codified as [[VectorOps.autoNlist]]
   * and the auto-sized kNN-graph/SemDedup entry points. The rule itself was
-  * established empirically (ScaleProbe's companion kernels: 8 → 80 cells at
+  * established empirically (the former ScaleProbe's companion kernels: 8 → 80 cells at
   * 10× corpus keeps the builds at 2.1-2.5× wall vs 10-16× at fixed nlist);
   * this spec pins (1) the sizing math and its clamps, and (2) that the auto
   * entries are PLAN-ONLY conveniences — byte-identical results to the manual

@@ -1264,4 +1264,51 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       "tickets must fan out inside a row-local transform, not an explode")
     noTextPayload(exchangePayloads(d))
   }
+
+  test("codegen guard: the r18/r19 native rewrites keep their interpreted-expression sets") {
+    // the gates whose interpreted higher-order encodes were replaced by
+    // native expressions (PQ/SQ encode, cdc_chunk_rows, token_row_stats):
+    // each gate's CodegenFallback names must stay exactly these, so a
+    // rewrite back to a composed transform(...) form fails here
+    val allowed = Map(
+      // its distance-table scoring (dtab, adist) and top-k buffer stay
+      // interpreted; its encode is native
+      "vs08_pq_search" -> Set("aggregate", "lambdafunction",
+        "namedlambdavariable", "topkagg", "transform", "zip_with"),
+      "vs16_pq_train" -> Set.empty[String],
+      "vs21_opq_train" -> Set.empty[String],
+      "mm05_chunk_dedup" -> Set.empty[String],
+      "pp21_incremental_chunks" -> Set.empty[String],
+      "ta16_rule_filter" -> Set.empty[String],
+      "ta19_classifier_train" -> Set.empty[String])
+    val got = allowed.keys.map(g => g -> interpretedOverRun(g)).toMap
+    assert(got == allowed, s"interpreted expressions changed: $got")
+  }
+
+  /** Interpreted-expression names over EVERY plan a gate executes (its
+    * checkpointed and collected frames too, not only the final one), on a
+    * second run: the first builds any once-per-session standing state. */
+  private def interpretedOverRun(name: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.QueryExecution
+    def write(): Unit = df(name).write.format("noop").mode("overwrite").save()
+    write()
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val written = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        interpreted(qe.executedPlan).foreach(seen.add)
+        if (graft.Profile.isNoopWrite(qe)) written.countDown()
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      write()
+      // the write's event is the last of the run on the listener bus
+      assert(written.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"$name: the write's execution never reached the listener")
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSet
+  }
 }

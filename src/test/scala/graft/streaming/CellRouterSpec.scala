@@ -176,7 +176,7 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     val all = df(e.toIndexedSeq)
     val n = graft.queries.VectorOps.normed(all)
     // two legitimately different fixed quantizers (disjoint seed rows —
-    // the MaintainerProbe's rebuild pattern)
+    // the former MaintainerProbe's rebuild pattern)
     val centsA = graft.queries.VectorOps.ivfCentroids(n)
     val centsB = n.filter($"vec_id" >= 8 && $"vec_id" < 16)
       .select($"vec_id".as("cid"), $"q".as("cq"), $"nrm".as("cn"))

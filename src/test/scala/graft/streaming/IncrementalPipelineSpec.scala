@@ -24,13 +24,12 @@ class IncrementalPipelineSpec extends AnyFunSuite with SparkSpec {
     def mergeBatch(batch: DataFrame, batchId: Long): Unit = {
       val (header, _) = Extraction.extractAll(batch)
       val incoming = header.withColumn("src_order", lit(batchId))
-      val merged =
-        try {
-          val existing = batch.sparkSession.read.parquet(table)
-            .withColumn("src_order", lit(-1L))
-          MergeWriter.upsert(existing, incoming, Seq("pdf_name"),
-            Seq(col("src_order")))
-        } catch { case _: Exception => incoming }
+      val merged = MergeWriter.readIfPresent(batch.sparkSession, table) match {
+        case Some(existing) =>
+          MergeWriter.upsert(existing.withColumn("src_order", lit(-1L)),
+            incoming, Seq("pdf_name"), Seq(col("src_order")))
+        case None => incoming
+      }
       MergeWriter.overwriteAtomic(merged.drop("src_order"), table)
     }
 

@@ -104,6 +104,45 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
     } finally server.stop(0)
   }
 
+  test("a failed /wells answers 500 'internal error' and logs the exception at ERROR") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // the session first: starting Spark reconfigures logging, which would
+    // drop an appender added before it
+    val session = spark
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val capture = new AbstractAppender("serve-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+    }
+    capture.start()
+    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("graft.wells.Serve")
+    logger.addAppender(capture)
+    // a table root whose tables hold a part file that is not parquet: the
+    // snapshot is stable and the /wells query fails on every read
+    val broken = Files.createTempDirectory("wells-broken")
+    for (t <- Seq("well_info", "well_stimulation")) {
+      Files.createDirectories(broken.resolve(t))
+      Files.writeString(broken.resolve(t).resolve("part-00000.parquet"), "not parquet")
+    }
+    val server = Serve.start(session, broken.toString, 0, None)
+    try {
+      val r = get(server.getAddress.getPort, "/wells")
+      assert(r.statusCode() == 500)
+      assert(r.body() == "internal error", "the failure's detail reached the client")
+      val logged = events.toArray(Array.empty[LogEvent]).toSeq
+      assert(logged.exists(e => e.getLevel == Level.ERROR &&
+        e.getMessage.getFormattedMessage.contains("/wells") && e.getThrown != null),
+        s"no ERROR event with the exception attached: ${logged.map(_.getMessage)}")
+    } finally {
+      server.stop(0)
+      logger.removeAppender(capture)
+    }
+  }
+
   test("/wells is served from cache (no Spark job per request) and a " +
       "snapshot swap invalidates it") {
     // a fresh table root so the other tests' cache state can't interfere
