@@ -2929,7 +2929,8 @@ object TextOps {
     val st = graft.streaming.Streams
     st.maintainState(b.select(col("doc_id"), col("text")), s"$dir/xdocs",
       graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
-    st.maintainScoreState(b, s"$dir/ref", s"$dir/scores", s"$dir/sdocs")
+    st.maintainState(b, s"$dir/sdocs",
+      graft.streaming.StateFamily.score(s"$dir/ref") -> s"$dir/scores")
     // tf with its dl table: the retrieval leg serves through the
     // maintained-lengths path (bm25ServeSnapshot) — the production
     // shape, whose equality with ta18 TfStateSpec pins
@@ -2955,7 +2956,8 @@ object TextOps {
     val st = graft.streaming.Streams
     st.compactState(s, s"$dir/xdocs",
       graft.streaming.StateFamily.ExactDedup -> s"$dir/xstats")
-    st.compactScores(s, s"$dir/scores")
+    st.compactState(s, s"$dir/sdocs",
+      graft.streaming.StateFamily.Score -> s"$dir/scores")
     st.compactState(s, s"$dir/tdocs",
       graft.streaming.StateFamily.Tf -> s"$dir/tf",
       graft.streaming.StateFamily.Dl -> s"$dir/dl")
@@ -3032,8 +3034,8 @@ object TextOps {
     textFamiliesLegsSql.mkString("", "\nUNION ALL\n", "\nORDER BY family, row")
 
   /** pp34 — the TEXT+VECTOR composite: pp33's five text families PLUS
-    * the IVF vector family ([[graft.streaming.Streams.maintainIvfState]],
-    * pp05's loop) advanced through the SAME two-era ingest — the real
+    * the IVF vector family ([[graft.streaming.StateFamily.IvfSums]] over
+    * the [[graft.streaming.StateFamily.postings]] store, pp05's loop) advanced through the SAME two-era ingest — the real
     * multimodal-pipeline shape, where one arrival loop lands a batch's
     * documents AND their embeddings and every standing store (text and
     * vector alike) advances in the same pass. The text legs reuse
@@ -3069,11 +3071,13 @@ object TextOps {
       val isNewVec = QueryUtils.hex8(concat(lit("ivf:"),
         $"vec_id".cast("string"))) % 5 === 0
       st.buildRefState(docs, s"$dir/ref")
+      val post = graft.streaming.StateFamily.postings(cents)
       for ((bd, bv) <- Seq(
           (docs.filter(!isNewDoc), vecs.filter(!isNewVec)),
           (docs.filter(isNewDoc), vecs.filter(isNewVec)))) {
         textFamiliesIngest(bd, dir)
-        st.maintainIvfState(bv, cents, s"$dir/postings", s"$dir/sums")
+        st.maintainState(bv, post, s"$dir/postings",
+          graft.streaming.StateFamily.IvfSums -> s"$dir/sums")
       }
       textFamiliesCompact(s, dir)
     }

@@ -403,7 +403,7 @@ object VectorOps {
     * [[graft.operators.GroupedTopK]] aggregator (carrying the neighbor's
     * cell id; no WindowExec after the candidates join — PlanSpec pins
     * that). `postings` may be a freshly-assigned frame (vs06) or a
-    * MAINTAINED standing table (pp05 / Streams.maintainIvfState) — the
+    * MAINTAINED standing table (pp05 / StateFamily.postings) — the
     * search is the same either way. */
   private[graft] def ivfSearch(postings: DataFrame, queries: DataFrame,
       cents: DataFrame, nProbe: Int, k: Int): DataFrame = {
@@ -743,7 +743,7 @@ object VectorOps {
     * split derives the standing table, the 20% batch advances it, and the
     * search over the maintained lists must equal vs06 over the FULL
     * corpus — the oracle is vs06's, verbatim.
-    * [[graft.streaming.Streams.maintainIvfState]] is the continuous loop. */
+    * [[graft.streaming.StateFamily.IvfSums]] is the continuous loop. */
   private def pp05(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = normed(embeddings(s, d))
@@ -923,10 +923,10 @@ object VectorOps {
     * row a batch changes — its own dropped vectors plus the standing
     * vectors it gives a new smaller-id witness — re-aggregated over
     * their FULL witness sets. Pure function of (standing, batch)
-    * postings: [[graft.streaming.Streams.maintainIvfState]] upserts its
+    * postings: [[graft.streaming.StateFamily.SemDedupDrops]] appends its
     * output into the continuous drop table, and the crash-replay
     * contract rests on that purity (same fresh batch ⇒ byte-identical
-    * changed rows ⇒ idempotent upsert). */
+    * changed rows, which the latest-wins fold absorbs). */
   private[graft] def semDedupAdvance(standing: DataFrame,
       newCells: DataFrame, tau: Double): DataFrame = {
     val affected = standing.as("x").join(broadcast(newCells).as("y"),
@@ -1018,7 +1018,7 @@ object VectorOps {
 
   /** Per-(cell, dim) exact counts + integer sums over assigned postings —
     * vs07's rollup, extracted as the ONE kernel the batch gate, the
-    * streaming sums delta ([[graft.streaming.Streams.ivfSumsDelta]]) and
+    * streaming sums delta ([[graft.streaming.StateFamily.IvfSums]]) and
     * the crash-simulation spec all consume, so a semantics change here
     * propagates everywhere (the shared-delta-builder precedent). */
   private[graft] def cellDimSums(assigned: DataFrame): DataFrame =
@@ -1408,7 +1408,7 @@ object VectorOps {
     * the corpus per increment is exactly what PQ's in-RAM-index promise
     * forbids at 100 TB). Search over the maintained table must equal
     * vs09 over the full corpus — the oracle is vs09's, verbatim.
-    * [[graft.streaming.Streams.maintainPqCodes]] is the continuous
+    * [[graft.streaming.StateFamily.pqCodes]] is the continuous
     * loop. */
   private def pp14(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1643,7 +1643,7 @@ object VectorOps {
     * its batches and the advance is |batch| row-local encodes + one
     * append. Search over the maintained table must equal vs15 over the
     * full corpus — the oracle is vs15's, verbatim.
-    * [[graft.streaming.Streams.maintainSqCodes]] is the continuous
+    * [[graft.streaming.StateFamily.sqCodes]] is the continuous
     * loop; out-of-bounds late arrivals clamp to the grid edge by
     * [[sqCodes]]'s contract (invisible here, where train saw every
     * row). */
@@ -2558,6 +2558,8 @@ object VectorOps {
     // embeddings scan + quantize + filter (r18, guide §5 caching: reused
     // AND recompute-heavier-than-memory; 8 rows)
     val cents = ivfCentroids(normed(e)).localCheckpoint(true)
+    val post = graft.streaming.StateFamily.postings(cents)
+    val graph = graft.streaming.StateFamily.KnnGraph
     val root = java.nio.file.Files.createTempDirectory("pp39-routed").toString
     val (stageT, postT, graphT) =
       (s"$root/stage", s"$root/postings", s"$root/graph")
@@ -2580,12 +2582,12 @@ object VectorOps {
       // under the merge (see flushCellGroupsBatched)
       Streams.flushCellGroupsBatched(s, stageT, minRows = 100000L,
         maxLag = 1L, curSeq = k.toLong)(rows =>
-        Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3))
+        Streams.maintainState(rows, post, postT, graph -> graphT))
     }
     // decommission drain: whatever is still staged advances now
     Streams.flushCellGroupsBatched(s, stageT, minRows = 1L, maxLag = 0L,
       curSeq = arrivals.toLong)(rows =>
-      Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3))
+      Streams.maintainState(rows, post, postT, graph -> graphT))
     Streams.knnGraphSnapshot(s, graphT).orderBy($"query_id", $"rank")
   }
 

@@ -318,19 +318,6 @@ object Streams {
     fresh.write.mode("append").parquet(docTable)
   }
 
-  /** The batch minus already-stored doc ids, materialized once — the
-    * shared redelivery guard + fan-in point of every maintenance loop
-    * (the increment feeds several derivations; a lazily persisted frame
-    * racing parallel consumers can compute twice). Also dedups WITHIN the
-    * batch: an at-least-once upstream can deliver the same doc twice in
-    * one micro-batch, and duplicated rows would double every per-doc
-    * derivation downstream (span counts, band rows, report totals) —
-    * the doc-table guard only sees across batches. The in-batch pick is
-    * DETERMINISTIC (max text per doc_id), so even an upstream that
-    * redelivers the same id with divergent payloads — outside the
-    * at-least-once contract, whose replays are byte-identical — yields
-    * the same fresh set on every replay, keeping the batch_key delta
-    * trick's byte-identical-recompute premise intact. */
   /** Prune a standing id-guard read to the batch's id RANGE before the
     * anti-join. Semantically a no-op: guard rows with ids outside
     * [min, max] of the batch's ids cannot match any batch row, so
@@ -342,7 +329,7 @@ object Streams {
     * the worst case, fully interleaved ids, degenerates to exactly the
     * full scan this replaces, which is what the former MaintainerProbe's
     * replica-interleaved batches timed). Costs one batch-sized min/max
-    * agg — in family with the batchKey agg every advance already runs.
+    * agg — in family with the batch-key probe every advance already runs.
     * An empty batch returns an empty guard without touching it. */
   private def pruneToBatchRange(guard: DataFrame, batch: DataFrame,
       idCol: String): DataFrame = {
@@ -351,26 +338,42 @@ object Streams {
     else guard.filter(col(idCol).between(b.get(0), b.get(1)))
   }
 
-  private def freshAgainst(batch: DataFrame, docTable: String,
-      cols: Seq[String] = Seq("text")): DataFrame = {
-    // in-batch duplicates collapse deterministically to ONE of the
-    // arriving rows: lexicographic max over the struct of all payload
-    // columns, then re-expanded — never a per-column max, which with
-    // multiple columns could synthesize a (source, text) combination
-    // existing in neither input row; single-column callers get exactly
-    // the old max(col) (struct ordering degenerates to the field's, and
-    // a null field sorts below every value like max's null-skipping)
-    val arrived = batch.select((col("doc_id") +: cols.map(col)): _*)
-      .groupBy(col("doc_id"))
+  /** The batch minus the keys `standing` already holds, graded and
+    * materialized once — the shared redelivery guard + fan-in point of
+    * every maintenance loop (the increment feeds several derivations; a
+    * lazily persisted frame racing parallel consumers can compute twice).
+    * Also dedups WITHIN the batch: an at-least-once upstream can deliver
+    * the same key twice in one micro-batch, and duplicated rows would
+    * double every derivation downstream — the standing guard only sees
+    * across batches. The in-batch pick is DETERMINISTIC and collapses to
+    * ONE of the arriving rows: the lexicographic max over the struct of
+    * all `cols`, then re-expanded — never a per-column max, which with
+    * multiple columns could synthesize a (source, text) combination
+    * existing in neither input row (a single column gets exactly max of
+    * it: struct ordering degenerates to the field's, and a null field
+    * sorts below every value like max's null-skipping). So an upstream
+    * that redelivers the same key with divergent payloads — outside the
+    * at-least-once contract, whose replays are byte-identical — yields
+    * the same fresh set on every replay, keeping the batch_key delta
+    * trick's byte-identical-recompute premise intact. The guard runs on
+    * the raw key, BEFORE `grade`: grading an already-stored arrival
+    * (a vector's quantize/norm/assign) would be paid just to drop it. */
+  private def guarded(batch: DataFrame, standing: Option[DataFrame],
+      key: String, cols: Seq[String], grade: DataFrame => DataFrame): DataFrame = {
+    val arrived = batch.select((col(key) +: cols.map(col)): _*)
+      .groupBy(col(key))
       .agg(max(struct(cols.map(col): _*)).as("__row"))
-      .select((col("doc_id") +: cols.map(c => col(s"__row.$c").as(c))): _*)
-    tryRead(batch.sparkSession, docTable)
-      .map(e => arrived.join(
-        pruneToBatchRange(e.select("doc_id"), batch, "doc_id"),
-        Seq("doc_id"), "left_anti"))
-      .getOrElse(arrived)
+      .select((col(key) +: cols.map(c => col(s"__row.$c").as(c))): _*)
+    grade(standing
+      .map(s => arrived.join(pruneToBatchRange(s.select(key), batch, key),
+        Seq(key), "left_anti"))
+      .getOrElse(arrived))
       .localCheckpoint(true)
   }
+
+  private def freshAgainst(batch: DataFrame, docTable: String,
+      cols: Seq[String] = Seq("text")): DataFrame =
+    guarded(batch, tryRead(batch.sparkSession, docTable), "doc_id", cols, identity)
 
   /** The band-index half of an advance: pairs append first, then the
     * guarded index/shingle appends. `freshBands` is passed in (not
@@ -591,69 +594,59 @@ object Streams {
     fresh.write.mode("append").parquet(docTable)
   }
 
-  /** Shared launcher for every maintainer's foreachBatch wrapper: with
+  /** The one foreachBatch launcher for every maintainer: with
     * `checkpoint` set, the query's progress survives a kill — on
     * restart, Structured Streaming redelivers the uncommitted batch and
     * the maintainers' doc-store guards / dedup-at-read seams absorb the
     * replay (MaintainerRestartSpec drives the full kill->restart e2e).
     * Without it, Spark uses a temp checkpoint (single-run semantics —
     * the spec-suite default). */
-  private def startMaintainer(src: DataFrame, checkpoint: Option[String])(
+  private[graft] def startMaintainer(src: DataFrame, checkpoint: Option[String])(
       body: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val w = src.writeStream.foreachBatch(body)
     checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
   }
 
-  /** [[maintainDedupState]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def dedupStateStream(docs: DataFrame, indexTable: String,
-      pairsTable: String, shingleTable: String, labelsTable: String,
-      bucketTable: String, remapTable: String, docTable: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainDedupState(b, indexTable, pairsTable, shingleTable,
-          labelsTable, bucketTable, remapTable, docTable))
+  /** The store's tombstone swap every forget ends with, by the store's
+    * [[StateFamily.Tomb]] rule: survivors' rows unchanged; a
+    * [[StateFamily.Nulled]] store keeps a forgotten row's other columns
+    * and nulls the named one (never-seen ids forward-block with every
+    * payload column null, and the store's FULL column set and order are
+    * kept — a store whose forget destroys more than one content column
+    * calls once per column, each swap idempotent and order-free); a
+    * [[StateFamily.Replaced]] store replaces the id's row (seen or not)
+    * by its tombstone row. Ids are kept either way, so redelivery and
+    * future re-ingest stay blocked. Always LAST in a forget job: the
+    * swap is the compaction commit witness, and it destroys the content
+    * decrements and repairs recompute from. */
+  private[graft] def tombstoneSwap(store: StateFamily.Store,
+      standing: Option[DataFrame], idsC: DataFrame, table: String): Unit = {
+    val k = store.key
+    val s = standing.getOrElse(
+      noDocs(idsC.sparkSession, store).filter(store.fresh).select(store.row: _*))
+    val order = s.columns.toIndexedSeq
+    val out = store.tomb match {
+      case StateFamily.Nulled(c) =>
+        require(order.contains(k) && order.contains(c),
+          s"tombstoneSwap: store at $table lacks $k/$c (has ${order.mkString(",")})")
+        val tombed = s.join(idsC, Seq(k), "left_semi")
+          .withColumn(c, lit(null).cast(s.schema(c).dataType))
+        val unseen = order.filterNot(_ == k).foldLeft(
+            idsC.join(s.select(k), Seq(k), "left_anti")) {
+          (acc, n) => acc.withColumn(n, lit(null).cast(s.schema(n).dataType))
+        }
+        tombed.select(order.map(col): _*)
+          .unionByName(unseen.select(order.map(col): _*))
+      case StateFamily.Replaced(row) => idsC.select(row: _*)
+    }
+    graft.operators.MergeWriter.overwriteAtomic(
+      s.join(idsC, Seq(k), "left_anti").select(order.map(col): _*).unionByName(out),
+      table)
+  }
 
   /** Delete every row of `table` whose `on` column(s) match an id,
     * preserving the table's column order (a USING join floats its key). */
-  /** The doc-store tombstone swap every forget member ends with: keep
-    * the survivors' rows unchanged, NULL `nulledCol` for the forgotten
-    * ids (id kept — redelivery and future re-ingest stay blocked,
-    * never-seen ids forward-block with every payload column null). The
-    * store's FULL column set is preserved — survivors keep all columns
-    * byte-identical, and a forgotten row keeps its other columns; a
-    * store whose forget contract destroys MORE than one content column
-    * must call once per column (each swap is idempotent and
-    * order-free). Always LAST in a forget job: the swap is the
-    * compaction commit witness, and it destroys the content decrements
-    * recompute from. */
-  private[graft] def tombstoneSwap(store: Option[DataFrame], idsC: DataFrame,
-      docTable: String, nulledCol: String): Unit = {
-    val out = store match {
-      case Some(s) =>
-        val order = s.columns.toIndexedSeq
-        require(order.contains("doc_id") && order.contains(nulledCol),
-          s"tombstoneSwap: store at $docTable lacks doc_id/$nulledCol " +
-            s"(has ${order.mkString(",")})")
-        val kept = s.join(idsC, Seq("doc_id"), "left_anti")
-        val tombed = s.join(idsC, Seq("doc_id"), "left_semi")
-          .withColumn(nulledCol,
-            lit(null).cast(s.schema(nulledCol).dataType))
-        val unseen = order.filterNot(_ == "doc_id").foldLeft(
-            idsC.join(s.select("doc_id"), Seq("doc_id"), "left_anti")) {
-          (acc, c) => acc.withColumn(c, lit(null).cast(s.schema(c).dataType))
-        }
-        kept.select(order.map(col): _*)
-          .unionByName(tombed.select(order.map(col): _*))
-          .unionByName(unseen.select(order.map(col): _*))
-      case None =>
-        idsC.select(col("doc_id"), lit(null).cast("string").as(nulledCol))
-    }
-    graft.operators.MergeWriter.overwriteAtomic(out, docTable)
-  }
-
   private def deleteByIds(spark: SparkSession, table: String,
       idsC: DataFrame, on: Seq[String]): Unit =
     tryRead(spark, table).foreach { t0 =>
@@ -665,7 +658,7 @@ object Streams {
     }
 
   /** DELETION PROPAGATION for the text-dedup family —
-    * [[forgetVectorState]]'s document-side sibling: given doc ids,
+    * the vector stores' [[forgetState]] sibling: given doc ids,
     * remove every trace of their CONTENT from the maintained state
     * while keeping the ids guarded. The pair-flow state (band index,
     * shingle store, duplicate pairs) deletes EXACTLY — it is
@@ -891,40 +884,81 @@ object Streams {
     deleteByIds(spark, shingleTable, idsC, Seq("doc_id"))
     deleteByIds(spark, pairsTable, idsC, Seq("d1", "d2"))
     deleteByIds(spark, labelsTable, idsC, Seq("doc_id"))
-    tombstoneSwap(tryRead(spark, docTable).map(_.localCheckpoint(true)),
-      idsC, docTable, "text")
+    tombstoneSwap(StateFamily.Text,
+      tryRead(spark, docTable).map(_.localCheckpoint(true)), idsC, docTable)
   }
 
-  /** Advance every (family, table) pair over `docTable` by one batch —
-    * the ADVANCE step of the [[StateFamily]] contract: one fresh set,
-    * one batch key, each family's delta appended, the guard LAST. */
-  private[graft] def maintainState(batch: DataFrame, docTable: String,
-      fams: (StateFamily, String)*): Unit = {
-    val payload = fams.map(_._1.payload.map(_._1)).distinct
-    require(payload.size == 1,
-      s"maintainState: families over $docTable disagree on the doc-store payload")
-    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(batch.sparkSession, t, _)) }
-    val fresh = freshAgainst(batch, docTable, payload.head)
-    if (fresh.isEmpty) return
-    lazy val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    val ds = deltas(fresh, fams.map(_._1)) { f =>
-      f.fold match {
-        case _: StateFamily.Sum => batchKey
-        case _ => Long.MinValue
-      }
+  /** Advance every (family, table) pair over the store at `storeTable`
+    * by one batch — the ADVANCE step of the [[StateFamily]] contract: one
+    * guarded, graded fresh set, one batch key, each family's delta
+    * written (appended, or for a [[StateFamily.Recompute]] family its
+    * touched buckets overwritten), the store LAST. */
+  private[graft] def maintainState(batch: DataFrame, storeTable: String,
+      fams: (StateFamily, String)*): Unit =
+    maintainState(batch, storeOf(fams, storeTable), storeTable, fams: _*)
+
+  /** [[maintainState]] over an explicitly given store: a codes table
+    * (no families), or the postings under a quantizer. */
+  private[graft] def maintainState(batch: DataFrame, store: StateFamily.Store,
+      storeTable: String, fams: (StateFamily, String)*): Unit = {
+    val spark = batch.sparkSession
+    storeOf(fams, storeTable, Some(store))
+    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
+    val standing = tryRead(spark, storeTable)
+    val graded = guarded(batch, standing, store.key, store.arrives.map(_._1),
+      store.grade)
+    val fresh = graded.filter(store.fresh)
+    // ONE probe: the batch key (none: nothing fresh) and the buckets each
+    // recompute family rewrites, grouped by them
+    val recomputed = fams.collect {
+      case (f, _) if f.forget == StateFamily.Recompute => f.bucket.get }.distinct
+    val probe = fresh.groupBy(recomputed.map(b => b.of.cast("long").as(b.name)): _*)
+      .agg(min(col(store.key)).as("__key")).collect()
+      .filterNot(_.isNullAt(recomputed.size))
+    val sentinels = store.sentinel.map { case (p, row) => graded.filter(p).select(row: _*) }
+    if (probe.isEmpty) {
+      sentinels.filterNot(_.isEmpty).foreach(_.write.mode("append").parquet(storeTable))
+      return
     }
-    fams.zip(ds).foreach { case ((f, t), d) => append(d, t, f.bucket) }
-    fresh.write.mode("append").parquet(docTable)
+    val key = probe.map(_.getLong(recomputed.size)).min
+    val live = for (s <- standing; l <- store.live) yield s.filter(l)
+    val ds = deltas(fresh, fams.map(_._1))((f, rows) =>
+      new StateFamily.In(rows, key, live, tryRead(spark, fams.find(_._1 eq f).get._2)))
+    fams.zip(ds).foreach { case ((f, t), d) =>
+      if (f.forget == StateFamily.Recompute) {
+        val b = f.bucket.get
+        graft.operators.MergeWriter.overwritePartitionsAtomic(d, t, b.name,
+          probe.map(_.getAs[Long](b.name)).distinct.toIndexedSeq)
+      } else append(d, t, f.bucket)
+    }
+    sentinels.foldLeft(fresh.select(store.row: _*))(_.unionByName(_))
+      .write.mode("append").parquet(storeTable)
   }
 
-  /** Each family's delta of `docs` under `key(f)`; a shared
-    * [[StateFamily.Input]] runs once and is checkpointed. */
-  private def deltas(docs: DataFrame, fams: Seq[StateFamily])(
-      key: StateFamily => Long): Seq[DataFrame] = {
-    val in = fams.flatMap(_.input).distinct
-      .map(i => i -> i.of(docs).localCheckpoint(true)).toMap
-    fams.map(f => f.delta(f.input.fold(docs)(in), key(f)))
+  /** The store the families over `table` share (`given` when an advance
+    * names it): they must agree on its key and arriving columns. */
+  private def storeOf(fams: Seq[(StateFamily, String)], table: String,
+      given: Option[StateFamily.Store] = None): StateFamily.Store = {
+    val stores = given.toSeq ++ fams.map(_._1.store)
+    require(stores.map(s => (s.key, s.arrives)).distinct.size == 1,
+      s"families over $table disagree on the store")
+    stores.head
   }
+
+  /** Each family's delta of `docs` with the [[StateFamily.In]] `in`
+    * gives it; a shared [[StateFamily.Input]] runs once and is
+    * checkpointed. */
+  private def deltas(docs: DataFrame, fams: Seq[StateFamily])(
+      in: (StateFamily, DataFrame) => StateFamily.In): Seq[DataFrame] = {
+    val shared = fams.flatMap(_.input).distinct
+      .map(i => i -> i.of(docs).localCheckpoint(true)).toMap
+    fams.map(f => f.delta(in(f, f.input.fold(docs)(shared))))
+  }
+
+  /** Each family's delta of `docs` outside an advance, under `key`. */
+  private def deltasAt(docs: DataFrame, fams: Seq[StateFamily],
+      key: Long): Seq[DataFrame] =
+    deltas(docs, fams)((_, rows) => new StateFamily.In(rows, key))
 
   /** `table` read through its family's fold — the snapshot every
     * family-specific read view finishes. */
@@ -932,40 +966,62 @@ object Streams {
       table: String): DataFrame = {
     val t = standing(spark, f, table)
     f.fold match {
-      case StateFamily.Sum(keys, sums, mins) =>
-        val aggs = sums.map(c => sum(col(c)).as(c)) ++ mins.map(c => min(col(c)).as(c))
-        t.dropDuplicates("batch_key" +: keys)
-          .groupBy(keys.map(col): _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .filter(sums.map(c => col(c) > 0).reduce(_ && _))
+      case s: StateFamily.Sum => summed(s)(t).filter(col(s.sums.head) > 0)
+      case l: StateFamily.Latest => latest(l)(t)
       case StateFamily.Idempotent(fold) => fold(t)
     }
   }
 
+  /** A [[StateFamily.Sum]] table's rows, replay copies dropped, folded
+    * per key. */
+  private def summed(f: StateFamily.Sum)(t: DataFrame): DataFrame = {
+    val aggs = f.sums.map(c => sum(col(c)).as(c)) ++ f.mins.map(c => min(col(c)).as(c))
+    t.dropDuplicates("batch_key" +: f.keys)
+      .groupBy(f.keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** [[summed]] for compaction: a pure-sum key whose committed sums all
+    * net to zero is a from-scratch absence and drops, so the table stays
+    * O(live keys) (keeper-carrying tables keep their rows). */
+  private def settled(f: StateFamily.Sum)(t: DataFrame): DataFrame =
+    if (f.mins.nonEmpty) summed(f)(t)
+    else summed(f)(t).filter(f.sums.map(c => col(c) =!= 0L).reduce(_ || _))
+
+  /** A [[StateFamily.Latest]] table's newest row per key. */
+  private def latest(f: StateFamily.Latest)(t: DataFrame): DataFrame =
+    t.groupBy(col(f.key))
+      .agg(max_by(struct(f.payload.map(col): _*),
+        struct(col(f.ord), col("batch_key"))).as("__r"))
+      .select(col(f.key) +: f.payload.map(p => col(s"__r.$p").as(p)): _*)
+
   /** The raw rows of family `f`'s table; an absent table reads as the
-    * delta of no docs. */
+    * delta of no rows. */
   private def standing(spark: SparkSession, f: StateFamily,
       table: String): DataFrame =
     tryRead(spark, table).getOrElse(
-      deltas(noDocs(spark, f), Seq(f))(_ => Long.MinValue).head)
+      deltasAt(noDocs(spark, f.store), Seq(f), Long.MinValue).head)
 
-  /** An empty doc store of family `f`'s shape. */
-  private def noDocs(spark: SparkSession, f: StateFamily): DataFrame =
-    emptyDf(spark, ("doc_id" -> org.apache.spark.sql.types.LongType) +: f.payload: _*)
+  /** No arrivals of `store`'s shape, graded. */
+  private def noDocs(spark: SparkSession, store: StateFamily.Store): DataFrame =
+    store.grade(emptyDf(spark,
+      (store.key -> org.apache.spark.sql.types.LongType) +: store.arrives: _*))
 
-  /** Compact every (family, table) pair over `docTable` — the COMPACT
-    * step of the [[StateFamily]] contract; the store's tombstones are the
-    * commit witness of forget keys. */
-  private[graft] def compactState(spark: SparkSession, docTable: String,
+  /** Compact every (family, table) pair over the store at `storeTable` —
+    * the COMPACT step of the [[StateFamily]] contract; the store's
+    * tombstones are the commit witness of forget keys. */
+  private[graft] def compactState(spark: SparkSession, storeTable: String,
       fams: (StateFamily, String)*): Unit = {
+    val store = storeOf(fams, storeTable)
     fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
+    val tombstoneIds = for (l <- store.live; s <- tryRead(spark, storeTable))
+      yield s.filter(!l).select(col(store.key))
     fams.foreach { case (f, table) =>
+      def keyed(fold: DataFrame => DataFrame) =
+        compactDeltas(spark, table, storeTable, store.key, tombstoneIds)(fold)
       f.fold match {
-        case StateFamily.Sum(keys, sums, mins) =>
-          compactDeltas(spark, table, keys, sums, docTable, "doc_id", mins,
-            tombstoneIds = tryRead(spark, docTable)
-              .map(_.filter(col(f.nulled).isNull).select(col("doc_id"))),
-            dropZeroKeys = true)
+        case s: StateFamily.Sum => keyed(settled(s))
+        case l: StateFamily.Latest => keyed(latest(l))
         case StateFamily.Idempotent(fold) => f.bucket match {
           case Some(b) => rewriteBuckets(spark, table, b, None)(fold)
           case None => tryRead(spark, table).foreach { t =>
@@ -977,53 +1033,73 @@ object Streams {
     }
   }
 
-  /** Forget `ids` from every (family, table) pair over `docTable` — the
-    * FORGET step of the [[StateFamily]] contract. Rebuilt tables swap
-    * first, then the exact deletes; the decrement families share one gone
-    * set (forgotten ids whose content is not yet nulled — a re-run or an
-    * overlapping request skips docs already forgotten), one forget key
+  /** Forget `ids` from every (family, table) pair over the store at
+    * `storeTable` — the FORGET step of the [[StateFamily]] contract.
+    * Rebuilt tables swap first, then the exact deletes and the
+    * recomputed buckets; the decrement families share one gone set
+    * (forgotten ids whose stored row is still live — a re-run or an
+    * overlapping request skips rows already forgotten), one forget key
     * and one rollback; the tombstone swap goes last. Single-maintenance-
     * loop contract: call BETWEEN advances. */
   private[graft] def forgetState(spark: SparkSession, ids: DataFrame,
-      docTable: String, fams: (StateFamily, String)*): Unit = {
-    val nulled = fams.map(_._1.nulled).distinct
-    require(nulled.size == 1,
-      s"forgetState: families over $docTable disagree on the tombstoned column")
+      storeTable: String, fams: (StateFamily, String)*): Unit =
+    forgetState(spark, ids, storeOf(fams, storeTable), storeTable, fams: _*)
+
+  /** [[forgetState]] over an explicitly given store (a codes table). */
+  private[graft] def forgetState(spark: SparkSession, ids: DataFrame,
+      store: StateFamily.Store, storeTable: String,
+      fams: (StateFamily, String)*): Unit = {
+    import StateFamily.{ExactDelete, Rebuild, Recompute}
+    storeOf(fams, storeTable, Some(store))
     fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    val live = store.map(_.filter(col(nulled.head).isNotNull))
-    def survivors(f: StateFamily) =
-      live.map(_.join(idsC, Seq("doc_id"), "left_anti")).getOrElse(noDocs(spark, f))
-        .select(("doc_id" +: f.payload.map(_._1)).map(col): _*)
-    val rebuilt = fams.filter(_._1.forget == StateFamily.Rebuild)
-    val exact = fams.filter(_._1.forget == StateFamily.ExactDelete)
-    val decremented = fams.filterNot(rebuilt.contains).filterNot(exact.contains)
-    rebuilt.foreach { case (f, t) =>
-      graft.operators.MergeWriter.overwriteAtomic(deltas(
-        survivors(f).localCheckpoint(true), Seq(f))(_ => Long.MinValue).head, t)
+    val k = store.key
+    val idsC = ids.select(col(k)).distinct().localCheckpoint(true)
+    val stored = tryRead(spark, storeTable).map(_.localCheckpoint(true))
+    val live = for (s <- stored; l <- store.live) yield s.filter(l)
+    def survivors = live.map(_.join(idsC, Seq(k), "left_anti"))
+      .getOrElse(noDocs(spark, store))
+    def of(policy: StateFamily.Forget) = fams.filter(_._1.forget == policy)
+    of(Rebuild).foreach { case (f, t) =>
+      graft.operators.MergeWriter.overwriteAtomic(
+        deltasAt(survivors.localCheckpoint(true), Seq(f), Long.MinValue).head, t)
     }
     // the stored rows of the ids re-derive the deltas they were ingested
-    // with: their buckets are the only ones that can hold their rows
-    if (exact.nonEmpty) store.foreach { s =>
-      val held = s.join(idsC, Seq("doc_id"), "left_semi")
-        .select(("doc_id" +: exact.head._1.payload.map(_._1)).map(col): _*)
-      exact.zip(deltas(held, exact.map(_._1))(_ => Long.MinValue)).foreach {
-        case ((f, t), d) =>
-          val b = f.bucket.get
-          rewriteBuckets(spark, t, b, Some(bucketsOf(d, b.of)))(
-            _.join(idsC, Seq("doc_id"), "left_anti"))
+    // with: their buckets are the only ones that can hold their rows (an
+    // ids-only store names them by the ids themselves)
+    val held = stored.map(_.join(idsC, Seq(k), "left_semi"))
+    val exact = of(ExactDelete)
+    if (exact.nonEmpty) held.foreach { h =>
+      val ds = if (store.live.isEmpty) exact.map(_ => h)
+        else deltasAt(h, exact.map(_._1), Long.MinValue)
+      exact.zip(ds).foreach { case ((f, t), d) =>
+        val b = f.bucket.get
+        rewriteBuckets(spark, t, b, Some(bucketsOf(d, b.of)))(
+          _.join(idsC, Seq(k), "left_anti"))
       }
     }
+    // the buckets the forgotten rows occupied, recomputed from their
+    // survivors; a bucket left with no rows stages none, so the publish
+    // deletes it
+    of(Recompute).foreach { case (f, t) =>
+      val b = f.bucket.get
+      val touched = live.map(l => bucketsOf(l.join(idsC, Seq(k), "left_semi"), b.of))
+        .getOrElse(IndexedSeq.empty)
+      if (touched.nonEmpty)
+        graft.operators.MergeWriter.overwritePartitionsAtomic(
+          deltasAt(survivors.filter(b.of.isin(touched: _*)).localCheckpoint(true),
+            Seq(f), Long.MinValue).head, t, b.name, touched)
+    }
+    val decremented = fams.filterNot(p => Seq(Rebuild, ExactDelete, Recompute)
+      .contains(p._1.forget))
     val gone =
       if (decremented.isEmpty) None
-      else live.map(_.join(idsC, Seq("doc_id"), "left_semi").localCheckpoint(true))
+      else live.map(_.join(idsC, Seq(k), "left_semi").localCheckpoint(true))
         .filter(!_.isEmpty)
     gone.foreach { g =>
-      val forgetKey = -g.agg(min(col("doc_id"))).head().getLong(0) - 1L
-      rollbackPendingForgets(spark, decremented.map(_._2), g)
-      val goneIds = g.select(col("doc_id")).localCheckpoint(true)
-      val decs = deltas(g, decremented.map(_._1))(_ => forgetKey)
+      val forgetKey = -g.agg(min(col(k))).head().getLong(0) - 1L
+      rollbackPendingForgets(spark, decremented.map(_._2), g, k)
+      val goneIds = g.select(col(k)).localCheckpoint(true)
+      val decs = deltasAt(g, decremented.map(_._1), forgetKey)
       decremented.zip(decs).foreach { case ((f, t), d) =>
         val StateFamily.Sum(keys, sums, _) = f.fold
         val dec = d.localCheckpoint(true)
@@ -1039,10 +1115,10 @@ object Streams {
                 .join(broadcast(dec.select(keys.map(col): _*)), keys, "left_semi")
                 .dropDuplicates("batch_key" +: keys)
                 .groupBy(keys.map(col): _*).agg(min(col(kc)).as("__k"))
-                .join(goneIds.withColumnRenamed("doc_id", "__k"), Seq("__k"), "left_semi")
+                .join(goneIds.withColumnRenamed(k, "__k"), Seq("__k"), "left_semi")
                 .select(keys.map(col): _*).localCheckpoint(true)
               if (!affected.isEmpty) {
-                val newKeep = keepers(survivors(f))
+                val newKeep = keepers(survivors)
                   .join(broadcast(affected), keys, "left_semi")
                 graft.operators.MergeWriter.overwriteAtomic(st
                   .join(broadcast(affected.withColumn("__aff", lit(true))), keys, "left")
@@ -1063,7 +1139,7 @@ object Streams {
           .write.mode("append").parquet(t)
       }
     }
-    tombstoneSwap(store, idsC, docTable, nulled.head)
+    tombstoneSwap(store, stored, idsC, storeTable)
   }
 
   /** Rollback of conflicting PENDING forget decrements (the
@@ -1078,9 +1154,9 @@ object Streams {
     * key. The O(table) rewrite is paid only when a conflicting pending
     * key actually exists. */
   private def rollbackPendingForgets(spark: SparkSession,
-      tables: Seq[String], gone: DataFrame): Unit = {
+      tables: Seq[String], gone: DataFrame, key: String): Unit = {
     val witnessKeys = gone
-      .select((-col("doc_id") - 1L).as("batch_key"))
+      .select((-col(key) - 1L).as("batch_key"))
       .filter(col("batch_key") =!= Long.MinValue)
       .localCheckpoint(true)
     tables.foreach { tb =>
@@ -1149,178 +1225,22 @@ object Streams {
     emptyDf(spark, "bucket" -> StringType, "component" -> LongType)
   }
 
-  /** [[maintainBandIndex]] as a foreachBatch sink over a (doc_id, text)
-    * document stream. */
-  def incrementalIndexStream(docs: DataFrame, indexTable: String,
-      docTable: String, pairsTable: String, shingleTable: String,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainBandIndex(b, indexTable, docTable, pairsTable, shingleTable))
-
-  /** pp05's continuous twin: CONTINUOUS IVF maintenance. The coarse
-    * quantizer `cents` is FIXED (trained once; re-training is a rebuild —
-    * vs07 — not maintenance); per micro-batch of (vec_id, embedding) rows
-    * the standing state advances by:
-    *
-    *  - `postingsTable` (cid, vec_id, q, nrm) — the inverted lists:
-    *    the batch is normalized + assigned with the same kernels as vs06
-    *    (|batch| × |cents| fused dot products, broadcast argmax — no
-    *    corpus re-assignment, assignment is a pure per-row function of
-    *    the fixed centroids) and APPENDED. Appended LAST: the postings
-    *    table is also the redelivery guard (arrivals already in it are
-    *    dropped before assigning). Zero-norm arrivals append under the
-    *    sentinel cid −1 so their redelivery is a no-op like every other
-    *    row's; consumers key on real cell ids and never see them.
-    *  - `sumsTable` (batch_key, cid, dim, n_vectors, sum_q) — per-cell
-    *    centroid-sum DELTAS, the additive state that decides when a cell
-    *    has drifted enough to warrant a rebuild. Additive state is NOT
-    *    idempotent under at-least-once redelivery, so each batch's rows
-    *    carry a `batch_key` (the batch's min vec_id — deterministic, and
-    *    unique across batches because the postings guard keeps fresh
-    *    sets disjoint): a crash between the sums append and the postings
-    *    append replays the batch, the replay recomputes BYTE-IDENTICAL
-    *    delta rows under the same key, and [[ivfSumsSnapshot]] drops the
-    *    duplicates by (batch_key, cid, dim) before summing. The same
-    *    trick a transactional format's idempotent-writer option uses.
-    *  - `dropTable` (optional — pp10's continuous twin, one standing
-    *    postings table serving both the IVF search and SemDedup): the
-    *    batch's CHANGED drop rows
-    *    ([[graft.queries.VectorOps.semDedupAdvance]] against the
-    *    pre-advance postings — batch vectors gaining a witness, standing
-    *    vectors gaining a batch witness, each re-aggregated over its
-    *    full witness set in the touched cells only) are APPENDED under
-    *    the batch's `batch_key`. These rows are non-additive
-    *    REPLACEMENTS, so the append relies on an ordering invariant
-    *    instead of a sum: a vec_id re-enters the changed set only when
-    *    it GAINS a witness (witnesses only accumulate, rows are never
-    *    retracted), so per vec_id `n_witnesses` strictly increases
-    *    across batches and [[semDedupSnapshot]] resolves latest-wins by
-    *    max (n_witnesses, batch_key). Replay idempotence is the usual
-    *    batch_key trick: the guard hasn't moved, so a crash replay
-    *    appends byte-identical rows under the same key, invisible to a
-    *    max. Earlier batches' files are never rewritten — per-batch
-    *    write volume is O(changed rows), where the previous keyed-upsert
-    *    design rewrote the whole drop table every batch.
-    *    [[compactSemDedupDrops]] is the matching latest-wins compactor.
-    *
-    * Per-batch work and write volume are O(batch) for postings and sums
-    * (nothing reads the corpus — the guard probe is a column-pruned id
-    * scan of the postings at their own layout) plus, when the drop table
-    * is maintained: one standing-postings scan (shared with the guard's
-    * read; the touched-cell restriction prunes the JOIN work — pair
-    * space — per the pp10 analysis, and becomes a physical scan prune
-    * only under a cid-partitioned postings layout,
-    * [[graft.operators.Layout.writePartitioned]]), the touched cells'
-    * pair re-aggregation, and an O(changed rows) drop-delta append.
-    * Compaction of the sums delta table is [[compactIvfSums]]; of the
-    * drop delta table, [[compactSemDedupDrops]]. */
-  def maintainIvfState(batch: DataFrame, cents: DataFrame,
-      postingsTable: String, sumsTable: String,
-      dropTable: Option[String] = None, tau: Double = 0.30): Unit =
-    maintainIvfStateImpl(batch, cents, postingsTable, sumsTable, dropTable,
-      tau, Int.MaxValue)
-
-  /** Test seam (round-18 verdict item 5): `failAfterStep` throws after
-    * the drop-delta append (0) or the sums append (1) — the two
-    * MID-ADVANCE windows where some of the advance's tables have
-    * advanced and others have not, which the redelivery/guard argument
-    * covers but no spec crashed until now. MidAdvanceFaultSpec crashes
-    * each window and pins that a plain re-run (the checkpoint's
-    * redelivery of the same batch) converges every snapshot to the
-    * no-crash state: the guard hasn't moved (the postings append is
-    * last), so the replay recomputes byte-identical drop/sums rows under
-    * the same batch_key and the snapshots' dedup collapses them. */
-  private[graft] def maintainIvfStateImpl(batch: DataFrame, cents: DataFrame,
-      postingsTable: String, sumsTable: String,
-      dropTable: Option[String], tau: Double, failAfterStep: Int): Unit = {
-    def crashPoint(n: Int): Unit =
-      if (failAfterStep == n) throw new IllegalStateException(
-        s"maintainIvfState: injected crash after step $n")
-    val spark = batch.sparkSession
-    // ONE logical read of the standing postings serves both the id guard
-    // (column-pruned projection) and, below, the SemDedup standing frame
-    val postings = tryRead(spark, postingsTable)
-    // guard FIRST, on raw ids: normalizing already-stored arrivals would
-    // spend the O(dim) per-row quantize/dot/sqrt work just to drop them
-    // at the anti-join (the text flows' freshAgainst order, same reason).
-    // In-batch dedup picks deterministically (max embedding per id — the
-    // freshAgainst contract), so replays recompute identical fresh sets
-    // even under divergent-payload duplicates.
-    val freshRaw = postings
-      .map(p => batch.join(
-        pruneToBatchRange(p.select("vec_id"), batch, "vec_id"),
-        Seq("vec_id"), "left_anti"))
-      .getOrElse(batch)
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val fresh = graft.queries.VectorOps.normed(freshRaw).localCheckpoint(true)
-    // zero-norm arrivals are unindexable (normed drops them) but must
-    // still be marked processed, or an at-least-once source redelivering
-    // them re-pays the normalization forever and an all-degenerate batch
-    // is never acknowledged: they enter the postings under the sentinel
-    // cid −1 (empty q, zero nrm). Every postings consumer keys on REAL
-    // cell ids — probe joins, pair joins and cell sums all match cid ≥ 0
-    // — so sentinel rows are dead weight to every query and live only
-    // for the guard's id probe.
-    // pinned so the isEmpty probe and the write/union share ONE
-    // evaluation of the guard-anti-join plan (batch-bounded rows)
-    val rejects = freshRaw
-      .join(fresh.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .select(lit(-1L).as("cid"), col("vec_id"),
-        lit(Array.empty[Long]).as("q"), lit(0.0).as("nrm"))
-      .localCheckpoint(true)
-    if (fresh.isEmpty) {
-      if (!rejects.isEmpty) rejects.write.mode("append").parquet(postingsTable)
-      return
-    }
-    val batchKey = fresh.agg(min(col("vec_id"))).head().getLong(0)
-    val assigned = graft.queries.VectorOps.assignCells(fresh, cents)
-      .localCheckpoint(true)
-    // Continuous SemDedup (pp10's loop), maintained FIRST, against the
-    // PRE-advance postings: semDedupAdvance is a pure function of
-    // (standing, fresh batch), and the guard doesn't move until the
-    // postings append below, so a crash anywhere in this advance replays
-    // the same fresh set and appends byte-identical changed rows under
-    // the same batch_key — duplicates a latest-wins max cannot see.
-    // Witnesses only accumulate, so a changed row's aggregates over its
-    // full witness set stay correct batch over batch; rows are never
-    // retracted, and n_witnesses strictly increasing per vec_id is what
-    // makes the snapshot's (n_witnesses, batch_key) max well-ordered.
-    dropTable.foreach { dt =>
-      val standing = postings.getOrElse(assigned.limit(0))
-      semDedupDeltaAppend(dt,
-        graft.queries.VectorOps.semDedupAdvance(standing, assigned, tau),
-        batchKey)
-    }
-    crashPoint(0)
-    ivfSumsDelta(assigned, batchKey).write.mode("append").parquet(sumsTable)
-    crashPoint(1)
-    assigned.unionByName(rejects).write.mode("append").parquet(postingsTable)
-  }
-
-  /** The per-cell centroid-sum delta rows of one assigned batch — the
-    * exact rows [[maintainIvfState]] appends, shared with the
-    * crash-simulation spec so a simulated partial write can never drift
-    * from what the real advance writes. */
-  private[graft] def ivfSumsDelta(assigned: DataFrame, batchKey: Long): DataFrame =
-    graft.queries.VectorOps.cellDimSums(assigned)
-      .select(lit(batchKey).as("batch_key"), col("cid"), col("dim"),
-        col("n_vectors"), col("sum_q"))
-
-  /** The current per-(cell, dim) exact centroid sums under the maintained
-    * delta table — vs07's output shape over every vector that has
-    * arrived. Duplicate delta rows from redelivered batches collapse on
-    * (batch_key, cid, dim) before the sum. */
-  def ivfSumsSnapshot(spark: SparkSession, sumsTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    tryRead(spark, sumsTable).getOrElse(emptyDf(spark,
-        "batch_key" -> LongType, "cid" -> LongType, "dim" -> LongType,
-        "n_vectors" -> LongType, "sum_q" -> LongType))
-      .dropDuplicates("batch_key", "cid", "dim")
-      .groupBy(col("cid"), col("dim"))
-      .agg(sum(col("n_vectors")).as("n_vectors"), sum(col("sum_q")).as("sum_q"))
-      .orderBy(col("cid"), col("dim"))
-  }
+  /** pp05's read view: the per-(cell, dim) exact centroid sums under the
+    * maintained [[StateFamily.IvfSums]] table — vs07's output shape over
+    * every vector that has arrived. The continuous IVF loop is
+    * [[maintainState]] over the [[StateFamily.postings]] store under a
+    * FIXED coarse quantizer (trained once; re-training is a rebuild —
+    * vs07 — not maintenance): the postings (cid, vec_id, q, nrm) are the
+    * inverted lists AND the id guard, each batch quantized, normed and
+    * assigned with vs06's kernels (a pure per-row function of the fixed
+    * centroids, so nothing re-reads the corpus) and appended LAST, and a
+    * zero-norm arrival appends as a cid −1 sentinel so its redelivery is
+    * a no-op like every other row's. The families over the postings are
+    * the sums (the additive state that says when a cell has drifted
+    * enough to warrant a rebuild), [[StateFamily.SemDedupDrops]] (pp10)
+    * and [[StateFamily.KnnGraph]] (pp24). */
+  def ivfSumsSnapshot(spark: SparkSession, sumsTable: String): DataFrame =
+    foldState(spark, StateFamily.IvfSums, sumsTable).orderBy(col("cid"), col("dim"))
 
   /** IVF search over the maintained postings — vs06's query side against
     * the standing table ([[graft.queries.VectorOps.ivfSearch]], same
@@ -1332,106 +1252,6 @@ object Streams {
       "cid" -> LongType, "vec_id" -> LongType,
       "q" -> ArrayType(LongType), "nrm" -> DoubleType))
     graft.queries.VectorOps.ivfSearch(postings, queries, cents, nProbe, k)
-  }
-
-  /** Continuous PQ-codes maintenance — pp14's loop, the codes-table
-    * sibling of [[maintainIvfState]]: ONE standing table `codesTable`
-    * (cid, vec_id, codes) holding every arrived vector's cell and PQ
-    * codes against the FIXED (centroids, codebook) parameters. The
-    * contract is the family's weakest, deliberately: assignment and
-    * encode are pure per-row functions of fixed parameters, and the
-    * only write is the guard-moving append itself — no additive state,
-    * no delta table, no partial-crash window (a crashed append commits
-    * nothing, the replay recomputes byte-identical rows from the
-    * unchanged guard). Guard on raw vec_ids BEFORE normalization (the
-    * maintainIvfState order, same O(dim)-work reason); in-batch
-    * duplicates collapse deterministically (max embedding); zero-norm
-    * arrivals enter under sentinel cid −1 with empty codes so
-    * redelivering degenerate rows is a no-op — every search consumer
-    * keys on real cell ids, so sentinel rows are invisible to queries.
-    * Per-batch work and write volume O(batch). */
-  def maintainPqCodes(batch: DataFrame, cents: DataFrame,
-      book: Seq[org.apache.spark.sql.Row], codesTable: String): Unit = {
-    require(book.nonEmpty, "empty PQ codebook")
-    maintainPqCodesTrained(batch, cents,
-      graft.queries.VectorOps.pqOf(book), codesTable)
-  }
-
-  /** [[maintainPqCodes]] under an already-materialized [[graft.queries
-    * .VectorOps.Pq]] — the post-[[rebuildPqState]] era's advance, where
-    * the books are TRAINED values rather than rows cut from a frame.
-    * Same guard/redelivery/sentinel contract. */
-  def maintainPqCodesTrained(batch: DataFrame, cents: DataFrame,
-      pq: graft.queries.VectorOps.Pq, codesTable: String): Unit =
-    advanceCodes(batch, codesTable)(fresh =>
-      graft.queries.VectorOps.pqCodesPostings(fresh, cents, pq))
-
-  /** [[maintainPqCodesTrained]] under an OPQ (permutation, books)
-    * artifact pair — the post-[[rebuildOpqState]] era's advance. The
-    * permutation changes ONLY the encode column (cell assignment stays
-    * raw-space); guard/redelivery/sentinel contract identical. */
-  def maintainOpqCodes(batch: DataFrame, cents: DataFrame,
-      perm: IndexedSeq[Int], pq: graft.queries.VectorOps.Pq,
-      codesTable: String): Unit =
-    advanceCodes(batch, codesTable)(fresh =>
-      graft.queries.VectorOps.opqCodesPostings(fresh, cents, pq, perm))
-
-  /** The guard/normalize/reject/append skeleton every codes-table
-    * advance shares — the encoder is the only per-family difference. */
-  private def advanceCodes(batch: DataFrame, codesTable: String)(
-      encode: DataFrame => DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val freshRaw = tryRead(spark, codesTable)
-      .map(p => batch.join(
-        pruneToBatchRange(p.select("vec_id"), batch, "vec_id"),
-        Seq("vec_id"), "left_anti"))
-      .getOrElse(batch)
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val fresh = graft.queries.VectorOps.normed(freshRaw).localCheckpoint(true)
-    val rejects = freshRaw
-      .join(fresh.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .select(lit(-1L).as("cid"), col("vec_id"),
-        lit(Array.empty[Long]).as("codes"))
-    // pinned: the emptiness probe would otherwise re-run the encode plan
-    // a second time for the write
-    val out = encode(fresh)
-      .unionByName(rejects)
-      .localCheckpoint(true)
-    if (!out.isEmpty) out.write.mode("append").parquet(codesTable)
-  }
-
-  /** pp20's continuous loop — [[maintainPqCodes]] with the SCALAR
-    * quantizer (vs15's kernel): the standing (vec_id, codes) table
-    * advanced by one row-local encode + append per batch under the
-    * era's fixed per-dimension bounds. Same crash/redelivery contract
-    * as the PQ twin (pure per-row encode, guard-moving append is the
-    * only write); in-batch duplicates collapse deterministically (max
-    * embedding); zero-norm arrivals enter with EMPTY codes so
-    * redelivery is a no-op — [[graft.queries.VectorOps.sqScore]]
-    * filters empty codes, so sentinel rows are invisible to queries.
-    * A late arrival outside the trained bounds clamps to the grid edge
-    * (sqCodes's contract) instead of corrupting the byte range — the
-    * drift signal for scheduling a bounds re-train, not an error.
-    * Per-batch work and write volume O(batch). */
-  def maintainSqCodes(batch: DataFrame, vmin: Array[Long],
-      vdiff: Array[Long], codesTable: String): Unit = {
-    require(vmin.nonEmpty, "empty SQ bounds")
-    val spark = batch.sparkSession
-    val freshRaw = tryRead(spark, codesTable)
-      .map(p => batch.join(
-        pruneToBatchRange(p.select("vec_id"), batch, "vec_id"),
-        Seq("vec_id"), "left_anti"))
-      .getOrElse(batch)
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    val fresh = graft.queries.VectorOps.normed(freshRaw).localCheckpoint(true)
-    val rejects = freshRaw
-      .join(fresh.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), lit(Array.empty[Long]).as("codes"))
-    val out = fresh.select(col("vec_id"),
-        graft.queries.VectorOps.sqCodes(col("q"), vmin, vdiff).as("codes"))
-      .unionByName(rejects)
-      .localCheckpoint(true)
-    if (!out.isEmpty) out.write.mode("append").parquet(codesTable)
   }
 
   /** The SQ bounds REBUILD→SWAP — [[rebuildIvfState]]'s sibling for the
@@ -1446,7 +1266,7 @@ object Streams {
     * aggregate the batch gate runs, re-encodes every standing row
     * row-locally against the new literal bounds, atomically swaps the
     * codes table, and returns the new bounds for subsequent
-    * [[maintainSqCodes]] calls. Zero-norm sentinels carry through with
+    * [[StateFamily.sqCodes]] advances. Zero-norm sentinels carry through with
     * empty codes (invisible to sqScore). Crash contract: the pass is a
     * pure id-stable function of (postings content) — re-run to repair.
     * Single-maintenance-loop contract: call BETWEEN advances. Returns
@@ -1466,111 +1286,12 @@ object Streams {
       (vmin, vdiff)
     }
 
-  /** pp24's continuous loop: CONTINUOUS kNN-graph maintenance — the
-    * standing artifact vs19's graph search reads, kept current as
-    * vectors arrive. Standing tables: `postingsTable` (the flow's
-    * vector store AND id guard — [[maintainIvfState]]'s shape, sentinel
-    * cid −1 for zero-norm arrivals) and `graphTable`, a parquet table
-    * PARTITIONED BY cid holding vs13's edge rows. An advance scores the
-    * batch against its own cells only ([[graft.queries.VectorOps
-    * .knnGraphAdvanceTouched]] — stored edges stand in for every
-    * standing-standing pair) and rewrites JUST the touched cid
-    * partitions ([[graft.operators.MergeWriter.overwritePartitionsAtomic]]
-    * — per-partition stage-then-publish, no delete-then-rename commit
-    * window): per-batch write volume is O(touched cells' graph rows) =
-    * O(affected), never the graph.
-    * Write order: graph partitions first, then the guard-moving
-    * postings append. Crash between the two: the batch is unguarded, a
-    * replay recomputes the SAME touched partitions — the advance is
-    * idempotent because stored edges referencing batch ids are dropped
-    * and re-derived inside the kernel — and the second overwrite is
-    * byte-equivalent. A crash INSIDE the publish rolls forward at the
-    * next advance's entry repair, before any standing read. A touched
-    * cell's edge set never shrinks to empty (members are never
-    * removed), so the advance's intent never deletes a partition.
-    * Per-batch compute Σ_touched
-    * |cell∩standing|·|cell∩batch| — the incremental cost the pp24 gate
-    * states, vs vs13's Σ|cell|² rescan. */
-  def maintainKnnGraphState(batch: DataFrame, cents: DataFrame,
-      postingsTable: String, graphTable: String, k: Int = 3): Unit = {
-    val spark = batch.sparkSession
-    // heal any crashed partition publish BEFORE the snapshot read below —
-    // a pending committed stage reads as a missing partition otherwise
-    graft.operators.MergeWriter.repairPartitionedTable(spark, graphTable, "cid")
-    val postings = tryRead(spark, postingsTable)
-    val freshRaw = postings
-      .map(p => batch.join(
-        pruneToBatchRange(p.select("vec_id"), batch, "vec_id"),
-        Seq("vec_id"), "left_anti"))
-      .getOrElse(batch)
-      .groupBy(col("vec_id")).agg(max(col("embedding")).as("embedding"))
-    // r18/r19 (guide §1.2 step 1 — don't pay a pass twice): ONE checkpoint
-    // of the quantized+normed+ASSIGNED batch — assignment is a pure
-    // row-local projection (NearestCentroid), so folding it into the same
-    // checkpoint removes the second per-advance checkpoint job the r18
-    // shape still paid; fresh and the zero-norm/null rejects are both
-    // FILTERS over it. fresh/rejects are a TRUE PARTITION of graded
-    // (p and !p): a row is classified exactly once regardless of exotic
-    // norm values. A reject's row-local cid is discarded (overridden to
-    // the −1 sentinel), so assigning it first costs nothing but the fused
-    // projection's arithmetic. An EMPTY quantizer assigns cid null and
-    // the null filter below drops those rows from `assigned` — exactly
-    // assignCells' empty-quantizer contract (assign nothing), with the
-    // rejects leg unaffected.
-    val cs = cents.select(col("cid"), col("cq"), col("cn")).collect()
-    val graded = freshRaw
-      .select(col("vec_id"),
-        graft.operators.Ann.quantize(col("embedding")).as("q"))
-      .withColumn("nrm", sqrt(graft.operators.Ann.dotQ(col("q"), col("q"))
-        .cast("double")))
-      .withColumn("cid",
-        if (cs.isEmpty) lit(null).cast("long")
-        else graft.functions.VectorExpressions.nearestCentroid(
-          col("q"), col("nrm"),
-          cs.map(_.getLong(0)),
-          cs.map(_.getSeq[Long](1).toArray),
-          cs.map(_.getDouble(2))))
-      .localCheckpoint(true)
-    val assigned = graded.filter(col("nrm") > 0.0 && col("cid").isNotNull)
-      .select(col("cid"), col("vec_id"), col("q"), col("nrm"))
-    val rejects = graded.filter(!coalesce(col("nrm") > 0.0, lit(false)))
-      .select(lit(-1L).as("cid"), col("vec_id"),
-        lit(Array.empty[Long]).as("q"), lit(0.0).as("nrm"))
-    val standPost = postings.map(_.filter(col("cid") >= 0))
-      .getOrElse(assigned.limit(0))
-    // touched cells derive from the checkpointed ASSIGNMENT (every cid
-    // the advance can emit rows for is a batch-assigned cid, and the
-    // collect is codebook-sized by construction) — the collect doubles as
-    // the fresh-emptiness probe, so the advance pays no separate isEmpty
-    // job. A batch-only singleton cell can stage ZERO rows for its cid;
-    // the manifest's "empty" leg publishes that as partition deletion,
-    // which is the correct graph for a one-member cell (no edges) and a
-    // no-op when the partition never existed.
-    val touchedCids = assigned.select(col("cid").cast("long"))
-      .distinct().collect().map(_.getLong(0)).toIndexedSeq
-    if (touchedCids.isEmpty) {
-      if (!rejects.isEmpty) rejects.write.mode("append").parquet(postingsTable)
-      return
-    }
-    val touchedRows = graft.queries.VectorOps.knnGraphAdvanceTouched(
-      standPost, knnGraphSnapshot(spark, graphTable), assigned, k)
-    graft.operators.MergeWriter.overwritePartitionsAtomic(
-      touchedRows, graphTable, "cid", touchedCids)
-    assigned.unionByName(rejects).write.mode("append").parquet(postingsTable)
-  }
-
-  /** The current graph under the maintained cid-partitioned table —
-    * vs13's output shape (the partition column rides back as a normal
-    * column, cast to long: partition-value inference would narrow it). */
-  def knnGraphSnapshot(spark: SparkSession, graphTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    tryRead(spark, graphTable)
-      .map(_.withColumn("cid", col("cid").cast("long"))
-        .select(col("query_id"), col("cid"), col("neighbor_id"), col("rank"),
-          col("cos")))
-      .getOrElse(emptyDf(spark, "query_id" -> LongType, "cid" -> LongType,
-        "neighbor_id" -> LongType, "rank" -> IntegerType, "cos" -> DoubleType))
-  }
+  /** The current graph under the maintained cid-partitioned
+    * [[StateFamily.KnnGraph]] table — vs13's output shape (the partition
+    * column rides back as a normal column, cast to long: partition-value
+    * inference would narrow it). */
+  def knnGraphSnapshot(spark: SparkSession, graphTable: String): DataFrame =
+    foldState(spark, StateFamily.KnnGraph, graphTable)
 
   /** The PRODUCTION CELL-ROUTER for maintained-graph ingest. Round-17's
     * probe measured that CELL-ROUTED arrival is the only arrival shape
@@ -1674,37 +1395,9 @@ object Streams {
     }.getOrElse(Seq.empty)
   }
 
-  /** [[routeByCell]] + [[flushCellGroupsBatched]] +
-    * [[maintainKnnGraphState]] as ONE foreachBatch sink — the
-    * deployable loop that gives real decorrelated ingest the
-    * cell-routed advance cost the round-17 measurement showed: each
-    * arriving micro-batch stages under the router, then the ready cell
-    * groups advance the graph as one cell-clustered micro-batch per
-    * wave (usually a single group — triggers stagger at steady state).
-    * Restart redelivers at both seams (source → stage, stage →
-    * advance); the postings id guard closes both. Drain the stage with
-    * a minRows = 1 flush at decommission, or rely on the age trigger.
-    * Size `minRows` to a FULL advance batch for your arrival rate (see
-    * [[flushCellGroupsBatched]] — the round-18 measurement: batch-sized
-    * cell-pure flushes hit the hand-grouped cellwise band, small groups
-    * re-pay the standing reads per flush); the default here is a floor,
-    * not a recommendation. */
-  def routedKnnGraphStream(vecs: DataFrame, cents: DataFrame,
-      stageTable: String, postingsTable: String, graphTable: String,
-      k: Int = 3, groups: Int = 8, minRows: Long = 1000L, maxLag: Long = 4L,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(vecs, checkpoint)((b: DataFrame, seq: Long) => {
-      routeByCell(b, cents, stageTable, groups, seq)
-      flushCellGroupsBatched(b.sparkSession, stageTable, minRows, maxLag, seq)(
-        rows =>
-          maintainKnnGraphState(rows, cents, postingsTable, graphTable, k))
-      ()
-    })
-
   /** pp38's continuous loop: CONTINUOUS LSH-index maintenance — the
     * serving index behind vs04, kept current as vectors arrive
-    * ([[maintainIvfState]]'s sibling with the hash-bucket geometry in
+    * (the postings store's sibling with the hash-bucket geometry in
     * place of the coarse quantizer). One standing table: `idxTable`,
     * [[graft.operators.Ann.lshIndexRows]]' shape (table, bucket,
     * neighbor_id, cq, cn, dim), which doubles as the ID GUARD — an
@@ -1762,14 +1455,6 @@ object Streams {
     }
     rows.write.mode("append").parquet(idxTable)
   }
-
-  /** [[maintainLshState]] as a foreachBatch sink over a (vec_id,
-    * embedding) stream. */
-  def lshStateStream(vecs: DataFrame, bits: Int, tables: Int,
-      idxTable: String, checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(vecs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainLshState(b, bits, tables, idxTable))
 
   /** vs04 over the maintained index: the current top-k for `queries`
     * under everything arrived — equals [[graft.operators.Ann.lshTopK]]
@@ -1835,92 +1520,6 @@ object Streams {
           .select(t0.columns.map(col).toIndexedSeq: _*), idxTable)
     }
 
-  /** DELETION PROPAGATION — the right-to-be-forgotten job every
-    * production training-data pipeline needs and most engines bolt on
-    * late: given a set of vector ids, leave the whole maintained vector
-    * state (postings, PQ codes, cell sums, kNN graph) EXACTLY as if
-    * those vectors had never arrived — while keeping the ids GUARDED so
-    * an at-least-once upstream redelivering a forgotten row cannot
-    * resurrect it (ids are rewritten as TOMBSTONES, sentinel cid −2
-    * with empty payload: behind the guard's id probe like the −1
-    * zero-norm sentinel, invisible to every cid ≥ 0 consumer; ids never
-    * seen also tombstone, which forward-blocks in-flight arrivals of a
-    * forgotten user). Deliberately run-rarely and O(corpus) — deletion
-    * requests batch up against compliance deadlines, and this is the
-    * same cost class as the rebuild jobs — EXCEPT the graph repair,
-    * which recomputes only the cells the deleted vectors occupied
-    * ([[graft.operators.MergeWriter.overwritePartitionsAtomic]]; a cell
-    * whose edge set empties stages no rows, so the atomic publish
-    * removes its partition directory).
-    *
-    * Crash contract (write order is the argument): the three REPAIRS
-    * (graph, codes, sums) are pure functions of (CURRENT postings
-    * content, ids) — the postings swap, which destroys the
-    * which-cells-did-the-deleted-rows-occupy recovery information, goes
-    * LAST. A crash anywhere before it: re-run, every repair recomputes
-    * byte-identically. A crash after it: the job had already completed
-    * every repair. Single-maintenance-loop contract: call BETWEEN
-    * advances. */
-  def forgetVectorState(spark: SparkSession, ids: DataFrame,
-      postingsTable: String, codesTable: Option[String] = None,
-      sumsTable: Option[String] = None, graphTable: Option[String] = None,
-      graphK: Int = 3): Unit =
-    tryRead(spark, postingsTable).foreach { p0 =>
-      val p = p0.localCheckpoint(true)
-      val idsC = ids.select(col("vec_id")).distinct().localCheckpoint(true)
-      forgetRepairs(spark, p, idsC, codesTable, sumsTable, graphTable, graphK)
-      val tombstones = idsC.select(lit(-2L).as("cid"), col("vec_id"),
-        lit(Array.empty[Long]).as("q"), lit(0.0).as("nrm"))
-      // the USING join floats the key column to the front; re-project to
-      // the canonical (cid, vec_id, q, nrm) order the maintainers write
-      graft.operators.MergeWriter.overwriteAtomic(
-        p.join(idsC, Seq("vec_id"), "left_anti")
-          .select(col("cid"), col("vec_id"), col("q"), col("nrm"))
-          .unionByName(tombstones),
-        postingsTable)
-    }
-
-  /** The repair half of [[forgetVectorState]] — exposed for the
-    * crash-simulation spec (a repair landed, the postings swap did not;
-    * the re-run must converge). */
-  private[graft] def forgetRepairs(spark: SparkSession, p: DataFrame,
-      idsC: DataFrame, codesTable: Option[String], sumsTable: Option[String],
-      graphTable: Option[String], graphK: Int): Unit = {
-    val keptReal = p.filter(col("cid") >= 0)
-      .join(idsC, Seq("vec_id"), "left_anti").localCheckpoint(true)
-    graphTable.foreach { gt =>
-      val touched = p.filter(col("cid") >= 0)
-        .join(idsC, Seq("vec_id"), "left_semi")
-        .select(col("cid")).distinct().localCheckpoint(true)
-      if (!touched.isEmpty) {
-        val repaired = graft.queries.VectorOps.knnGraph(
-          keptReal.join(touched, Seq("cid"), "left_semi"), graphK)
-        // every touched cell is in the intent: a cell whose edge set
-        // emptied (0 or 1 members left) stages no rows, so the atomic
-        // publish DELETES its partition — the case dynamic overwrite
-        // could not express and the old path FS-deleted separately
-        graft.operators.MergeWriter.overwritePartitionsAtomic(
-          repaired, gt, "cid",
-          touched.collect().map(_.getLong(0)).toIndexedSeq)
-      }
-    }
-    codesTable.foreach { ct =>
-      tryRead(spark, ct).foreach { c0 =>
-        val c = c0.localCheckpoint(true)
-        val tomb = idsC.select(lit(-2L).as("cid"), col("vec_id"),
-          lit(Array.empty[Long]).as("codes"))
-        graft.operators.MergeWriter.overwriteAtomic(
-          c.join(idsC, Seq("vec_id"), "left_anti")
-            .select(col("cid"), col("vec_id"), col("codes"))
-            .unionByName(tomb), ct)
-      }
-    }
-    sumsTable.foreach { st =>
-      graft.operators.MergeWriter.overwriteAtomic(
-        ivfSumsDelta(keptReal, Long.MinValue), st)
-    }
-  }
-
   /** The PQ codebook REBUILD→SWAP — the FOURTH quantizer lifecycle
     * closed (IVF centroids, BPE merges, SQ bounds, now PQ books): pp14's
     * advance encodes against FIXED books between rebuilds; when
@@ -1935,7 +1534,7 @@ object Streams {
     * re-encodes every standing row ROW-LOCALLY against the new literal
     * books, atomically swaps pp14's codes table, and returns the trained
     * [[graft.queries.VectorOps.Pq]] for subsequent
-    * [[maintainPqCodesTrained]] advances. Sentinel rows (cid −1) carry
+    * [[StateFamily.pqCodes]] advances. Sentinel rows (cid −1) carry
     * through with empty codes — invisible to the cid-keyed search, but
     * their ids stay behind the guard. Deliberately corpus-sized (iters
     * row-local encode passes + codebook-sized rollups, then one encode
@@ -1987,7 +1586,7 @@ object Streams {
     * perm table only after both landed; a crash between leaves the old
     * perm table with new codes, and the re-run converges. One
     * corpus-sized pass, the run-rarely cost the O(batch)
-    * [[maintainOpqCodes]] advances amortize. */
+    * [[StateFamily.opqCodes]] advances amortize. */
   def rebuildOpqState(spark: SparkSession, postingsTable: String,
       pqCodesTable: String, permTable: String, iters: Int = 1)
       : Option[(IndexedSeq[Int], graft.queries.VectorOps.Pq)] =
@@ -2103,7 +1702,7 @@ object Streams {
           codes.unionByName(codeSentinels), codesTable)
       }
       graft.operators.MergeWriter.overwriteAtomic(
-        ivfSumsDelta(reassigned, Long.MinValue), sumsTable)
+        deltasAt(reassigned, Seq(StateFamily.IvfSums), Long.MinValue).head, sumsTable)
     }
 
   /** The IVF-PQ search (vs09's scorer) over the maintained codes table —
@@ -2127,42 +1726,14 @@ object Streams {
       graft.queries.VectorOps.pqQueries(queriesNormed, pq), cents, pq, k)
   }
 
-  /** Append a batch's changed drop rows to the standing drop-delta table
-    * under its `batch_key` — the exact write [[maintainIvfState]]
-    * performs (shared with the crash-simulation spec so a simulated
-    * partial advance can't drift from the product's). Append-only:
-    * earlier batches' files are never touched, and the write volume is
-    * O(changed rows) — the old keyed-upsert design rewrote the whole
-    * table per batch, the one per-batch cost here that was O(standing)
-    * rather than O(batch). */
-  private[graft] def semDedupDeltaAppend(dropTable: String,
-      changed: DataFrame, batchKey: Long): Unit =
-    changed.select(lit(batchKey).as("batch_key"), col("vec_id"), col("cid"),
-        col("witness_id"), col("n_witnesses"), col("max_cos"))
-      .write.mode("append").parquet(dropTable)
-
-  /** The current SemDedup drop list under the maintained delta table —
-    * dd10's output shape over every vector that has arrived. Resolution
-    * is latest-wins per vec_id by max (n_witnesses, batch_key): a vec_id
-    * re-enters the changed set only when it gains a witness, so
-    * n_witnesses strictly increases across its delta rows and the max is
-    * the newest full-row replacement; the batch_key tiebreak only ever
-    * separates byte-identical replay duplicates (and ranks the
-    * compactor's reserved-key fold below any live row with equal
-    * count — which cannot occur between distinct real batches). */
-  def semDedupSnapshot(spark: SparkSession, dropTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val payload = Seq("cid", "witness_id", "n_witnesses", "max_cos")
-    tryRead(spark, dropTable).getOrElse(emptyDf(spark,
-        "batch_key" -> LongType, "vec_id" -> LongType, "cid" -> LongType,
-        "witness_id" -> LongType, "n_witnesses" -> LongType,
-        "max_cos" -> DoubleType))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(payload.map(col): _*),
-        struct(col("n_witnesses"), col("batch_key"))).as("__r"))
-      .select(col("vec_id") +: payload.map(p => col(s"__r.$p").as(p)): _*)
+  /** The current SemDedup drop list under the maintained
+    * [[StateFamily.SemDedupDrops]] table — dd10's output shape over every
+    * vector that has arrived, latest-wins per vec_id. */
+  def semDedupSnapshot(spark: SparkSession, dropTable: String): DataFrame =
+    foldState(spark, StateFamily.SemDedupDrops, dropTable)
+      .select(col("vec_id"), col("cid"), col("witness_id"), col("n_witnesses"),
+        col("max_cos"))
       .orderBy(col("vec_id"))
-  }
 
   /** Rewrite an APPEND-ONLY standing table (postings, doc store, band
     * index, shingle store, pairs) into `partitions` files — the
@@ -2227,82 +1798,21 @@ object Streams {
   }
 
   /** Fold a `batch_key`-tagged delta table to one row per key group under
-    * the reserved key — the pointer-compaction maintenance job for
-    * additive state (bounds table growth at O(live keys) instead of
-    * O(batches × keys)). Only [[commitSplit]]'s committed rows fold. */
+    * the reserved key — the pointer-compaction maintenance job for keyed
+    * state (bounds table growth at O(live keys) instead of
+    * O(batches × keys)). Only [[commitSplit]]'s committed rows `fold`. */
   private def compactDeltas(spark: SparkSession, table: String,
-      keys: Seq[String], sums: Seq[String],
       guardTable: String, guardIdCol: String,
-      mins: Seq[String] = Nil,
-      tombstoneIds: Option[DataFrame] = None,
-      dropZeroKeys: Boolean = false): Unit =
+      tombstoneIds: Option[DataFrame] = None)(
+      fold: DataFrame => DataFrame): Unit =
     tryRead(spark, table).foreach { t0 =>
       val (committed, pending) = commitSplit(spark, t0.localCheckpoint(true),
         guardTable, guardIdCol, tombstoneIds)
-      // sums fold additively; mins (keeper-style columns) min-combine —
-      // both are associative+commutative, which is all batch_key-tagged
-      // delta folding requires
-      val aggs = sums.map(c => sum(col(c)).as(c)) ++ mins.map(c => min(col(c)).as(c))
-      val folded0 = committed.dropDuplicates("batch_key" +: keys)
-        .groupBy(keys.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .select(lit(Long.MinValue).as("batch_key") +: (keys ++ sums ++ mins).map(col): _*)
-      // a key whose committed decrements netted every sum to zero is a
-      // from-scratch absence — drop it so the table stays O(live keys)
-      // (only for pure-sum flows; keeper-carrying tables keep their rows)
-      val folded =
-        if (dropZeroKeys && mins.isEmpty)
-          folded0.filter(sums.map(c => col(c) =!= 0L).reduce(_ || _))
-        else folded0
       graft.operators.MergeWriter.overwriteAtomic(
-        folded.unionByName(pending), table)
+        fold(committed).withColumn("batch_key", lit(Long.MinValue))
+          .select(t0.columns.map(col).toIndexedSeq: _*)
+          .unionByName(pending), table)
     }
-
-  /** Compact the IVF centroid-sum deltas to one row per (cid, dim);
-    * `postingsTable` is the flow's guard. */
-  def compactIvfSums(spark: SparkSession, sumsTable: String,
-      postingsTable: String): Unit =
-    compactDeltas(spark, sumsTable, Seq("cid", "dim"), Seq("n_vectors", "sum_q"),
-      postingsTable, "vec_id")
-
-  /** [[compactDeltas]]'s NON-ADDITIVE sibling: fold a batch_key-tagged
-    * delta table of full-row REPLACEMENTS to one row per key under the
-    * reserved key, resolving latest-wins by max (`ord`, batch_key) —
-    * the same resolution the table's snapshot applies, so compaction is
-    * snapshot-invariant by construction. Shares the additive fold's
-    * committed/pending split (only batches whose key reached the guard
-    * fold; a crashed batch keeps its rows under its own key so its
-    * replay stays a byte-identical no-op) and its single-maintenance-
-    * loop concurrency contract (read-then-overwrite — rows appended
-    * between snapshot and swap would be dropped). The reserved-key row
-    * can never shadow a live one: `ord` strictly increases across a
-    * key's real delta rows, and the fold's batch_key (Long.MinValue)
-    * loses every tie. */
-  private def compactLatestDeltas(spark: SparkSession, table: String,
-      key: String, ord: String, payload: Seq[String],
-      guardTable: String, guardIdCol: String): Unit =
-    tryRead(spark, table).foreach { t0 =>
-      val (committed, pending) = commitSplit(spark, t0.localCheckpoint(true),
-        guardTable, guardIdCol)
-      val folded = committed
-        .groupBy(col(key))
-        .agg(max_by(struct(payload.map(col): _*),
-          struct(col(ord), col("batch_key"))).as("__r"))
-        .select(lit(Long.MinValue).as("batch_key") +: col(key) +:
-          payload.map(p => col(s"__r.$p").as(p)): _*)
-      graft.operators.MergeWriter.overwriteAtomic(
-        folded.unionByName(pending), table)
-    }
-
-  /** Compact the SemDedup drop deltas to one (latest) row per vec_id;
-    * `postingsTable` is the flow's guard ([[maintainIvfState]] appends
-    * postings LAST, so a batch's key in the postings id column marks its
-    * whole advance committed). */
-  def compactSemDedupDrops(spark: SparkSession, dropTable: String,
-      postingsTable: String): Unit =
-    compactLatestDeltas(spark, dropTable, "vec_id", "n_witnesses",
-      Seq("cid", "witness_id", "n_witnesses", "max_cos"),
-      postingsTable, "vec_id")
 
   /** pp06's continuous twin: CONTINUOUS span-dedup maintenance. Standing
     * tables: `gramsTable` (doc_id, h — the span store, append-only),
@@ -2318,7 +1828,7 @@ object Streams {
     * layout and pruned by broadcast batch-bounded sets (counts to the
     * batch's span hashes, the store to the crossing hashes). Additive
     * tables use the same `batch_key` idempotence trick as
-    * [[maintainIvfState]], and BOTH reads are guarded against the
+    * [[StateFamily.IvfSums]], and BOTH reads are guarded against the
     * batch's own partial writes from a crashed attempt: the counts view
     * excludes rows under this batch's key (they would inflate standing
     * counts and mis-detect crossings), and the store is read minus the
@@ -2350,7 +1860,7 @@ object Streams {
 
   /** The count / report delta rows of one span advance — the exact rows
     * [[maintainSpanState]] appends, shared with the crash-simulation
-    * spec (same drift-pinning reason as [[ivfSumsDelta]]). */
+    * spec (the drift-pinning convention of [[StateFamily]]'s deltas). */
   private[graft] def spanCountsDelta(adv: graft.queries.TextOps.SpanAdvance,
       batchKey: Long): DataFrame =
     adv.counts.select(lit(batchKey).as("batch_key"), col("h"), col("bnd").as("nd"))
@@ -2389,10 +1899,8 @@ object Streams {
     * at the fold). */
   def compactSpanCounts(spark: SparkSession, countsTable: String,
       docTable: String): Unit =
-    compactDeltas(spark, countsTable, Seq("h"), Seq("nd"), docTable, "doc_id",
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("text").isNull).select(col("doc_id"))),
-      dropZeroKeys = true)
+    compactDeltas(spark, countsTable, docTable, "doc_id", textTombstones(spark, docTable))(
+      settled(StateFamily.Sum(Seq("h"), Seq("nd"))))
 
   /** Compact the span report deltas to one row per doc; `docTable` is
     * the flow's guard. */
@@ -2402,11 +1910,11 @@ object Streams {
     * doc row always carries n_spans > 0). */
   def compactSpanReport(spark: SparkSession, reportTable: String,
       docTable: String): Unit =
-    compactDeltas(spark, reportTable, Seq("doc_id"), Seq("n_spans", "n_dup_spans"),
-      docTable, "doc_id",
-      tombstoneIds = tryRead(spark, docTable)
-        .map(_.filter(col("text").isNull).select(col("doc_id"))),
-      dropZeroKeys = true)
+    compactDeltas(spark, reportTable, docTable, "doc_id", textTombstones(spark, docTable))(
+      settled(StateFamily.Sum(Seq("doc_id"), Seq("n_spans", "n_dup_spans"))))
+
+  private def textTombstones(spark: SparkSession, docTable: String) =
+    tryRead(spark, docTable).map(_.filter(col("text").isNull).select(col("doc_id")))
 
   /** DELETION PROPAGATION for the span-dedup family — the first forget
     * with a CROSS-DOC repair: removing a document can flip a span it
@@ -2454,7 +1962,7 @@ object Streams {
       .filter(!_.isEmpty)
     gone.foreach { g =>
       val forgetKey = -g.agg(min(col("doc_id"))).head().getLong(0) - 1L
-      rollbackPendingForgets(spark, Seq(countsTable, reportTable), g)
+      rollbackPendingForgets(spark, Seq(countsTable, reportTable), g, "doc_id")
       val goneIds = g.select(col("doc_id")).localCheckpoint(true)
       // gone span hashes from TEXT (see Scaladoc), per-doc-distinct
       val goneCnt = graft.queries.TextOps.spanStore(g)
@@ -2505,7 +2013,7 @@ object Streams {
       deleteByIds(spark, gramsTable, idsC, Seq("doc_id"))
       deleteByIds(spark, reportTable, idsC, Seq("doc_id"))
     }
-    tombstoneSwap(store, idsC, docTable, "text")
+    tombstoneSwap(StateFamily.Text, store, idsC, docTable)
   }
 
   /** pp29's read view ([[StateFamily.CmsCells]] maintained with
@@ -2672,15 +2180,6 @@ object Streams {
     fresh.write.mode("append").parquet(docTable)
   }
 
-  /** [[maintainPerceptualState]] as a foreachBatch sink over a
-    * (doc_id, text) document stream. */
-  def perceptualStateStream(docs: DataFrame, sigTable: String,
-      pairsTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainPerceptualState(b, sigTable, pairsTable, docTable))
-
   /** The current perceptual pair report under the maintained state —
     * mm04's exact shape over every doc arrived. distinct() is the pair
     * log's documented redelivery recovery. */
@@ -2706,7 +2205,7 @@ object Streams {
     deleteByIds(spark, sigTable, idsC, Seq("doc_id"))
     deleteByIds(spark, pairsTable, idsC, Seq("d1", "d2"))
     val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    tombstoneSwap(store, idsC, docTable, "text")
+    tombstoneSwap(StateFamily.Text, store, idsC, docTable)
   }
 
   /** DELETION PROPAGATION for the containment-index family — the same
@@ -2722,7 +2221,7 @@ object Streams {
     deleteByIds(spark, probeTable, idsC, Seq("doc_id"))
     deleteByIds(spark, pairsTable, idsC, Seq("d1", "d2"))
     val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
-    tombstoneSwap(store, idsC, docTable, "text")
+    tombstoneSwap(StateFamily.Text, store, idsC, docTable)
   }
 
   private def emptySigStore(spark: SparkSession): DataFrame = {
@@ -2737,14 +2236,6 @@ object Streams {
       "matched_bands" -> IntegerType, "hamming" -> IntegerType,
       "is_dup" -> BooleanType)
   }
-
-  /** [[StateFamily.Chunk]]'s advance as a foreachBatch sink over a
-    * (doc_id, text) document stream. */
-  def chunkStateStream(docs: DataFrame, statsTable: String,
-      docTable: String,
-      checkpoint: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainState(b, docTable, StateFamily.Chunk -> statsTable))
 
   /** mm05's read view: the shared-chunk report (digests held by ≥ 2 docs)
     * over the folded [[StateFamily.Chunk]] stats. */
@@ -2802,15 +2293,6 @@ object Streams {
       .select(lit(batchKey).as("batch_key"), col("doc_id"), col("source"),
         col("n_tokens"), col("key"))
   }
-
-  /** [[maintainBudgetState]] as a foreachBatch sink over a (doc_id,
-    * source, text) stream. */
-  def budgetStateStream(docs: DataFrame, eligTable: String,
-      docTable: String, budget: Long,
-      checkpoint: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startMaintainer(docs, checkpoint)((b: DataFrame, _: Long) =>
-        maintainBudgetState(b, eligTable, docTable, budget))
 
   /** The deduped journal rows (doc_id, source, n_tokens, key). */
   private def budgetJournal(spark: SparkSession, eligTable: String): DataFrame = {
@@ -2893,110 +2375,25 @@ object Streams {
   /** The once-offline REFERENCE-LM build for the perplexity score family
     * (pp25/ta17's frozen model): derive the reference bigram counts from
     * the curated slice of `docs` and atomically swap the table every
-    * [[maintainScoreState]] advance scores against. Run BEFORE the
-    * stream starts (the whole family's soundness rests on the reference
-    * being frozen — [[graft.queries.TextOps]] ta17 Scaladoc); re-running
-    * it on the same corpus recomputes the identical table. */
+    * [[StateFamily.score]] advance scores against. Run BEFORE the stream
+    * starts (the whole family's soundness rests on the reference being
+    * frozen — [[graft.queries.TextOps]] ta17 Scaladoc); re-running it on
+    * the same corpus recomputes the identical table. */
   def buildRefState(docs: DataFrame, refTable: String): Unit =
     graft.operators.MergeWriter.overwriteAtomic(
       graft.queries.TextOps.refLmCounts(docs), refTable)
 
-  /** pp25's continuous twin: CONTINUOUS perplexity-score maintenance —
-    * the CHEAPEST maintainer in the standing-state family, because the
-    * frozen reference makes a document's score IMMUTABLE once computed:
-    * the standing state IS the scored table, advanced by scoring ONLY
-    * the batch against the reference ([[graft.queries.TextOps
-    * .refSurprise]] — batch-sized rollup + bigram-keyed ref join) and
-    * appending. Nothing is ever updated, rewritten, or recomputed from
-    * text after the advance, so the doc-store guard is IDS-ONLY (unlike
-    * the counts family, whose forget decrements need the stored text).
-    * Bucket assignment is deliberately NOT maintained — a new arrival
-    * shifts its source's tercile cuts for everyone (inherent to quantile
-    * buckets), so [[scoreSnapshot]] re-ranks at read over (doc_id,
-    * source, score) rows, never the text (pp25's rank-only argument).
-    *
-    * At-least-once safety is the [[StateFamily]] sum contract: guard
-    * appended LAST, scored rows ride the batch's deterministic
-    * `batch_key` (min doc_id), a crash-replay appends byte-identical
-    * rows (the reference is frozen — same inputs, same scores), and the
-    * snapshot's (batch_key, doc_id) dedup collapses them. Docs with
-    * < 2 tokens score no row but still enter the guard (ta17's
-    * absent-doc convention, and redelivery stays blocked). The table
-    * is [[TF_PARTITIONS]]-bucketed on doc_id from its first write, so
-    * [[forgetScoreState]] rewrites only touched partitions. */
-  def maintainScoreState(batch: DataFrame, refTable: String,
-      scoresTable: String, docTable: String): Unit = {
-    val spark = batch.sparkSession
-    enterBucketed(spark, scoresTable, StateFamily.DocBucket)
-    val fresh = freshAgainst(batch, docTable, Seq("source", "text"))
-    if (fresh.isEmpty) return
-    val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
-    append(scoreDelta(fresh, spark.read.parquet(refTable), batchKey),
-      scoresTable, Some(StateFamily.DocBucket))
-    fresh.select(col("doc_id")).write.mode("append").parquet(docTable)
-  }
-
-  /** The scored rows of one batch — the exact rows [[maintainScoreState]]
-    * appends, shared with the crash-simulation spec (same drift-pinning
-    * reason as [[StateFamily]]'s deltas). */
-  private[graft] def scoreDelta(fresh: DataFrame, ref: DataFrame,
-      batchKey: Long): DataFrame =
-    graft.queries.TextOps.refSurprise(fresh, ref)
-      .select(lit(batchKey).as("batch_key"), col("doc_id"),
-        col("source"), col("score"))
-
-  /** The current head/middle/tail bucketing under the maintained scores
-    * — ta17's exact shape over every doc that has arrived AND NOT been
-    * forgotten: duplicate scored rows from redelivered batches collapse
-    * on (batch_key, doc_id), then the rank-only bucket assembly
+  /** The current head/middle/tail bucketing under the maintained
+    * [[StateFamily.Score]] rows — ta17's exact shape over every doc that
+    * has arrived AND NOT been forgotten: the rank-only bucket assembly
     * ([[graft.queries.TextOps.refBuckets]] — distributed rank, no
-    * per-source window sort) runs over the id/source/score rows. */
-  def scoreSnapshot(spark: SparkSession, scoresTable: String): DataFrame = {
-    import org.apache.spark.sql.types._
+    * per-source window sort) over the folded id/source/score rows. A new
+    * arrival shifts its source's tercile cuts for everyone, so buckets are
+    * never maintained, only re-cut here (pp25's rank-only argument). */
+  def scoreSnapshot(spark: SparkSession, scoresTable: String): DataFrame =
     graft.queries.TextOps.refBuckets(
-      tryRead(spark, scoresTable).getOrElse(emptyDf(spark,
-          "batch_key" -> LongType, "doc_id" -> LongType,
-          "source" -> StringType, "score" -> LongType))
-        .dropDuplicates("batch_key", "doc_id")
+      foldState(spark, StateFamily.Score, scoresTable)
         .select(col("doc_id"), col("source"), col("score")))
-  }
-
-  /** DELETION PROPAGATION for the score family — the SIMPLEST forget
-    * member: scores are per-doc and immutable (nothing aggregates them,
-    * nothing derives from them), so forgetting is exact row deletion
-    * plus the id guard. The table is [[TF_PARTITIONS]]-bucketed on
-    * doc_id (like the per-doc families), so the deletion rewrites ONLY
-    * the partitions holding forgotten ids — partition-pruned scan, atomic
-    * per-partition publish, rewrite volume min(|ids|, buckets)/buckets
-    * of the table. Scores delete FIRST (snapshots are correct
-    * immediately), then the ids append to the guard (blocks future
-    * ingest of never-seen forgotten ids; already-seen ids are guarded
-    * since their advance). A crash between the two re-runs to
-    * convergence. Re-bucketing needs no repair at all: [[scoreSnapshot]]
-    * re-ranks at read, so the survivors' head/middle/tail simply re-cut
-    * (pp25's rank-only argument). The store keeps ids, not text, so the
-    * touched buckets come from the ids themselves. */
-  def forgetScoreState(spark: SparkSession, ids: DataFrame,
-      scoresTable: String, docTable: String): Unit = {
-    val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
-    enterBucketed(spark, scoresTable, StateFamily.DocBucket)
-    rewriteBuckets(spark, scoresTable, StateFamily.DocBucket,
-      Some(bucketsOf(idsC, StateFamily.DocBucket.of)))(
-      _.join(idsC, Seq("doc_id"), "left_anti"))
-    appendNewBy(idsC, docTable, "doc_id")
-  }
-
-  /** Compact the scored rows: collapse redelivery duplicates (the rows
-    * are byte-identical by the frozen-reference argument, so dropping
-    * them never destroys replay-dedup evidence — a replay re-appends an
-    * identical row and the snapshot dedup collapses it again) and
-    * repack — per pt bucket, preserving the partitioned layout the
-    * forget's pruning rests on. */
-  def compactScores(spark: SparkSession, scoresTable: String): Unit = {
-    enterBucketed(spark, scoresTable, StateFamily.DocBucket)
-    rewriteBuckets(spark, scoresTable, StateFamily.DocBucket, None)(
-      _.dropDuplicates("batch_key", "doc_id"))
-  }
 
   /** Append `rows` to `table`, partitioned by the bucket when there is
     * one. */
@@ -3009,15 +2406,19 @@ object Streams {
     * crashed per-bucket publish forward (a pending committed stage would
     * overwrite later appends, or read as missing rows), then rewrite a
     * flat table that predates the layout partitioned, once, in one
-    * atomic swap. */
+    * atomic swap. The layout is told from the directory listing (data
+    * files at the root), so a partitioned table is never read here. */
   private def enterBucketed(spark: SparkSession, table: String,
       b: StateFamily.Bucket): Unit = {
     graft.operators.MergeWriter.repairPartitionedTable(spark, table, b.name)
-    tryRead(spark, table).foreach { t =>
-      if (!t.columns.contains(b.name))
+    val p = new org.apache.hadoop.fs.Path(table)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p) && fs.listStatus(p).exists(f =>
+        f.isFile && f.getPath.getName.startsWith("part-")))
+      tryRead(spark, table).foreach { t =>
         graft.operators.MergeWriter.overwriteAtomicPartitioned(
           t.localCheckpoint(true).withColumn(b.name, b.of), table, b.name)
-    }
+      }
   }
 
   /** Rewrite `table` bucket by bucket as `rows` of it, each bucket
@@ -3035,7 +2436,7 @@ object Streams {
       val t = touched.fold(t0.localCheckpoint(true))(
         bs => t0.filter(col(b.name).isin(bs: _*)))
       graft.operators.MergeWriter.overwritePartitionsAtomic(
-        rows(t).drop(b.name).withColumn(b.name, b.of).repartition(col(b.name)),
+        rows(t).withColumn(b.name, b.of).repartition(col(b.name)),
         table, b.name, touched.getOrElse(bucketsOf(t, col(b.name))))
     }
 

@@ -28,8 +28,9 @@ class AppendCompactionSpec extends AnyFunSuite with SparkSpec {
       .count(_.getName.endsWith(".parquet"))
 
     for (b <- Seq(all.take(40), all.slice(40, 120), all.slice(120, 200)))
-      Streams.maintainIvfState(b.toSeq.toDF("vec_id", "embedding"),
-        cents, postT, sumsT)
+      Streams.maintainState(b.toSeq.toDF("vec_id", "embedding"),
+        StateFamily.postings(cents), postT,
+        StateFamily.IvfSums -> sumsT)
     val before = postings()
     assert(files() > 2, "advances should have accreted one file set per batch")
 
@@ -39,11 +40,13 @@ class AppendCompactionSpec extends AnyFunSuite with SparkSpec {
 
     // the flow after a compaction is exactly as exact as before it:
     // guard still holds (redelivery no-op), next advance lands
-    Streams.maintainIvfState(all.slice(120, 200).toSeq.toDF("vec_id", "embedding"),
-      cents, postT, sumsT)
+    Streams.maintainState(all.slice(120, 200).toSeq.toDF("vec_id", "embedding"),
+      StateFamily.postings(cents), postT,
+      StateFamily.IvfSums -> sumsT)
     assert(postings() == before)
-    Streams.maintainIvfState(all.slice(200, 260).toSeq.toDF("vec_id", "embedding"),
-      cents, postT, sumsT)
+    Streams.maintainState(all.slice(200, 260).toSeq.toDF("vec_id", "embedding"),
+      StateFamily.postings(cents), postT,
+      StateFamily.IvfSums -> sumsT)
     val seen = all.take(260).map(_._1).toSet
     val direct = VectorOps.assignCells(
         VectorOps.normed(e.filter($"vec_id".isInCollection(seen))), cents)

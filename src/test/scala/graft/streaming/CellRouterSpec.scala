@@ -21,7 +21,7 @@ import graft.SparkSpec
   *    wave; the downstream maintainer's id guard collapses it — the
   *    maintained graph still equals the full build.
   *  - END TO END: decorrelated arrival through router + flush + drain
-  *    feeds [[Streams.maintainKnnGraphState]] to a graph equal to the
+  *    feeds the [[StateFamily.KnnGraph]] advance to a graph equal to the
   *    from-scratch vs13 build, zero-norm sentinels included.
   */
 class CellRouterSpec extends AnyFunSuite with SparkSpec {
@@ -127,7 +127,8 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     val root = Files.createTempDirectory("router-wave").toString
     val (stageT, postT, graphT) = (s"$root/stage", s"$root/post", s"$root/graph")
     def advance(rows: org.apache.spark.sql.DataFrame): Unit =
-      Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3)
+      Streams.maintainState(rows, StateFamily.postings(cents), postT,
+        StateFamily.KnnGraph -> graphT)
 
     val waves = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
     val arrivals = 3
@@ -187,7 +188,8 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     Streams.routeByCell(df(e.toIndexedSeq), centsA, stageT, 3, 0L)
     Streams.flushCellGroupsBatched(spark, stageT, minRows = 1L, maxLag = 0L,
       curSeq = 1L)(rows =>
-      Streams.maintainKnnGraphState(rows, centsB, postT, graphT, k = 3))
+      Streams.maintainState(rows, StateFamily.postings(centsB), postT,
+        StateFamily.KnnGraph -> graphT))
     def key(g: org.apache.spark.sql.DataFrame) = g
       .select($"query_id", $"neighbor_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -210,7 +212,8 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
     val (stageT, postT, graphT) = (s"$root/stage", s"$root/post", s"$root/graph")
     val zero = (777777L, e.head._2.map(_ => 0.0f))
     def advance(rows: org.apache.spark.sql.DataFrame): Unit =
-      Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3)
+      Streams.maintainState(rows, StateFamily.postings(cents), postT,
+        StateFamily.KnnGraph -> graphT)
 
     val arrivals = 3
     var crashed = false

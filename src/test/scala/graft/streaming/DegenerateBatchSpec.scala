@@ -76,7 +76,7 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
     val allBad = Seq((3L, "srcA", null: String), (4L, "srcA", ""))
       .toDF("doc_id", "source", "text")
     for (b <- Seq(degenerate, empty, allBad)) {
-      Streams.maintainScoreState(b, s"$root/ref", s"$root/scores", s"$root/docsS")
+      Streams.maintainState(b, s"$root/docsS", StateFamily.score(s"$root/ref") -> s"$root/scores")
       Streams.maintainState(b.select($"doc_id", $"text"), s"$root/docsT",
         StateFamily.Tf -> s"$root/tf")
       Streams.maintainState(b.select($"doc_id", $"text"), s"$root/docsF",
@@ -102,7 +102,7 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
     // nothing ever ingested: every forget must tolerate missing tables,
     // write only its tombstones, and leave a readable (forward-blocking)
     // doc store — a deletion request must never require prior arrivals
-    Streams.forgetScoreState(spark, ids, s"$root/sc", s"$root/d1")
+    Streams.forgetState(spark, ids, s"$root/d1", StateFamily.Score -> s"$root/sc")
     Streams.forgetState(spark, ids, s"$root/d2", StateFamily.Tf -> s"$root/tf")
     Streams.forgetState(spark, ids, s"$root/d3",
       StateFamily.Tstat -> s"$root/ts", StateFamily.M -> s"$root/m",
@@ -199,8 +199,8 @@ class DegenerateBatchSpec extends AnyFunSuite with SparkSpec
     val zero = Seq((9000L, Seq.fill(64)(0.0f))).toDF("vec_id", "embedding")
     val real = e.filter($"vec_id" >= 20 && $"vec_id" < 40)
     for (b <- Seq(zero, real.limit(0), zero.unionByName(real)))
-      Streams.maintainIvfState(b, cents, s"$root/post", s"$root/sums",
-        Some(s"$root/drops"))
+      Streams.maintainState(b, StateFamily.postings(cents), s"$root/post",
+        StateFamily.IvfSums -> s"$root/sums", StateFamily.SemDedupDrops -> s"$root/drops")
     // the zero vector is unindexable but still acknowledged: ONE sentinel
     // posting (cid −1) from its first delivery makes every redelivery a
     // guarded no-op — three deliveries, one sentinel row, and the real

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{OverlappedTests, SparkSpec}
 import graft.queries.VectorOps
 
-/** Deletion propagation: after forgetVectorState, every maintained
+/** Deletion propagation: after forgetState over the postings and codes
+  * stores, every maintained
   * vector table must equal a from-scratch build over the corpus WITHOUT
   * the forgotten ids — with the ids tombstoned (redelivery AND future
   * ingest blocked), the job idempotent, and a crash between the repairs
@@ -31,11 +32,15 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
     val normedAll = VectorOps.normed(df(all)).localCheckpoint(true)
     val cents = VectorOps.ivfCentroids(normedAll).localCheckpoint(true)
     val book = VectorOps.pqBookRows(normedAll)
+    val (post, codes) =
+      (StateFamily.postings(cents), StateFamily.pqCodes(cents, VectorOps.pqOf(book)))
 
     for (b <- Seq(all.take(200), all.drop(200))) {
-      Streams.maintainIvfState(df(b), cents, postT, sumsT)
-      Streams.maintainPqCodes(df(b), cents, book, codesT)
-      Streams.maintainKnnGraphState(df(b), cents, postG, graphT)
+      Streams.maintainState(df(b), post, postT,
+        StateFamily.IvfSums -> sumsT)
+      Streams.maintainState(df(b), codes, codesT)
+      Streams.maintainState(df(b), post, postG,
+        StateFamily.KnnGraph -> graphT)
     }
 
     // forget: every 7th real id, plus the zero-norm sentinel, plus an
@@ -43,8 +48,9 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
     val neverSeen = 3000000L
     val forgot = e0.map(_._1).filter(_ % 7 == 0).toSet + zeroId + neverSeen
     val fDf = forgot.toSeq.toDF("vec_id")
-    Streams.forgetVectorState(spark, fDf, postT, Some(codesT), Some(sumsT))
-    Streams.forgetVectorState(spark, fDf, postG, graphTable = Some(graphT))
+    Streams.forgetState(spark, fDf, codes, codesT)
+    Streams.forgetState(spark, fDf, postT, StateFamily.IvfSums -> sumsT)
+    Streams.forgetState(spark, fDf, postG, StateFamily.KnnGraph -> graphT)
 
     val remaining = all.filter(t => !forgot.contains(t._1))
     val remNormed = VectorOps.normed(df(remaining)).localCheckpoint(true)
@@ -84,14 +90,17 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
     val someForgot = forgot.filter(_ != neverSeen).take(5).toSeq
     val reIngest = df(all.filter(t => someForgot.contains(t._1)) ++
       Seq(neverSeen -> e0.head._2))
-    Streams.maintainIvfState(reIngest, cents, postT, sumsT)
-    Streams.maintainPqCodes(reIngest, cents, book, codesT)
-    Streams.maintainKnnGraphState(reIngest, cents, postG, graphT)
+    Streams.maintainState(reIngest, post, postT,
+      StateFamily.IvfSums -> sumsT)
+    Streams.maintainState(reIngest, codes, codesT)
+    Streams.maintainState(reIngest, post, postG,
+      StateFamily.KnnGraph -> graphT)
     assert(realPost(postT) == wantPost && realPost(postG) == wantPost
       && graphRows() == wantGraph, "a forgotten id re-entered the state")
 
     // idempotent re-run
-    Streams.forgetVectorState(spark, fDf, postT, Some(codesT), Some(sumsT))
+    Streams.forgetState(spark, fDf, codes, codesT)
+    Streams.forgetState(spark, fDf, postT, StateFamily.IvfSums -> sumsT)
     assert(realPost(postT) == wantPost)
 
     // crash: repairs landed, postings swap lost — re-running the full
@@ -99,14 +108,18 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
     val root2 = Files.createTempDirectory("forget-crash").toString
     val (postT2, sumsT2, codesT2) = (s"$root2/post", s"$root2/sums", s"$root2/codes")
     for (b <- Seq(all.take(200), all.drop(200))) {
-      Streams.maintainIvfState(df(b), cents, postT2, sumsT2)
-      Streams.maintainPqCodes(df(b), cents, book, codesT2)
+      Streams.maintainState(df(b), post, postT2,
+        StateFamily.IvfSums -> sumsT2)
+      Streams.maintainState(df(b), codes, codesT2)
     }
-    val p2 = spark.read.parquet(postT2).localCheckpoint(true)
-    Streams.forgetRepairs(spark, p2,
-      fDf.select($"vec_id").distinct().localCheckpoint(true),
-      Some(codesT2), Some(sumsT2), None, 3)
-    Streams.forgetVectorState(spark, fDf, postT2, Some(codesT2), Some(sumsT2))
+    // the codes store's forget and the sums rebuild landed; the postings
+    // tombstone swap went to a copy of the store, so the real one is
+    // untouched
+    spark.read.parquet(postT2).write.parquet(s"$root2/post-copy")
+    Streams.forgetState(spark, fDf, codes, codesT2)
+    Streams.forgetState(spark, fDf, s"$root2/post-copy", StateFamily.IvfSums -> sumsT2)
+    Streams.forgetState(spark, fDf, codes, codesT2)
+    Streams.forgetState(spark, fDf, postT2, StateFamily.IvfSums -> sumsT2)
     assert(realPost(postT2) == wantPost, "crash replay diverged")
     assert(spark.read.parquet(codesT2).filter($"cid" >= 0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
@@ -169,7 +182,7 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
     // crash-replay: the SAME decrement rows land again under the same
     // key — the snapshots' (batch_key, key) dedup collapses them
     val goneDf = df(goneDocs)
-    StateFamily.Vocab.delta(goneDf, negKeys.head)
+    StateFamily.Vocab.delta(new StateFamily.In(goneDf, negKeys.head))
       .select($"batch_key", $"tok", (-$"df").as("df"), (-$"cf").as("cf"))
       .write.mode("append").parquet(vocT)
     assert(vocabGot() == vocabWant(), "replayed decrement double-counted")
@@ -204,8 +217,7 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
     val (vocT2, docV2) = (s"$root2/vocab", s"$root2/docs")
     for (b <- Seq(all.take(200), all.drop(200)))
       Streams.maintainState(df(b), docV2, StateFamily.Vocab -> vocT2)
-    StateFamily.Vocab.delta(goneDf.filter($"doc_id" =!= neverSeen),
-      negKeys.head)
+    StateFamily.Vocab.delta(new StateFamily.In(goneDf.filter($"doc_id" =!= neverSeen), negKeys.head))
       .select($"batch_key", $"tok", (-$"df").as("df"), (-$"cf").as("cf"))
       .write.mode("append").parquet(vocT2)
     Streams.compactState(spark, docV2, StateFamily.Vocab -> vocT2)
@@ -263,7 +275,7 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
     // crash-replay of the decrement dedups under its key
     val goneDocs = all.filter(t => forgot.contains(t._1))
     val negKey = -goneDocs.map(_._1).min - 1L
-    StateFamily.Mix.delta(df(goneDocs), negKey)
+    StateFamily.Mix.delta(new StateFamily.In(df(goneDocs), negKey))
       .select($"batch_key", $"source", (-$"n").as("n"))
       .write.mode("append").parquet(cntT)
     assert(countsGot() == countsWant(), "replayed decrement double-counted")
@@ -446,7 +458,7 @@ class ForgetStateSpec extends AnyFunSuite with SparkSpec
 
     // job 1 CRASHES before its swap: gone G1 = {10, 12}, key −10−1 = −11
     // — decrements for doc 12's tokens are now pending in the table
-    StateFamily.Vocab.delta(df(all.filter(t => Set(10L, 12L)(t._1))), -11L)
+    StateFamily.Vocab.delta(new StateFamily.In(df(all.filter(t => Set(10L, 12L)(t._1))), -11L))
       .select($"batch_key", $"tok", (-$"df").as("df"), (-$"cf").as("cf"))
       .write.mode("append").parquet(vocT)
 

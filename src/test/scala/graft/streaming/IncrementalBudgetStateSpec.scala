@@ -137,8 +137,8 @@ class IncrementalBudgetStateSpec extends AnyFunSuite with SparkSpec {
     val rows = docs.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, String, String)]
-    val q = Streams.budgetStateStream(
-      mem.toDF().toDF("doc_id", "source", "text"), eligT, docT, B)
+    val q = Streams.startMaintainer(mem.toDF().toDF("doc_id", "source", "text"),
+      None)((b, _) => Streams.maintainBudgetState(b, eligT, docT, B))
     try {
       rows.grouped(200).foreach { g => mem.addData(g.toSeq); q.processAllAvailable() }
     } finally q.stop()

@@ -87,7 +87,8 @@ class IncrementalChunkStateSpec extends AnyFunSuite with SparkSpec {
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING")
       .json(s"$src/*")
-    val q = Streams.chunkStateStream(stream, statsT, docT)
+    val q = Streams.startMaintainer(stream, None)((b, _) =>
+      Streams.maintainState(b, docT, StateFamily.Chunk -> statsT))
     try q.processAllAvailable() finally q.stop()
     assert(snapshot(statsT) == directReport(docs),
       "streamed state differs from direct maintenance")

@@ -33,8 +33,8 @@ class IncrementalIndexStreamSpec extends AnyFunSuite with SparkSpec {
     val batches = Seq(all.take(50), all.slice(50, 280), all.drop(280))
 
     val mem = MemoryStream[(Long, String)]
-    val q = Streams.incrementalIndexStream(
-      mem.toDF().toDF("doc_id", "text"), indexT, docT, pairsT, shT)
+    val q = Streams.startMaintainer(mem.toDF().toDF("doc_id", "text"), None)(
+      (b, _) => Streams.maintainBandIndex(b, indexT, docT, pairsT, shT))
     try {
       var afterPrev = Map.empty[String, (Long, Long)]
       for (b <- batches) {

@@ -60,7 +60,9 @@ class IncrementalIvfStreamSpec extends AnyFunSuite with SparkSpec {
     var seen = Set.empty[Long]
     var afterPrev = Map.empty[String, (Long, Long)]
     for (b <- batches) {
-      Streams.maintainIvfState(b.toSeq.toDF("vec_id", "embedding"), cents, postT, sumsT)
+      Streams.maintainState(b.toSeq.toDF("vec_id", "embedding"),
+        StateFamily.postings(cents), postT,
+        StateFamily.IvfSums -> sumsT)
       seen ++= b.map(_._1)
       assert(postingsSet() == directPostings(seen))
       assert(sums() == directSums(seen))
@@ -78,13 +80,14 @@ class IncrementalIvfStreamSpec extends AnyFunSuite with SparkSpec {
 
     // redelivery of an ingested batch: nothing changes (postings guard)
     val (p0, s0) = (postingsSet(), sums())
-    Streams.maintainIvfState(batches(1).toSeq.toDF("vec_id", "embedding"),
-      cents, postT, sumsT)
+    Streams.maintainState(batches(1).toSeq.toDF("vec_id", "embedding"),
+      StateFamily.postings(cents), postT,
+      StateFamily.IvfSums -> sumsT)
     assert(postingsSet() == p0 && sums() == s0)
 
     // compaction folds the delta table without moving any snapshot, and
     // a post-compaction advance stays exact
-    Streams.compactIvfSums(spark, sumsT, postT)
+    Streams.compactState(spark, postT, StateFamily.IvfSums -> sumsT)
     assert(sums() == s0)
     assert(spark.read.parquet(sumsT).select("batch_key").distinct().count() == 1)
 
@@ -97,20 +100,22 @@ class IncrementalIvfStreamSpec extends AnyFunSuite with SparkSpec {
     val root2 = Files.createTempDirectory("inc-ivf-crash").toString
     val (postT2, sumsT2) = (s"$root2/postings", s"$root2/sums")
     val b1 = batches(0).toSeq.toDF("vec_id", "embedding")
-    Streams.maintainIvfState(b1, cents, postT2, sumsT2)
+    Streams.maintainState(b1, StateFamily.postings(cents), postT2,
+      StateFamily.IvfSums -> sumsT2)
     val b2 = batches(1).toSeq.toDF("vec_id", "embedding")
     val key2 = batches(1).map(_._1).min
-    Streams.ivfSumsDelta(VectorOps.assignCells(VectorOps.normed(b2), cents), key2)
+    StateFamily.IvfSums.delta(new StateFamily.In(VectorOps.assignCells(VectorOps.normed(b2), cents), key2))
       .write.mode("append").parquet(sumsT2)
     // a maintenance compaction runs while the crashed batch is pending —
     // its uncommitted rows (key not behind the postings guard) must stay
     // under their own key, NOT fold into the reserved one, or the replay
     // below double-counts the batch forever
-    Streams.compactIvfSums(spark, sumsT2, postT2)
+    Streams.compactState(spark, postT2, StateFamily.IvfSums -> sumsT2)
     assert(spark.read.parquet(sumsT2).filter($"batch_key" === key2).count() > 0,
       "compaction folded a pending batch's delta rows")
     // the replay (redelivered batch)
-    Streams.maintainIvfState(b2, cents, postT2, sumsT2)
+    Streams.maintainState(b2, StateFamily.postings(cents), postT2,
+      StateFamily.IvfSums -> sumsT2)
     val seen12 = (batches(0) ++ batches(1)).map(_._1).toSet
     assert(Streams.ivfSumsSnapshot(spark, sumsT2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
@@ -118,7 +123,7 @@ class IncrementalIvfStreamSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(postT2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == directPostings(seen12))
     // post-replay compaction now folds everything (all batches committed)
-    Streams.compactIvfSums(spark, sumsT2, postT2)
+    Streams.compactState(spark, postT2, StateFamily.IvfSums -> sumsT2)
     assert(spark.read.parquet(sumsT2).select("batch_key").distinct().count() == 1)
     assert(Streams.ivfSumsSnapshot(spark, sumsT2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq

@@ -48,7 +48,8 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
     for (b <- batches) {
       // in-batch duplicate: deterministic max-embedding collapse
       val withDup = b ++ b.headOption
-      Streams.maintainKnnGraphState(df(withDup), cents, postT, graphT)
+      Streams.maintainState(df(withDup), StateFamily.postings(cents), postT,
+        StateFamily.KnnGraph -> graphT)
       arrived ++= b
       assert(snap() == direct(arrived), s"graph drifted after batch of ${b.length}")
     }
@@ -58,9 +59,9 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
     // ONE cell — every other cell's partition files must not move
     val before = dataFiles(graphT)
     val extraVec = e0.head._2.map(x => x) // a copy of vector 0 under a new id
-    Streams.maintainKnnGraphState(
-      Seq((2000000L, extraVec: Seq[Float])).toDF("vec_id", "embedding"),
-      cents, postT, graphT)
+    Streams.maintainState(Seq((2000000L, extraVec: Seq[Float])).toDF("vec_id", "embedding"),
+      StateFamily.postings(cents), postT,
+      StateFamily.KnnGraph -> graphT)
     arrived ++= Seq(2000000L -> (extraVec: Seq[Float]))
     assert(snap() == direct(arrived))
     val touchedCid = VectorOps.assignCells(
@@ -81,7 +82,8 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
 
     // redelivery of a whole ingested batch: nothing changes anywhere
     val (s0, p0, g0) = (snap(), dataFiles(postT), dataFiles(graphT))
-    Streams.maintainKnnGraphState(df(batches(1)), cents, postT, graphT)
+    Streams.maintainState(df(batches(1)), StateFamily.postings(cents), postT,
+      StateFamily.KnnGraph -> graphT)
     assert(snap() == s0 && dataFiles(graphT) == g0 && dataFiles(postT) == p0)
 
     // partial-crash replay on a fresh root: the graph partitions landed
@@ -90,7 +92,8 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
     // re-derived), never a doubled rank
     val root2 = Files.createTempDirectory("inc-knn-crash").toString
     val (postT2, graphT2) = (s"$root2/postings", s"$root2/graph")
-    Streams.maintainKnnGraphState(df(batches(0)), cents, postT2, graphT2)
+    Streams.maintainState(df(batches(0)), StateFamily.postings(cents), postT2,
+      StateFamily.KnnGraph -> graphT2)
     val assigned1 = VectorOps.assignCells(
       VectorOps.normed(df(batches(1))), cents).localCheckpoint(true)
     VectorOps.knnGraphAdvanceTouched(
@@ -98,7 +101,8 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
         Streams.knnGraphSnapshot(spark, graphT2), assigned1, 3)
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("cid").parquet(graphT2)
-    Streams.maintainKnnGraphState(df(batches(1)), cents, postT2, graphT2)
+    Streams.maintainState(df(batches(1)), StateFamily.postings(cents), postT2,
+      StateFamily.KnnGraph -> graphT2)
     assert(rowsOf(Streams.knnGraphSnapshot(spark, graphT2)) ==
       direct(batches(0) ++ batches(1)),
       "crash replay drifted (duplicate edge or lost advance)")
@@ -106,7 +110,7 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
 
   test("the continuous loop composes with the AUTO-SIZED quantizer era (pp36's production shape)") {
     // cents is DATA to the loop, so the auto-sized era (nlist derived by
-    // autoNlist at the latest rebuild) drives maintainKnnGraphState
+    // autoNlist at the latest rebuild) drives the KnnGraph advance
     // unchanged — the maintained graph must equal knnGraphAuto's full
     // build at the same targetCellSize, which is pp36's gate contract
     // carried into the continuous member
@@ -125,7 +129,8 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
     assert(nlist > 1, s"corpus too small for a multi-cell era (nlist=$nlist)")
     val cents = VectorOps.ivfCentroids(vecs, nlist).localCheckpoint(true)
     for (b <- Seq(e0.take(70), e0.slice(70, 260), e0.drop(260)))
-      Streams.maintainKnnGraphState(df(b), cents, postT, graphT)
+      Streams.maintainState(df(b), StateFamily.postings(cents), postT,
+        StateFamily.KnnGraph -> graphT)
     def rowsOf(g: org.apache.spark.sql.DataFrame) =
       g.select($"query_id", $"cid", $"neighbor_id", $"rank", $"cos")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -137,14 +142,13 @@ class IncrementalKnnGraphStateSpec extends AnyFunSuite with SparkSpec {
     assert(maintained.nonEmpty)
 
     // FORGET stays in the ERA's quantizer: the repair works off the
-    // stored postings' cids (forgetVectorState never re-assigns), so the
+    // stored postings' cids (forgetState never re-assigns), so the
     // post-forget graph must equal the full build over the SURVIVORS
     // under the SAME era cents — NOT knnGraphAuto re-derived from the
     // survivor count (re-sizing the quantizer is a REBUILD decision, not
     // a side effect of deletion)
     val forgetIds = e0.map(_._1).filter(_ % 7 == 3).take(60).toSeq
-    Streams.forgetVectorState(spark,
-      forgetIds.toDF("vec_id"), postT, graphTable = Some(graphT))
+    Streams.forgetState(spark, forgetIds.toDF("vec_id"), postT, StateFamily.KnnGraph -> graphT)
     val survivors = VectorOps.normed(df(e0.filterNot(r => forgetIds.contains(r._1))))
     val afterForget = rowsOf(Streams.knnGraphSnapshot(spark, graphT))
     val eraFull = rowsOf(VectorOps.knnGraph(

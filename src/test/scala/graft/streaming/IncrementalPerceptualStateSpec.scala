@@ -135,7 +135,8 @@ class IncrementalPerceptualStateSpec extends AnyFunSuite with SparkSpec {
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING")
       .json(s"$src/*")
-    val q = Streams.perceptualStateStream(stream, sigT, pairT, docT)
+    val q = Streams.startMaintainer(stream, None)((b, _) =>
+      Streams.maintainPerceptualState(b, sigT, pairT, docT))
     try q.processAllAvailable() finally q.stop()
     assert(snapshot(pairT) == directReport(docs))
     assert(spark.read.parquet(sigT).count() == 60)

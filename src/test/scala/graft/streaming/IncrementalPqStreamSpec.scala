@@ -51,7 +51,8 @@ class IncrementalPqStreamSpec extends AnyFunSuite with SparkSpec {
     var seen = Set.empty[Long]
     var afterPrev = Map.empty[String, (Long, Long)]
     for (b <- batches) {
-      Streams.maintainPqCodes(b.toSeq.toDF("vec_id", "embedding"), cents, book, codesT)
+      Streams.maintainState(b.toSeq.toDF("vec_id", "embedding"),
+        StateFamily.pqCodes(cents, VectorOps.pqOf(book)), codesT)
       seen ++= b.map(_._1)
       // real rows == direct encode of all arrivals; sentinels only for
       // the zero-norm ids normed() drops
@@ -75,8 +76,8 @@ class IncrementalPqStreamSpec extends AnyFunSuite with SparkSpec {
     // redelivery of an ingested batch: nothing changes (the id guard) —
     // including its zero-norm members, which the sentinel acknowledged
     val before = codesSet()
-    Streams.maintainPqCodes(batches(1).toSeq.toDF("vec_id", "embedding"),
-      cents, book, codesT)
+    Streams.maintainState(batches(1).toSeq.toDF("vec_id", "embedding"),
+      StateFamily.pqCodes(cents, VectorOps.pqOf(book)), codesT)
     assert(codesSet() == before)
 
     // divergent-payload in-batch duplicates: the max-embedding pick is
@@ -85,8 +86,8 @@ class IncrementalPqStreamSpec extends AnyFunSuite with SparkSpec {
     val root2 = Files.createTempDirectory("inc-pq-dup").toString
     val dup = (all.take(5) ++ all.take(5).map { case (id, v) =>
       (id, v.map(x => x * 0.5f)) }).toSeq
-    Streams.maintainPqCodes(dup.toDF("vec_id", "embedding"), cents, book,
-      s"$root2/codes")
+    Streams.maintainState(dup.toDF("vec_id", "embedding"),
+      StateFamily.pqCodes(cents, VectorOps.pqOf(book)), s"$root2/codes")
     val got = spark.read.parquet(s"$root2/codes")
     assert(got.count() == 5, "in-batch duplicates not collapsed")
   }

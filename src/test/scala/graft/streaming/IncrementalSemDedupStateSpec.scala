@@ -11,7 +11,7 @@ import graft.SparkSpec
 import graft.queries.VectorOps
 
 /** pp10's continuous loop: the drop table maintained by
-  * [[Streams.maintainIvfState]]'s optional SemDedup leg must equal a
+  * the postings advance's [[StateFamily.SemDedupDrops]] family must equal a
   * from-scratch dd10 computation over everything arrived, after EVERY
   * batch split — with redelivery a no-op, an in-batch repeated row
   * harmless, and a partial-crash replay (drop deltas appended,
@@ -68,8 +68,9 @@ class IncrementalSemDedupStateSpec extends AnyFunSuite with SparkSpec {
     var digests = Map.empty[String, String]
     for (b <- batches) {
       val beforeIds = seen
-      Streams.maintainIvfState(b.toSeq.toDF("vec_id", "embedding"), cents,
-        postT, sumsT, Some(dropT))
+      Streams.maintainState(b.toSeq.toDF("vec_id", "embedding"),
+        StateFamily.postings(cents), postT,
+        StateFamily.IvfSums -> sumsT, StateFamily.SemDedupDrops -> dropT)
       seen ++= b.map(_._1)
       assert(snapshot() == direct(seen))
 
@@ -92,14 +93,15 @@ class IncrementalSemDedupStateSpec extends AnyFunSuite with SparkSpec {
     // the fresh set before the SemDedup leg — nothing changes, and no
     // file in the drop table is touched
     val before = snapshot()
-    Streams.maintainIvfState(batches(1).toSeq.toDF("vec_id", "embedding"),
-      cents, postT, sumsT, Some(dropT))
+    Streams.maintainState(batches(1).toSeq.toDF("vec_id", "embedding"),
+      StateFamily.postings(cents), postT,
+      StateFamily.IvfSums -> sumsT, StateFamily.SemDedupDrops -> dropT)
     assert(snapshot() == before)
     assert(fileDigests(dropT) == digests)
 
     // latest-wins compaction folds committed deltas to one row per
     // vec_id without moving the snapshot
-    Streams.compactSemDedupDrops(spark, dropT, postT)
+    Streams.compactState(spark, postT, StateFamily.SemDedupDrops -> dropT)
     assert(snapshot() == before)
     val compacted = spark.read.parquet(dropT)
     assert(compacted.count() == compacted.select("vec_id").distinct().count())
@@ -113,23 +115,25 @@ class IncrementalSemDedupStateSpec extends AnyFunSuite with SparkSpec {
     val root2 = Files.createTempDirectory("inc-sem-crash").toString
     val (postT2, sumsT2, dropT2) = (s"$root2/postings", s"$root2/sums", s"$root2/drops")
     val b1 = batches(0).toSeq.toDF("vec_id", "embedding")
-    Streams.maintainIvfState(b1, cents, postT2, sumsT2, Some(dropT2))
+    Streams.maintainState(b1, StateFamily.postings(cents), postT2,
+      StateFamily.IvfSums -> sumsT2, StateFamily.SemDedupDrops -> dropT2)
     val b2 = batches(1).toSeq.toDF("vec_id", "embedding")
     val standing = spark.read.parquet(postT2)
     val assigned2 = VectorOps.assignCells(
       VectorOps.normed(b2.dropDuplicates("vec_id")), cents)
     val batchKey2 = assigned2.agg(org.apache.spark.sql.functions.min($"vec_id"))
       .head().getLong(0)
-    Streams.semDedupDeltaAppend(dropT2,
-      VectorOps.semDedupAdvance(standing, assigned2, tau = 0.30), batchKey2)
+    StateFamily.SemDedupDrops.delta(new StateFamily.In(assigned2, batchKey2, Some(standing)))
+      .write.mode("append").parquet(dropT2)
     // compaction between the crash and the replay must keep the crashed
     // batch's rows under their own (uncommitted) key so the replay stays
     // a byte-identical duplicate, not a double-resolution
-    Streams.compactSemDedupDrops(spark, dropT2, postT2)
+    Streams.compactState(spark, postT2, StateFamily.SemDedupDrops -> dropT2)
     assert(!spark.read.parquet(dropT2)
       .filter($"batch_key" === batchKey2).isEmpty)
     // the replay (redelivered batch) completes the advance
-    Streams.maintainIvfState(b2, cents, postT2, sumsT2, Some(dropT2))
+    Streams.maintainState(b2, StateFamily.postings(cents), postT2,
+      StateFamily.IvfSums -> sumsT2, StateFamily.SemDedupDrops -> dropT2)
     val seen12 = (batches(0) ++ batches(1)).map(_._1).toSet
     assert(rows(Streams.semDedupSnapshot(spark, dropT2)) == direct(seen12))
   }

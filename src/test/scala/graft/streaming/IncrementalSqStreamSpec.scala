@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 import graft.queries.VectorOps
 
 /** pp20's continuous loop: however the embedding stream is split into
@@ -14,7 +14,8 @@ import graft.queries.VectorOps
   * table APPEND-ONLY, redelivery a no-op, in-batch duplicates collapsed
   * deterministically, and zero-norm arrivals acknowledged with empty
   * codes without ever reaching a query. */
-class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec {
+class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
 
   private def dataFiles(dir: String) = graft.SparkSpec.dataFiles(dir)
 
@@ -51,7 +52,8 @@ class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec {
     var seen = Set.empty[Long]
     var afterPrev = Map.empty[String, (Long, Long)]
     for (b <- batches) {
-      Streams.maintainSqCodes(b.toSeq.toDF("vec_id", "embedding"), vmin, vdiff, codesT)
+      Streams.maintainState(b.toSeq.toDF("vec_id", "embedding"),
+        StateFamily.sqCodes(vmin, vdiff), codesT)
       seen ++= b.map(_._1)
       // real rows == direct encode of all arrivals; sentinels (empty
       // codes) only for the zero-norm ids normed() drops
@@ -75,8 +77,8 @@ class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec {
     // redelivery of an ingested batch: nothing changes (the id guard) —
     // including its zero-norm members, which the sentinel acknowledged
     val before = codesSet()
-    Streams.maintainSqCodes(batches(1).toSeq.toDF("vec_id", "embedding"),
-      vmin, vdiff, codesT)
+    Streams.maintainState(batches(1).toSeq.toDF("vec_id", "embedding"),
+      StateFamily.sqCodes(vmin, vdiff), codesT)
     assert(codesSet() == before)
 
     // divergent-payload in-batch duplicates: the max-embedding pick is
@@ -85,7 +87,7 @@ class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec {
     val root2 = Files.createTempDirectory("inc-sq-dup").toString
     val dup = (all.take(5) ++ all.take(5).map { case (id, v) =>
       (id, v.map(x => x * 0.5f)) }).toSeq
-    Streams.maintainSqCodes(dup.toDF("vec_id", "embedding"), vmin, vdiff,
+    Streams.maintainState(dup.toDF("vec_id", "embedding"), StateFamily.sqCodes(vmin, vdiff),
       s"$root2/codes")
     assert(spark.read.parquet(s"$root2/codes").count() == 5,
       "in-batch duplicates not collapsed")
@@ -94,7 +96,7 @@ class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec {
     // leaving the byte range — the fixed-quantizer robustness contract
     val root3 = Files.createTempDirectory("inc-sq-oob").toString
     val big = Seq((999999L, Seq.fill(vmin.length)(1e6f)))
-    Streams.maintainSqCodes(big.toDF("vec_id", "embedding"), vmin, vdiff,
+    Streams.maintainState(big.toDF("vec_id", "embedding"), StateFamily.sqCodes(vmin, vdiff),
       s"$root3/codes")
     val oob = spark.read.parquet(s"$root3/codes")
       .collect().map(_.getSeq[Long](1)).head
@@ -120,8 +122,9 @@ class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec {
     for (b <- batches) {
       val bdf = b.toSeq.toDF("vec_id", "embedding")
       // one ingest stream feeds both tables — the rebuild's precondition
-      Streams.maintainIvfState(bdf, cents, postT, sumsT)
-      Streams.maintainSqCodes(bdf, vmin0, vdiff0, codesT)
+      Streams.maintainState(bdf, StateFamily.postings(cents), postT,
+        StateFamily.IvfSums -> sumsT)
+      Streams.maintainState(bdf, StateFamily.sqCodes(vmin0, vdiff0), codesT)
     }
     val Some((vmin1, vdiff1)) = Streams.rebuildSqState(spark, postT, codesT)
     val normedAll = VectorOps.normed(e)
@@ -156,5 +159,41 @@ class IncrementalSqStreamSpec extends AnyFunSuite with SparkSpec {
     val filesAfter = spark.read.parquet(codesT)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSet
     assert(filesBefore == filesAfter, "rebuild re-run is not idempotent")
+  }
+
+  test("forget: forgotten ids' SQ codes leave search, survivors == from-scratch encode, re-ingest blocked") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("sq-forget").toString
+    val codesT = s"$root/codes"
+    // 120 generated 16-dim vectors (ids 10..19 are the query window)
+    val all = (0L until 120L).map(id => id -> (0 until 16).map(d =>
+      ((id * 37 + d * 11) % 23 - 11) * 0.07f))
+    val e = all.toDF("vec_id", "embedding")
+    val normedAll = VectorOps.normed(e).localCheckpoint(true)
+    val (vmin, vdiff) = VectorOps.sqTrain(normedAll)
+    val sq = StateFamily.sqCodes(vmin, vdiff)
+    for (b <- Seq(all.take(70), all.drop(70)))
+      Streams.maintainState(b.toDF("vec_id", "embedding"), sq, codesT)
+
+    // every 7th id plus one never seen (forward-blocks an in-flight arrival)
+    val neverSeen = 3000000L
+    val forgot = all.map(_._1).filter(_ % 7 == 0).toSet + neverSeen
+    Streams.forgetState(spark, forgot.toSeq.toDF("vec_id"), sq, codesT)
+    def search() = Streams.sqSearchSnapshot(spark, codesT, normedAll, vmin, vdiff, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq
+    val survivors = VectorOps.sqScore(
+        VectorOps.normed(e.filter(!$"vec_id".isInCollection(forgot)))
+          .select($"vec_id", VectorOps.sqCodes($"q", vmin, vdiff).as("codes")),
+        VectorOps.sqQueries(normedAll), vmin, vdiff, 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSeq
+    assert(search().nonEmpty && search() == survivors,
+      "search after forget != from-scratch encode over the survivors")
+
+    // re-ingest of the forgotten ids (and the never-seen one) is a no-op
+    Streams.maintainState((all.filter(t => forgot.contains(t._1)) :+
+        (neverSeen -> all.head._2)).toDF("vec_id", "embedding"), sq, codesT)
+    assert(search() == survivors, "a forgotten id re-entered the codes")
+    assert(spark.read.parquet(codesT).filter($"vec_id".isInCollection(forgot))
+      .collect().forall(_.getSeq[Long](1).isEmpty), "a forgotten id kept its codes")
   }
 }

@@ -68,8 +68,8 @@ class MaintainerRestartSpec extends AnyFunSuite with SparkSpec {
 
     killThenRestart(src, s"$root/chk",
       b => Streams.maintainPerceptualState(b, sigT, pairT, docT),
-      s => Streams.perceptualStateStream(s, sigT, pairT, docT,
-        checkpoint = Some(s"$root/chk")))
+      s => Streams.startMaintainer(s, Some(s"$root/chk"))((b, _) =>
+        Streams.maintainPerceptualState(b, sigT, pairT, docT)))
 
     // all-at-once reference build over the same 60 docs
     val root2 = Files.createTempDirectory("restart-perc-ref").toString
@@ -99,8 +99,8 @@ class MaintainerRestartSpec extends AnyFunSuite with SparkSpec {
 
     killThenRestart(src, s"$root/chk",
       b => Streams.maintainLshState(b, bits = 4, tables = 8, idxT),
-      s => Streams.lshStateStream(s, bits = 4, tables = 8, idxT,
-        checkpoint = Some(s"$root/chk")),
+      s => Streams.startMaintainer(s, Some(s"$root/chk"))((b, _) =>
+        Streams.maintainLshState(b, bits = 4, tables = 8, idxT)),
       schema = "vec_id LONG, embedding ARRAY<FLOAT>")
 
     val queries = all.filter(_._1 < 10).toSeq.toDF("vec_id", "embedding")
@@ -131,6 +131,7 @@ class MaintainerRestartSpec extends AnyFunSuite with SparkSpec {
     val allDf = all.toSeq.toDF("vec_id", "embedding")
     val cents = graft.queries.VectorOps.ivfCentroids(
       graft.queries.VectorOps.normed(allDf))
+    val post = StateFamily.postings(cents)
     val src = Files.createTempDirectory("restart-routed-src").toString
     b0.toSeq.toDF("vec_id", "embedding").write.json(s"$src/b0")
     b1.toSeq.toDF("vec_id", "embedding").write.json(s"$src/b1")
@@ -146,19 +147,24 @@ class MaintainerRestartSpec extends AnyFunSuite with SparkSpec {
         Streams.routeByCell(b, cents, stageT, groups = 3, seq = 0L)
         Streams.flushCellGroupsBatched(spark, stageT, minRows = 100L,
           maxLag = 1L, curSeq = 0L)(rows =>
-          Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3))
+          Streams.maintainState(rows, post, postT, StateFamily.KnnGraph -> graphT))
         ()
       },
-      s => Streams.routedKnnGraphStream(s, cents, stageT, postT, graphT,
-        k = 3, groups = 3, minRows = 100L, maxLag = 1L,
-        checkpoint = Some(s"$root/chk")),
+      s => Streams.startMaintainer(s, Some(s"$root/chk")) { (b, seq) =>
+        Streams.routeByCell(b, cents, stageT, groups = 3, seq)
+        Streams.flushCellGroupsBatched(spark, stageT, minRows = 100L,
+          maxLag = 1L, curSeq = seq)(rows =>
+          Streams.maintainState(rows, post, postT, StateFamily.KnnGraph -> graphT))
+        ()
+      },
       schema = "vec_id LONG, embedding ARRAY<FLOAT>")
 
     // decommission drain, then the exactness pin: the maintained graph
     // equals the full vs13 build over everything arrived
     Streams.flushCellGroupsBatched(spark, stageT, minRows = 1L, maxLag = 0L,
       curSeq = 99L)(rows =>
-      Streams.maintainKnnGraphState(rows, cents, postT, graphT, k = 3))
+      Streams.maintainState(rows, StateFamily.postings(cents), postT,
+        StateFamily.KnnGraph -> graphT))
     def key(g: org.apache.spark.sql.DataFrame) = g
       .select($"query_id", $"neighbor_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -185,8 +191,8 @@ class MaintainerRestartSpec extends AnyFunSuite with SparkSpec {
 
     killThenRestart(src, s"$root/chk",
       b => Streams.maintainDedupState(b, idxT, prT, shT, lbT, bkT, rmT, docT),
-      s => Streams.dedupStateStream(s, idxT, prT, shT, lbT, bkT, rmT, docT,
-        checkpoint = Some(s"$root/chk")))
+      s => Streams.startMaintainer(s, Some(s"$root/chk"))((b, _) =>
+        Streams.maintainDedupState(b, idxT, prT, shT, lbT, bkT, rmT, docT)))
 
     val root2 = Files.createTempDirectory("restart-dedup-ref").toString
     val (idxR, prR, shR, lbR, bkR, rmR, docR) = tables(root2)

@@ -7,13 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
 
-/** Round-18 verdict item 5: the forget/repair families have a full
-  * crash-window matrix, but a MULTI-TABLE ADVANCE relied on the
-  * redelivery/guard argument alone. This spec crashes
-  * [[Streams.maintainIvfState]] — the advance that writes THREE tables
-  * (drop-delta, sums, postings) — between each pair of its writes via
-  * the `failAfterStep` seam, verifies the window is REAL (some tables
-  * advanced, others did not), and pins that a plain re-run of the same
+/** The forget/repair families have a full crash-window matrix, but a
+  * MULTI-TABLE ADVANCE relied on the redelivery/guard argument alone.
+  * This spec crashes the postings advance that writes THREE tables
+  * (drop-delta, sums, postings) before its first write and between each
+  * pair of its writes — a
+  * [[Crash]] family placed among the advance's families fails inside its
+  * append — verifies the window is REAL (some tables advanced, others
+  * did not), and pins that a plain re-run of the same
   * batch (what a checkpointed stream redelivers on restart) converges
   * every snapshot to the no-crash state: the postings append is the
   * guard and goes last, so the replay recomputes byte-identical delta
@@ -32,18 +33,24 @@ class MidAdvanceFaultSpec extends AnyFunSuite with SparkSpec {
     val a = e.filter(_._1 % 5 != 0).toIndexedSeq
     val b = e.filter(_._1 % 5 == 0).toIndexedSeq
 
+    val post = StateFamily.postings(cents)
     def run(failAfterStep: Option[Int]): (String, String, String) = {
       val root = Files.createTempDirectory("ivf-fault").toString
       val (postT, sumsT, dropT) = (s"$root/post", s"$root/sums", s"$root/drops")
-      Streams.maintainIvfState(df(a), cents, postT, sumsT, Some(dropT))
+      val fams = Seq(StateFamily.SemDedupDrops -> dropT, StateFamily.IvfSums -> sumsT)
+      Streams.maintainState(df(a), post, postT, fams: _*)
       failAfterStep match {
-        case None => Streams.maintainIvfState(df(b), cents, postT, sumsT, Some(dropT))
+        case None => Streams.maintainState(df(b), post, postT, fams: _*)
         case Some(step) =>
-          val err = intercept[IllegalStateException] {
-            Streams.maintainIvfStateImpl(df(b), cents, postT, sumsT,
-              Some(dropT), 0.30, step)
+          // the crash fails inside the append after the step + 1 deltas
+          // the advance writes first (step −1: before any of them)
+          val (landed, rest) = fams.splitAt(step + 1)
+          val crash = Crash(StateFamily.Postings, s"injected crash after step $step")
+          val err = intercept[Exception] {
+            Streams.maintainState(df(b), post, postT,
+              landed ++ ((crash -> s"$root/crash") +: rest): _*)
           }
-          assert(err.getMessage.contains(s"after step $step"))
+          assert(Crash.carries(err, s"after step $step"))
           // the window is REAL — the crash left a torn multi-table state
           val bIds = b.map(_._1)
           // the advance's batch_key is min over the FRESH (nonzero-norm)
@@ -54,13 +61,15 @@ class MidAdvanceFaultSpec extends AnyFunSuite with SparkSpec {
           val postHasB = spark.read.parquet(postT)
             .filter($"vec_id".isin(bIds: _*)).limit(1).count() > 0
           assert(!postHasB, s"window $step vacuous: the guard already moved")
+          if (step == -1) assert(spark.read.parquet(dropT).filter($"batch_key" === bKey)
+            .isEmpty, "window -1: the drop delta landed before the crash point")
           if (step == 0) assert(!sumsHasB,
             "window 0 vacuous: sums advanced before the crash point")
           if (step == 1) assert(sumsHasB,
             "window 1 vacuous: sums did not advance before the crash point")
           // restart-from-checkpoint: the stream redelivers the SAME batch
           // through the production entry point
-          Streams.maintainIvfState(df(b), cents, postT, sumsT, Some(dropT))
+          Streams.maintainState(df(b), post, postT, fams: _*)
       }
       (postT, sumsT, dropT)
     }
@@ -76,7 +85,7 @@ class MidAdvanceFaultSpec extends AnyFunSuite with SparkSpec {
           .collect().map(_.toSeq.toList).toIndexedSeq)
     }
     val reference = key(run(None))
-    for (step <- 0 to 1) {
+    for (step <- -1 to 1) {
       val got = key(run(Some(step)))
       assert(got._1 == reference._1, s"window $step: postings drifted")
       assert(got._2 == reference._2, s"window $step: sums snapshot drifted")

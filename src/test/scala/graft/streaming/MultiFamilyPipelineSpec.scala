@@ -43,7 +43,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     def ingest(b: DataFrame): Unit = {
       Streams.maintainState(b.select($"doc_id", $"text"), t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
-      Streams.maintainScoreState(b, t("ref"), t("scores"), t("sdocs"))
+      Streams.maintainState(b, t("sdocs"), StateFamily.score(t("ref")) -> t("scores"))
       Streams.maintainState(b.select($"doc_id", $"text"), t("tdocs"),
         StateFamily.Tf -> t("tf"))
       Streams.maintainState(b.select($"doc_id", $"text"), t("cdocs"),
@@ -91,19 +91,19 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     val last = batches.last.toSeq.toDF("doc_id", "source", "lang", "text")
       .localCheckpoint(true)
     val bk = batches.last.map(_._1).min
-    StateFamily.ExactDedup.delta(last.select($"doc_id", $"text"), bk)
+    StateFamily.ExactDedup.delta(new StateFamily.In(last.select($"doc_id", $"text"), bk))
       .write.mode("append").parquet(t("xstats"))
-    Streams.scoreDelta(last, ref, bk)
+    StateFamily.score(t("ref")).delta(new StateFamily.In(last, bk))
       .withColumn("pt", pmod($"doc_id", lit(Streams.TF_PARTITIONS.toLong)))
       .write.mode("append").partitionBy("pt").parquet(t("scores"))
     graft.queries.TextOps.tfRollup(last.select($"doc_id", $"text"))
       .withColumn("pt", pmod($"doc_id", lit(Streams.TF_PARTITIONS.toLong)))
       .write.mode("append").partitionBy("pt").parquet(t("tf"))
-    StateFamily.CmsCells.delta(last.select($"doc_id", $"text"), bk)
+    StateFamily.CmsCells.delta(new StateFamily.In(last.select($"doc_id", $"text"), bk))
       .write.mode("append").parquet(t("cells"))
-    StateFamily.Vocab.delta(last.select($"doc_id", $"text"), bk)
+    StateFamily.Vocab.delta(new StateFamily.In(last.select($"doc_id", $"text"), bk))
       .write.mode("append").parquet(t("vocab"))
-    StateFamily.Hll.delta(last, 0L).write.mode("append").parquet(t("regs"))
+    StateFamily.Hll.delta(new StateFamily.In(last, 0L)).write.mode("append").parquet(t("regs"))
     checkAll("after the five-family crash replay")
 
     // whole-batch redelivery through the COMPOSITE loop: every family's
@@ -130,7 +130,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     def forgetAll(): Unit = {
       Streams.forgetState(spark, fDf, t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
-      Streams.forgetScoreState(spark, fDf, t("scores"), t("sdocs"))
+      Streams.forgetState(spark, fDf, t("sdocs"), StateFamily.Score -> t("scores"))
       Streams.forgetState(spark, fDf, t("tdocs"), StateFamily.Tf -> t("tf"))
       Streams.forgetState(spark, fDf, t("cdocs"),
         StateFamily.Vocab -> t("vocab"), StateFamily.CmsCells -> t("cells"))
@@ -145,7 +145,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     // yields an empty gone set on the re-run).
     Streams.forgetState(spark, fDf, t("xdocs"),
       StateFamily.ExactDedup -> t("xstats"))
-    Streams.forgetScoreState(spark, fDf, t("scores"), t("sdocs"))
+    Streams.forgetState(spark, fDf, t("sdocs"), StateFamily.Score -> t("scores"))
     forgetAll() // the recovery re-run, across all five families
 
     // every family's snapshot == a FRESH composite build over the
@@ -155,7 +155,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
       .toDF("doc_id", "source", "lang", "text").localCheckpoint(true)
     Streams.maintainState(surv.select($"doc_id", $"text"), t("xdocsR"),
       StateFamily.ExactDedup -> t("xstatsR"))
-    Streams.maintainScoreState(surv, t("ref"), t("scoresR"), t("sdocsR"))
+    Streams.maintainState(surv, t("sdocsR"), StateFamily.score(t("ref")) -> t("scoresR"))
     Streams.maintainState(surv.select($"doc_id", $"text"), t("tdocsR"),
       StateFamily.Tf -> t("tfR"))
     Streams.maintainState(surv.select($"doc_id", $"text"), t("cdocsR"),
@@ -243,13 +243,14 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     def ingest(bd: DataFrame, bv: DataFrame): Unit = {
       Streams.maintainState(bd.select($"doc_id", $"text"), t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
-      Streams.maintainScoreState(bd, t("ref"), t("scores"), t("sdocs"))
+      Streams.maintainState(bd, t("sdocs"), StateFamily.score(t("ref")) -> t("scores"))
       Streams.maintainState(bd.select($"doc_id", $"text"), t("tdocs"),
         StateFamily.Tf -> t("tf"))
       Streams.maintainState(bd.select($"doc_id", $"text"), t("cdocs"),
         StateFamily.CmsCells -> t("cells"), StateFamily.Vocab -> t("vocab"))
       Streams.maintainState(bd, t("hdocs"), StateFamily.Hll -> t("regs"))
-      Streams.maintainIvfState(bv, cents, t("postings"), t("sums"))
+      Streams.maintainState(bv, StateFamily.postings(cents), t("postings"),
+        StateFamily.IvfSums -> t("sums"))
     }
     val (d1, d2) = docRows.splitAt(docRows.length / 2)
     val (v1, v2) = vecIds.splitAt(vecIds.length / 2)
@@ -278,13 +279,12 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     def forgetAll6(): Unit = {
       Streams.forgetState(spark, fd, t("xdocs"),
         StateFamily.ExactDedup -> t("xstats"))
-      Streams.forgetScoreState(spark, fd, t("scores"), t("sdocs"))
+      Streams.forgetState(spark, fd, t("sdocs"), StateFamily.Score -> t("scores"))
       Streams.forgetState(spark, fd, t("tdocs"), StateFamily.Tf -> t("tf"))
       Streams.forgetState(spark, fd, t("cdocs"),
         StateFamily.Vocab -> t("vocab"), StateFamily.CmsCells -> t("cells"))
       Streams.forgetState(spark, fd, t("hdocs"), StateFamily.Hll -> t("regs"))
-      Streams.forgetVectorState(spark, fv, t("postings"),
-        sumsTable = Some(t("sums")))
+      Streams.forgetState(spark, fv, t("postings"), StateFamily.IvfSums -> t("sums"))
     }
     // MID-FORGET CRASH with the VECTOR leg among the completed: the
     // vector store and two text families finish their forgets, then the
@@ -293,11 +293,10 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
     // composite request: every family forget (including the vector
     // swap+repairs) is idempotent, so there is no coordinator
     // bookkeeping to lose.
-    Streams.forgetVectorState(spark, fv, t("postings"),
-      sumsTable = Some(t("sums")))
+    Streams.forgetState(spark, fv, t("postings"), StateFamily.IvfSums -> t("sums"))
     Streams.forgetState(spark, fd, t("xdocs"),
       StateFamily.ExactDedup -> t("xstats"))
-    Streams.forgetScoreState(spark, fd, t("scores"), t("sdocs"))
+    Streams.forgetState(spark, fd, t("sdocs"), StateFamily.Score -> t("scores"))
     forgetAll6() // the recovery re-run, across all six families
 
     def rowsOf(df: DataFrame) =
@@ -310,7 +309,7 @@ class MultiFamilyPipelineSpec extends AnyFunSuite with SparkSpec
       vecs.filter(!$"vec_id".isin(forgotVecs.toSeq: _*))).localCheckpoint(true)
     Streams.maintainState(survDocs.select($"doc_id", $"text"), t("xdocsR"),
       StateFamily.ExactDedup -> t("xstatsR"))
-    Streams.maintainScoreState(survDocs, t("ref"), t("scoresR"), t("sdocsR"))
+    Streams.maintainState(survDocs, t("sdocsR"), StateFamily.score(t("ref")) -> t("scoresR"))
     Streams.maintainState(survDocs.select($"doc_id", $"text"), t("tdocsR"),
       StateFamily.Tf -> t("tfR"))
     Streams.maintainState(survDocs.select($"doc_id", $"text"), t("cdocsR"),

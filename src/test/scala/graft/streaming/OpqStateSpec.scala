@@ -10,7 +10,7 @@ import graft.queries.VectorOps
 /** The OPQ lifecycle over maintained state: after raw-era advances,
   * rebuildOpqState must swap in the (permutation, books) artifact pair
   * so the codes table reads EXACTLY as if every arrival had been
-  * encoded permuted from the start, later maintainOpqCodes advances
+  * encoded permuted from the start, later opqCodes-store advances
   * must encode new arrivals under the same pair, search over the
   * maintained table must equal a from-scratch encode+search, and the
   * persisted permutation must round-trip for a restarted deployment. */
@@ -35,8 +35,9 @@ class OpqStateSpec extends AnyFunSuite with SparkSpec {
     // raw era: two advances under the fixed (cents, book)
     val preRebuild = all.take(300)
     for (b <- Seq(all.take(40), all.slice(40, 300))) {
-      Streams.maintainIvfState(df(b), cents, postT, sumsT)
-      Streams.maintainPqCodes(df(b), cents, book, codesT)
+      Streams.maintainState(df(b), StateFamily.postings(cents), postT,
+        StateFamily.IvfSums -> sumsT)
+      Streams.maintainState(df(b), StateFamily.pqCodes(cents, VectorOps.pqOf(book)), codesT)
     }
 
     // the OPQ swap: perm derived from the STANDING postings (the 300
@@ -51,8 +52,9 @@ class OpqStateSpec extends AnyFunSuite with SparkSpec {
       "rebuild perm != opqPerm over the standing corpus")
 
     // post-rebuild era: the remaining arrivals advance under (perm, pq)
-    Streams.maintainIvfState(df(all.drop(300)), cents, postT, sumsT)
-    Streams.maintainOpqCodes(df(all.drop(300)), cents, perm, pq, codesT)
+    Streams.maintainState(df(all.drop(300)), StateFamily.postings(cents), postT,
+      StateFamily.IvfSums -> sumsT)
+    Streams.maintainState(df(all.drop(300)), StateFamily.opqCodes(cents, perm, pq), codesT)
 
     def codesSet() = spark.read.parquet(codesT)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
@@ -73,7 +75,7 @@ class OpqStateSpec extends AnyFunSuite with SparkSpec {
     assert(got.nonEmpty, "no search results — vacuous")
 
     // redelivery after the swap is still a no-op (guard intact)
-    Streams.maintainOpqCodes(df(all.take(40)), cents, perm, pq, codesT)
+    Streams.maintainState(df(all.take(40)), StateFamily.opqCodes(cents, perm, pq), codesT)
     assert(codesSet() == want, "redelivered batch re-encoded after the swap")
 
     // idempotence: re-running the rebuild BEFORE the later arrivals'

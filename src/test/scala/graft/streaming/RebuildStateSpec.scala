@@ -37,8 +37,9 @@ class RebuildStateSpec extends AnyFunSuite with SparkSpec {
     val oldCents = VectorOps.ivfCentroids(normedAll).localCheckpoint(true)
     val oldBook = VectorOps.pqBookRows(normedAll)
     for (b <- batches) {
-      Streams.maintainIvfState(df(b), oldCents, postT, sumsT)
-      Streams.maintainPqCodes(df(b), oldCents, oldBook, codesT)
+      Streams.maintainState(df(b), StateFamily.postings(oldCents), postT,
+        StateFamily.IvfSums -> sumsT)
+      Streams.maintainState(df(b), StateFamily.pqCodes(oldCents, VectorOps.pqOf(oldBook)), codesT)
     }
 
     // the retrained quantizer: a DIFFERENT — wider — centroid set (16
@@ -92,15 +93,19 @@ class RebuildStateSpec extends AnyFunSuite with SparkSpec {
 
     // the guard did not move: redelivering an ingested batch (with the
     // zero-norm member) is still a no-op on both tables
-    Streams.maintainIvfState(df(batches(2)), newCents, postT, sumsT)
-    Streams.maintainPqCodes(df(batches(2)), newCents, newBook, codesT)
+    Streams.maintainState(df(batches(2)), StateFamily.postings(newCents), postT,
+      StateFamily.IvfSums -> sumsT)
+    Streams.maintainState(df(batches(2)),
+      StateFamily.pqCodes(newCents, VectorOps.pqOf(newBook)), codesT)
     assert(postingsSet() == p1 && codesSet() == c1 && sums() == s1)
 
     // and the flow CONTINUES against the new parameters: a genuinely new
     // batch advances both tables to the from-scratch state of the union
     val extra = Seq((1000000L, e0.head._2), (1000001L, e0.last._2))
-    Streams.maintainIvfState(df(extra), newCents, postT, sumsT)
-    Streams.maintainPqCodes(df(extra), newCents, newBook, codesT)
+    Streams.maintainState(df(extra), StateFamily.postings(newCents), postT,
+      StateFamily.IvfSums -> sumsT)
+    Streams.maintainState(df(extra), StateFamily.pqCodes(newCents, VectorOps.pqOf(newBook)),
+      codesT)
     val unionNormed = VectorOps.normed(df(all ++ extra))
     assert(postingsSet() ==
       VectorOps.assignCells(unionNormed, newCents)
@@ -131,7 +136,8 @@ class RebuildStateSpec extends AnyFunSuite with SparkSpec {
     // ingest under the catalog's fixed 8-cell quantizer...
     val oldCents = VectorOps.ivfCentroids(normedAll).localCheckpoint(true)
     for (b <- Seq(e0.take(100), e0.drop(100)))
-      Streams.maintainIvfState(df(b), oldCents, postT, sumsT)
+      Streams.maintainState(df(b), StateFamily.postings(oldCents), postT,
+        StateFamily.IvfSums -> sumsT)
 
     // ...then the drift response: retrain SIZED BY THE PRODUCTION RULE
     // (autoNlist over the standing count) and redeploy via the rebuild
@@ -172,8 +178,9 @@ class RebuildStateSpec extends AnyFunSuite with SparkSpec {
     val cents = VectorOps.ivfCentroids(normedAll).localCheckpoint(true)
     val book0 = VectorOps.pqBookRows(normedAll)
     for (b <- batches) {
-      Streams.maintainIvfState(df(b), cents, postT, sumsT)
-      Streams.maintainPqCodes(df(b), cents, book0, codesT)
+      Streams.maintainState(df(b), StateFamily.postings(cents), postT,
+        StateFamily.IvfSums -> sumsT)
+      Streams.maintainState(df(b), StateFamily.pqCodes(cents, VectorOps.pqOf(book0)), codesT)
     }
 
     // a rebuild before first ingest (missing table) trains nothing
@@ -204,13 +211,13 @@ class RebuildStateSpec extends AnyFunSuite with SparkSpec {
 
     // redelivery after the swap is still a no-op (the guard is the codes
     // table itself and the rebuild preserved every id, sentinel included)
-    Streams.maintainPqCodesTrained(df(batches(2)), cents, pq, codesT)
+    Streams.maintainState(df(batches(2)), StateFamily.pqCodes(cents, pq), codesT)
     assert(codesSet() == c1)
 
     // the flow CONTINUES under the trained books: a new batch advances
     // the table to the from-scratch state of the union
     val extra = Seq((1000000L, e0.head._2), (1000001L, e0.last._2))
-    Streams.maintainPqCodesTrained(df(extra), cents, pq, codesT)
+    Streams.maintainState(df(extra), StateFamily.pqCodes(cents, pq), codesT)
     val unionNormed = VectorOps.normed(df(all ++ extra))
     assert(codesSet() == fromScratch(unionNormed) + ((-1L, zeroId, Seq.empty[Long])))
 

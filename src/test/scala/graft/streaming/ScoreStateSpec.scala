@@ -4,14 +4,15 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{OverlappedTests, SparkSpec}
 
 /** The perplexity-score standing-state family (ta17/pp25's continuous
   * twin): immutable scores under a frozen reference, advanced append-only
   * per batch, re-bucketed rank-only at read, forgotten by exact row
   * deletion. Snapshot must equal ta17's bucketing over exactly the
   * arrived-and-not-forgotten docs at every step. */
-class ScoreStateSpec extends AnyFunSuite with SparkSpec {
+class ScoreStateSpec extends AnyFunSuite with SparkSpec
+    with OverlappedTests {
 
   test("score maintainer: snapshot == ta17 over arrivals; replay dedups; redelivery no-op; forget == survivors; re-ingest blocked; idempotent") {
     import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
       .collect().map(_.toSeq.toList).toList
 
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainScoreState(df(b), refT, scT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.score(refT) -> scT)
     assert(got() == want(all), "snapshot != ta17 bucketing over the arrivals")
 
     // crash replay: the SAME scored rows land again under the same key
@@ -46,7 +47,7 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
     // the maintainer uses (a raw root-level append would be silently
     // ignored by partition discovery — vacuous pin) — dedup collapses
     val b2 = all.drop(150)
-    Streams.scoreDelta(df(b2), ref, b2.map(_._1).min)
+    StateFamily.score(refT).delta(new StateFamily.In(df(b2), b2.map(_._1).min))
       .withColumn("pt", pmod($"doc_id", lit(Streams.TF_PARTITIONS.toLong)))
       .write.mode("append").partitionBy("pt").parquet(scT)
     assert(spark.read.parquet(scT).groupBy($"batch_key", $"doc_id").count()
@@ -54,11 +55,11 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
     assert(got() == want(all), "replayed scored rows double-counted")
 
     // redelivery of a whole already-seen batch is a no-op
-    Streams.maintainScoreState(df(all.take(150)), refT, scT, docT)
+    Streams.maintainState(df(all.take(150)), docT, StateFamily.score(refT) -> scT)
     assert(got() == want(all), "redelivered batch re-scored")
 
     // compaction collapses the replay duplicates, snapshot-invariant
-    Streams.compactScores(spark, scT)
+    Streams.compactState(spark, docT, StateFamily.Score -> scT)
     assert(got() == want(all), "compaction drifted")
     assert(spark.read.parquet(scT).groupBy($"batch_key", $"doc_id")
       .count().filter($"count" > 1).isEmpty, "duplicate rows survived compaction")
@@ -67,19 +68,17 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
     val neverSeen = 3000000L
     val forgot = all.map(_._1).filter(_ % 5 == 0).toSet + neverSeen
     val fDf = forgot.toSeq.toDF("doc_id")
-    Streams.forgetScoreState(spark, fDf, scT, docT)
+    Streams.forgetState(spark, fDf, docT, StateFamily.Score -> scT)
     val remaining = all.filter(t => !forgot.contains(t._1))
     assert(got() == want(remaining), "forget != ta17 over the survivors")
 
     // re-ingest of forgotten docs (and the never-seen id) is a no-op
-    Streams.maintainScoreState(
-      df(all.filter(t => forgot.contains(t._1)).take(10)
-        :+ ((neverSeen, "srcX", "en", "resurrected text"))),
-      refT, scT, docT)
+    Streams.maintainState(df(all.filter(t => forgot.contains(t._1)).take(10)
+        :+ ((neverSeen, "srcX", "en", "resurrected text"))), docT, StateFamily.score(refT) -> scT)
     assert(got() == want(remaining), "a forgotten doc re-entered the scores")
 
     // idempotent re-run
-    Streams.forgetScoreState(spark, fDf, scT, docT)
+    Streams.forgetState(spark, fDf, docT, StateFamily.Score -> scT)
     assert(got() == want(remaining), "forget re-run diverged")
   }
 
@@ -97,7 +96,7 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
     val (refT, scT, docT) = (s"$root/ref", s"$root/scores", s"$root/docs")
     Streams.buildRefState(docs, refT)
     for (b <- Seq(all.take(150), all.drop(150)))
-      Streams.maintainScoreState(df(b), refT, scT, docT)
+      Streams.maintainState(df(b), docT, StateFamily.score(refT) -> scT)
 
     def inventory(): Map[String, Set[(String, Long, Long)]] = {
       val base = new java.io.File(scT)
@@ -111,7 +110,7 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
     assert(before.size > 1, "only one partition materialized — pin is vacuous")
 
     val victim = 10L
-    Streams.forgetScoreState(spark, Seq(victim).toDF("doc_id"), scT, docT)
+    Streams.forgetState(spark, Seq(victim).toDF("doc_id"), docT, StateFamily.Score -> scT)
     val after = inventory()
     val touched = s"pt=${victim % Streams.TF_PARTITIONS}"
     before.keys.filterNot(_ == touched).foreach { d =>
@@ -149,13 +148,13 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
     // the legacy state: a FLAT scores table + guard, exactly what the
     // pre-layout maintainer wrote
     val b1 = all.take(150)
-    Streams.scoreDelta(df(b1), ref, b1.map(_._1).min)
+    StateFamily.score(refT).delta(new StateFamily.In(df(b1), b1.map(_._1).min))
       .write.parquet(scT)
     b1.map(_._1).toSeq.toDF("doc_id").write.parquet(docT)
 
     // first new-layout advance: without migration the pt= dirs would
     // shadow the flat rows and the old docs would vanish from reads
-    Streams.maintainScoreState(df(all.drop(150)), refT, scT, docT)
+    Streams.maintainState(df(all.drop(150)), docT, StateFamily.score(refT) -> scT)
     assert(spark.read.parquet(scT).columns.contains("pt"),
       "table did not migrate to the partitioned layout")
     val want = graft.queries.TextOps.refBuckets(
@@ -165,7 +164,7 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
       .collect().map(_.toSeq.toList).toList == want,
       "pre-layout rows lost across the migration")
     // and the partition-pruned forget works on the migrated table
-    Streams.forgetScoreState(spark, Seq(10L).toDF("doc_id"), scT, docT)
+    Streams.forgetState(spark, Seq(10L).toDF("doc_id"), docT, StateFamily.Score -> scT)
     assert(Streams.scoreSnapshot(spark, scT)
       .collect().map(_.toSeq.toList).toList
       == graft.queries.TextOps.refBuckets(
@@ -189,7 +188,7 @@ class ScoreStateSpec extends AnyFunSuite with SparkSpec {
     val batch = Seq(
       (7L, "src_b", "en", "aa aa"),
       (7L, "src_a", "en", "zz zz zz")).toDF("doc_id", "source", "lang", "text")
-    Streams.maintainScoreState(batch, refT, scT, docT)
+    Streams.maintainState(batch, docT, StateFamily.score(refT) -> scT)
     val scored = spark.read.parquet(scT)
       .select($"doc_id", $"source", $"score")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))

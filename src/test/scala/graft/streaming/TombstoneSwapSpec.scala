@@ -25,7 +25,7 @@ class TombstoneSwapSpec extends AnyFunSuite with SparkSpec {
     store.write.parquet(docT)
     val ids = Seq(2L, 99L).toDF("doc_id") // 99 never seen
 
-    Streams.tombstoneSwap(Some(spark.read.parquet(docT)), ids, docT, "text")
+    Streams.tombstoneSwap(StateFamily.Text, Some(spark.read.parquet(docT)), ids, docT)
 
     val out = spark.read.parquet(docT)
     assert(out.columns.toSeq == Seq("doc_id", "source", "text", "arrived_at"),
@@ -46,7 +46,7 @@ class TombstoneSwapSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val root = Files.createTempDirectory("tomb").toString
     val docT = s"$root/docs"
-    Streams.tombstoneSwap(None, Seq(5L).toDF("doc_id"), docT, "text")
+    Streams.tombstoneSwap(StateFamily.Text, None, Seq(5L).toDF("doc_id"), docT)
     val out = spark.read.parquet(docT).collect()
       .map(r => (r.getLong(0), Option(r.getString(1)))).toList
     assert(out == List((5L, None)), s"got $out")
@@ -58,8 +58,8 @@ class TombstoneSwapSpec extends AnyFunSuite with SparkSpec {
     val docT = s"$root/docs"
     Seq((1L, "x")).toDF("doc_id", "other").write.parquet(docT)
     val e = intercept[IllegalArgumentException] {
-      Streams.tombstoneSwap(Some(spark.read.parquet(docT)),
-        Seq(1L).toDF("doc_id"), docT, "text")
+      Streams.tombstoneSwap(StateFamily.Text, Some(spark.read.parquet(docT)),
+        Seq(1L).toDF("doc_id"), docT)
     }
     assert(e.getMessage.contains("lacks doc_id/text"))
   }
