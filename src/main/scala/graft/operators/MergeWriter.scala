@@ -1,17 +1,42 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Keyed last-writer-wins merge — the Spark re-expression of the reference's
   * row-at-a-time `INSERT … ON DUPLICATE KEY UPDATE` loop
-  * (pdf_to_db.py:202-244, loop at :347-350; SURVEY.md §2.8).
+  * (pdf_to_db.py:202-244, loop at :347-350; SURVEY.md §2.8) — and the one
+  * writer of every parquet table: [[append]], [[publish]] and [[rewrite]].
   *
   * Net reference semantics: per key, the last row in source order wins;
   * existing rows for other keys survive. Here that is a single window dedup
   * plus an anti-join union — two shuffles on the key, both of which disappear
   * at scale if the target table is bucketed by the key.
+  *
+  * A publish is the analog of the reference's single-transaction commit
+  * (pdf_to_db.py:351) on plain parquet directories (the offline
+  * environment has no Delta/Iceberg): rows go to the table's stage
+  * (`<table>.stage/rows`), then a manifest (`<table>.stage/_GRAFT_COMMIT`,
+  * one `<dir>\t<data|empty>` line per replaced directory: `.` for the
+  * whole table, `col=v` for a bucket) lands by temp-then-rename — the
+  * commit point — then each replaced directory is renamed into the stage
+  * and its staged copy renamed in, and the stage is dropped. After a
+  * publish returns, the table directory holds exactly its current files,
+  * so every reader reads it as plain parquet.
+  *
+  * A crash before the commit leaves the table untouched; after it, the
+  * staged copy persists until its rename lands, so no row is lost. The
+  * entry step ([[enter]]) heals either case, idempotently: no stage,
+  * nothing to do; a stage without a manifest is discarded; a manifest is
+  * rolled forward. Every append, publish and rewrite runs it on its
+  * table first, and an operation over several tables runs it on every
+  * table it writes before it reads any of them, so no rewrite is derived
+  * from a half-published table. Readers never repair: two actors rolling
+  * the same publish forward could delete each other's new data. A reader
+  * that overlaps a publish (or a crash inside one) can see a replaced
+  * directory absent, never part-deleted; one writer per table.
   */
 object MergeWriter {
 
@@ -36,185 +61,137 @@ object MergeWriter {
 
   /** The parquet table at `path`, or None while it does not exist: the
     * path is checked on its own filesystem first, so an expected absence
-    * logs nothing, and a table that a swap removes between the check and
-    * the read is absent too. */
-  def readIfPresent(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] =
-    if (!fsOf(spark, path).exists(new org.apache.hadoop.fs.Path(path))) None
+    * logs nothing, and a table that a publish removes between the check
+    * and the read is absent too. */
+  def readIfPresent(spark: SparkSession, path: String): Option[DataFrame] =
+    if (!fsOf(spark, path).exists(new Path(path))) None
     else try Some(spark.read.parquet(path))
     catch { case _: org.apache.spark.sql.AnalysisException => None }
 
-  /** Atomic snapshot overwrite: write to a temp dir, then swap directories.
-    * Parquet-on-filesystem stand-in for a transactional table format (the
-    * offline environment has no Delta/Iceberg); the swap is the analog of
-    * the reference's single-transaction commit (pdf_to_db.py:351). */
-  def overwriteAtomic(df: DataFrame, path: String): Unit =
-    overwriteAtomicImpl(df, path, None)
+  /** What a publish replaces. */
+  sealed trait Intent
 
-  /** [[overwriteAtomic]] staging the snapshot PARTITIONED by `partCol`
-    * — the whole-table rewrite that PRESERVES (or first establishes) a
-    * partition layout, e.g. migrating a flat doc-keyed table to the
-    * pt-bucketed contract in one atomic swap. */
-  def overwriteAtomicPartitioned(df: DataFrame, path: String,
-      partCol: String): Unit =
-    overwriteAtomicImpl(df, path, Some(partCol))
+  /** The whole table, partitioned by `by` when given. */
+  final case class Whole(by: Option[String] = None) extends Intent
 
-  private def overwriteAtomicImpl(df: DataFrame, path: String,
-      partCol: Option[String]): Unit = {
-    val tmp = path + ".staging"
-    val w = df.write.mode("overwrite")
-    partCol.fold(w)(w.partitionBy(_)).parquet(tmp)
-    // resolve the filesystem FROM the path (not FileSystem.get's default
-    // FS): on a scheme-qualified table (s3a://, hdfs://) the swap must
-    // run against the table's filesystem — the fsOf convention below
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(path + ".old")
-    // FileSystem.rename/delete signal failure by RETURN VALUE, not by
-    // throwing — ignoring it would report success with a stale table and
-    // the new snapshot stranded in .staging
-    def must(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(s"overwriteAtomic: $what failed for $path")
-    if (fs.exists(bak)) must(fs.delete(bak, true), "delete old backup")
-    if (fs.exists(dst)) must(fs.rename(dst, bak), "backup current snapshot")
-    must(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst), "publish staging")
-    if (fs.exists(bak)) must(fs.delete(bak, true), "drop backup")
+  /** The buckets `col=v` of a table partitioned by `col`, one per value:
+    * a bucket with staged rows is replaced, one with none is deleted, and
+    * every other bucket is never read or written. */
+  final case class Buckets(col: String, values: Seq[Long]) extends Intent
+
+  /** Append `rows` to `table`, partitioned by `by` when given. */
+  def append(rows: DataFrame, table: String, by: Option[String] = None): Unit = {
+    enter(rows.sparkSession, table)
+    val w = rows.write.mode("append")
+    by.fold(w)(w.partitionBy(_)).parquet(table)
   }
 
-  private val PartStageSuffix = ".pstaging"
-  private val PartManifest = "_GRAFT_COMMIT"
+  /** Publish `rows` as `intent` of `table`. */
+  def publish(rows: DataFrame, table: String, intent: Intent = Whole()): Unit = {
+    enter(rows.sparkSession, table)
+    commit(rows, table, intent)
+  }
 
-  private def must(ok: Boolean, what: String, path: String): Unit =
-    if (!ok) throw new java.io.IOException(
-      s"overwritePartitionsAtomic: $what failed for $path")
+  /** Read `table` (None while absent) and publish what `rows` derives
+    * from it as `intent`; None publishes nothing. */
+  def rewrite(spark: SparkSession, table: String, intent: Intent = Whole())(
+      rows: Option[DataFrame] => Option[DataFrame]): Unit = {
+    enter(spark, table)
+    rows(readIfPresent(spark, table)).foreach(commit(_, table, intent))
+  }
 
-  private def fsOf(df: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(
-      df.sparkContext.hadoopConfiguration)
-
-  /** Per-partition atomic overwrite for a `partCol=<v>`-layout parquet
-    * table — [[overwriteAtomic]]'s stage-then-publish discipline applied
-    * per partition, replacing Spark's dynamic partition overwrite (whose
-    * per-partition delete-then-rename commit can lose a touched
-    * partition's surviving rows on a hard crash inside the window).
-    * `touched` is the job's full intent: a touched value with staged
-    * rows is REPLACED, a touched value with NO staged rows is DELETED
-    * (the emptied-partition case dynamic overwrite cannot express — it
-    * writes no rows there, so it cannot clear the directory), and an
-    * untouched partition is never read or written. The manifest —
-    * written into the stage directory and made visible by an atomic
-    * rename — is the commit point: before it exists the table is
-    * untouched and a crash discards the stage; after it exists the
-    * publish is an idempotent roll-forward (each partition is either
-    * still staged, mid-swap, or already published — all three re-run to
-    * the same end state), completed by [[repairPartitionedTable]].
-    * Crash visibility, stated honestly: between a mid-publish crash and
-    * the repair, readers can see a touched partition ABSENT — the same
-    * transient [[overwriteAtomic]] has mid-swap — but no row is ever
-    * LOST: the staged copy persists until its rename lands. Single
-    * writer per table (the forget/compact jobs' standing
-    * single-maintenance-loop contract); callers that derive `rows` from
-    * the table itself must run [[repairPartitionedTable]] BEFORE that
-    * read, or a pending crashed publish reads as missing rows. */
-  def overwritePartitionsAtomic(rows: DataFrame, table: String,
-      partCol: String, touched: Seq[Long]): Unit = {
-    val spark = rows.sparkSession
-    repairPartitionedTable(spark, table, partCol)
-    if (touched.isEmpty) return
+  /** The entry step: finish or discard each table's crashed publish. One
+    * existence probe per table when there is none. */
+  def enter(spark: SparkSession, tables: String*): Unit = tables.foreach { table =>
     val fs = fsOf(spark, table)
-    val stage = new org.apache.hadoop.fs.Path(table + PartStageSuffix)
-    rows.write.mode("overwrite").partitionBy(partCol).parquet(stage.toString)
-    // every staged partition must be in the intent: a value present in
-    // `rows` but missing from `touched` would stage, stay out of the
-    // manifest, and be silently destroyed when the published stage is
-    // dropped — fail BEFORE the manifest commits, with the table
-    // untouched, instead of returning success minus some rows
-    val staged = fs.listStatus(stage).map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol=")).map(_.stripPrefix(s"$partCol="))
-    val touchedSet = touched.map(_.toString).toSet
-    val orphans = staged.filterNot(touchedSet)
-    if (orphans.nonEmpty) {
-      fs.delete(stage, true)
-      throw new java.io.IOException(
-        s"overwritePartitionsAtomic: staged partitions ${orphans.mkString(",")} " +
-          s"not in the touched intent for $table — rows and touched disagree")
+    val stage = stageOf(table)
+    if (fs.exists(stage)) {
+      if (fs.exists(new Path(stage, Manifest))) rollForward(fs, table)
+      else must(fs.delete(stage, true), "discard uncommitted stage", table)
     }
-    val lines = touched.distinct.map { v =>
-      val has = fs.exists(
-        new org.apache.hadoop.fs.Path(stage, s"$partCol=$v"))
-      s"$v\t${if (has) "data" else "empty"}"
+  }
+
+  private val Manifest = "_GRAFT_COMMIT"
+
+  private def stageOf(table: String) = new Path(table + ".stage")
+
+  /** `dir` under `base`: `.` is `base` itself. */
+  private def under(base: Path, dir: String) = if (dir == ".") base else new Path(base, dir)
+
+  private def must(ok: Boolean, what: String, table: String): Unit =
+    if (!ok) throw new java.io.IOException(s"publish: $what failed for $table")
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Stage, commit and roll forward (the table is entered). A bucket
+    * staged outside the intent fails before the commit, table untouched:
+    * it would stay out of the manifest and go with the stage. */
+  private def commit(rows: DataFrame, table: String, intent: Intent): Unit = {
+    val (by, dirs) = intent match {
+      case Whole(by) => (by, Seq("."))
+      case Buckets(c, vs) => (Some(c), vs.distinct.map(v => s"$c=$v"))
     }
-    // manifest lands by RENAME — a crash mid-write leaves only the .tmp,
-    // which the pre-commit recovery path discards with the stage
-    val tmp = new org.apache.hadoop.fs.Path(stage, PartManifest + ".tmp")
+    if (dirs.isEmpty) return
+    val fs = fsOf(rows.sparkSession, table)
+    val stage = stageOf(table)
+    val staged = new Path(stage, "rows")
+    val w = rows.write.mode("overwrite")
+    by.fold(w)(w.partitionBy(_)).parquet(staged.toString)
+    intent match {
+      case Buckets(c, _) =>
+        val orphans = fs.listStatus(staged).map(_.getPath.getName)
+          .filter(n => n.startsWith(s"$c=") && !dirs.contains(n))
+        if (orphans.nonEmpty) {
+          fs.delete(stage, true)
+          throw new java.io.IOException(s"publish: staged buckets " +
+            s"${orphans.mkString(",")} not in the touched intent for $table — " +
+            "rows and touched disagree")
+        }
+      case _ =>
+    }
+    val lines = dirs.map(d => s"$d\t${if (fs.exists(under(staged, d))) "data" else "empty"}")
+    val tmp = new Path(stage, Manifest + ".tmp")
     val out = fs.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8"))
     finally out.close()
-    must(fs.rename(tmp, new org.apache.hadoop.fs.Path(stage, PartManifest)),
-      "commit manifest", table)
-    publishStaged(fs, table, partCol)
+    must(fs.rename(tmp, new Path(stage, Manifest)), "commit manifest", table)
+    rollForward(fs, table)
   }
 
-  /** Recover a partitioned table from a crashed
-    * [[overwritePartitionsAtomic]]: a stage WITHOUT a manifest never
-    * committed (the table is untouched — drop the stage); a stage WITH
-    * a manifest committed (roll the publish forward to completion).
-    * Runs automatically at the next overwrite of the same table; expose
-    * it at deployment startup (and before any maintenance op that READS
-    * the table to derive its own rewrite) so a crash heals at the first
-    * opportunity rather than the next overwrite. No-op when no stage
-    * exists — one existence probe. */
-  def repairPartitionedTable(spark: org.apache.spark.sql.SparkSession,
-      table: String, partCol: String): Unit = {
-    val fs = fsOf(spark, table)
-    val stage = new org.apache.hadoop.fs.Path(table + PartStageSuffix)
-    if (!fs.exists(stage)) return
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage, PartManifest)))
-      publishStaged(fs, table, partCol)
-    else must(fs.delete(stage, true), "discard uncommitted stage", table)
-  }
-
-  /** The roll-forward half: execute the manifest's intent, idempotently.
-    * For a `data` partition still in the stage: delete the current
-    * directory (if any), rename the staged one in; a partition already
-    * renamed in by a prior crashed pass has no staged copy left and is
-    * skipped (its current directory IS the staged data). For an `empty`
-    * partition: delete the current directory. Stage dir dropped last —
-    * by then every staged partition has been renamed out, so the drop
-    * removes only write metadata. */
-  private def publishStaged(fs: org.apache.hadoop.fs.FileSystem,
-      table: String, partCol: String): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(table + PartStageSuffix)
-    val manifest = new org.apache.hadoop.fs.Path(stage, PartManifest)
-    val in = fs.open(manifest)
+  /** Execute a committed manifest, idempotently: a `data` directory
+    * still staged replaces the current one (one already renamed in has
+    * no staged copy left), an `empty` one is removed. A replaced
+    * directory leaves by one rename into the stage, so a reader sees it
+    * whole or absent, never part-deleted; the stage goes last, and the
+    * replaced copies with it. */
+  private def rollForward(fs: FileSystem, table: String): Unit = {
+    val stage = stageOf(table)
+    val in = fs.open(new Path(stage, Manifest))
     val lines = try
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toVector
+      scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toVector
     finally in.close()
-    val tableDir = new org.apache.hadoop.fs.Path(table)
-    if (!fs.exists(tableDir)) must(fs.mkdirs(tableDir), "create table dir", table)
     lines.foreach { line =>
-      // a tab-less line must hit the corrupt-manifest error below, not a
-      // MatchError from a failed destructuring
+      def corrupt(why: String) = new java.io.IOException(
+        s"publish: corrupt manifest line '$line' for $table ($why)")
       val parts = line.split("\t", 2)
-      if (parts.length != 2) throw new java.io.IOException(
-        s"overwritePartitionsAtomic: corrupt manifest line '$line' for $table (no tab)")
-      val Array(v, kind) = parts
-      val cur = new org.apache.hadoop.fs.Path(tableDir, s"$partCol=$v")
-      val stg = new org.apache.hadoop.fs.Path(stage, s"$partCol=$v")
-      kind match {
+      if (parts.length != 2) throw corrupt("no tab")
+      val cur = under(new Path(table), parts(0))
+      val stg = under(new Path(stage, "rows"), parts(0))
+      def retire(): Unit = if (fs.exists(cur)) {
+        val gone = under(new Path(stage, "replaced"), parts(0))
+        must(fs.mkdirs(gone.getParent), "create replaced dir", table)
+        must(fs.rename(cur, gone), s"retire ${parts(0)}", table)
+      }
+      parts(1) match {
         case "data" =>
           if (fs.exists(stg)) {
-            if (fs.exists(cur)) must(fs.delete(cur, true),
-              s"clear partition $partCol=$v", table)
-            must(fs.rename(stg, cur), s"publish partition $partCol=$v", table)
+            retire()
+            must(fs.mkdirs(cur.getParent), "create table dir", table)
+            must(fs.rename(stg, cur), s"publish ${parts(0)}", table)
           }
-        case "empty" =>
-          if (fs.exists(cur)) must(fs.delete(cur, true),
-            s"drop emptied partition $partCol=$v", table)
-        case other => throw new java.io.IOException(
-          s"overwritePartitionsAtomic: corrupt manifest line '$line' for $table ($other)")
+        case "empty" => retire()
+        case other => throw corrupt(other)
       }
     }
     must(fs.delete(stage, true), "drop published stage", table)

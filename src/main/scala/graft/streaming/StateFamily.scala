@@ -55,12 +55,14 @@ import graft.queries.{TextOps, VectorOps}
   *    nothing left to forget. See [[StateFamily.Forget]] for the five
   *    policies.
   *  - LAYOUT. A [[bucket]]ed table is partitioned by its bucket column
-  *    from its first write. Every operation first rolls a crashed
-  *    per-bucket publish forward and migrates a flat table that predates
-  *    the layout: once bucket dirs exist, partition discovery ignores
-  *    root files, so mixed layouts would lose rows with no error.
-  *    Compaction and forget then rewrite bucket by bucket, each bucket
-  *    published atomically.
+  *    from its first write. Every operation first runs the entry step on
+  *    the store and every family table (a crashed publish is finished or
+  *    discarded, [[graft.operators.MergeWriter.enter]]) and migrates a
+  *    flat table that predates the layout: once bucket dirs exist,
+  *    partition discovery ignores root files, so mixed layouts would lose
+  *    rows with no error. A compaction then publishes the whole table
+  *    partitioned by the bucket, and a forget or a recompute publishes
+  *    just the buckets it touched.
   */
 private[graft] final case class StateFamily(
     store: StateFamily.Store,

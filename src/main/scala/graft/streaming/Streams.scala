@@ -6,6 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.MergeWriter
+import graft.operators.MergeWriter.{Buckets, Whole}
+
 /** Structured-Streaming twins of the batch analytics (SURVEY.md §2.7).
   *
   * The reference is batch-only; its closest incremental shapes are the
@@ -311,11 +314,12 @@ object Streams {
     * reading pairs through a distinct(). */
   def maintainBandIndex(batch: DataFrame, indexTable: String, docTable: String,
       pairsTable: String, shingleTable: String): Unit = {
+    MergeWriter.enter(batch.sparkSession, indexTable, docTable, pairsTable, shingleTable)
     val fresh = freshAgainst(batch, docTable)
     advanceBandIndex(fresh,
       graft.queries.TextOps.bandIndex(fresh).localCheckpoint(true),
       indexTable, pairsTable, shingleTable)
-    fresh.write.mode("append").parquet(docTable)
+    MergeWriter.append(fresh, docTable)
   }
 
   /** Prune a standing id-guard read to the batch's id RANGE before the
@@ -396,8 +400,8 @@ object Streams {
     // in incrementalPairs' distinct() before any counting.
     val store = tryRead(spark, shingleTable).getOrElse(emptyShingleStore(spark))
       .join(broadcast(fresh.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-    graft.queries.TextOps.incrementalPairs(idx, freshBands, freshShingles, store)
-      .write.mode("append").parquet(pairsTable)
+    MergeWriter.append(
+      graft.queries.TextOps.incrementalPairs(idx, freshBands, freshShingles, store), pairsTable)
     // per-table redelivery guard: a crash after these appends but before
     // the doc-store advance redelivers the batch, and appending the same
     // rows twice would permanently corrupt every later verification (the
@@ -414,10 +418,9 @@ object Streams {
     * frame (the span advance's grams), and the bounds agg
     * [[pruneToBatchRange]] needs would recompute its whole subtree. */
   private def appendNewBy(rows: DataFrame, table: String, idCol: String): Unit =
-    tryRead(rows.sparkSession, table)
+    MergeWriter.append(tryRead(rows.sparkSession, table)
       .map(t => rows.join(t.select(idCol), Seq(idCol), "left_anti"))
-      .getOrElse(rows)
-      .write.mode("append").parquet(table)
+      .getOrElse(rows), table)
 
   private def emptyDf(spark: SparkSession,
       fields: (String, org.apache.spark.sql.types.DataType)*): DataFrame =
@@ -460,6 +463,7 @@ object Streams {
       probeTable: String, pairsTable: String, docTable: String,
       probeK: Int = 8, minHits: Int = 2): Unit = {
     val spark = batch.sparkSession
+    MergeWriter.enter(spark, storeTable, probeTable, pairsTable, docTable)
     val fresh = freshAgainst(batch, docTable)
     val freshIds = fresh.select(col("doc_id"))
     val store = tryRead(spark, storeTable).getOrElse(emptyShingleStore(spark))
@@ -468,10 +472,10 @@ object Streams {
       .join(broadcast(freshIds), Seq("doc_id"), "left_anti")
     val adv = graft.queries.TextOps.containmentIndexAdvance(
       store, probes, fresh, probeK, minHits)
-    adv.pairs.write.mode("append").parquet(pairsTable)
+    MergeWriter.append(adv.pairs, pairsTable)
     appendNewBy(adv.store, storeTable, "doc_id")
     appendNewBy(adv.probes, probeTable, "doc_id")
-    fresh.write.mode("append").parquet(docTable)
+    MergeWriter.append(fresh, docTable)
   }
 
   private def emptyProbes(spark: SparkSession): DataFrame = {
@@ -516,11 +520,12 @@ object Streams {
     * would close it with one multi-table commit). */
   def maintainClusterState(batch: DataFrame, labelsTable: String,
       bucketTable: String, remapTable: String, docTable: String): Unit = {
+    MergeWriter.enter(batch.sparkSession, labelsTable, bucketTable, remapTable, docTable)
     val fresh = freshAgainst(batch, docTable)
     advanceClusterState(fresh,
       graft.queries.TextOps.bandIndex(fresh).localCheckpoint(true),
       labelsTable, bucketTable, remapTable)
-    fresh.write.mode("append").parquet(docTable)
+    MergeWriter.append(fresh, docTable)
   }
 
   /** The cluster half of an advance — labels/buckets append, remap folds.
@@ -552,7 +557,7 @@ object Streams {
     val foldedRemap = composed
       .unionByName(merges.select(col("__oldc"), col("__newc")))
       .filter(col("__oldc") =!= col("__newc")).distinct()
-    newLabels.write.mode("append").parquet(labelsTable)
+    MergeWriter.append(newLabels, labelsTable)
     // only buckets NEW to the index append (existing buckets' rows stay
     // as written and resolve through the remap). The existing-bucket set
     // is pruned to the batch's buckets FIRST (broadcast semi-probe —
@@ -562,12 +567,11 @@ object Streams {
       .join(broadcast(adv.members.select(col("bucket")).distinct()),
         Seq("bucket"), "left_semi")
       .select(col("bucket"))
-    adv.members
+    MergeWriter.append(adv.members
       .join(broadcast(existingTouched), Seq("bucket"), "left_anti")
       .join(newLabels, Seq("doc_id"))
-      .select(col("bucket"), col("component")).distinct()
-      .write.mode("append").parquet(bucketTable)
-    graft.operators.MergeWriter.overwriteAtomic(foldedRemap, remapTable)
+      .select(col("bucket"), col("component")).distinct(), bucketTable)
+    MergeWriter.publish(foldedRemap, remapTable)
   }
 
   /** The full dedup-state loop a deployment actually runs: ONE advance
@@ -583,6 +587,8 @@ object Streams {
   def maintainDedupState(batch: DataFrame, indexTable: String,
       pairsTable: String, shingleTable: String, labelsTable: String,
       bucketTable: String, remapTable: String, docTable: String): Unit = {
+    MergeWriter.enter(batch.sparkSession, indexTable, pairsTable, shingleTable,
+      labelsTable, bucketTable, remapTable, docTable)
     val fresh = freshAgainst(batch, docTable)
     // a fully-guarded redelivery must be a true no-op — without this an
     // at-least-once upstream litters every standing table with empty
@@ -591,7 +597,7 @@ object Streams {
     val freshBands = graft.queries.TextOps.bandIndex(fresh).localCheckpoint(true)
     advanceBandIndex(fresh, freshBands, indexTable, pairsTable, shingleTable)
     advanceClusterState(fresh, freshBands, labelsTable, bucketTable, remapTable)
-    fresh.write.mode("append").parquet(docTable)
+    MergeWriter.append(fresh, docTable)
   }
 
   /** The one foreachBatch launcher for every maintainer: with
@@ -640,22 +646,20 @@ object Streams {
           .unionByName(unseen.select(order.map(col): _*))
       case StateFamily.Replaced(row) => idsC.select(row: _*)
     }
-    graft.operators.MergeWriter.overwriteAtomic(
-      s.join(idsC, Seq(k), "left_anti").select(order.map(col): _*).unionByName(out),
-      table)
+    MergeWriter.publish(
+      s.join(idsC, Seq(k), "left_anti").select(order.map(col): _*).unionByName(out), table)
   }
 
   /** Delete every row of `table` whose `on` column(s) match an id,
     * preserving the table's column order (a USING join floats its key). */
   private def deleteByIds(spark: SparkSession, table: String,
       idsC: DataFrame, on: Seq[String]): Unit =
-    tryRead(spark, table).foreach { t0 =>
+    MergeWriter.rewrite(spark, table)(_.map { t0 =>
       val t = t0.localCheckpoint(true)
-      val kept = on.foldLeft(t)((acc, c) =>
+      on.foldLeft(t)((acc, c) =>
         acc.join(idsC.withColumnRenamed("doc_id", c), Seq(c), "left_anti"))
-      graft.operators.MergeWriter.overwriteAtomic(
-        kept.select(t0.columns.map(col).toIndexedSeq: _*), table)
-    }
+        .select(t0.columns.map(col).toIndexedSeq: _*)
+    })
 
   /** DELETION PROPAGATION for the text-dedup family —
     * the vector stores' [[forgetState]] sibling: given doc ids,
@@ -740,6 +744,7 @@ object Streams {
     def crashPoint(n: Int): Unit =
       if (failAfterStep == n) throw new IllegalStateException(
         s"repairClusterSplits: injected crash after step $n")
+    MergeWriter.enter(spark, labelsTable, bucketTable, remapTable, journalTable)
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     (tryRead(spark, labelsTable), tryRead(spark, indexTable)) match {
       case (Some(lblRaw), Some(idxRaw)) =>
@@ -786,7 +791,7 @@ object Streams {
         }
         // (0) intent journal: the touched set must survive step (2),
         // which deletes the label rows it was derived from
-        graft.operators.MergeWriter.overwriteAtomic(touched, journalTable)
+        MergeWriter.publish(touched, journalTable)
         crashPoint(0)
         val members = idxRaw.localCheckpoint(true)
           .select(col("doc_id"),
@@ -802,7 +807,7 @@ object Streams {
         // (1) bucket rows: untouched carry as written (their resolution
         // never passes through a touched component — see Scaladoc),
         // touched re-derive under the new labels
-        tryRead(spark, bucketTable).foreach { b0 =>
+        MergeWriter.rewrite(spark, bucketTable)(_.map { b0 =>
           val b = b0.localCheckpoint(true)
           val bCur = b.join(broadcast(remap), b("component") === remap("__oldc"), "left")
             .select(col("bucket"), b("component"),
@@ -813,22 +818,19 @@ object Streams {
             .select(col("bucket"), col("component")).distinct()
           // distinct: after a crash here, a rebuilt row whose new label
           // has no remap entry survives in `kept` on the re-run too
-          graft.operators.MergeWriter.overwriteAtomic(
-            kept.unionByName(rebuilt).distinct(), bucketTable)
-        }
+          kept.unionByName(rebuilt).distinct()
+        })
         crashPoint(1)
         // (2) labels: rows of touched components (forgotten ids included)
         // replaced by the survivors' literal new labels
         val touchedDocs = resolved.join(broadcast(touched), Seq("component"), "left_semi")
           .select(col("doc_id"))
-        graft.operators.MergeWriter.overwriteAtomic(
-          lbl.join(touchedDocs, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"), col("component"))
-            .unionByName(newLabels), labelsTable)
+        MergeWriter.publish(lbl.join(touchedDocs, Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("component")).unionByName(newLabels), labelsTable)
         crashPoint(2)
         // (3) remap entries into the touched components delete — the
         // step that makes the literal new labels resolve as themselves
-        graft.operators.MergeWriter.overwriteAtomic(
+        MergeWriter.publish(
           remap.join(broadcast(tc), remap("__newc") === tc("__tc"), "left_anti")
             .select(col("__oldc"), col("__newc")), remapTable)
         crashPoint(3)
@@ -854,6 +856,8 @@ object Streams {
   def forgetDedupState(spark: SparkSession, ids: DataFrame,
       indexTable: String, pairsTable: String, shingleTable: String,
       labelsTable: String, bucketTable: String, docTable: String): Unit = {
+    MergeWriter.enter(spark, indexTable, pairsTable, shingleTable, labelsTable,
+      bucketTable, docTable)
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     // ghost buckets: bkeys held ONLY by forgotten docs — derived from
     // the index BEFORE it shrinks
@@ -873,12 +877,10 @@ object Streams {
     // strand the ghost buckets forever — this order keeps every step
     // re-runnable from its own inputs
     ghosts.foreach { g =>
-      tryRead(spark, bucketTable).foreach { b0 =>
-        val b = b0.localCheckpoint(true)
-        graft.operators.MergeWriter.overwriteAtomic(
-          b.join(g, Seq("bucket"), "left_anti")
-            .select(b0.columns.map(col).toIndexedSeq: _*), bucketTable)
-      }
+      MergeWriter.rewrite(spark, bucketTable)(_.map { b0 =>
+        b0.localCheckpoint(true).join(g, Seq("bucket"), "left_anti")
+          .select(b0.columns.map(col).toIndexedSeq: _*)
+      })
     }
     deleteByIds(spark, indexTable, idsC, Seq("doc_id"))
     deleteByIds(spark, shingleTable, idsC, Seq("doc_id"))
@@ -903,7 +905,7 @@ object Streams {
       storeTable: String, fams: (StateFamily, String)*): Unit = {
     val spark = batch.sparkSession
     storeOf(fams, storeTable, Some(store))
-    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
+    enterGroup(spark, storeTable, fams)
     val standing = tryRead(spark, storeTable)
     val graded = guarded(batch, standing, store.key, store.arrives.map(_._1),
       store.grade)
@@ -917,7 +919,7 @@ object Streams {
       .filterNot(_.isNullAt(recomputed.size))
     val sentinels = store.sentinel.map { case (p, row) => graded.filter(p).select(row: _*) }
     if (probe.isEmpty) {
-      sentinels.filterNot(_.isEmpty).foreach(_.write.mode("append").parquet(storeTable))
+      sentinels.filterNot(_.isEmpty).foreach(MergeWriter.append(_, storeTable))
       return
     }
     val key = probe.map(_.getLong(recomputed.size)).min
@@ -925,14 +927,15 @@ object Streams {
     val ds = deltas(fresh, fams.map(_._1))((f, rows) =>
       new StateFamily.In(rows, key, live, tryRead(spark, fams.find(_._1 eq f).get._2)))
     fams.zip(ds).foreach { case ((f, t), d) =>
-      if (f.forget == StateFamily.Recompute) {
-        val b = f.bucket.get
-        graft.operators.MergeWriter.overwritePartitionsAtomic(d, t, b.name,
-          probe.map(_.getAs[Long](b.name)).distinct.toIndexedSeq)
-      } else append(d, t, f.bucket)
+      f.bucket match {
+        case Some(b) if f.forget == StateFamily.Recompute => MergeWriter.publish(d, t,
+          Buckets(b.name, probe.map(_.getAs[Long](b.name)).distinct.toIndexedSeq))
+        case Some(b) => MergeWriter.append(d.withColumn(b.name, b.of), t, Some(b.name))
+        case None => MergeWriter.append(d, t)
+      }
     }
-    sentinels.foldLeft(fresh.select(store.row: _*))(_.unionByName(_))
-      .write.mode("append").parquet(storeTable)
+    MergeWriter.append(
+      sentinels.foldLeft(fresh.select(store.row: _*))(_.unionByName(_)), storeTable)
   }
 
   /** The store the families over `table` share (`given` when an advance
@@ -1013,7 +1016,7 @@ object Streams {
   private[graft] def compactState(spark: SparkSession, storeTable: String,
       fams: (StateFamily, String)*): Unit = {
     val store = storeOf(fams, storeTable)
-    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
+    enterGroup(spark, storeTable, fams)
     val tombstoneIds = for (l <- store.live; s <- tryRead(spark, storeTable))
       yield s.filter(!l).select(col(store.key))
     fams.foreach { case (f, table) =>
@@ -1024,10 +1027,8 @@ object Streams {
         case l: StateFamily.Latest => keyed(latest(l))
         case StateFamily.Idempotent(fold) => f.bucket match {
           case Some(b) => rewriteBuckets(spark, table, b, None)(fold)
-          case None => tryRead(spark, table).foreach { t =>
-            graft.operators.MergeWriter.overwriteAtomic(
-              fold(t.localCheckpoint(true)), table)
-          }
+          case None =>
+            MergeWriter.rewrite(spark, table)(_.map(t => fold(t.localCheckpoint(true))))
         }
       }
     }
@@ -1051,7 +1052,7 @@ object Streams {
       fams: (StateFamily, String)*): Unit = {
     import StateFamily.{ExactDelete, Rebuild, Recompute}
     storeOf(fams, storeTable, Some(store))
-    fams.foreach { case (f, t) => f.bucket.foreach(enterBucketed(spark, t, _)) }
+    enterGroup(spark, storeTable, fams)
     val k = store.key
     val idsC = ids.select(col(k)).distinct().localCheckpoint(true)
     val stored = tryRead(spark, storeTable).map(_.localCheckpoint(true))
@@ -1060,7 +1061,7 @@ object Streams {
       .getOrElse(noDocs(spark, store))
     def of(policy: StateFamily.Forget) = fams.filter(_._1.forget == policy)
     of(Rebuild).foreach { case (f, t) =>
-      graft.operators.MergeWriter.overwriteAtomic(
+      MergeWriter.publish(
         deltasAt(survivors.localCheckpoint(true), Seq(f), Long.MinValue).head, t)
     }
     // the stored rows of the ids re-derive the deltas they were ingested
@@ -1085,9 +1086,9 @@ object Streams {
       val touched = live.map(l => bucketsOf(l.join(idsC, Seq(k), "left_semi"), b.of))
         .getOrElse(IndexedSeq.empty)
       if (touched.nonEmpty)
-        graft.operators.MergeWriter.overwritePartitionsAtomic(
+        MergeWriter.publish(
           deltasAt(survivors.filter(b.of.isin(touched: _*)).localCheckpoint(true),
-            Seq(f), Long.MinValue).head, t, b.name, touched)
+            Seq(f), Long.MinValue).head, t, Buckets(b.name, touched))
     }
     val decremented = fams.filterNot(p => Seq(Rebuild, ExactDelete, Recompute)
       .contains(p._1.forget))
@@ -1108,7 +1109,7 @@ object Streams {
             // patch BEFORE the decrement append: the patch rewrites the
             // table from its pre-append checkpoint, and a crash between
             // patch and append re-runs with nothing left to patch
-            tryRead(spark, t).map(_.localCheckpoint(true)).foreach { st =>
+            MergeWriter.rewrite(spark, t)(_.map(_.localCheckpoint(true)).flatMap { st =>
               // cells whose CURRENT keeper is forgotten, on the
               // pre-decrement fold (the rollback cleared any partial run)
               val affected = st.filter(col("batch_key") =!= forgetKey)
@@ -1117,26 +1118,23 @@ object Streams {
                 .groupBy(keys.map(col): _*).agg(min(col(kc)).as("__k"))
                 .join(goneIds.withColumnRenamed(k, "__k"), Seq("__k"), "left_semi")
                 .select(keys.map(col): _*).localCheckpoint(true)
-              if (!affected.isEmpty) {
-                val newKeep = keepers(survivors)
-                  .join(broadcast(affected), keys, "left_semi")
-                graft.operators.MergeWriter.overwriteAtomic(st
-                  .join(broadcast(affected.withColumn("__aff", lit(true))), keys, "left")
-                  .join(broadcast(newKeep), keys, "left")
-                  .withColumn(kc, when(col("__aff").isNotNull,
-                    coalesce(col("__nk"), lit(Long.MaxValue))).otherwise(col(kc)))
-                  .select(st.columns.map(col).toIndexedSeq: _*), t)
-              }
-            }
+              if (affected.isEmpty) None
+              else Some(st
+                .join(broadcast(affected.withColumn("__aff", lit(true))), keys, "left")
+                .join(broadcast(keepers(survivors).join(broadcast(affected), keys, "left_semi")),
+                  keys, "left")
+                .withColumn(kc, when(col("__aff").isNotNull,
+                  coalesce(col("__nk"), lit(Long.MaxValue))).otherwise(col(kc)))
+                .select(st.columns.map(col).toIndexedSeq: _*))
+            })
             Some(kc)
           case _ => None
         }
-        dec.select(dec.columns.map { c =>
+        MergeWriter.append(dec.select(dec.columns.map { c =>
             if (sums.contains(c)) (-col(c)).as(c)
             else if (keeper.contains(c)) lit(Long.MaxValue).as(c)
             else col(c)
-          }.toIndexedSeq: _*)
-          .write.mode("append").parquet(t)
+          }.toIndexedSeq: _*), t)
       }
     }
     tombstoneSwap(store, stored, idsC, storeTable)
@@ -1160,19 +1158,17 @@ object Streams {
       .filter(col("batch_key") =!= Long.MinValue)
       .localCheckpoint(true)
     tables.foreach { tb =>
-      tryRead(spark, tb).foreach { t0 =>
+      MergeWriter.rewrite(spark, tb)(_.flatMap { t0 =>
         // cheap probe first — a column-pruned O(batches)-keys scan; the
         // table is materialized and rewritten ONLY when a conflicting
         // pending key actually exists (the rare crash-overlap path)
         val conflicted = t0.select(col("batch_key")).distinct()
           .join(witnessKeys, Seq("batch_key"), "left_semi")
           .localCheckpoint(true)
-        if (!conflicted.isEmpty) {
-          val t = t0.localCheckpoint(true)
-          graft.operators.MergeWriter.overwriteAtomic(
-            t.join(broadcast(conflicted), Seq("batch_key"), "left_anti"), tb)
-        }
-      }
+        if (conflicted.isEmpty) None
+        else Some(t0.localCheckpoint(true)
+          .join(broadcast(conflicted), Seq("batch_key"), "left_anti"))
+      })
     }
   }
 
@@ -1213,7 +1209,7 @@ object Streams {
     * by every maintenance loop
     * ([[graft.operators.MergeWriter.readIfPresent]]). */
   private def tryRead(spark: SparkSession, path: String): Option[DataFrame] =
-    graft.operators.MergeWriter.readIfPresent(spark, path)
+    MergeWriter.readIfPresent(spark, path)
 
   private def emptyRemap(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
@@ -1281,8 +1277,7 @@ object Streams {
         graft.queries.VectorOps.sqCodes(col("q"), vmin, vdiff).as("codes"))
       val sentinels = p.filter(col("cid") < 0)
         .select(col("vec_id"), lit(Array.empty[Long]).as("codes"))
-      graft.operators.MergeWriter.overwriteAtomic(
-        codes.unionByName(sentinels), sqCodesTable)
+      MergeWriter.publish(codes.unionByName(sentinels), sqCodesTable)
       (vmin, vdiff)
     }
 
@@ -1331,10 +1326,10 @@ object Streams {
     val assigned = graft.queries.VectorOps.assignCells(
         graft.queries.VectorOps.normed(batch), cents)
       .select(col("vec_id"), col("cid"))
-    batch.join(assigned, Seq("vec_id"), "left")
+    MergeWriter.append(batch.join(assigned, Seq("vec_id"), "left")
       .select(col("vec_id"), col("embedding"), lit(seq).as("seq"),
-        coalesce(pmod(col("cid"), lit(groups.toLong)), lit(0L)).as("kb"))
-      .write.mode("append").partitionBy("kb").parquet(stageTable)
+        coalesce(pmod(col("cid"), lit(groups.toLong)), lit(0L)).as("kb")),
+      stageTable, Some("kb"))
   }
 
   /** Flush the READY cell groups of a [[routeByCell]] staging table: a
@@ -1347,7 +1342,7 @@ object Streams {
     * across the flush set): every ready group's rows are materialized in
     * ONE pass and handed to `consume` as a single cell-clustered
     * micro-batch, and the flushed partitions delete in ONE atomic publish
-    * (an empty [[graft.operators.MergeWriter.overwritePartitionsAtomic]])
+    * (an empty [[graft.operators.MergeWriter.publish]] of their buckets)
     * after it returns, so a crash between the two redelivers the WHOLE
     * wave, which the maintainers' id guards collapse — the engine's
     * standard at-least-once seam. The downstream advance is
@@ -1373,7 +1368,7 @@ object Streams {
   def flushCellGroupsBatched(spark: SparkSession, stageTable: String,
       minRows: Long, maxLag: Long, curSeq: Long)(
       consume: DataFrame => Unit): Seq[Long] = {
-    graft.operators.MergeWriter.repairPartitionedTable(spark, stageTable, "kb")
+    MergeWriter.enter(spark, stageTable)
     tryRead(spark, stageTable).map { st =>
       val ready = st.groupBy(col("kb").cast("long").as("kb"))
         .agg(count(lit(1)).as("n"), min(col("seq")).as("oldest"))
@@ -1386,10 +1381,8 @@ object Streams {
         // all flushed partitions are consumed — publish their empty
         // partitions in one manifest (atomic; crash before this point
         // redelivers the wave)
-        graft.operators.MergeWriter.overwritePartitionsAtomic(
-          rows.limit(0).select(col("vec_id"), col("embedding"),
-            lit(0L).as("seq"), lit(0L).as("kb")),
-          stageTable, "kb", ready)
+        MergeWriter.publish(rows.limit(0).select(col("vec_id"), col("embedding"),
+          lit(0L).as("seq"), lit(0L).as("kb")), stageTable, Buckets("kb", ready))
       }
       ready
     }.getOrElse(Seq.empty)
@@ -1422,6 +1415,7 @@ object Streams {
   def maintainLshState(batch: DataFrame, bits: Int, tables: Int,
       idxTable: String): Unit = {
     val spark = batch.sparkSession
+    MergeWriter.enter(spark, idxTable)
     val standing = tryRead(spark, idxTable)
     val fresh = standing match {
       case Some(st) => batch.join(
@@ -1453,7 +1447,7 @@ object Streams {
               s"${sd(0).getInt(0)} at $idxTable — a width change is a rebuild, not an advance")
       }
     }
-    rows.write.mode("append").parquet(idxTable)
+    MergeWriter.append(rows, idxTable)
   }
 
   /** vs04 over the maintained index: the current top-k for `queries`
@@ -1486,20 +1480,17 @@ object Streams {
     * between [[rebuildIvfState]] eras. */
   def rebuildLshState(spark: SparkSession, newBits: Int, tables: Int,
       idxTable: String): Unit =
-    tryRead(spark, idxTable).foreach { st0 =>
+    MergeWriter.rewrite(spark, idxTable)(_.flatMap { st0 =>
       val members = st0.select(col("neighbor_id"), col("cq"), col("cn"),
           col("dim")).dropDuplicates("neighbor_id")
         .localCheckpoint(true)
-      val dim = members.select(col("dim")).head(1)
-      if (dim.nonEmpty) {
-        // cq is already quantized: re-hash through the same plane
-        // expressions the ingest used (bucketOf over cq), width newBits
-        val rehashed = graft.operators.Ann.rehashIndexRows(
+      // cq is already quantized: re-hash through the same plane
+      // expressions the ingest used (bucketOf over cq), width newBits
+      members.select(col("dim")).head(1).headOption.map(dim =>
+        graft.operators.Ann.rehashIndexRows(
           members.select(col("neighbor_id"), col("cq"), col("cn")),
-          newBits, tables, dim(0).getInt(0))
-        graft.operators.MergeWriter.overwriteAtomic(rehashed, idxTable)
-      }
-    }
+          newBits, tables, dim.getInt(0)))
+    })
 
   /** DELETION PROPAGATION for the LSH index — exact and id-granular:
     * hashing is row-local, so deleting a forgotten id's rows leaves
@@ -1512,13 +1503,11 @@ object Streams {
     * [[forgetDedupState]] pattern). */
   def forgetLshState(spark: SparkSession, ids: DataFrame,
       idxTable: String): Unit =
-    tryRead(spark, idxTable).foreach { t0 =>
-      val t = t0.localCheckpoint(true)
+    MergeWriter.rewrite(spark, idxTable)(_.map { t0 =>
       val idsC = ids.select(col("vec_id").as("neighbor_id")).distinct()
-      graft.operators.MergeWriter.overwriteAtomic(
-        t.join(idsC, Seq("neighbor_id"), "left_anti")
-          .select(t0.columns.map(col).toIndexedSeq: _*), idxTable)
-    }
+      t0.localCheckpoint(true).join(idsC, Seq("neighbor_id"), "left_anti")
+        .select(t0.columns.map(col).toIndexedSeq: _*)
+    })
 
   /** The PQ codebook REBUILD→SWAP — the FOURTH quantizer lifecycle
     * closed (IVF centroids, BPE merges, SQ bounds, now PQ books): pp14's
@@ -1563,8 +1552,7 @@ object Streams {
           pq.codes(col("q")).as("codes"))
         val sentinels = p.filter(col("cid") < 0).select(col("cid"),
           col("vec_id"), lit(Array.empty[Long]).as("codes"))
-        graft.operators.MergeWriter.overwriteAtomic(
-          codes.unionByName(sentinels), pqCodesTable)
+        MergeWriter.publish(codes.unionByName(sentinels), pqCodesTable)
         Some(pq)
       }
     }
@@ -1610,9 +1598,8 @@ object Streams {
           pq.codes(graft.queries.VectorOps.opqCol(perm)).as("codes"))
         val sentinels = p.filter(col("cid") < 0).select(col("cid"),
           col("vec_id"), lit(Array.empty[Long]).as("codes"))
-        graft.operators.MergeWriter.overwriteAtomic(
-          codes.unionByName(sentinels), pqCodesTable)
-        graft.operators.MergeWriter.overwriteAtomic(
+        MergeWriter.publish(codes.unionByName(sentinels), pqCodesTable)
+        MergeWriter.publish(
           spark.createDataFrame(perm.zipWithIndex.map { case (d, pos) =>
             (pos.toLong, d.toLong) }).toDF("pos", "src_dim"),
           permTable)
@@ -1682,7 +1669,8 @@ object Streams {
   def rebuildIvfState(spark: SparkSession, newCents: DataFrame,
       postingsTable: String, sumsTable: String,
       codesRebuild: Option[(String, Seq[org.apache.spark.sql.Row])] = None)
-      : Unit =
+      : Unit = {
+    MergeWriter.enter(spark, Seq(postingsTable, sumsTable) ++ codesRebuild.map(_._1): _*)
     tryRead(spark, postingsTable).foreach { p0 =>
       val p = p0.localCheckpoint(true)
       val real = p.filter(col("cid") >= 0)
@@ -1690,20 +1678,19 @@ object Streams {
       val sentinels = p.filter(col("cid") < 0)
       val reassigned = graft.queries.VectorOps.assignCells(real, newCents)
         .localCheckpoint(true)
-      graft.operators.MergeWriter.overwriteAtomic(
-        reassigned.unionByName(sentinels), postingsTable)
+      MergeWriter.publish(reassigned.unionByName(sentinels), postingsTable)
       codesRebuild.foreach { case (codesTable, book) =>
         val pq = graft.queries.VectorOps.pqOf(book)
         val codes = reassigned
           .select(col("cid"), col("vec_id"), pq.codes(col("q")).as("codes"))
         val codeSentinels = sentinels.select(col("cid"), col("vec_id"),
           lit(Array.empty[Long]).as("codes"))
-        graft.operators.MergeWriter.overwriteAtomic(
-          codes.unionByName(codeSentinels), codesTable)
+        MergeWriter.publish(codes.unionByName(codeSentinels), codesTable)
       }
-      graft.operators.MergeWriter.overwriteAtomic(
+      MergeWriter.publish(
         deltasAt(reassigned, Seq(StateFamily.IvfSums), Long.MinValue).head, sumsTable)
     }
+  }
 
   /** The IVF-PQ search (vs09's scorer) over the maintained codes table —
     * pp14's read path. `queriesNormed` is a normed (vec_id, q, nrm)
@@ -1750,10 +1737,7 @@ object Streams {
     * so the rewrite never reads its own output. */
   def compactAppends(spark: SparkSession, table: String,
       partitions: Int): Unit =
-    tryRead(spark, table).foreach { t =>
-      graft.operators.MergeWriter.overwriteAtomic(
-        t.localCheckpoint(true).repartition(partitions), table)
-    }
+    MergeWriter.rewrite(spark, table)(_.map(_.localCheckpoint(true).repartition(partitions)))
 
   /** The (committed, pending) split of a pinned `batch_key`-tagged delta
     * table — the one commit rule every delta compactor folds by. A
@@ -1805,14 +1789,12 @@ object Streams {
       guardTable: String, guardIdCol: String,
       tombstoneIds: Option[DataFrame] = None)(
       fold: DataFrame => DataFrame): Unit =
-    tryRead(spark, table).foreach { t0 =>
+    MergeWriter.rewrite(spark, table)(_.map { t0 =>
       val (committed, pending) = commitSplit(spark, t0.localCheckpoint(true),
         guardTable, guardIdCol, tombstoneIds)
-      graft.operators.MergeWriter.overwriteAtomic(
-        fold(committed).withColumn("batch_key", lit(Long.MinValue))
-          .select(t0.columns.map(col).toIndexedSeq: _*)
-          .unionByName(pending), table)
-    }
+      fold(committed).withColumn("batch_key", lit(Long.MinValue))
+        .select(t0.columns.map(col).toIndexedSeq: _*).unionByName(pending)
+    })
 
   /** pp06's continuous twin: CONTINUOUS span-dedup maintenance. Standing
     * tables: `gramsTable` (doc_id, h — the span store, append-only),
@@ -1839,6 +1821,7 @@ object Streams {
       countsTable: String, reportTable: String, docTable: String): Unit = {
     import org.apache.spark.sql.types._
     val spark = batch.sparkSession
+    MergeWriter.enter(spark, gramsTable, countsTable, reportTable, docTable)
     val fresh = freshAgainst(batch, docTable)
     if (fresh.isEmpty) return
     val batchKey = fresh.agg(min(col("doc_id"))).head().getLong(0)
@@ -1852,10 +1835,10 @@ object Streams {
       .join(broadcast(fresh.select(col("doc_id"))), Seq("doc_id"), "left_anti")
     val adv = graft.queries.TextOps.spanAdvance(oldGrams, oldCounts,
       graft.queries.TextOps.spanStore(fresh))
-    spanCountsDelta(adv, batchKey).write.mode("append").parquet(countsTable)
-    spanReportDelta(adv, batchKey).write.mode("append").parquet(reportTable)
+    MergeWriter.append(spanCountsDelta(adv, batchKey), countsTable)
+    MergeWriter.append(spanReportDelta(adv, batchKey), reportTable)
     appendNewBy(adv.grams, gramsTable, "doc_id")
-    fresh.write.mode("append").parquet(docTable)
+    MergeWriter.append(fresh, docTable)
   }
 
   /** The count / report delta rows of one span advance — the exact rows
@@ -1954,6 +1937,7 @@ object Streams {
       gramsTable: String, countsTable: String, reportTable: String,
       docTable: String): Unit = {
     import org.apache.spark.sql.types._
+    MergeWriter.enter(spark, gramsTable, countsTable, reportTable, docTable)
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     val store = tryRead(spark, docTable).map(_.localCheckpoint(true))
     val gone = store
@@ -1998,17 +1982,14 @@ object Streams {
       val crossing = goneCnt.join(folded, Seq("h"))
         .filter(col("nd") - col("gone_nd") === 1L)
         .select(col("h")).localCheckpoint(true)
-      goneCnt
-        .select(lit(forgetKey).as("batch_key"), col("h"),
-          (-col("gone_nd")).as("nd"))
-        .write.mode("append").parquet(countsTable)
+      MergeWriter.append(goneCnt.select(lit(forgetKey).as("batch_key"), col("h"),
+        (-col("gone_nd")).as("nd")), countsTable)
       tryRead(spark, gramsTable).foreach { grams =>
-        grams.join(goneIds, Seq("doc_id"), "left_anti")
+        MergeWriter.append(grams.join(goneIds, Seq("doc_id"), "left_anti")
           .join(broadcast(crossing), Seq("h"), "left_semi")
           .groupBy(col("doc_id")).agg(count(lit(1)).as("__k"))
           .select(lit(forgetKey).as("batch_key"), col("doc_id"),
-            lit(0L).as("n_spans"), (-col("__k")).as("n_dup_spans"))
-          .write.mode("append").parquet(reportTable)
+            lit(0L).as("n_spans"), (-col("__k")).as("n_dup_spans")), reportTable)
       }
       deleteByIds(spark, gramsTable, idsC, Seq("doc_id"))
       deleteByIds(spark, reportTable, idsC, Seq("doc_id"))
@@ -2091,7 +2072,7 @@ object Streams {
       .groupBy(col("tok")).agg(sum(col("cf")).as("wf"))
     val seg = graft.queries.TextOps.bpeSegmentation(vocab, merges)
       .groupBy(col("tok")).agg(count(lit(1)).as("n_pieces"))
-    graft.operators.MergeWriter.overwriteAtomic(seg, segTable)
+    MergeWriter.publish(seg, segTable)
   }
 
   /** The CLASSIFIER-lifecycle rebuild — the train-then-deploy twin of
@@ -2118,9 +2099,8 @@ object Streams {
     tryRead(spark, featsTable).foreach { d =>
       import spark.implicits._
       val last = graft.queries.TextOps.perceptronIterates(d, iters).last
-      graft.operators.MergeWriter.overwriteAtomic(
-        graft.queries.TextOps.TA19_FEATURES.zip(last._2)
-          .toDF("feature", "weight"), weightsTable)
+      MergeWriter.publish(graft.queries.TextOps.TA19_FEATURES.zip(last._2)
+        .toDF("feature", "weight"), weightsTable)
     }
 
   /** pp16's folded per-source counts ([[StateFamily.Mix]]). */
@@ -2165,6 +2145,7 @@ object Streams {
       tau: Int = graft.operators.Multimodal.completeTau,
       maxBucket: Option[Int] = None): Unit = {
     val spark = batch.sparkSession
+    MergeWriter.enter(spark, sigTable, pairsTable, docTable)
     val fresh = freshAgainst(batch, docTable)
     if (fresh.isEmpty) return
     val freshSigs = graft.operators.Multimodal.perceptualSigs(
@@ -2173,11 +2154,10 @@ object Streams {
       .localCheckpoint(true) // feeds the probe, the verify, and the append
     val standing = tryRead(spark, sigTable).getOrElse(emptySigStore(spark))
       .join(broadcast(fresh.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-    graft.operators.Multimodal
-      .perceptualPairsAdvance(standing, freshSigs, "doc_id", tau, maxBucket)
-      .write.mode("append").parquet(pairsTable)
+    MergeWriter.append(graft.operators.Multimodal
+      .perceptualPairsAdvance(standing, freshSigs, "doc_id", tau, maxBucket), pairsTable)
     appendNewBy(freshSigs, sigTable, "doc_id")
-    fresh.write.mode("append").parquet(docTable)
+    MergeWriter.append(fresh, docTable)
   }
 
   /** The current perceptual pair report under the maintained state —
@@ -2201,6 +2181,7 @@ object Streams {
     * convergence. */
   def forgetPerceptualState(spark: SparkSession, ids: DataFrame,
       sigTable: String, pairsTable: String, docTable: String): Unit = {
+    MergeWriter.enter(spark, sigTable, pairsTable, docTable)
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     deleteByIds(spark, sigTable, idsC, Seq("doc_id"))
     deleteByIds(spark, pairsTable, idsC, Seq("d1", "d2"))
@@ -2216,6 +2197,7 @@ object Streams {
   def forgetContainmentState(spark: SparkSession, ids: DataFrame,
       storeTable: String, probeTable: String, pairsTable: String,
       docTable: String): Unit = {
+    MergeWriter.enter(spark, storeTable, probeTable, pairsTable, docTable)
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     deleteByIds(spark, storeTable, idsC, Seq("doc_id"))
     deleteByIds(spark, probeTable, idsC, Seq("doc_id"))
@@ -2268,14 +2250,15 @@ object Streams {
     * work and write volume O(batch). */
   def maintainBudgetState(batch: DataFrame, eligTable: String,
       docTable: String, budget: Long): Unit = {
+    MergeWriter.enter(batch.sparkSession, eligTable, docTable)
     val fresh = graft.queries.SampleOps.budgetFrame(
       freshAgainst(batch, docTable, Seq("source", "text"))).localCheckpoint(true)
     if (fresh.isEmpty) return
     // pinned: the emptiness probe would otherwise re-run the cut-join
     // delta plan a second time for the write
     val eligible = budgetDelta(fresh, eligTable, budget).localCheckpoint(true)
-    if (!eligible.isEmpty) eligible.write.mode("append").parquet(eligTable)
-    fresh.select(col("doc_id")).write.mode("append").parquet(docTable)
+    if (!eligible.isEmpty) MergeWriter.append(eligible, eligTable)
+    MergeWriter.append(fresh.select(col("doc_id")), docTable)
   }
 
   /** The batch-keyed journal rows of one fresh frame — the exact rows
@@ -2321,7 +2304,7 @@ object Streams {
     * their key so a replay still collapses against them. */
   def compactBudget(spark: SparkSession, eligTable: String,
       docTable: String, budget: Long): Unit =
-    tryRead(spark, eligTable).foreach { t0 =>
+    MergeWriter.rewrite(spark, eligTable)(_.map { t0 =>
       val (all, pending) = commitSplit(spark, t0.localCheckpoint(true),
         docTable, "doc_id")
       val committed = all.dropDuplicates("doc_id")
@@ -2333,9 +2316,8 @@ object Streams {
           (col("key") === col("cut_key") && col("doc_id") <= col("cut_doc")))
         .select(lit(Long.MinValue).as("batch_key"), col("doc_id"),
           col("source"), col("n_tokens"), col("key"))
-      graft.operators.MergeWriter.overwriteAtomic(
-        live.unionByName(pending), eligTable)
-    }
+      live.unionByName(pending)
+    })
 
   /** DELETION PROPAGATION for the token-budget family: the forgotten
     * docs' journal rows delete (id-granular, exact) and the ids append
@@ -2359,6 +2341,7 @@ object Streams {
     * the subject's rows gone, the ids blocked — holds either way. */
   def forgetBudgetState(spark: SparkSession, ids: DataFrame,
       eligTable: String, docTable: String): Unit = {
+    MergeWriter.enter(spark, eligTable, docTable)
     val idsC = ids.select(col("doc_id")).distinct().localCheckpoint(true)
     deleteByIds(spark, eligTable, idsC, Seq("doc_id"))
     appendNewBy(idsC, docTable, "doc_id")
@@ -2380,8 +2363,7 @@ object Streams {
     * frozen — [[graft.queries.TextOps]] ta17 Scaladoc); re-running it on
     * the same corpus recomputes the identical table. */
   def buildRefState(docs: DataFrame, refTable: String): Unit =
-    graft.operators.MergeWriter.overwriteAtomic(
-      graft.queries.TextOps.refLmCounts(docs), refTable)
+    MergeWriter.publish(graft.queries.TextOps.refLmCounts(docs), refTable)
 
   /** The current head/middle/tail bucketing under the maintained
     * [[StateFamily.Score]] rows — ta17's exact shape over every doc that
@@ -2395,50 +2377,37 @@ object Streams {
       foldState(spark, StateFamily.Score, scoresTable)
         .select(col("doc_id"), col("source"), col("score")))
 
-  /** Append `rows` to `table`, partitioned by the bucket when there is
-    * one. */
-  private def append(rows: DataFrame, table: String,
-      bucket: Option[StateFamily.Bucket]): Unit =
-    bucket.fold(rows.write)(b => rows.withColumn(b.name, b.of).write.partitionBy(b.name))
-      .mode("append").parquet(table)
-
-  /** The entry step of every operation on a bucketed table: roll a
-    * crashed per-bucket publish forward (a pending committed stage would
-    * overwrite later appends, or read as missing rows), then rewrite a
-    * flat table that predates the layout partitioned, once, in one
-    * atomic swap. The layout is told from the directory listing (data
-    * files at the root), so a partitioned table is never read here. */
-  private def enterBucketed(spark: SparkSession, table: String,
-      b: StateFamily.Bucket): Unit = {
-    graft.operators.MergeWriter.repairPartitionedTable(spark, table, b.name)
-    val p = new org.apache.hadoop.fs.Path(table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p) && fs.listStatus(p).exists(f =>
-        f.isFile && f.getPath.getName.startsWith("part-")))
-      tryRead(spark, table).foreach { t =>
-        graft.operators.MergeWriter.overwriteAtomicPartitioned(
-          t.localCheckpoint(true).withColumn(b.name, b.of), table, b.name)
-      }
+  /** The entry step of every operation on a store group: repair the
+    * store and every family table ([[graft.operators.MergeWriter.enter]]),
+    * then rewrite a bucketed table that predates the layout partitioned,
+    * once, in one publish. The layout is told from the directory listing
+    * (data files at the root), so a partitioned table is never read
+    * here. */
+  private def enterGroup(spark: SparkSession, storeTable: String,
+      fams: Seq[(StateFamily, String)]): Unit = {
+    MergeWriter.enter(spark, storeTable +: fams.map(_._2): _*)
+    for ((f, table) <- fams; b <- f.bucket) {
+      val p = new org.apache.hadoop.fs.Path(table)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(p) && fs.listStatus(p).exists(f =>
+          f.isFile && f.getPath.getName.startsWith("part-")))
+        MergeWriter.rewrite(spark, table, Whole(Some(b.name)))(
+          _.map(_.localCheckpoint(true).withColumn(b.name, b.of)))
+    }
   }
 
-  /** Rewrite `table` bucket by bucket as `rows` of it, each bucket
-    * published atomically
-    * ([[graft.operators.MergeWriter.overwritePartitionsAtomic]]: a
-    * mid-publish crash rolls forward at the next entry repair, no row is
-    * lost). `touched` = None is the compaction: every live bucket, the
-    * table pinned first. Some(buckets) is the exact delete: only those
-    * buckets are read and rewritten, one left with no rows is deleted,
-    * and every other bucket never moves. */
+  /** Rewrite `table` as `rows` of it, in one publish. `touched` = None is
+    * the compaction: the whole table, pinned first. Some(buckets) is the
+    * exact delete: only those buckets are read and rewritten, one left
+    * with no rows is deleted, and every other bucket never moves. */
   private def rewriteBuckets(spark: SparkSession, table: String,
       b: StateFamily.Bucket, touched: Option[IndexedSeq[Long]])(
       rows: DataFrame => DataFrame): Unit =
-    tryRead(spark, table).foreach { t0 =>
-      val t = touched.fold(t0.localCheckpoint(true))(
-        bs => t0.filter(col(b.name).isin(bs: _*)))
-      graft.operators.MergeWriter.overwritePartitionsAtomic(
-        rows(t).withColumn(b.name, b.of).repartition(col(b.name)),
-        table, b.name, touched.getOrElse(bucketsOf(t, col(b.name))))
-    }
+    MergeWriter.rewrite(spark, table,
+        touched.fold[MergeWriter.Intent](Whole(Some(b.name)))(Buckets(b.name, _)))(_.map { t0 =>
+      val t = touched.fold(t0.localCheckpoint(true))(bs => t0.filter(col(b.name).isin(bs: _*)))
+      rows(t).withColumn(b.name, b.of).repartition(col(b.name))
+    })
 
   /** The distinct BIGINT values of `c` over `df` (at most the bucket
     * count). */

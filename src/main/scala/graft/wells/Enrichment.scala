@@ -100,16 +100,17 @@ object Enrichment {
       .select((Model.headerCols ++ Model.scrapeCols).map(col): _*)
   }
 
-  /** Full enrichment flow: project keys (P1/S10), scrape, persist web_table
-    * + well_info as parquet snapshots. */
+  /** Full enrichment flow: project keys (P1/S10), scrape, publish web_table
+    * and well_info as parquet snapshots. well_header is only read here;
+    * its writer, the loader, heals a crashed publish of it. */
   def run(spark: SparkSession, tableRoot: String,
       client: EnrichmentClient = StubClient): DataFrame = {
     val header = spark.read.parquet(s"$tableRoot/well_header")
     val keys = header.select("well_name", "api")
     val web = webTable(scrape(keys, client))
-    graft.operators.MergeWriter.overwriteAtomic(web, s"$tableRoot/web_table")
+    graft.operators.MergeWriter.publish(web, s"$tableRoot/web_table")
     val info = wellInfo(header, spark.read.parquet(s"$tableRoot/web_table"))
-    graft.operators.MergeWriter.overwriteAtomic(info, s"$tableRoot/well_info")
+    graft.operators.MergeWriter.publish(info, s"$tableRoot/well_info")
     spark.read.parquet(s"$tableRoot/well_info")
   }
 }

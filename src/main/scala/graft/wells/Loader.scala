@@ -166,14 +166,14 @@ object Loader {
     * parquet snapshot at tablePath; pre-existing rows sort below every
     * incoming row, matching ON DUPLICATE KEY UPDATE overwrite semantics. */
   private def mergeInto(spark: SparkSession, incoming: DataFrame,
-      tablePath: String): Unit = {
-    val merged = MergeWriter.readIfPresent(spark, tablePath) match {
-      case Some(ex) =>
-        MergeWriter.upsert(ex.withColumn("src_order", lit(-1L)),
-          incoming, Seq("pdf_name"), Seq(col("src_order")))
-      case None =>
-        MergeWriter.lastWriterWins(incoming, Seq("pdf_name"), Seq(col("src_order")))
+      tablePath: String): Unit =
+    MergeWriter.rewrite(spark, tablePath) { cur =>
+      Some((cur match {
+        case Some(ex) =>
+          MergeWriter.upsert(ex.withColumn("src_order", lit(-1L)),
+            incoming, Seq("pdf_name"), Seq(col("src_order")))
+        case None =>
+          MergeWriter.lastWriterWins(incoming, Seq("pdf_name"), Seq(col("src_order")))
+      }).drop("src_order"))
     }
-    MergeWriter.overwriteAtomic(merged.drop("src_order"), tablePath)
-  }
 }

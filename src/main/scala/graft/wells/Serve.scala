@@ -19,13 +19,13 @@ import org.apache.spark.sql.SparkSession
   *                 in-memory payload cache — NOT a Spark job per request.
   *                 The cache key is the snapshot token (a fingerprint of
   *                 the parquet tables' file listings): `MergeWriter
-  *                 .overwriteAtomic` publishes a new snapshot by directory
-  *                 rename with fresh part-file names, which changes the
-  *                 token, so the next request recomputes — the reference's
-  *                 read-your-load semantics (a load swaps the table, the
-  *                 next query sees it) at a directory listing per request
-  *                 instead of a query. The token also moves when OTHER
-  *                 processes swap the snapshot — an in-process
+  *                 .publish` stages a new snapshot and renames it in with
+  *                 fresh part-file names, which changes the token, so the
+  *                 next request recomputes — the reference's
+  *                 read-your-load semantics (a load publishes the table,
+  *                 the next query sees it) at a directory listing per
+  *                 request instead of a query. The token also moves when
+  *                 OTHER processes publish the snapshot — an in-process
   *                 invalidation callback would miss the CLI `load` running
   *                 in its own JVM. Cache misses are single-flighted:
   *                 concurrent requests share one computation. A request
@@ -54,14 +54,16 @@ object Serve {
     // snapshot identity: fingerprint of each table's RECURSIVE file
     // listing (path:length:mtime per file) — NOT the directory mtime,
     // which object stores report as fake/zero for prefixes and coarse
-    // filesystems may not bump on a swap. A rename-publish (MergeWriter
-    // .overwriteAtomic) writes fresh UUID-named part files, so the
-    // listing always changes even where mtimes lie. Recursion matters for
-    // partitioned layouts: a swap inside a partition subdirectory leaves
-    // the top-level prefix entries untouched on an object store, so a
-    // one-level listStatus would miss it. None while a snapshot is not
-    // stable: a table absent (between the two renames of a swap) or a
-    // listing that failed on a file the swap moved away.
+    // filesystems may not bump on a publish. A publish (MergeWriter
+    // .publish) renames in fresh UUID-named part files, so the listing
+    // always changes even where mtimes lie. Recursion matters for
+    // partitioned layouts: a publish inside a partition subdirectory
+    // leaves the top-level prefix entries untouched on an object store,
+    // so a one-level listStatus would miss it. None while a snapshot is
+    // not stable: a table absent (between the two renames of a publish:
+    // the replaced directory out, the staged one in) or a listing that
+    // failed on a file the publish removed. Serving never repairs a
+    // crashed publish: the next writer's entry step does.
     def snapshotToken(): Option[String] = {
       val conf = spark.sparkContext.hadoopConfiguration
       def sig(p: String): String = {
@@ -82,8 +84,8 @@ object Serve {
 
     val cacheLock = new Object
     def payloadFor(token: String): Array[Byte] = {
-      // token BEFORE the read: if a swap lands mid-read, the stored entry
-      // carries the pre-swap token and the next request recomputes.
+      // token BEFORE the read: if a publish lands mid-read, the stored entry
+      // carries the pre-publish token and the next request recomputes.
       // single-flight: exactly one request per token runs the Spark query;
       // concurrent misses for the same token share its future instead of
       // each launching the full computation (and a thread pile-up)
@@ -138,8 +140,8 @@ object Serve {
         }
     }
 
-    // A publish (MergeWriter.overwriteAtomic) briefly leaves a table
-    // absent, and a read that overlaps it fails on a moved file. Neither is
+    // A publish (MergeWriter.publish) briefly leaves a table absent, and
+    // a read that overlaps it fails on a file the publish removed. Neither is
     // an error of the data: wait for the next stable snapshot and answer
     // from it, a bounded number of times. Each attempt takes a fresh token,
     // so the body is never older than a publish that returned before the

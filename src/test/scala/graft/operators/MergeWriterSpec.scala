@@ -32,12 +32,12 @@ class MergeWriterSpec extends AnyFunSuite with SparkSpec {
     assert(again.toSeq == Seq(("a", "A0"), ("b", "B1"), ("c", "C2")))
   }
 
-  test("overwriteAtomic swaps snapshots and survives re-runs") {
+  test("publish replaces the whole table and survives re-runs") {
     import spark.implicits._
     val p = java.nio.file.Files.createTempDirectory("merge").toString + "/t"
-    MergeWriter.overwriteAtomic(Seq(1, 2, 3).toDF("x"), p)
+    MergeWriter.publish(Seq(1, 2, 3).toDF("x"), p)
     assert(spark.read.parquet(p).count() == 3)
-    MergeWriter.overwriteAtomic(Seq(4, 5).toDF("x"), p)
+    MergeWriter.publish(Seq(4, 5).toDF("x"), p)
     assert(spark.read.parquet(p).count() == 2)
   }
 }

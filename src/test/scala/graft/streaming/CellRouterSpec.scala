@@ -86,6 +86,33 @@ class CellRouterSpec extends AnyFunSuite with SparkSpec {
       "drain left staged groups")
   }
 
+  test("a route after a flush whose publish crashed past its commit keeps every routed row") {
+    import spark.implicits._
+    val e = corpus()
+    def df(b: Seq[(Long, Seq[Float])]) = b.toSeq.toDF("vec_id", "embedding")
+    val cents = graft.queries.VectorOps.ivfCentroids(
+      graft.queries.VectorOps.normed(df(e.toIndexedSeq)))
+    val stageT = Files.createTempDirectory("router-crash").toString + "/stage"
+    val (first, second) = e.partition(_._1 % 2 == 0)
+    Streams.routeByCell(df(first.toIndexedSeq), cents, stageT, 1, 0L)
+    // the flush's publish of its emptied group, crashed after the commit
+    // with nothing moved (MergeWriter's layout): the old group still in
+    // place, the manifest naming it empty
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, p(stageT), fs, p(s"$stageT.pre"), false, conf))
+    Streams.flushCellGroupsBatched(spark, stageT, minRows = 1L, maxLag = 0L, curSeq = 0L)(_ => ())
+    assert(fs.delete(p(stageT), true) && fs.rename(p(s"$stageT.pre"), p(stageT)))
+    assert(fs.mkdirs(p(s"$stageT.stage/rows")))
+    Files.writeString(java.nio.file.Path.of(s"$stageT.stage", "_GRAFT_COMMIT"), "kb=0\tempty\n")
+    Streams.routeByCell(df(second.toIndexedSeq), cents, stageT, 1, 1L)
+    var drained = Set.empty[Long]
+    Streams.flushCellGroupsBatched(spark, stageT, minRows = 1L, maxLag = 0L, curSeq = 1L)(rows =>
+      drained = rows.select($"vec_id").collect().map(_.getLong(0)).toSet)
+    assert(drained == second.map(_._1).toSet, "a route after the crashed flush lost or redelivered rows")
+  }
+
   test("cold group stays staged until the age trigger; size trigger flushes a hot group immediately") {
     import spark.implicits._
     val e = corpus()

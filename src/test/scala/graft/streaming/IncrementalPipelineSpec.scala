@@ -30,7 +30,7 @@ class IncrementalPipelineSpec extends AnyFunSuite with SparkSpec {
             incoming, Seq("pdf_name"), Seq(col("src_order")))
         case None => incoming
       }
-      MergeWriter.overwriteAtomic(merged.drop("src_order"), table)
+      MergeWriter.publish(merged.drop("src_order"), table)
     }
 
     def runOnce(): Unit = {

@@ -19,7 +19,10 @@ import graft.queries.VectorOps
   * arrival — (4) forget equals a from-scratch build over the survivors,
   * with every forgotten id tombstoned in the store, and (5) forgetting
   * again, re-ingesting the forgotten ids (a never-seen one included) and
-  * compacting change nothing. Families that share a store run in groups
+  * compacting change nothing, and (6) a crash after the commit point of a
+  * compaction's and a forget's publish is finished by the next advance:
+  * the state equals the from-scratch builds of (2) and (4). Families
+  * that share a store run in groups
   * through the same maintainState/compactState/forgetState calls, the
   * multi-family shape a deployment runs; the groups run overlapped
   * ([[graft.OverlappedTests]]). The family specs pin each read view
@@ -229,6 +232,31 @@ class StateFamilyContractSpec extends AnyFunSuite with SparkSpec
             s"$n: compaction left committed keys unfolded")
       }
     }
+
+    // (6) a crash after the commit point inside a compaction's publish and
+    // inside a forget's publish (the last table each publishes: the last
+    // family's, the store's tombstones), built on disk: the new rows
+    // staged, the manifest written, the old table still in place. The
+    // next operation's entry finishes each publish
+    val c = newRoot("d")
+    def crashAfterCommit(table: String)(op: => Unit): Unit = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = org.apache.hadoop.fs.FileSystem.get(conf)
+      def p(s: String) = new org.apache.hadoop.fs.Path(s)
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, p(table), fs, p(s"$table.pre"), false, conf))
+      op
+      assert(fs.mkdirs(p(s"$table.stage")) && fs.rename(p(table), p(s"$table.stage/rows")) &&
+        fs.rename(p(s"$table.pre"), p(table)))
+      Files.writeString(java.nio.file.Path.of(s"$table.stage", "_GRAFT_COMMIT"), ".\tdata\n")
+    }
+    ingest(c, b0)
+    if (fams.nonEmpty) crashAfterCommit(c(fams.last._2))(compact(c))
+    ingest(c, b1)
+    check(folded(c), s0, "an advance after a compaction's crashed publish != from-scratch build")
+    crashAfterCommit(c("store"))(forget(c))
+    ingest(c, forgot)
+    check(folded(c, forgot), s1,
+      "a re-ingest after a forget's crashed publish != from-scratch build over the survivors")
   }
 }
 

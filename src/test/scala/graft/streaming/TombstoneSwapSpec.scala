@@ -63,4 +63,34 @@ class TombstoneSwapSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e.getMessage.contains("lacks doc_id/text"))
   }
+
+  test("forgetState over a doc store whose publish crashed between its two renames keeps the guard: redelivery is a no-op") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("tomb").toString
+    val (docT, vocabT) = (s"$root/docs", s"$root/vocab")
+    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma"), (3L, "gamma delta"))
+      .toDF("doc_id", "text")
+    Streams.maintainState(docs, docT, StateFamily.Vocab -> vocabT)
+    // the crash state of a doc-store publish (MergeWriter's layout): rows
+    // staged, manifest committed, the store moved into the stage
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, p(docT), fs, p(s"$docT.stage/rows"), false,
+      spark.sparkContext.hadoopConfiguration))
+    Files.writeString(java.nio.file.Path.of(s"$docT.stage", "_GRAFT_COMMIT"), ".\tdata\n")
+    assert(fs.rename(p(docT), p(s"$docT.stage/replaced")))
+
+    Streams.forgetState(spark, Seq(2L).toDF("doc_id"), docT, StateFamily.Vocab -> vocabT)
+    def vocab() = Streams.foldState(spark, StateFamily.Vocab, vocabT).drop("batch_key")
+      .collect().map(_.toString).toSet
+    val (v0, f0) = (vocab(), graft.SparkSpec.dataFiles(vocabT) ++ graft.SparkSpec.dataFiles(docT))
+    Streams.maintainState(docs.filter($"doc_id" === 1L), docT, StateFamily.Vocab -> vocabT)
+    assert(graft.SparkSpec.dataFiles(vocabT) ++ graft.SparkSpec.dataFiles(docT) == f0,
+      "redelivery of a stored id wrote to a standing table")
+    assert(vocab() == v0)
+    val store = spark.read.parquet(docT).collect()
+      .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(store == Map(1L -> Some("alpha beta"), 2L -> None, 3L -> Some("gamma delta")),
+      s"the guard lost rows: $store")
+  }
 }

@@ -108,6 +108,27 @@ class LoaderGoldenSpec extends AnyFunSuite with SparkSpec {
     assert(dirty.filter(col("date_simulated").isNotNull).count() == 0)
   }
 
+  test("a delta load after a well_header publish crashed between its two renames keeps every pre-existing row") {
+    val (mechanicsHeader, mechanicsStim) = WellsCsvs.pair
+    val root = Files.createTempDirectory("wells-load-crash").toString
+    val t = s"$root/well_header"
+    def names() = spark.read.parquet(t).select("pdf_name").collect().map(_.getString(0)).toSet
+    Loader.run(spark, mechanicsHeader, mechanicsStim, root)
+    val before = names()
+    // the crash state of a well_header publish (MergeWriter's layout):
+    // rows staged, manifest committed, the table moved into the stage
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, p(t), fs, p(s"$t.stage/rows"), false,
+      spark.sparkContext.hadoopConfiguration))
+    Files.writeString(java.nio.file.Path.of(s"$t.stage", "_GRAFT_COMMIT"), ".\tdata\n")
+    assert(fs.rename(p(t), p(s"$t.stage/replaced")))
+    // the delta: the first two rows again
+    Loader.run(spark, mechanicsHeader, mechanicsStim, root, limit = Some(2))
+    assert(names() == before, s"rows lost: ${before -- names()}")
+    assert(!Files.exists(java.nio.file.Path.of(s"$t.stage")))
+  }
+
   test("--limit takes the first N file-order rows (P7)") {
     val (mechanicsHeader, mechanicsStim) = WellsCsvs.pair
     val load = Loader.loadHeader(spark, mechanicsHeader, limit = Some(10))

@@ -186,7 +186,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
         .filter(col("latitude").isNotNull && col("longitude").isNotNull)
         .select("pdf_name").orderBy("pdf_name").head().getString(0)
       val oneLess = info.filter(col("pdf_name") =!= victim)
-      graft.operators.MergeWriter.overwriteAtomic(oneLess, s"$dir/well_info")
+      graft.operators.MergeWriter.publish(oneLess, s"$dir/well_info")
       val third = get(port, "/wells")
       assert(third.statusCode() == 200)
       assert(third.body() != first.body())
@@ -263,8 +263,8 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
     def info(version: Int) = (1 to 20)
       .map(i => (f"W$i%03d.pdf", s"WELL $i", 48.0 + i / 100.0, -103.0, version))
       .toDF("pdf_name", "well_name", "latitude", "longitude", "version")
-    MergeWriter.overwriteAtomic(info(0), s"$dir/well_info")
-    MergeWriter.overwriteAtomic((1 to 20).map(i => (f"W$i%03d.pdf", s"d$i"))
+    MergeWriter.publish(info(0), s"$dir/well_info")
+    MergeWriter.publish((1 to 20).map(i => (f"W$i%03d.pdf", s"d$i"))
       .toDF("pdf_name", "details"), s"$dir/well_stimulation")
     val Version = "\"version\":(\\d+)".r
 
@@ -289,7 +289,7 @@ class ServeSpec extends AnyFunSuite with SparkSpec {
     // after each publish, wait for one more answer: a snapshot that never
     // stays put for one query's length cannot be read at all
     try for (v <- 1 to 6) {
-      MergeWriter.overwriteAtomic(info(v), s"$dir/well_info")
+      MergeWriter.publish(info(v), s"$dir/well_info")
       published.set(v)
       val before = answered.get
       val deadline = System.nanoTime() + 30e9.toLong
